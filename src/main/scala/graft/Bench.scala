@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query wall times,

@@ -1247,142 +1247,42 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("dist").cast("long").as("dist"))
   }
 
-  /** Ingest-time MinHash index: persists the per-document signature
-    * artifacts — LSH band keys, shingle hashes, and set sizes — so
+  /** Ingest-time MinHash index ([[GrowingIndex]]): persists the
+    * per-document signature artifacts — shingle hashes, set sizes, and
+    * LSH band keys, `__bands` last (the probe's existence gate) — so
     * incremental batches can near-dup against the FULL corpus history
     * without recomputing a single corpus signature
     * ([[neardupAgainstIndex]]). At 100 TB the index is the linear
     * byproduct of the first dedup pass (narrow integer rows, ~tokens ×
     * 16 bytes for the shingle table); re-shingling the corpus per batch
-    * would instead re-pay the full text parse on every ingest tick. */
-  def buildMinhashIndex(
-      docs: DataFrame, writer: graft.sinks.StagingWriter, table: String): Unit =
-    writeMinhashIndex(docs, writer, table, org.apache.spark.sql.SaveMode.Overwrite)
+    * would instead re-pay the full text parse on every ingest tick. One
+    * persisted shingle parse feeds all three writes. */
+  object MinhashIndex extends NeardupIndex[Double] with GrowingIndex.NoSidecar {
+    val artifacts = Seq("__shingles", "__sizes", "__bands")
+    val idCol = "doc_id"
+    val defaultThreshold = 0.8
 
-  /** Grow an existing [[buildMinhashIndex]] artifact with a new batch —
-    * the per-tick write of a CONTINUOUS ingest loop
-    * ([[graft.streaming.EventsStream.neardupIngestQuery]]): the batch's
-    * bands/shingles/sizes are appended, so the next batch's probe sees
-    * this one as history. Append the KEPT (post-dedup) docs only — a
-    * dropped duplicate's signature would pair every future copy twice.
-    * All three artifacts append together; id spaces must stay disjoint
-    * across batches (the [[neardupAgainstIndex]] contract). */
-  def appendMinhashIndex(
-      docs: DataFrame, writer: graft.sinks.StagingWriter, table: String): Unit =
-    writeMinhashIndex(docs, writer, table, org.apache.spark.sql.SaveMode.Append)
-
-  /** [[appendMinhashIndex]] under the flat-table batch discriminator
-    * ([[graft.sinks.StagingWriter.appendBatchSlice]]) — the replay-safe
-    * variant a batch-cadence tick uses
-    * ([[graft.run.CorpusPrepJob.increment]] with a `batchId`): each
-    * artifact's batch rows land as a named slice that a replayed tick
-    * first rolls back, so a crash between artifact appends can never
-    * strand a half-applied batch. `__bands` still lands last (the
-    * probe's existence gate). */
-  def appendMinhashIndexSlice(
-      docs: DataFrame, writer: graft.sinks.StagingWriter, table: String,
-      batchId: Long): Unit =
-    minhashIndexSink(docs) { (df, suffix) =>
-      writer.appendBatchSlice(df, s"$table$suffix", batchId)
-      ()
+    protected def frames(docs: DataFrame, g: Unit)(emit: DataFrame => Unit): Unit = {
+      val hs = shingleHashes(docs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        emit(hs)
+        emit(hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")))
+        emit(minhashBandsFrom(hs))
+      } finally hs.unpersist(blocking = false)
     }
 
-  private def writeMinhashIndex(
-      docs: DataFrame,
-      writer: graft.sinks.StagingWriter,
-      table: String,
-      mode: org.apache.spark.sql.SaveMode): Unit =
-    minhashIndexSink(docs) { (df, suffix) =>
-      df.write.mode(mode).parquet(writer.path(s"$table$suffix"))
-    }
+    protected def pairsWithin(batch: DataFrame, threshold: Double): DataFrame =
+      minhashNeardupMaterialized(batch, threshold)
 
-  /** CRASH-SAFE full rebuild of a [[buildMinhashIndex]] artifact — the
-    * compaction-cadence variant ([[graft.run.CorpusPrepJob.refreshArtifacts]]):
-    * every artifact is STAGED under a `__rebuild` name first (the live
-    * index is not touched by a single byte of the write), then swapped
-    * in through the sink's backup protocol. A crash anywhere leaves a
-    * probe-consistent index:
-    *
-    *   - during staging — the live three artifacts are untouched;
-    *   - between swaps — the index mixes new shingles/sizes with old
-    *     bands, which stays CONSISTENT because the rebuild derives
-    *     from the same (appended-to) corpus the old index covers: every
-    *     doc_id the old `__bands` gate emits still finds its shingle
-    *     rows, and per-doc shingle content is deterministic, so probe
-    *     Jaccards are unchanged;
-    *   - `__bands` swaps LAST, mirroring the build-order gate contract
-    *     (no candidate can reference a signature that is not yet live).
-    *
-    * The leftover `__rebuild*` staging of a crashed run is overwritten
-    * by the next rebuild (staged writes are mode=Overwrite). */
-  def rebuildMinhashIndex(
-      docs: DataFrame, writer: graft.sinks.StagingWriter, table: String): Unit = {
-    val staged = stageMinhashIndex(docs, writer, table)
-    rebuildSwapOrder.foreach(s => writer.swapIn(s"$staged$s", s"$table$s"))
+    protected def pairsAgainst(batch: DataFrame, writer: graft.sinks.StagingWriter,
+        table: String, threshold: Double): DataFrame =
+      neardupAgainstIndex(batch, writer, table, threshold)
   }
-
-  /** The staging half of [[rebuildMinhashIndex]] — writes the three
-    * `__rebuild*` artifacts WITHOUT touching the live index; exposed so
-    * the crash-safety spec can stop at (and between) the swap points. */
-  private[graft] def stageMinhashIndex(
-      docs: DataFrame, writer: graft.sinks.StagingWriter, table: String): String = {
-    val staged = s"${table}__rebuild"
-    minhashIndexSink(docs) { (df, suffix) =>
-      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(writer.path(s"$staged$suffix"))
-    }
-    staged
-  }
-
-  /** THE artifact-suffix list of a MinHash index — every enumeration
-    * of the three tables (build sink, rebuild swap, compaction, batch
-    * rollback) derives from this one value so they can never drift.
-    * Order is the build/swap order: `__bands` LAST (the probe gate). */
-  private[graft] val rebuildSwapOrder = Seq("__shingles", "__sizes", "__bands")
-
-  /** The three index artifacts of a batch, handed to an arbitrary
-    * `sink(frame, tableSuffix)` — one shared shingle parse feeds all
-    * three writes, whatever the layout (flat overwrite/append for the
-    * batch paths, idempotent batch partitions for the streaming
-    * ingest loop). */
-  private[graft] def minhashIndexSink(
-      docs: DataFrame)(sink: (DataFrame, String) => Unit): Unit = {
-    val hs = shingleHashes(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // __bands LAST: it is the probe's existence gate, so a crash
-      // mid-sink can never leave a gate that passes while the probe's
-      // other reads (__shingles/__sizes) are still missing
-      sink(hs, "__shingles")
-      sink(hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")), "__sizes")
-      sink(minhashBandsFrom(hs), "__bands")
-    } finally hs.unpersist(blocking = false)
-  }
-
-  /** Compact a streaming-grown MinHash index
-    * ([[graft.streaming.EventsStream.neardupIngestQuery]] appends one
-    * `ingest_batch=N` partition per tick to each artifact): fold every
-    * artifact's history into one partition with `files` output files.
-    * A month of 1-minute ticks is ~43k directories × tasks files PER
-    * artifact — the probe's file listing, not its join, becomes the
-    * bottleneck; compaction is the standing maintenance job of any
-    * growing index (the X59 IVF note's "compaction-time rebuild" is the
-    * quantizer analog). Probe results are BYTE-IDENTICAL before/after
-    * (spec-pinned): compaction moves rows between files, never changes
-    * them. `__bands` compacts LAST, mirroring the build-order gate
-    * contract (a crash mid-compaction leaves every gate-passing state
-    * with all three artifacts readable — the swap never exposes a
-    * missing table). */
-  def compactMinhashIndex(
-      writer: graft.sinks.StagingWriter,
-      table: String,
-      files: Int = 1): Map[String, Long] =
-    rebuildSwapOrder
-      .map(s => s -> writer.compactBatchPartitions(s"$table$s", files)).toMap
 
   /** Incremental near-dup: pairs (a_id = indexed corpus doc, b_id = new
     * batch doc) at Jaccard ≥ `threshold`, computed against a
-    * [[buildMinhashIndex]] artifact. Only the NEW batch is shingled and
+    * [[MinhashIndex]] artifact. Only the NEW batch is shingled and
     * banded; the corpus side is read back as narrow integer rows.
     * Candidates = band-bucket collisions between the batch's bands and
     * the stored bands (batch side broadcast — the incremental contract
@@ -1677,7 +1577,7 @@ object Dedup {
   /** The shared cross-engine token hash ([[OracleHash.md5Hash32]]).
     * Two disjoint halves of one md5 give the 64 independent SimHash
     * signature bits without a second hash pass. */
-  private def h32(c: Column, from: Int = 1): Column =
+  private def h32(c: Column, from: Int): Column =
     OracleHash.md5Hash32(c, from)
 
   /** SimHash signature geometry: 64 bits banded as 4 blocks of 16 —

@@ -1,0 +1,247 @@
+package graft.ext
+
+import graft.sinks.StagingWriter
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.storage.StorageLevel
+
+/** The lifecycle every growing near-dup index shares — MinHash bands
+  * ([[Dedup.MinhashIndex]]), sign-LSH buckets
+  * ([[Similarity.SignLshIndex]]), IVF cells ([[Similarity.IvfIndex]])
+  * and dHash bands ([[Multimodal.DhashIndex]]). A family supplies only
+  * what is its own: its artifact suffixes (existence gate LAST), an
+  * optional geometry sidecar, and [[frames]] — one shared parse of a
+  * batch into its artifact frames, keyed under the geometry. Probes
+  * stay in the family files. This class owns every write.
+  *
+  * Layouts, one per growth cadence:
+  *   - [[build]]: overwrite, the index of a whole corpus;
+  *   - [[append]]: plain appends to the standing artifacts;
+  *   - [[appendBatchSlice]]: appends under the flat-table batch
+  *     discriminator ([[StagingWriter.appendBatchSlice]]), so a
+  *     replayed batch-cadence tick first rolls its own slice back;
+  *   - [[writeBatchPartition]]: idempotent `ingest_batch=<id>`
+  *     partitions, the streaming layout — an at-least-once replay
+  *     replaces its own partition. Never mix it with the flat layouts
+  *     on one table.
+  *
+  * Write order is the crash contract: the sidecar first, then the
+  * artifacts in order, the gate last. A build or bootstrap that dies
+  * part-way therefore leaves [[exists]] false, never a passing gate
+  * over a missing artifact. The sidecar is written only by a build, a
+  * bootstrap (the first non-empty batch partition of a fresh index) or
+  * a rebuild; growth keys the batch under the STORED geometry and
+  * never appends to, compacts or rewrites it.
+  *
+  * Maintenance: [[compact]] folds the per-tick partitions of every
+  * artifact (gate last) and leaves the sidecar alone; [[rebuild]]
+  * stages a fresh build under `<table>__rebuild` and swaps each table
+  * in through [[StagingWriter.swapIn]], sidecar first and gate last —
+  * a crash before the first swap changes nothing, and rerunning the
+  * rebuild repairs a half-swapped state. */
+abstract class GrowingIndex {
+
+  /** Driver-side keying state the sidecar stores (`Unit` without one). */
+  type Geometry
+
+  /** Artifact suffixes in write order; the LAST is the existence gate. */
+  def artifacts: Seq[String]
+
+  /** Suffix of the geometry sidecar, for families that keep one. */
+  def sidecar: Option[String] = None
+
+  /** Partition column of the artifacts' own layout (IVF cells); such an
+    * index grows only by [[append]]. */
+  def partitionCol: Option[String] = None
+
+  /** The geometry a build, bootstrap or rebuild derives from its input;
+    * None when the input holds nothing to derive it from. */
+  protected def fit(input: DataFrame): Option[Geometry]
+
+  protected def readGeometry(writer: StagingWriter, table: String): Geometry
+
+  protected def geometryFrame(input: DataFrame, g: Geometry): DataFrame
+
+  /** Hand the batch's artifact frames to `emit`, one per suffix in
+    * [[artifacts]] order, from one shared parse of the batch. */
+  protected def frames(batch: DataFrame, g: Geometry)(emit: DataFrame => Unit): Unit
+
+  /** The existence gate: the last artifact is on storage. */
+  def exists(writer: StagingWriter, table: String): Boolean =
+    writer.exists(table + artifacts.last)
+
+  def build(input: DataFrame, writer: StagingWriter, table: String): Unit = {
+    val g = bootstrap(input, writer, table).getOrElse(throw new IllegalArgumentException(
+      s"build($table): empty input — nothing to index"))
+    emit(input, g, table)(put(writer, append = false))
+  }
+
+  /** Grow the index with a batch. Append the KEPT (post-dedup) rows only
+    * — a dropped duplicate's keys would pair every future copy twice —
+    * and keep id spaces disjoint across batches. */
+  def append(batch: DataFrame, writer: StagingWriter, table: String): Unit =
+    emit(batch, readGeometry(writer, table), table)(put(writer, append = true))
+
+  def appendBatchSlice(
+      batch: DataFrame, writer: StagingWriter, table: String, batchId: Long): Unit = {
+    flatOnly("appendBatchSlice")
+    emit(batch, readGeometry(writer, table), table) { (df, name) =>
+      writer.appendBatchSlice(df, name, batchId)
+      ()
+    }
+  }
+
+  /** A missing sidecar is bootstrapped from this batch; an empty batch
+    * defers the bootstrap (and writes nothing) to the next tick. */
+  def writeBatchPartition(
+      batch: DataFrame, writer: StagingWriter, table: String, batchId: Long): Unit = {
+    flatOnly("writeBatchPartition")
+    val g =
+      if (sidecar.forall(s => writer.exists(table + s))) Some(readGeometry(writer, table))
+      else bootstrap(batch, writer, table)
+    g.foreach(emit(batch, _, table)(writer.writeBatchPartition(_, _, batchId)))
+  }
+
+  /** Fold every artifact's `ingest_batch` partitions into one partition
+    * of `files` files ([[StagingWriter.compactBatchPartitions]]) — a
+    * month of 1-minute ticks is ~43k directories per artifact, and the
+    * probe's file listing, not its join, becomes the bottleneck. Probe
+    * results are byte-identical before and after: rows move between
+    * files, never change. Returns each artifact's row count. */
+  def compact(writer: StagingWriter, table: String, files: Int = 1): Map[String, Long] = {
+    flatOnly("compact")
+    artifacts.map(s => s -> writer.compactBatchPartitions(table + s, files)).toMap
+  }
+
+  /** Crash-safe full rebuild from `input` (see the class doc). Between
+    * two swaps the index mixes generations; that stays probe-consistent
+    * when the rebuild derives from the same rows the old index covers. */
+  def rebuild(input: DataFrame, writer: StagingWriter, table: String): Unit = {
+    val staged = stage(input, writer, table)
+    (sidecar.toSeq ++ artifacts).foreach(s => writer.swapIn(staged + s, table + s))
+  }
+
+  /** The staging half of [[rebuild]]: a build under `<table>__rebuild`,
+    * live tables untouched. Leftovers of a crashed rebuild are
+    * overwritten by the next one. */
+  private[graft] def stage(input: DataFrame, writer: StagingWriter, table: String): String = {
+    val staged = s"${table}__rebuild"
+    build(input, writer, staged)
+    staged
+  }
+
+  private def bootstrap(input: DataFrame, writer: StagingWriter, table: String): Option[Geometry] =
+    fit(input).map { g =>
+      sidecar.foreach(s => writer.write(geometryFrame(input, g), table + s, append = false))
+      g
+    }
+
+  private def emit(batch: DataFrame, g: Geometry, table: String)(
+      put: (DataFrame, String) => Unit): Unit = {
+    val names = artifacts.iterator
+    frames(batch, g)(df => put(df, table + names.next()))
+    require(!names.hasNext, s"$table: frames left ${names.toList} unwritten")
+  }
+
+  private def put(writer: StagingWriter, append: Boolean)(df: DataFrame, name: String): Unit =
+    partitionCol match {
+      case Some(c) if append => writer.appendPartitioned(df, name, c)
+      case Some(c) => writer.writePartitioned(df, name, c)
+      case None => writer.write(df, name, append); ()
+    }
+
+  private def flatOnly(op: String): Unit =
+    require(partitionCol.isEmpty,
+      s"$op needs flat artifacts; this index is partitioned by ${partitionCol.get}")
+}
+
+object GrowingIndex {
+
+  /** A family whose keying needs no stored state (MinHash, dHash). */
+  trait NoSidecar extends GrowingIndex {
+    type Geometry = Unit
+    protected def fit(input: DataFrame): Option[Unit] = Some(())
+    protected def readGeometry(writer: StagingWriter, table: String): Unit = ()
+    protected def geometryFrame(input: DataFrame, g: Unit): DataFrame =
+      throw new UnsupportedOperationException("no sidecar")
+  }
+}
+
+/** A [[GrowingIndex]] that near-dups each ingest batch against itself
+  * and its own history, then grows with the survivors — the continuous
+  * ingest loop a production corpus runs. A family adds its id column,
+  * its within-batch pair function and its probe; both return
+  * (`a_id` = standing/earlier, `b_id` = batch/later, evidence) pairs, so
+  * the later id is the drop candidate on both legs. `threshold` is the
+  * family's match bound (Jaccard or cosine floor, hamming ceiling). */
+abstract class NeardupIndex[T] extends GrowingIndex {
+
+  def idCol: String
+
+  def defaultThreshold: T
+
+  /** Within-batch pairs, materialized. */
+  protected def pairsWithin(batch: DataFrame, threshold: T): DataFrame
+
+  /** Batch-against-index pairs. */
+  protected def pairsAgainst(
+      batch: DataFrame, writer: StagingWriter, table: String, threshold: T): DataFrame
+
+  /** [[ingestBatch]] as the `foreachBatch` of a streaming query. */
+  def ingestQuery(
+      stream: DataFrame,
+      writer: StagingWriter,
+      table: String,
+      checkpoint: String,
+      threshold: T = defaultThreshold): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        ingestBatch(batch.toDF(), writer, table, threshold, batchId)
+        ()
+      }
+      .start()
+
+  /** One tick: within-batch pairs, plus the probe of the standing index
+    * once its gate passes; the pair evidence lands in `<table>_pairs`,
+    * the survivors (every row that is not the b-side of a pair) in
+    * `<table>_docs`, and the survivors' keys grow the index as this
+    * tick's batch partition — so the next tick sees this one as
+    * history. The first tick of a fresh index has no probe and its
+    * partitions create the index (bootstrapping a sidecar from the
+    * survivors). State lives in the index parquet, not the state
+    * store.
+    *
+    * `foreachBatch` is at-least-once: a crash between these writes and
+    * the checkpoint commit replays the tick. Every write is therefore a
+    * batch-partition overwrite, and the pair set drops self-matches (a
+    * replayed row meeting its own indexed copy) and double-finds (a
+    * within-batch pair the replayed probe finds again). Keeper
+    * semantics are pairwise b-side drop; run [[Dedup.dupComponents]]
+    * over `<table>_pairs` for transitive clusters. Ids must be unique
+    * across batches. */
+  def ingestBatch(
+      batch: DataFrame,
+      writer: StagingWriter,
+      table: String,
+      threshold: T,
+      batchId: Long): Unit = {
+    val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val hasIndex = exists(writer, table)
+      val inner = pairsWithin(b, threshold)
+      val pairs =
+        (if (hasIndex) inner.union(pairsAgainst(b, writer, table, threshold)) else inner)
+          .filter(col("a_id") =!= col("b_id"))
+          .distinct()
+          .localCheckpoint(true)
+      writer.writeBatchPartition(pairs, s"${table}_pairs", batchId)
+      val kept = b.join(pairs.select(col("b_id").as(idCol)).distinct(),
+        Seq(idCol), "left_anti")
+        .localCheckpoint(true)
+      writer.writeBatchPartition(kept, s"${table}_docs", batchId)
+      writeBatchPartition(kept, writer, table, batchId)
+    } finally b.unpersist(blocking = false)
+  }
+}

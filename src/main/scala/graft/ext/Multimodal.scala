@@ -247,52 +247,35 @@ object Multimodal {
       posexplode(array((0 until DhashBands).map(k => col(s"b$k")): _*))
         .as(Seq("band", "band_val")): _*)
 
-  /** Ingest-time dHash index — the incremental leg of [[mediaNeardup]]
-    * (the X27/X57 convention the MinHash and embedding families
-    * already follow): signatures AND their banded blocking keys land
-    * as parquet artifacts, so a later batch near-dups against the
-    * standing media corpus without ever re-reading or re-signing a
-    * corpus payload. Bands are derived from the STORED signature
-    * table (read-back, not the in-flight frame), so index content is
-    * self-consistent even if the signature construction evolves
-    * between build and probe releases. */
-  def buildDhashIndex(
-      media: DataFrame, w: graft.sinks.StagingWriter, name: String): Unit = {
-    w.write(dhashSignature(media), s"${name}_dhash_sigs", append = false)
-    w.write(bandedSigs(w.read(s"${name}_dhash_sigs")),
-      s"${name}_dhash_bands", append = false)
-  }
+  /** Ingest-time dHash index ([[GrowingIndex]]) — the incremental leg
+    * of [[mediaNeardup]]: signatures AND their banded blocking keys land
+    * as parquet artifacts (`_dhash_sigs`, then `_dhash_bands` — the
+    * existence gate), so a later batch near-dups against the standing
+    * media corpus without ever re-reading or re-signing a corpus
+    * payload. The signature is pinned by one `localCheckpoint` before
+    * both writes, so the stored bands always derive from exactly the
+    * stored signatures. */
+  object DhashIndex extends NeardupIndex[Int] with GrowingIndex.NoSidecar {
+    val artifacts = Seq("_dhash_sigs", "_dhash_bands")
+    val idCol = "doc_id"
+    val defaultThreshold = 3
 
-  /** Index-write callback form, shared by [[appendDhashIndex]] and the
-    * streaming ingest tick (which writes each artifact as an
-    * idempotent batch partition instead of a plain append). The bands
-    * table is written LAST — it is the existence gate a probe/bootstrap
-    * checks, so a crash between the two writes reads as "no index yet"
-    * (the minhash sink convention). */
-  def dhashIndexSink(media: DataFrame)(sink: (DataFrame, String) => Unit): Unit = {
-    val sig = dhashSignature(media).localCheckpoint(true)
-    sink(sig, "_dhash_sigs")
-    sink(bandedSigs(sig), "_dhash_bands")
-  }
+    protected def frames(media: DataFrame, g: Unit)(emit: DataFrame => Unit): Unit = {
+      val sig = dhashSignature(media).localCheckpoint(true)
+      emit(sig)
+      emit(bandedSigs(sig))
+    }
 
-  /** Grow the index with a new batch's signatures — O(batch), the
-    * standing artifacts are appended to, never rewritten. */
-  def appendDhashIndex(
-      media: DataFrame, w: graft.sinks.StagingWriter, name: String): Unit =
-    dhashIndexSink(media)((df, suffix) => w.write(df, s"$name$suffix", append = true))
+    protected def pairsWithin(batch: DataFrame, maxDist: Int): DataFrame =
+      mediaNeardup(batch, maxDist)
+        .select(col("doc_id_a").as("a_id"), col("doc_id_b").as("b_id"), col("hamming"))
+        .localCheckpoint(true)
 
-  /** Compaction for the streaming dHash artifacts — the X67
-    * maintenance job applied to this index kind: fold each table's
-    * per-tick `ingest_batch=N` partitions into `ingest_batch=-1` with
-    * a target file count (crash-safe swap inside
-    * [[graft.sinks.StagingWriter.compactBatchPartitions]]). Probe
-    * results are unchanged by construction — same rows, fewer files
-    * (spec-pinned byte-identical); later ticks keep appending
-    * alongside the compacted history. */
-  def compactDhashIndex(
-      w: graft.sinks.StagingWriter, name: String, files: Int = 1): Unit = {
-    w.compactBatchPartitions(s"${name}_dhash_sigs", files)
-    w.compactBatchPartitions(s"${name}_dhash_bands", files)
+    protected def pairsAgainst(batch: DataFrame, writer: graft.sinks.StagingWriter,
+        table: String, maxDist: Int): DataFrame =
+      dhashNeardupAgainstIndex(batch, writer, table, maxDist)
+        .select(col("doc_id_corpus").as("a_id"), col("doc_id_batch").as("b_id"),
+          col("hamming"))
   }
 
   /** Probe: the batch's perceptual near-dups AGAINST the stored index

@@ -399,13 +399,6 @@ object ExtQueries {
     } finally pool.shutdown()
   }
 
-  /** Drop all cached pair sets (e.g. after fixtures change). */
-  def clearPairCache(): Unit = {
-    minhashPairCache.clear(); ngramPairCache.clear(); bpeMergeCache.clear()
-    componentCache.clear(); loosePairCache.clear()
-    copurchaseItemCache.clear(); copurchasePairCache.clear()
-  }
-
   /** Composed training-data prep flow — the shape a real corpus pipeline
     * runs end-to-end: near-dup removal (MinHash keepers: the lower
     * doc_id of every near-dup pair survives) → quality filter → per-lang
@@ -515,7 +508,7 @@ object ExtQueries {
           col("lang"), col("source"))
       val batch = base.filter(col("doc_id") % 10 === 0).unionByName(planted)
       val w = new graft.sinks.StagingWriter(s, graft.util.Scratch.dir("dhash_idx"))
-      Multimodal.buildDhashIndex(Multimodal.mediaTable(corpus), w, "media")
+      Multimodal.DhashIndex.build(Multimodal.mediaTable(corpus), w, "media")
       Multimodal.dhashNeardupAgainstIndex(Multimodal.mediaTable(batch), w, "media")
     }),
     "x16_repetition" -> ((s, d) => TextStats.repetition(docs(s, d))),
@@ -780,7 +773,7 @@ object ExtQueries {
       val batch = dd.filter(col("doc_id") % 10 === 0)
       val w = new graft.sinks.StagingWriter(s,
         graft.util.Scratch.dir("minhash_idx"))
-      Dedup.buildMinhashIndex(corpus, w, "docs")
+      Dedup.MinhashIndex.build(corpus, w, "docs")
       Dedup.neardupAgainstIndex(batch, w, "docs")
     }),
     // Incremental EMBEDDING near-dup: the corpus (original vectors) is
@@ -793,7 +786,7 @@ object ExtQueries {
       val e = plantedEmb(s, d)
       val w = new graft.sinks.StagingWriter(s,
         graft.util.Scratch.dir("embed_idx"))
-      Similarity.buildEmbedIndex(e.filter(col("vec_id") < 1000000L), w, "emb")
+      Similarity.SignLshIndex().build(e.filter(col("vec_id") < 1000000L), w, "emb")
       Similarity.embedNeardupAgainstIndex(e.filter(col("vec_id") >= 1000000L), w, "emb")
     }),
     // Duplicate-cluster labeling over the SHARED MinHash pair set

@@ -17,8 +17,8 @@ import graft.sources.JsonlIngest
   * MinHash near-dup components + canonical rewrite → decontaminate →
   * split → pack/export, with a per-stage funnel row published and the
   * artifacts laid out exactly where the incremental ingest loops
-  * ([[graft.streaming.EventsStream.neardupIngestQuery]],
-  * [[Dedup.appendMinhashIndex]]) expect to grow them.
+  * ([[Dedup.MinhashIndex]]'s `ingestQuery` and `append`) expect to
+  * grow them.
   *
   * Every stage is an operator verified solo in its own gate query; the
   * job pins their COMPOSITION — the ordering constraints that only
@@ -108,7 +108,7 @@ object CorpusPrepJob {
     * rollback set of the replay protocol, derived from the index's own
     * artifact list so the two can never drift. */
   private def batchSliceTables: Seq[String] =
-    CorpusTable +: Dedup.rebuildSwapOrder.map(IndexTable + _)
+    CorpusTable +: Dedup.MinhashIndex.artifacts.map(IndexTable + _)
   val PackedTable = "train_packed"
   val CurriculumTable = "curriculum"
   val FunnelTable = "prep_funnel"
@@ -197,7 +197,7 @@ object CorpusPrepJob {
       val corpus = writer.read(CorpusTable)
 
       // artifacts: the MinHash index the streaming ingest loop grows
-      // ([[Dedup.appendMinhashIndex]] / compaction), then — unless the
+      // ([[Dedup.MinhashIndex]] appends / compaction), then — unless the
       // caller defers them to compaction cadence (cfg.exports) — the
       // packed train sequences, the curriculum export, the optional
       // mixture
@@ -248,7 +248,7 @@ object CorpusPrepJob {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val fIndex = scala.concurrent.Future { inGroup {
-        Dedup.buildMinhashIndex(corpus, writer, IndexTable)
+        Dedup.MinhashIndex.build(corpus, writer, IndexTable)
       }}
       val fExports = scala.concurrent.Future { inGroup {
         if (!cfg.exports) Nil
@@ -364,7 +364,7 @@ object CorpusPrepJob {
     *     ever recomputed.
     *
     * Survivors append to the corpus table and the index
-    * ([[Dedup.appendMinhashIndex]]), so the NEXT tick — batch or
+    * ([[Dedup.MinhashIndex]]), so the NEXT tick — batch or
     * streaming — sees this one as history. The curriculum/pack exports
     * are compaction-cadence jobs, deliberately NOT re-run per tick
     * (re-sorting the full corpus per batch would be quadratic over a
@@ -391,7 +391,7 @@ object CorpusPrepJob {
     *
     * WITHOUT a `batchId` the appends are plain flat appends:
     * at-most-once per batch, the caller owns replay. The streaming
-    * loop ([[graft.streaming.EventsStream.neardupIngestQuery]]) keeps
+    * loop (`Dedup.MinhashIndex.ingestQuery`) keeps
     * its own idempotence protocol (ingest_batch-partition overwrite) —
     * use it when batches arrive as a stream. */
   def increment(
@@ -499,11 +499,11 @@ object CorpusPrepJob {
       batchId match {
         case Some(id) =>
           writer.appendBatchSlice(withSplit, CorpusTable, id)
-          Dedup.appendMinhashIndexSlice(withSplit, writer, IndexTable, id)
+          Dedup.MinhashIndex.appendBatchSlice(withSplit, writer, IndexTable, id)
           writer.commitBatch(CorpusTable, id) // the tick's commit point
         case None =>
           writer.write(withSplit, CorpusTable, append = true)
-          Dedup.appendMinhashIndex(withSplit, writer, IndexTable)
+          Dedup.MinhashIndex.append(withSplit, writer, IndexTable)
       }
       val counts = funnel.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       PrepReport(funnel, counts, quarantined = 0L,
@@ -536,7 +536,7 @@ object CorpusPrepJob {
     *
     * CRASH-SAFE throughout: the index rebuild stages all three
     * artifacts under `__rebuild*` names and swaps them in through the
-    * sink's backup protocol ([[Dedup.rebuildMinhashIndex]] — a refresh
+    * sink's backup protocol (`Dedup.MinhashIndex.rebuild` — a refresh
     * that dies mid-rebuild leaves the PREVIOUS index probe-consistent,
     * which matters because the INCREMENTAL ingest loops keep probing
     * it between refreshes), and the derived exports go through the
@@ -559,7 +559,7 @@ object CorpusPrepJob {
         .foreach(id => writer.deleteBatchSlice(t, id))
     }
     val corpus = writer.read(CorpusTable)
-    Dedup.rebuildMinhashIndex(corpus, writer, IndexTable)
+    Dedup.MinhashIndex.rebuild(corpus, writer, IndexTable)
     writer.writeAndSwap(
       Assemble.packBudget(corpus.filter(col("split") === "train"),
         cfg.packTokens, cfg.packShards),

@@ -1,7 +1,6 @@
 package graft.run
 
 import java.sql.Timestamp
-import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDateTime, ZoneId}
 import java.util.UUID
 
@@ -11,7 +10,6 @@ import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
-import graft.sinks.EntityWriter
 import graft.sources.{EntitySource, FetchRequest}
 import graft.xform.Normalizer
 

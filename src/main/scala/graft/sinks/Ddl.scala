@@ -75,11 +75,6 @@ final class Ddl(spark: SparkSession, registry: SchemaRegistry) {
       DeployReport(a.success ++ b.success, a.exists ++ b.exists, a.failed ++ b.failed)
     }
 
-  /** D2 dispatcher: deploy every entity in the list, merging reports
-    * (sqlDwh.py:176-215). */
-  def deployAll(db: String, metas: Seq[EntityMeta]): DeployReport =
-    merge(metas.map(m => createTable(db, m)))
-
   /** T3 + D2: the config-driven deploy list — `[EntityID] + expand` per
     * configured entity (sqlDwh.py:145-172) — dispatched as one typed
     * PARENT table per entity and one typed CHILD table per subform

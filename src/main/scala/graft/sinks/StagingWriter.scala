@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * regardless of standing-table size — nothing ever re-lists or
   * re-counts the standing table.
   */
-final class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWriter {
+class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWriter {
 
   private val whPath = new Path(warehouseDir)
   private def fs = whPath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -58,17 +58,6 @@ final class StagingWriter(spark: SparkSession, warehouseDir: String) extends Ent
     names
   }
 
-  /** Write a CATALOG table bucketed (and sorted) on the join key.
-    *
-    * The 100 TB co-location path: parent and child staging tables
-    * bucketed on the same key with the same bucket count join with NO
-    * exchange — the per-bucket files are already hash-distributed, so
-    * the engine's hottest repeated join (entity ⋈ subform) skips
-    * shuffling both tables every query (the in-task sort of pre-sorted
-    * single-file buckets is a cheap nearly-sorted pass; fully sorted
-    * scans sit behind a legacy flag since Spark 3.0). Bucketing
-    * requires the session catalog (`saveAsTable`); the path-based
-    * writes above stay for the plain landing layer. */
   /** K2: the reference's debug CSV dump of a staged frame
     * (priorityDataSource.py:879) — optional, off the hot path. */
   def debugCsv(df: DataFrame, table: String): Unit =
@@ -97,17 +86,17 @@ final class StagingWriter(spark: SparkSession, warehouseDir: String) extends Ent
   override def promote(entity: String, pk: Seq[String]): Long =
     writeAndSwap(latestPerPk(read(stagingName(entity)), pk), entity.toLowerCase)
 
-  /** Write `df` at `table` with the crash-safe swap: write tmp → rename
-    * live→backup → rename tmp→live → delete backup, checking every
-    * rename. A crash between the two renames leaves the full table at
+  /** Write `df` at `table` with the crash-safe swap: write tmp, then
+    * [[swapIn]] (rename live→backup → rename tmp→live → delete backup,
+    * checking every rename). A crash between the two renames leaves the full table at
     * the backup path (recoverable by one rename), never a half-written
     * or missing table. Row count observed on the write job itself. */
   private[graft] def writeAndSwap(
       df: DataFrame, table: String, partCol: Option[String] = None,
       appliedBatch: Option[Long] = None): Long = {
     val obs = Observation()
-    val tmp = new Path(path(table) + "__swap_tmp")
-    val bak = new Path(path(table) + "__swap_bak")
+    val tmpTable = s"${table}__swap_tmp"
+    val tmp = new Path(path(tmpTable))
     val w = df.observe(obs, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite)
     partCol.fold(w)(c => w.partitionBy(c)).parquet(tmp.toString)
@@ -119,16 +108,7 @@ final class StagingWriter(spark: SparkSession, warehouseDir: String) extends Ent
       fs.create(new Path(tmp, s"_graft_applied_b$id"), true).close()
     }
     val kept = obs.get("rows").asInstanceOf[Long]
-    val dst = new Path(path(table))
-    fs.delete(bak, true)
-    val hadDst = fs.exists(dst) // first promotion has no live table yet
-    if (hadDst && !fs.rename(dst, bak))
-      throw new java.io.IOException(s"swap: cannot move $dst aside")
-    if (!fs.rename(tmp, dst)) {
-      if (hadDst) fs.rename(bak, dst) // restore; table untouched
-      throw new java.io.IOException(s"swap: cannot activate $tmp")
-    }
-    fs.delete(bak, true)
+    swapIn(tmpTable, table)
     kept
   }
 
@@ -202,11 +182,11 @@ final class StagingWriter(spark: SparkSession, warehouseDir: String) extends Ent
     val dst = new Path(path(table))
     val bak = new Path(path(table) + "__swap_bak")
     fs.delete(bak, true)
-    val hadDst = fs.exists(dst)
+    val hadDst = fs.exists(dst) // a first swap has no live table yet
     if (hadDst && !fs.rename(dst, bak))
       throw new java.io.IOException(s"swapIn: cannot move $dst aside")
     if (!fs.rename(tmp, dst)) {
-      if (hadDst) fs.rename(bak, dst)
+      if (hadDst) fs.rename(bak, dst) // restore; table untouched
       throw new java.io.IOException(s"swapIn: cannot activate $tmp")
     }
     fs.delete(bak, true)
@@ -339,6 +319,17 @@ final class StagingWriter(spark: SparkSession, warehouseDir: String) extends Ent
     out.close()
   }
 
+  /** Write a CATALOG table bucketed (and sorted) on the join key.
+    *
+    * The 100 TB co-location path: parent and child staging tables
+    * bucketed on the same key with the same bucket count join with NO
+    * exchange — the per-bucket files are already hash-distributed, so
+    * the engine's hottest repeated join (entity ⋈ subform) skips
+    * shuffling both tables every query (the in-task sort of pre-sorted
+    * single-file buckets is a cheap nearly-sorted pass; fully sorted
+    * scans sit behind a legacy flag since Spark 3.0). Bucketing
+    * requires the session catalog (`saveAsTable`); the path-based
+    * writes above stay for the plain landing layer. */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit =
     // one file per bucket (repartition on the bucket key): the scan can
     // then use the per-file sort order and the join elides its Sort too

@@ -168,69 +168,6 @@ object EventsStream {
       }
   }
 
-  final case class LagState(nEvents: Long, lastUs: Long, lastType: String)
-  final case class LagRow(event_id: Long, user_id: Long, event_type: String,
-      seq_idx: Long, prev_type: Option[String], gap_us: Option[Long])
-
-  /** Streaming face of the batch lag-feature table
-    * (`ext/Sessions.lagFeatures`): per-user keyed state carries only
-    * (count, last event time, last type) and every event emits its
-    * feature row EXACTLY ONCE — the online path that hands a scoring
-    * model "what did this user just do and how long ago" at serve
-    * time, where the batch form is the training-set truth (the same
-    * online/offline pairing as `botState`; a model trained on batch
-    * features and served streaming ones silently skews unless the two
-    * are THIS provably identical). Within a batch, rows process in
-    * (us, event_id) order; across batches per-user event-time
-    * monotonicity is assumed. The batch-equals-stream claim holds
-    * with `timeoutMs = None` (or while no user sits idle past the
-    * timeout): in-order replay then equals the batch form EXACTLY,
-    * spec-pinned. With a timeout set, an evicted user's next event
-    * restarts at seq_idx = 1 with NULL prev_type/gap_us — that IS
-    * online/offline feature skew, so production deployments that
-    * need the equivalence must pass `None` (and bound state some
-    * other way, e.g. user-id TTL upstream); the default keeps the
-    * bounded-state posture and documents the trade. Rows are final
-    * at emission — Append mode, no retraction; state per user is two
-    * longs and a type string. */
-  def lagFeatureState(
-      spark: SparkSession,
-      events: Dataset[Event],
-      timeoutMs: Option[Long] = Some(24 * 3600 * 1000L)): Dataset[LagRow] = {
-    import spark.implicits._
-    val timeoutConf =
-      if (timeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LagState, LagRow](
-        OutputMode.Append, timeoutConf) {
-        case (user, rows, state: GroupState[LagState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            def tsUs(t: java.sql.Timestamp): Long =
-              t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-            val ordered = rows.toSeq.sortBy(e => (tsUs(e.ts), e.event_id))
-            if (ordered.isEmpty) Iterator.empty
-            else {
-              var s = state.getOption.getOrElse(LagState(0L, 0L, null))
-              val out = ordered.map { e =>
-                val us = tsUs(e.ts)
-                val row = LagRow(e.event_id, user, e.event_type,
-                  s.nEvents + 1L,
-                  Option(s.lastType),
-                  if (s.nEvents == 0L) None else Some(us - s.lastUs))
-                s = LagState(s.nEvents + 1L, us, e.event_type)
-                row
-              }
-              state.update(s)
-              timeoutMs.foreach(state.setTimeoutDuration)
-              out.iterator
-            }
-          }
-      }
-  }
-
   final case class BotState(nEvents: Long, lastUs: Long, minGapUs: Long,
       curDay: Long, curDayCount: Long, maxDayCount: Long, activeDays: Long)
   final case class BotUpdate(user_id: Long, n_events: Long,
@@ -339,8 +276,10 @@ object EventsStream {
     * ([[graft.ext.TextStats.withQuality]]). Every stage is a narrow
     * projection or watermark-evicted state, so a continuous 100 TB
     * ingest holds only the dedup delay-window — no unbounded state, no
-    * stream-stream join. Near-dup against corpus HISTORY stays on the
-    * batch side (`Dedup.neardupAgainstIndex` at compaction time). */
+    * stream-stream join. Near-dup against corpus HISTORY is the
+    * growing-index tick's job ([[graft.ext.NeardupIndex.ingestQuery]]
+    * on [[graft.ext.Dedup.MinhashIndex]]), which keeps its state in
+    * the index parquet instead. */
   def preppedDocStream(
       rows: DataFrame,
       tsCol: String = "ts",
@@ -351,86 +290,6 @@ object EventsStream {
       dedupedStream(rows, tsCol, contentCol, delay)
         .withColumnRenamed(contentCol, "text"))
       .filter(col("quality_score") >= minQuality)
-
-  /** Continuous ingest near-dup — the streaming composition of the
-    * batch index operators, i.e. the loop a production corpus ingest
-    * actually runs: every micro-batch
-    *
-    *   1. finds its WITHIN-batch near-dup pairs
-    *      ([[graft.ext.Dedup.minhashNeardupMaterialized]]);
-    *   2. probes the standing MinHash index for pairs against ALL
-    *      previously-kept history ([[graft.ext.Dedup.neardupAgainstIndex]]
-    *      — only the batch is shingled; history is read back as narrow
-    *      integer rows, batch side broadcast);
-    *   3. appends the pair evidence to `<table>_pairs` and the
-    *      surviving documents (not the dropped b-side of any pair) to
-    *      `<table>_docs`;
-    *   4. appends ONLY the survivors' signatures to the index
-    *      ([[graft.ext.Dedup.appendMinhashIndex]]), so the NEXT batch
-    *      sees this one as history.
-    *
-    * The first batch bootstraps the index (overwrite). State lives in
-    * the index parquet, not the state store — the stream holds nothing
-    * between ticks, so a 100 TB corpus history costs the stream zero
-    * memory; [[graft.ext.BucketCap]] still guards degenerate buckets at
-    * probe time. Keeper semantics are pairwise b-side drop (the
-    * x14/x34 funnel convention); run [[graft.ext.Dedup.dupComponents]]
-    * over the accumulated pair table for transitive clusters at
-    * compaction time. Document ids must be unique across batches (the
-    * [[graft.ext.Dedup.neardupAgainstIndex]] contract). */
-  def neardupIngestQuery(
-      docs: DataFrame,
-      writer: graft.sinks.StagingWriter,
-      table: String,
-      checkpoint: String,
-      threshold: Double = 0.8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        neardupIngestBatch(batch.toDF(), writer, table, threshold, batchId)
-        ()
-      }
-      .start()
-
-  /** One tick of [[neardupIngestQuery]] — exposed so the identical
-    * logic is directly testable and reusable as a batch compaction
-    * step. */
-  def neardupIngestBatch(
-      batch: DataFrame,
-      writer: graft.sinks.StagingWriter,
-      table: String,
-      threshold: Double,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bandsPath = new org.apache.hadoop.fs.Path(writer.path(s"${table}__bands"))
-      val hasIndex = bandsPath
-        .getFileSystem(spark.sessionState.newHadoopConf()).exists(bandsPath)
-      val inner = graft.ext.Dedup.minhashNeardupMaterialized(b, threshold)
-      // foreachBatch is AT-LEAST-ONCE: a crash between these writes and
-      // the checkpoint commit replays the whole tick. Every write is
-      // therefore an ingest_batch-partition overwrite (idempotent), and
-      // the pair set drops self-matches (a replayed doc colliding with
-      // its own already-indexed copy) and double-finds (a within-batch
-      // pair the replayed probe finds AGAIN against the index).
-      val pairs =
-        (if (hasIndex)
-          inner.union(graft.ext.Dedup.neardupAgainstIndex(b, writer, table, threshold))
-        else inner)
-          .filter(col("a_id") =!= col("b_id"))
-          .distinct()
-          .localCheckpoint(true)
-      writer.writeBatchPartition(pairs, s"${table}_pairs", batchId)
-      val kept = b.join(pairs.select(col("b_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
-      writer.writeBatchPartition(kept, s"${table}_docs", batchId)
-      graft.ext.Dedup.minhashIndexSink(kept) { (df, suffix) =>
-        writer.writeBatchPartition(df, s"$table$suffix", batchId)
-      }
-    } finally b.unpersist(blocking = false)
-  }
 
   /** Streaming delete-aware CDC apply — the online face of
     * [[graft.ext.Merge.cdcApply]]: each micro-batch is an op-tagged
@@ -696,146 +555,6 @@ object EventsStream {
         ()
       }
       .start()
-
-  /** The EMBEDDING sibling of [[neardupIngestQuery]]: continuous
-    * cosine near-dup ingest against a growing sign-LSH index. Per
-    * micro-batch: within-batch pairs
-    * ([[graft.ext.Similarity.embedNeardup]]), probe of the stored
-    * index with the sidecar geometry
-    * ([[graft.ext.Similarity.embedNeardupAgainstIndex]] — per-row dim
-    * guard, exact-cosine verify), pair evidence to `<table>_pairs`,
-    * survivors to `<table>_docs`, survivors' bands+vectors appended
-    * ([[graft.ext.Similarity.appendEmbedIndex]]). First batch
-    * bootstraps via [[graft.ext.Similarity.buildEmbedIndex]] with the
-    * default geometry. Zero state between ticks; vec_id spaces must be
-    * unique across batches. Expects (vec_id, embedding) columns. */
-  def embedNeardupIngestQuery(
-      emb: DataFrame,
-      writer: graft.sinks.StagingWriter,
-      table: String,
-      checkpoint: String,
-      threshold: Double = 0.9): org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        embedNeardupIngestBatch(batch.toDF(), writer, table, threshold, batchId)
-        ()
-      }
-      .start()
-
-  /** One tick of [[embedNeardupIngestQuery]] — directly testable and
-    * reusable as a batch compaction step. */
-  def embedNeardupIngestBatch(
-      batch: DataFrame,
-      writer: graft.sinks.StagingWriter,
-      table: String,
-      threshold: Double,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // gate on __embbands — the LAST artifact the index sink writes —
-      // so a bootstrap that crashed mid-sink (sidecar written, bands
-      // not) reads as "no index yet" instead of crash-looping the probe
-      val bandsPath = new org.apache.hadoop.fs.Path(writer.path(s"${table}__embbands"))
-      val hasIndex = bandsPath
-        .getFileSystem(spark.sessionState.newHadoopConf()).exists(bandsPath)
-      // embedNeardup returns lazily — pin it before the writes below
-      // (the minhash side's Materialized variant does this internally)
-      val inner = graft.ext.Similarity.embedNeardup(b, threshold)
-        .localCheckpoint(true)
-      // at-least-once replay discipline: see neardupIngestBatch — every
-      // write is an idempotent batch-partition overwrite, self-matches
-      // and double-finds are dropped from the pair set
-      val pairs =
-        (if (hasIndex)
-          inner.union(
-            graft.ext.Similarity.embedNeardupAgainstIndex(b, writer, table, threshold))
-        else inner)
-          .filter(col("a_id") =!= col("b_id"))
-          .distinct()
-          .localCheckpoint(true)
-      writer.writeBatchPartition(pairs, s"${table}_pairs", batchId)
-      val kept = b.join(pairs.select(col("b_id").as("vec_id")).distinct(),
-        Seq("vec_id"), "left_anti")
-        .localCheckpoint(true)
-      writer.writeBatchPartition(kept, s"${table}_docs", batchId)
-      // bootstraps the geometry sidecar on the first nonempty tick
-      graft.ext.Similarity.writeEmbedIndexBatch(kept, writer, table, batchId)
-    } finally b.unpersist(blocking = false)
-  }
-
-  /** The MEDIA sibling of [[neardupIngestQuery]]: continuous
-    * perceptual near-dup ingest against a growing dHash index. Per
-    * micro-batch: within-batch pairs
-    * ([[graft.ext.Multimodal.mediaNeardup]] — exact banded recall at
-    * hamming ≤ `maxDist`), probe of the stored index
-    * ([[graft.ext.Multimodal.dhashNeardupAgainstIndex]] — no corpus
-    * payload ever re-read), pair evidence to `<table>_pairs`,
-    * survivors to `<table>_docs`, survivors' signatures+bands appended
-    * via [[graft.ext.Multimodal.dhashIndexSink]]. Zero state between
-    * ticks; doc_id spaces must be unique across batches. Expects
-    * mediaTable-shaped rows (doc_id + binary payload; extra metadata
-    * columns ride along into `<table>_docs`). */
-  def mediaNeardupIngestQuery(
-      media: DataFrame,
-      writer: graft.sinks.StagingWriter,
-      table: String,
-      checkpoint: String,
-      maxDist: Int = 3): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        mediaNeardupIngestBatch(batch.toDF(), writer, table, maxDist, batchId)
-        ()
-      }
-      .start()
-
-  /** One tick of [[mediaNeardupIngestQuery]] — directly testable and
-    * reusable as a batch compaction step. */
-  def mediaNeardupIngestBatch(
-      batch: DataFrame,
-      writer: graft.sinks.StagingWriter,
-      table: String,
-      maxDist: Int,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // gate on _dhash_bands — the LAST artifact the index sink writes
-      val bandsPath = new org.apache.hadoop.fs.Path(writer.path(s"${table}_dhash_bands"))
-      val hasIndex = bandsPath
-        .getFileSystem(spark.sessionState.newHadoopConf()).exists(bandsPath)
-      // unify both pair shapes to (a_id = standing/earlier, b_id =
-      // batch/later): within-batch pairs keep doc_id_a < doc_id_b, so
-      // the later id is the drop candidate on both legs
-      val inner = graft.ext.Multimodal.mediaNeardup(b, maxDist)
-        .select(col("doc_id_a").as("a_id"), col("doc_id_b").as("b_id"),
-          col("hamming"))
-        .localCheckpoint(true)
-      // at-least-once replay discipline: see neardupIngestBatch — every
-      // write is an idempotent batch-partition overwrite, self-matches
-      // and double-finds are dropped from the pair set
-      val pairs =
-        (if (hasIndex)
-          inner.union(
-            graft.ext.Multimodal.dhashNeardupAgainstIndex(b, writer, table, maxDist)
-              .select(col("doc_id_corpus").as("a_id"),
-                col("doc_id_batch").as("b_id"), col("hamming")))
-        else inner)
-          .filter(col("a_id") =!= col("b_id"))
-          .distinct()
-          .localCheckpoint(true)
-      writer.writeBatchPartition(pairs, s"${table}_pairs", batchId)
-      val kept = b.join(pairs.select(col("b_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
-      writer.writeBatchPartition(kept, s"${table}_docs", batchId)
-      graft.ext.Multimodal.dhashIndexSink(kept) { (df, suffix) =>
-        writer.writeBatchPartition(df, s"$table$suffix", batchId)
-      }
-    } finally b.unpersist(blocking = false)
-  }
 
   /** Stream → staging: every micro-batch lands through the SAME
     * EntityWriter the batch refresh uses (append mode), with a

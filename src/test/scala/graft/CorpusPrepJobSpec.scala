@@ -75,7 +75,7 @@ class CorpusPrepJobSpec extends SparkSpec {
       (8888888L, "a wholly fresh document about migratory lighthouse maintenance schedules " +
         "and the keepers who follow them across the northern coast every single year")))
       .toDF("doc_id", "text")
-    graft.ext.Dedup.appendMinhashIndex(newDoc, writer, CorpusPrepJob.IndexTable)
+    graft.ext.Dedup.MinhashIndex.append(newDoc, writer, CorpusPrepJob.IndexTable)
     val probe2 = spark.createDataFrame(Seq(
       (8888889L, "a wholly fresh document about migratory lighthouse maintenance schedules " +
         "and the keepers who follow them across the northern coast every single year indeed")))
@@ -261,7 +261,7 @@ class CorpusPrepJobSpec extends SparkSpec {
 
     // crash point 1: staging completed, NO swap yet — live index
     // untouched by construction (staged writes land under __rebuild*)
-    val staged = graft.ext.Dedup.stageMinhashIndex(
+    val staged = graft.ext.Dedup.MinhashIndex.stage(
       writer.read(CorpusPrepJob.CorpusTable), writer, CorpusPrepJob.IndexTable)
     assert(probeSet() == before, "staging alone disturbed the live index")
 
@@ -270,7 +270,7 @@ class CorpusPrepJobSpec extends SparkSpec {
     // because the rebuild derives from the same corpus the old index
     // covers: every doc the old bands gate emits still finds its
     // shingle rows, and per-doc shingle content is deterministic.
-    graft.ext.Dedup.rebuildSwapOrder.foreach { s =>
+    graft.ext.Dedup.MinhashIndex.artifacts.foreach { s =>
       writer.swapIn(s"$staged$s", s"${CorpusPrepJob.IndexTable}$s")
       assert(probeSet() == before, s"probe diverged after swapping $s")
     }

@@ -867,7 +867,7 @@ class ExtSpec extends SparkSpec {
     val corpus = all.filter($"doc_id" % 10 =!= 0)
     val batch = all.filter($"doc_id" % 10 === 0)
     val w = new graft.sinks.StagingWriter(spark, tmpDir("mhidx"))
-    Dedup.buildMinhashIndex(corpus, w, "docs")
+    Dedup.MinhashIndex.build(corpus, w, "docs")
     val incr = Dedup.neardupAgainstIndex(batch, w, "docs")
     // the plan must read the stored artifacts, not re-shingle the
     // corpus — proven on the lazy builder (the public path checkpoints
@@ -1124,7 +1124,7 @@ class ExtSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("embidx_spec").toString)
     // NON-default geometry: the probe must band with the sidecar's
     // family, not the defaults, or it finds nothing
-    Similarity.buildEmbedIndex(corpus, w, "e", planes = 6, tables = 12)
+    Similarity.SignLshIndex(planes = 6, tables = 12).build(corpus, w, "e")
     val got = Similarity.embedNeardupAgainstIndex(batch, w, "e", threshold = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 10L)), s"got $got")
@@ -1371,7 +1371,7 @@ class ExtSpec extends SparkSpec {
   test("ingest-time IVF index: planning-time pruning, full-probe exactness, parity with retrain path") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val writer = new graft.sinks.StagingWriter(spark, tmpDir("ivfidx"))
-    Similarity.buildIvfIndex(emb, writer, "emb_ivf", cells = 10, iters = 2)
+    Similarity.IvfIndex(cells = 10, iters = 2).build(emb, writer, "emb_ivf")
 
     // full probe over the index == the exact baseline, bit-for-bit: the
     // stored assignment + pruning path changes WHERE rows are read, never
@@ -1431,7 +1431,7 @@ class ExtSpec extends SparkSpec {
   test("appendIvfIndex: stable quantizer, appended vectors probe-visible, dim guard") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val writer = new graft.sinks.StagingWriter(spark, tmpDir("ivfapp"))
-    Similarity.buildIvfIndex(emb, writer, "ivf", cells = 10, iters = 2)
+    Similarity.IvfIndex(cells = 10, iters = 2).build(emb, writer, "ivf")
     val centsBefore = Similarity.readIvfCentroids(writer, "ivf")
       .map { case (c, v) => c -> v.toSeq }
 
@@ -1440,7 +1440,7 @@ class ExtSpec extends SparkSpec {
     val srcIds = Seq(3L, 17L, 42L)
     val batch = emb.filter($"vec_id".isin(srcIds.map(java.lang.Long.valueOf): _*))
       .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
-    Similarity.appendIvfIndex(batch, writer, "ivf")
+    Similarity.IvfIndex().append(batch, writer, "ivf")
     val cellOf = writer.read("ivf").collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("cell")).toMap
     srcIds.foreach { id =>
@@ -1459,23 +1459,23 @@ class ExtSpec extends SparkSpec {
     assert(top.length == 1 && top.head.getLong(1) == 1000003L,
       s"appended twin not found: ${top.toSeq}")
 
-    // dim-mismatch batches fail loudly, per row (the appendEmbedIndex guard)
+    // dim-mismatch batches fail loudly, per row (the sign-LSH index guard)
     val bad = Seq((5000000L, (1 to 128).map(i => math.sin(i.toDouble).toFloat)))
       .toDF("vec_id", "embedding")
-    val err = intercept[Exception] { Similarity.appendIvfIndex(bad, writer, "ivf") }
+    val err = intercept[Exception] { Similarity.IvfIndex().append(bad, writer, "ivf") }
     assert(err.getMessage.contains("dim"), s"got: ${err.getMessage}")
   }
 
   test("rebuildIvfIndex: re-centered at a new cell count, full-probe still exact") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val writer = new graft.sinks.StagingWriter(spark, tmpDir("ivfreb"))
-    Similarity.buildIvfIndex(emb, writer, "ivf", cells = 5, iters = 2)
+    Similarity.IvfIndex(cells = 5, iters = 2).build(emb, writer, "ivf")
     // grow it (appends keep the old quantizer), then rebuild at 8 cells
     val batch = emb.filter($"vec_id".isin(java.lang.Long.valueOf(7L)))
       .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
-    Similarity.appendIvfIndex(batch, writer, "ivf")
+    Similarity.IvfIndex().append(batch, writer, "ivf")
     val nBefore = writer.read("ivf").count()
-    Similarity.rebuildIvfIndex(writer, "ivf", cells = 8, iters = 2)
+    Similarity.IvfIndex(cells = 8, iters = 2).rebuild(writer.read("ivf"), writer, "ivf")
     // nothing lost, quantizer resized, every stored row assigned to a
     // live cell of the NEW sidecar
     assert(writer.read("ivf").count() == nBefore, "rebuild lost vectors")
@@ -4127,7 +4127,7 @@ class ExtSpec extends SparkSpec {
         .select(($"doc_id" + 7000000L).as("doc_id"), $"text",
           $"lang", $"source"))
     val w = new graft.sinks.StagingWriter(spark, tmpDir("dhash_idx_spec"))
-    graft.ext.Multimodal.buildDhashIndex(
+    graft.ext.Multimodal.DhashIndex.build(
       graft.ext.Multimodal.mediaTable(corpus), w, "m")
     val got = graft.ext.Multimodal.dhashNeardupAgainstIndex(
       graft.ext.Multimodal.mediaTable(batch), w, "m").collect()
@@ -4148,7 +4148,7 @@ class ExtSpec extends SparkSpec {
     assert(got.nonEmpty, "planted exact copies must cross corpus <-> batch")
     // append leg: index the batch too, then a copy of a BATCH doc
     // pairs against it — the index grew, O(batch) at ingest
-    graft.ext.Multimodal.appendDhashIndex(
+    graft.ext.Multimodal.DhashIndex.append(
       graft.ext.Multimodal.mediaTable(batch), w, "m")
     val batchDoc = batch.limit(1).select($"doc_id").as[Long].head()
     val probe2 = base.filter($"doc_id" === batchDoc)

@@ -180,7 +180,7 @@ class StreamingSpec extends SparkSpec {
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val other = (1 to 40).map(i => s"q$i").mkString(" ")
     def nearDupOf(t: String) = t.replace("w20", "CHANGED")
-    val q = EventsStream.neardupIngestQuery(docs, writer, "nd", tmpDir("ndckpt"))
+    val q = graft.ext.Dedup.MinhashIndex.ingestQuery(docs, writer, "nd", tmpDir("ndckpt"))
     try {
       // batch 0: two unrelated docs — bootstraps the index, no pairs
       stream.addData((1L, base), (2L, other))
@@ -217,7 +217,7 @@ class StreamingSpec extends SparkSpec {
     val writer = new graft.sinks.StagingWriter(spark, tmpDir("cmpwh"))
     def mk(p: String) = (1 to 40).map(i => s"$p$i").mkString(" ")
     val stream = MemoryStream[(Long, String)]
-    val q = EventsStream.neardupIngestQuery(
+    val q = graft.ext.Dedup.MinhashIndex.ingestQuery(
       stream.toDF().toDF("doc_id", "text"), writer, "nd", tmpDir("cmpck"))
     try { // three ticks → three ingest_batch partitions per artifact
       stream.addData((1L, mk("w")), (2L, mk("q"))); q.processAllAvailable()
@@ -230,7 +230,7 @@ class StreamingSpec extends SparkSpec {
     val before = probeSet()
     assert(before.exists(p => p._1 == 3L && p._2 == 100L),
       s"probe found nothing pre-compaction: $before")
-    graft.ext.Dedup.compactMinhashIndex(writer, "nd", files = 1)
+    graft.ext.Dedup.MinhashIndex.compact(writer, "nd", files = 1)
     assert(probeSet() == before, "compaction changed probe results")
     // layout: every tick partition folded into ingest_batch=-1, 1 file
     val bandsDir = new java.io.File(writer.path("nd__bands"))
@@ -244,7 +244,7 @@ class StreamingSpec extends SparkSpec {
     // must NOT collide with compacted history) appends next to the
     // folded partition; both old and new history stay probe-visible
     val stream2 = MemoryStream[(Long, String)]
-    val q2 = EventsStream.neardupIngestQuery(
+    val q2 = graft.ext.Dedup.MinhashIndex.ingestQuery(
       stream2.toDF().toDF("doc_id", "text"), writer, "nd", tmpDir("cmpck2"))
     try {
       stream2.addData((5L, mk("v"))); q2.processAllAvailable()
@@ -321,7 +321,7 @@ class StreamingSpec extends SparkSpec {
     val a = (1 to 64).map(i => math.sin(i.toDouble))
     val c = (1 to 64).map(i => math.cos(i * 3.7))
     val z = (1 to 64).map(i => math.sin(i * 2.9 + 1))
-    val q = EventsStream.embedNeardupIngestQuery(
+    val q = graft.ext.Similarity.SignLshIndex().ingestQuery(
       stream.toDF().toDF("vec_id", "embedding"), writer, "ei", tmpDir("cmpembck"),
       threshold = 0.99)
     try { // two ticks → two partitions per artifact
@@ -336,7 +336,7 @@ class StreamingSpec extends SparkSpec {
     assert(before.exists(p => p._1 == 3L && p._2 == 100L),
       s"probe found nothing pre-compaction: $before")
     val metaBefore = writer.read("ei__lshmeta").collect().toSeq
-    graft.ext.Similarity.compactEmbedIndex(writer, "ei", files = 1)
+    graft.ext.Similarity.SignLshIndex().compact(writer, "ei", files = 1)
     assert(probeSet() == before, "compaction changed embed probe results")
     assert(writer.read("ei__lshmeta").collect().toSeq == metaBefore,
       "compaction touched the geometry sidecar")
@@ -354,7 +354,7 @@ class StreamingSpec extends SparkSpec {
     val c = (1 to 64).map(i => math.cos(i * 3.7))
     val z = (1 to 64).map(i => math.sin(i * 2.9 + 1))
     def scaled(v: Seq[Double], f: Double) = v.map(_ * f) // cosine 1.0 with v
-    val q = EventsStream.embedNeardupIngestQuery(emb, writer, "ei", tmpDir("eickpt"),
+    val q = graft.ext.Similarity.SignLshIndex().ingestQuery(emb, writer, "ei", tmpDir("eickpt"),
       threshold = 0.99)
     try {
       // batch 0 bootstraps: two far vectors, no pairs
@@ -398,14 +398,14 @@ class StreamingSpec extends SparkSpec {
       writer.read("nd_pairs").collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
       writer.read("nd__bands").count(),
       writer.read("nd__shingles").count())
-    EventsStream.neardupIngestBatch(b0, writer, "nd", 0.8, batchId = 0L)
-    EventsStream.neardupIngestBatch(b1, writer, "nd", 0.8, batchId = 1L)
+    graft.ext.Dedup.MinhashIndex.ingestBatch(b0, writer, "nd", 0.8, batchId = 0L)
+    graft.ext.Dedup.MinhashIndex.ingestBatch(b1, writer, "nd", 0.8, batchId = 1L)
     val before = state()
     assert(before._1 == Set(1L, 2L, 13L) && before._2 == Set((1L, 11L)))
     // replay BOTH ticks (11 now collides with its own indexed history;
     // 1's copy self-matches) — state must not change
-    EventsStream.neardupIngestBatch(b0, writer, "nd", 0.8, batchId = 0L)
-    EventsStream.neardupIngestBatch(b1, writer, "nd", 0.8, batchId = 1L)
+    graft.ext.Dedup.MinhashIndex.ingestBatch(b0, writer, "nd", 0.8, batchId = 0L)
+    graft.ext.Dedup.MinhashIndex.ingestBatch(b1, writer, "nd", 0.8, batchId = 1L)
     assert(state() == before, s"minhash replay drifted: ${state()} vs $before")
 
     // embedding loop: same discipline
@@ -419,12 +419,12 @@ class StreamingSpec extends SparkSpec {
       writer.read("ei_pairs").collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
       writer.read("ei__embbands").count(),
       writer.read("ei__vecs").count())
-    EventsStream.embedNeardupIngestBatch(e0, writer, "ei", 0.99, batchId = 0L)
-    EventsStream.embedNeardupIngestBatch(e1, writer, "ei", 0.99, batchId = 1L)
+    graft.ext.Similarity.SignLshIndex().ingestBatch(e0, writer, "ei", 0.99, batchId = 0L)
+    graft.ext.Similarity.SignLshIndex().ingestBatch(e1, writer, "ei", 0.99, batchId = 1L)
     val ebefore = estate()
     assert(ebefore._1 == Set(1L, 2L, 13L) && ebefore._2 == Set((1L, 11L)))
-    EventsStream.embedNeardupIngestBatch(e0, writer, "ei", 0.99, batchId = 0L)
-    EventsStream.embedNeardupIngestBatch(e1, writer, "ei", 0.99, batchId = 1L)
+    graft.ext.Similarity.SignLshIndex().ingestBatch(e0, writer, "ei", 0.99, batchId = 0L)
+    graft.ext.Similarity.SignLshIndex().ingestBatch(e1, writer, "ei", 0.99, batchId = 1L)
     assert(estate() == ebefore, s"embed replay drifted: ${estate()} vs $ebefore")
   }
 
@@ -586,7 +586,7 @@ class StreamingSpec extends SparkSpec {
     val other = (1 to 30).map(i => "b" * (i % 6 + 1) + (i * i)).mkString(" ")
     val subst = base.replace("w20", "x20") // same length, few bits flip
     val fresh = (1 to 35).map(i => s"${i * 37}z" + "y" * (i % 5)).mkString(" ")
-    val q = EventsStream.mediaNeardupIngestQuery(media, writer, "md", tmpDir("mdckpt"))
+    val q = graft.ext.Multimodal.DhashIndex.ingestQuery(media, writer, "md", tmpDir("mdckpt"))
     try {
       // batch 0: two unrelated payloads — bootstraps the index
       stream.addData((1L, base), (2L, other))
@@ -625,7 +625,7 @@ class StreamingSpec extends SparkSpec {
         writer.read("md_dhash_bands").count(),
         writer.read("md_dhash_sigs").count())
       val before = state()
-      EventsStream.mediaNeardupIngestBatch(
+      graft.ext.Multimodal.DhashIndex.ingestBatch(
         graft.ext.Multimodal.mediaTable(
           Seq((21L, fresh)).toDF("doc_id", "text")),
         writer, "md", 3, batchId = 2L)
@@ -643,7 +643,7 @@ class StreamingSpec extends SparkSpec {
     val g4 = (1 to 44).map(i => "m" + "o" * (i % 3) + (i * 13)).mkString(" ")
     def md(df: org.apache.spark.sql.DataFrame) = graft.ext.Multimodal.mediaTable(df)
     val stream = MemoryStream[(Long, String)]
-    val q = EventsStream.mediaNeardupIngestQuery(
+    val q = graft.ext.Multimodal.DhashIndex.ingestQuery(
       md(stream.toDF().toDF("doc_id", "text")), writer, "md", tmpDir("cmdck"))
     try { // two ticks -> two ingest_batch partitions per artifact
       stream.addData((1L, base), (2L, other)); q.processAllAvailable()
@@ -657,7 +657,7 @@ class StreamingSpec extends SparkSpec {
     val before = probeSet()
     assert(before.exists(p => p._1 == 3L && p._2 == 100L),
       s"probe found nothing pre-compaction: $before")
-    graft.ext.Multimodal.compactDhashIndex(writer, "md", files = 1)
+    graft.ext.Multimodal.DhashIndex.compact(writer, "md", files = 1)
     assert(probeSet() == before, "compaction changed probe results")
     val bandsDir = new java.io.File(writer.path("md_dhash_bands"))
     val parts = bandsDir.listFiles()
@@ -666,7 +666,7 @@ class StreamingSpec extends SparkSpec {
     // a post-compaction tick (fresh checkpoint, ids restart at 0)
     // appends next to the folded history; both stay probe-visible
     val stream2 = MemoryStream[(Long, String)]
-    val q2 = EventsStream.mediaNeardupIngestQuery(
+    val q2 = graft.ext.Multimodal.DhashIndex.ingestQuery(
       md(stream2.toDF().toDF("doc_id", "text")), writer, "md", tmpDir("cmdck2"))
     try {
       stream2.addData((5L, g4)); q2.processAllAvailable()
