@@ -30,9 +30,10 @@ package graft
   *     contributes the BASELINE wall (listed in `substituted`), with
   *     the raw sum preserved as `raw_total`. The r13 artifact summed
   *     ~67 s of contamination its own drift report had flagged.
-  *   - SHARED-ARTIFACT WARM-UP: every (app, dir) OnceCache artifact
-  *     (tf frames, pair sets, component labels, NB fit, BPE table,
-  *     page renders) builds in a dedicated pre-sweep phase, timed and
+  *   - SHARED-ARTIFACT WARM-UP: every declared shared artifact
+  *     (`ExtQueries.sharedArtifacts`: tf frames, pair sets, component
+  *     labels, NB fit, BPE table, page renders, the x68 base
+  *     warehouse) builds in a dedicated pre-sweep phase, timed and
   *     reported as `warm_shared` — per-key medians measure the key's
   *     own work, independent of sweep order or a BENCH_ONLY subset.
   *
@@ -298,11 +299,12 @@ object Bench {
     catch { case _: Throwable => () }
 
     // SHARED-ARTIFACT WARM-UP PHASE (VERDICT r13 task 4): build every
-    // (app, dir)-cached artifact the query families share (tf frames,
-    // pair sets, component labels, NB fit, BPE table, page renders)
+    // artifact of the declared table (`ExtQueries.sharedArtifacts`)
     // BEFORE any timed rep, timed and reported separately — the
     // meta_refresh convention. Per-key medians then measure the key's
-    // OWN work regardless of sweep order or a BENCH_ONLY subset.
+    // OWN work regardless of sweep order or a BENCH_ONLY subset. A
+    // failed build has cancelled its siblings' jobs before the warm
+    // call returns, so no orphaned job runs into the sweep.
     // Best-effort: on a bad fixture dir every query fails loudly below.
     // NonFatal only: an OOM during the warm build must kill the run —
     // sweeping on after it would record contaminated medians from a
@@ -315,8 +317,8 @@ object Bench {
         System.err.println(s"bench: shared warm-up failed: $e")
         Nil
       }
-    // the phase's cost is its WALL: warmShared overlaps its
-    // independent build chains (r16, guide §2.6), so the per-artifact
+    // the phase's cost is its WALL: warmShared overlaps the builds on
+    // a 4-thread pool (r16, guide §2.6), so the per-artifact
     // seconds are concurrent and their sum overstates the phase;
     // the sum is still reported (warm_shared_sum_sec) for
     // round-over-round continuity with the sequential-era artifacts

@@ -436,10 +436,10 @@ object Dedup {
     * the bucket. */
   /** Cost profile (r8, sf0.1, local[16], steady-state after one JIT
     * rep): full query ≈ 2.1 s of which corpus shingling is 0.2–0.3 s —
-    * the banded-candidates + verify join dominates, so sharing the
-    * corpus `shingleHashes` via OnceCache would shave ~10% at the cost
-    * of coupling this operator to the query-inventory cache; not
-    * taken. The ~9 s single readings in earlier round benches were
+    * the banded-candidates + verify join dominates, so making the
+    * corpus `shingleHashes` a shared [[graft.util.Artifact]] would
+    * shave ~10% at the cost of coupling this operator to the query
+    * inventory; not taken. The ~9 s single readings in earlier round benches were
     * first-rep JIT (4.9 s cold vs 2.1 s warm measured on the same
     * session), not a plan problem. */
   def fuzzyDecontaminate(

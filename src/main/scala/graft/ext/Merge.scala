@@ -105,8 +105,8 @@ object Merge {
           (col("d.valid_to_us").isNull ||
             col(s"f.$factTimeUs") < col("d.valid_to_us")),
         "left")
-      .select(facts.columns.map(c => col(s"f.$c")) ++
-        dimCols.map(c => col(s"d.$c")): _*)
+      .select((facts.columns.map(c => col(s"f.$c")) ++
+        dimCols.map(c => col(s"d.$c"))).toIndexedSeq: _*)
   }
 
   /** Right-to-erasure rewrite — the deletion half of the privacy

@@ -875,7 +875,7 @@ object Similarity {
     val queries = probeQueriesFor(queryVecs, nprobe, cents)
     val probedCells = queries.select(col("cell")).distinct().as[Int].collect().sorted
     val corpus = writer.read(table)
-      .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
+      .filter(col("cell").isin(probedCells.toIndexedSeq.map(Integer.valueOf): _*))
       .select(col("vec_id"), col("cell"), asDouble(col("embedding")).as("v"))
       .withColumn("nv", norm(col("v")))
       .filter(col("nv") > 0)

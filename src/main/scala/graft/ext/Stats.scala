@@ -532,7 +532,7 @@ object Stats {
         case (Some(a), Some(b)) if a == b => "kept"
         case (Some(_), Some(_)) => "type_changed"
         case (Some(_), None) => "removed"
-        case (None, Some(_)) => "added"
+        case (None, _) => "added"
       }
       (c, st, m1.get(c).orNull, m2.get(c).orNull)
     }.toDF("column", "status", "type_v1", "type_v2")
@@ -748,8 +748,8 @@ object Stats {
 
   /** [[prepFunnel]] over an ALREADY-COMPUTED near-dup pair set — the
     * shape the query inventory uses: the pair set is an ingest-time
-    * artifact shared with the x18 join (same OnceCache pattern as the
-    * MinHash set x2/x14 share), so the funnel never re-pays the most
+    * artifact shared with the x18 join (a [[graft.util.Artifact]], like
+    * the MinHash set x2/x14 share), so the funnel never re-pays the most
     * expensive prep stage. */
   def prepFunnel(docs: DataFrame, neardupPairs: DataFrame): DataFrame = {
     val dropIds = neardupPairs

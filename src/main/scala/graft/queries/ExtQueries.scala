@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.{AsofJoin, Assemble, Dedup, Multimodal, RangeJoin, Sessions, Similarity, Stats, TextStats}
 import graft.sources.{FetchRequest, ParquetSimSource}
+import graft.util.Artifact
 
 /** LLM-training-data-pipeline query inventory (the north star's second
   * half): dedup, similarity search, text analysis, multimodal metadata —
@@ -17,14 +18,6 @@ object ExtQueries {
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
-
-  /** Base-warehouse cache for the incremental-funnel gate (x68): the
-    * deterministic initial prep run, laid once per (app, fixture dir)
-    * and COPIED per invocation. NOT Scratch-tracked — the bench sweeps
-    * Scratch between queries, which would orphan the cache mid-run;
-    * the dir dies with /tmp like ODataPages' page cache. */
-  private val x68BaseCache =
-    new graft.util.OnceCache[(String, String), String](4)
 
   /** Recreate `src`'s tree under `dst` with HARD LINKS for regular
     * files (copy fallback for cross-device or unsupported FS). Safe
@@ -85,194 +78,132 @@ object ExtQueries {
       rightPayload = Seq("o_orderkey", "o_totalprice"))
   }
 
-  /** MinHash near-dup pairs for `dir`, computed ONCE per application and
-    * shared by x2 and x14 — at scale the pair set is an ingest-time
-    * artifact; recomputing it inside every consumer re-runs the most
-    * expensive stage of the prep pipeline (VERDICT r2). Materialized via
-    * [[Dedup.minhashNeardupMaterialized]], so the shared frame is stable
-    * across consumers and the shingle cache is released immediately.
-    * Keyed by (applicationId, dir): fixture paths are immutable here; a
-    * long-lived server over mutable data would key by snapshot version. */
-  // FIFO-bounded compute-once cache: dropping an evicted reference lets
-  // the ContextCleaner reclaim its localCheckpoint blocks — a server
-  // cycling through many dataset dirs must not pin them all forever.
-  // OnceCache computes OUTSIDE its lock, so concurrent consumers on
-  // different dirs never serialize (round-3 judge finding).
-  private val MaxCachedPairSets = 8
-  private val minhashPairCache =
-    new graft.util.OnceCache[(String, String), DataFrame](MaxCachedPairSets)
+  // THE SHARED ARTIFACTS: every (app, dir, data-state)-keyed build the
+  // query families share — a [[graft.util.Artifact]] each. At ingest
+  // scale they are standing outputs of the pipeline, not per-query
+  // work; recomputing one inside every consumer re-runs the most
+  // expensive stage of the prep pipeline (VERDICT r2). A build's calls
+  // to other artifacts are its dependencies.
 
-  private def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    minhashPairCache.getOrCompute((spark.sparkContext.applicationId, dir)) {
-      Dedup.minhashNeardupMaterialized(docs(spark, dir), threshold = 0.8)
-    }
-
-  // THE LOOSE EXACT PAIR FRAME (r16): every pair with Jaccard >= 1/2
-  // as exact (i, un) integers — ONE prefix-filtered detector run per
-  // (app, dir) from which the t=7/10 pair set (x18/x34/x216 via
-  // ngramPairs), the x217 threshold sweep and the x232 tuning
-  // histogram all derive by integer filters. Before the share, x217
-  // and x232 each re-ran the identical detector per bench rep
-  // (~4.2 s + ~3.4 s at sf0.1) and ngram_pairs ran it a third time in
-  // the warm phase.
-  private val loosePairCache =
-    new graft.util.OnceCache[(String, String), DataFrame](MaxCachedPairSets)
-
-  private def loosePairs(spark: SparkSession, dir: String): DataFrame =
-    loosePairCache.getOrCompute((spark.sparkContext.applicationId, dir)) {
-      Dedup.loosePairsMaterialized(docs(spark, dir))
-    }
-
-  // the exact-Jaccard pair set gets the same share: x18 and the x34
-  // funnel both consume it, and at scale it too is an ingest artifact.
-  // Derived from the loose frame by one integer filter (bit-identical
-  // to the direct t=7/10 join — same verified integers, same single
-  // division); checkpointed so consumers keep reading a stable
-  // materialized frame, not a per-use re-filter.
-  private val ngramPairCache =
-    new graft.util.OnceCache[(String, String), DataFrame](MaxCachedPairSets)
-
-  private def ngramPairs(spark: SparkSession, dir: String): DataFrame =
-    ngramPairCache.getOrCompute((spark.sparkContext.applicationId, dir)) {
-      // the derive is a NARROW filter, so without the repartition the
-      // checkpoint would inherit the loose frame's (wider) layout —
-      // the shuffle lets AQE size the standing frame by its own bytes,
-      // restoring the direct build's compact fixture layout (x216's
-      // per-round joins schedule tasks per cached partition) while
-      // staying width-adaptive at scale
-      Dedup.ngramPairsFromLoose(loosePairs(spark, dir))
-        .repartition(col("a_id")).localCheckpoint(true)
-    }
-
-  /** Build the two shingle-derived pair artifacts from ONE persisted
-    * shingle frame (guide §6 — the shingle pass IS the corpus parse;
-    * r15's per-artifact builds each re-ran it): seeds the same caches
-    * the standalone entries use, so a solo key (BENCH_ONLY subset,
-    * Verify) still computes independently, and the warm phase pays the
-    * parse once. The frame is released as soon as both dependents are
-    * materialized — never held across unrelated jobs (the r15 item-14
-    * storage-starvation lesson; this scope is two builds, not the
-    * whole funnel). */
-  private def buildShinglePairSets(spark: SparkSession, dir: String): Unit = {
-    val key = (spark.sparkContext.applicationId, dir)
-    val hs = Dedup.shingleHashes(docs(spark, dir))
+  /** The MinHash (t = 0.8) and loose exact (Jaccard >= 1/2) pair sets
+    * from ONE persisted shingle frame (guide §6 — the shingle pass IS
+    * the corpus parse). The frame is released as soon as both pair
+    * sets are materialized — never held across unrelated jobs (the
+    * r15 item-14 storage-starvation lesson). */
+  private val pairSetsShared = Artifact("pair_sets_shared") { (s, d) =>
+    val hs = Dedup.shingleHashes(docs(s, d))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      minhashPairCache.getOrCompute(key) {
-        Dedup.minhashNeardupFromShingles(hs, threshold = 0.8)
-      }
-      loosePairCache.getOrCompute(key) {
-        Dedup.loosePairsFromShingles(hs)
-      }
-    } finally hs.unpersist(blocking = false)
+    try (Dedup.minhashNeardupFromShingles(hs, threshold = 0.8),
+      Dedup.loosePairsFromShingles(hs))
+    finally hs.unpersist(blocking = false)
   }
 
-  // the BPE merge table is shared the same way: x33 publishes it,
-  // x37 encodes with it — training twice per run would double the
-  // most expensive step of the tokenizer path
-  private val bpeMergeCache =
-    new graft.util.OnceCache[(String, String), Seq[(Int, String, String, Long)]](
-      MaxCachedPairSets)
+  /** MinHash near-dup pairs shared by x2, x14 and the component
+    * labels. */
+  private val minhashPairs = Artifact("minhash_pairs")((s, d) => pairSetsShared(s, d)._1)
 
-  private def bpeMerges(spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    bpeMergeCache.getOrCompute((spark.sparkContext.applicationId, dir)) {
-      graft.ext.BpeTrain.trainMerges(docs(spark, dir), numMerges = 10)
-    }
+  // THE LOOSE EXACT PAIR FRAME (r16): every pair with Jaccard >= 1/2
+  // as exact (i, un) integers, from which the t=7/10 pair set
+  // (x18/x34/x216 via ngramPairs), the x217 threshold sweep and the
+  // x232 tuning histogram all derive by integer filters. Before the
+  // share, x217 and x232 each re-ran the identical detector per bench
+  // rep (~4.2 s + ~3.4 s at sf0.1).
+  private val loosePairs = Artifact("loose_pairs")((s, d) => pairSetsShared(s, d)._2)
+
+  // the exact-Jaccard t=7/10 pair set: x18 and the x34 funnel both
+  // consume it. Derived from the loose frame by one integer filter
+  // (bit-identical to the direct t=7/10 join — same verified integers,
+  // same single division); checkpointed so consumers keep reading a
+  // stable materialized frame, not a per-use re-filter.
+  private val ngramPairs = Artifact("ngram_pairs") { (s, d) =>
+    // the derive is a NARROW filter, so without the repartition the
+    // checkpoint would inherit the loose frame's (wider) layout — the
+    // shuffle lets AQE size the standing frame by its own bytes,
+    // restoring the direct build's compact fixture layout (x216's
+    // per-round joins schedule tasks per cached partition) while
+    // staying width-adaptive at scale
+    Dedup.ngramPairsFromLoose(loosePairs(s, d))
+      .repartition(col("a_id")).localCheckpoint(true)
+  }
+
+  // the BPE merge table: x33 publishes it, x37 encodes with it —
+  // training twice per run would double the most expensive step of
+  // the tokenizer path
+  private val bpeMerges = Artifact("bpe_merges") { (s, d) =>
+    graft.ext.BpeTrain.trainMerges(docs(s, d), numMerges = 10)
+  }
 
   // the tokenized (doc, token, tf) frame + corpus size feed the WHOLE
   // lexical retrieval family (x175 sparse cosine, x189 BM25, and the
   // x247/x248/x249 capped trio) — five consumers that each
   // re-tokenized the corpus before this share (VERDICT r12 task 5);
-  // the count rides the cache too, so the proportional df ceiling
-  // costs no extra action per gate run
-  private val tfStatsCache =
-    new graft.util.OnceCache[(String, String), (DataFrame, Long)](
-      MaxCachedPairSets)
-
-  private def docTfStats(spark: SparkSession, dir: String): (DataFrame, Long) =
-    tfStatsCache.getOrCompute((spark.sparkContext.applicationId, dir)) {
-      val dd = docs(spark, dir)
-      // the CHECKPOINT is laid out WIDE on doc_id (r15): every lexical
-      // consumer (x175/x179/x189/x247–x249) computes its posting-join
-      // fan-out in the cached frame's partitioning, and tfFrame ends in
-      // an aggregate whose AQE-coalesced output is a handful of
-      // byte-sized partitions — so the whole retrieval family's scoring
-      // ran near-single-task (x179's sparse leg: ~3.5 s narrow, ~1.5 s
-      // wide). One extra narrow-row shuffle at build time, amortized
-      // over six standing consumers; the width is the deployment's own
-      // shuffle sizing, never a local constant.
-      val p = spark.sessionState.conf.numShufflePartitions
-      (graft.ext.TextStats.tfFrame(dd).repartition(p, col("doc_id"))
-        .localCheckpoint(true), dd.count())
-    }
+  // the count rides along, so the proportional df ceiling costs no
+  // extra action per gate run
+  private val docTfStats = Artifact("tf_frame") { (s, d) =>
+    val dd = docs(s, d)
+    // the CHECKPOINT is laid out WIDE on doc_id (r15): every lexical
+    // consumer (x175/x179/x189/x247–x249) computes its posting-join
+    // fan-out in the cached frame's partitioning, and tfFrame ends in
+    // an aggregate whose AQE-coalesced output is a handful of
+    // byte-sized partitions — so the whole retrieval family's scoring
+    // ran near-single-task (x179's sparse leg: ~3.5 s narrow, ~1.5 s
+    // wide). One extra narrow-row shuffle at build time, amortized
+    // over six standing consumers; the width is the deployment's own
+    // shuffle sizing, never a local constant.
+    val p = s.sessionState.conf.numShufflePartitions
+    (TextStats.tfFrame(dd).repartition(p, col("doc_id"))
+      .localCheckpoint(true), dd.count())
+  }
 
   /** The x186 held-out NB-scored frame (doc_id, nb_ppm, passes) — the
     * planted-damage corpus, gopher labels trained on the even half,
-    * scores + truth on the odd half. Shared by the AUC gate (x186,
-    * discrimination) and the Brier gate (x269, calibration). */
-  private val nbHeldOutCache =
-    new graft.util.OnceCache[(String, String), DataFrame](MaxCachedPairSets)
-
-  private def nbHeldOut(s: SparkSession, d: String): DataFrame =
-    nbHeldOutCache.getOrCompute((s.sparkContext.applicationId, d)) {
-      val planted = docs(s, d).select(col("doc_id"),
-        when(col("doc_id") % 17 === 0, regexp_replace(col("text"), " ", ""))
-          .when(col("doc_id") % 13 === 0,
-            concat(col("text"), lit(" !!! ### $$$")))
-          .otherwise(col("text")).as("text"))
-      val trainLabels =
-        TextStats.gopherRules(planted.filter(col("doc_id") % 2 === 0))
-          .select(col("doc_id"), col("passes"))
-      // materialized once per (app, dir): four gates consume it (x186
-      // AUC, x269 Brier, x271 confusion, x272 gains) — without the
-      // share each rebuilt the tokenize + gopher labels + NB fit
-      TextStats.nbScore(planted, trainLabels)
-        .filter(col("doc_id") % 2 =!= 0)
-        .join(TextStats.gopherRules(planted.filter(col("doc_id") % 2 =!= 0))
-          .select(col("doc_id"), col("passes")), "doc_id")
-        .localCheckpoint(true)
-    }
+    * scores + truth on the odd half. Four gates consume it (x186 AUC,
+    * x269 Brier, x271 confusion, x272 gains); without the share each
+    * rebuilt the tokenize + gopher labels + NB fit. */
+  private val nbHeldOut = Artifact("nb_held_out") { (s, d) =>
+    val planted = docs(s, d).select(col("doc_id"),
+      when(col("doc_id") % 17 === 0, regexp_replace(col("text"), " ", ""))
+        .when(col("doc_id") % 13 === 0,
+          concat(col("text"), lit(" !!! ### $$$")))
+        .otherwise(col("text")).as("text"))
+    val trainLabels =
+      TextStats.gopherRules(planted.filter(col("doc_id") % 2 === 0))
+        .select(col("doc_id"), col("passes"))
+    TextStats.nbScore(planted, trainLabels)
+      .filter(col("doc_id") % 2 =!= 0)
+      .join(TextStats.gopherRules(planted.filter(col("doc_id") % 2 =!= 0))
+        .select(col("doc_id"), col("passes")), "doc_id")
+      .localCheckpoint(true)
+  }
 
   // the CAPPED tf frame (proportional df ceiling applied) feeds both
   // capped lexical legs (x248/x249) — the drop anti-join would
   // otherwise re-run per consumer over the shared checkpoint
-  private val cappedTfCache =
-    new graft.util.OnceCache[(String, String), (DataFrame, Long)](
-      MaxCachedPairSets)
+  private val cappedTfStats = Artifact("capped_tf") { (s, d) =>
+    val (tf, n) = docTfStats(s, d)
+    // same wide-checkpoint rationale as docTfStats: x248/x249 score
+    // in this frame's layout
+    val p = s.sessionState.conf.numShufflePartitions
+    (TextStats.capTermDf(tf, Some(n * 39L / 50L))
+      .repartition(p, col("doc_id"))
+      .localCheckpoint(true), n)
+  }
 
-  private def cappedTfStats(spark: SparkSession, dir: String): (DataFrame, Long) =
-    cappedTfCache.getOrCompute((spark.sparkContext.applicationId, dir)) {
-      val (tf, n) = docTfStats(spark, dir)
-      // same wide-checkpoint rationale as docTfStats: x248/x249 score
-      // in this cache's layout
-      val p = spark.sessionState.conf.numShufflePartitions
-      (graft.ext.TextStats.capTermDf(tf, Some(n * 39L / 50L))
-        .repartition(p, col("doc_id"))
-        .localCheckpoint(true), n)
-    }
-
-  // component labels are consumed by x24 AND the x46 canonical pick —
-  // the same ingest-artifact share as the pair sets they derive from
-  private val componentCache =
-    new graft.util.OnceCache[(String, String), DataFrame](MaxCachedPairSets)
-
-  private def dupComps(spark: SparkSession, dir: String): DataFrame =
-    componentCache.getOrCompute((spark.sparkContext.applicationId, dir)) {
-      // the LARGE-STAR/SMALL-STAR variant is the producer (VERDICT r13
-      // task 2): min-label propagation needs O(component diameter)
-      // rounds, so a pathological boilerplate chain would stall every
-      // consumer of this cache (x24/x46/x116/x235) even though the
-      // labeling is identical; star contraction converges in O(log n)
-      // rounds regardless of diameter and is spec-proved to emit the
-      // same (doc_id, min reachable id) labels
-      Dedup.dupComponentsStar(minhashPairs(spark, dir))
-    }
+  // component labels are consumed by x24, x46, x116 and x235.
+  // The LARGE-STAR/SMALL-STAR variant is the producer (VERDICT r13
+  // task 2): min-label propagation needs O(component diameter) rounds,
+  // so a pathological boilerplate chain would stall every consumer
+  // even though the labeling is identical; star contraction converges
+  // in O(log n) rounds regardless of diameter and is spec-proved to
+  // emit the same (doc_id, min reachable id) labels
+  private val dupComps = Artifact("dup_components") { (s, d) =>
+    Dedup.dupComponentsStar(minhashPairs(s, d))
+  }
 
   // THE SHARED CO-PURCHASE FRAMES (r16): the distinct (order, part)
   // incidence of lineitem width-pinned on the order key, and the
   // natural pair-count frame at support >= 2 derived from its
-  // order-keyed self-join — computed ONCE per (app, dir) like the
-  // shingle pair sets. Three consumers re-ran the identical
+  // order-keyed self-join. Three consumers re-ran the identical
   // order-size² self-join per bench rep before the share: the
   // basket-affinity lift report (x115 — its support >= 3 cut is an
   // integer filter of the >= 2 frame), the link-prediction edge set
@@ -281,25 +212,17 @@ object ExtQueries {
   // is below every l_partkey, so planting changes NO natural pair
   // count and the hub's pairs are derivable from the incidence frame
   // alone — see the x264 wiring note).
-  private val copurchaseItemCache =
-    new graft.util.OnceCache[(String, String), DataFrame](MaxCachedPairSets)
-
-  private def copurchaseItems(spark: SparkSession, dir: String): DataFrame =
-    copurchaseItemCache.getOrCompute((spark.sparkContext.applicationId, dir)) {
-      // checkpointed WIDE on the order key (the x188 fan-out width
-      // pin): the pair self-join below and x264's hub-count aggregate
-      // both execute in this frame's partitioning; the width is the
-      // session's shuffle sizing — a no-op at cluster scale
-      spark.read.parquet(s"$dir/lineitem.parquet")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-        .repartition(
-          spark.sessionState.conf.numShufflePartitions, col("o"))
-        .localCheckpoint(true)
-    }
-
-  private val copurchasePairCache =
-    new graft.util.OnceCache[(String, String), DataFrame](MaxCachedPairSets)
+  private val copurchaseItems = Artifact("copurchase_items") { (s, d) =>
+    // checkpointed WIDE on the order key (the x188 fan-out width
+    // pin): the pair self-join below and x264's hub-count aggregate
+    // both execute in this frame's partitioning; the width is the
+    // session's shuffle sizing — a no-op at cluster scale
+    s.read.parquet(s"$d/lineitem.parquet")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct()
+      .repartition(s.sessionState.conf.numShufflePartitions, col("o"))
+      .localCheckpoint(true)
+  }
 
   /** Natural co-purchase pair counts at support >= 2: (p1, p2,
     * pair_cnt) with p1 < p2, counted over distinct orders containing
@@ -307,97 +230,62 @@ object ExtQueries {
     * (x254/x264 gate at >= 2, x115 at >= 3), so the standing frame
     * starts at the loosest consumed threshold — the loose-pairs
     * convention. */
-  private def copurchasePairs(spark: SparkSession, dir: String): DataFrame =
-    copurchasePairCache.getOrCompute((spark.sparkContext.applicationId, dir)) {
-      val items = copurchaseItems(spark, dir)
-      items.select(col("o"), col("p").as("p1"))
-        .join(items.select(col("o"), col("p").as("p2")), Seq("o"))
-        .filter(col("p1") < col("p2"))
-        .groupBy(col("p1"), col("p2")).agg(count(lit(1)).as("pair_cnt"))
-        .filter(col("pair_cnt") >= 2)
-        // narrow derive of a wide frame: reshuffle so the standing
-        // checkpoint is sized by its own bytes (the ngramPairs lesson)
-        .repartition(col("p1")).localCheckpoint(true)
-    }
-
-  /** Build every shared (app, dir)-cached artifact in one DEDICATED
-    * warm-up phase, returning (artifact, seconds) per build — the
-    * bench convention that makes per-key clean cost SWEEP-ORDER
-    * INDEPENDENT (VERDICT r13 task 4): without this, whichever family
-    * member runs first (alphabetically) pays the shared compute, so a
-    * key's baseline number shifts whenever a new key lands earlier in
-    * sort order, and `SPARK_GRAFT_BENCH_ONLY=<one key>` can't
-    * reproduce the full-sweep median. At ingest scale these artifacts
-    * (pair sets, tf frames, component labels, the NB fit, the BPE
-    * table) are standing outputs of the ingest pipeline, not
-    * per-query work — charging them to a named warm-up phase is the
-    * honest account, the `meta_refresh` convention. */
-  def warmShared(spark: SparkSession, dir: String): Seq[(String, Double)] = {
-    def timed(name: String)(body: => Any): (String, Double) = {
-      val t0 = System.nanoTime()
-      body
-      (name, (System.nanoTime() - t0) / 1e9)
-    }
-    // OVERLAP the independent build chains (guide §2.6, r16 — the
-    // writeTailArtifacts move applied to the warm phase): the five
-    // chains below touch disjoint artifacts and each leaves most cores
-    // idle in its own ramp/tail (the odata renders are single-task;
-    // bpe_merges is a driver-loop; the pair verify join's tail is
-    // narrow), so running them sequentially paid ~wall = Σ chains.
-    // Within a chain order is load-bearing (capped_tf reads tf_frame;
-    // the standalone pair entries must hit the caches pair_sets_shared
-    // seeds; dup_components consumes minhash_pairs) — across chains
-    // nothing is shared but the session. Per-artifact seconds are each
-    // build's own wall INSIDE the overlap (concurrent by design);
-    // the phase's cost is the caller's wall around this call.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fOdata = scala.concurrent.Future { Seq(
-        timed("odata_pages") {
-          graft.sources.odata.ODataPages.ordersPages(spark, dir) },
-        timed("odata_expand") {
-          graft.sources.odata.ODataPages.ordersExpandRoot(spark, dir) },
-        timed("odata_linked") {
-          graft.sources.odata.ODataPages.ordersLinkedPages(spark, dir) },
-        timed("odata_events") {
-          graft.sources.odata.ODataPages.eventsPages(spark, dir) }) }
-      val fTf = scala.concurrent.Future { Seq(
-        timed("tf_frame") { docTfStats(spark, dir) },
-        timed("capped_tf") { cappedTfStats(spark, dir) }) }
-      // ONE shingle parse feeds both pair artifacts (r16); the
-      // standalone entries stay for round-over-round continuity and
-      // report the residual (cache-hit) cost
-      val fPairs = scala.concurrent.Future { Seq(
-        timed("pair_sets_shared") { buildShinglePairSets(spark, dir) },
-        timed("minhash_pairs") { minhashPairs(spark, dir) },
-        timed("loose_pairs") { loosePairs(spark, dir) },
-        timed("ngram_pairs") { ngramPairs(spark, dir) },
-        // the label frame's expensive part (the star-contraction loop)
-        // runs eagerly inside the producer; force the final join too so
-        // consumers pay only their own aggregates
-        timed("dup_components") { dupComps(spark, dir).count() }) }
-      val fBpe = scala.concurrent.Future {
-        Seq(timed("bpe_merges") { bpeMerges(spark, dir) }) }
-      val fNb = scala.concurrent.Future {
-        Seq(timed("nb_held_out") { nbHeldOut(spark, dir) }) }
-      // lineitem-based chain, disjoint from every docs-based build
-      val fCopurchase = scala.concurrent.Future {
-        Seq(timed("copurchase_pairs") { copurchasePairs(spark, dir) }) }
-      import scala.concurrent.Await
-      import scala.concurrent.duration.Duration
-      // canonical output order preserved for the bench JSON
-      val odata = Await.result(fOdata, Duration.Inf)
-      val tf = Await.result(fTf, Duration.Inf)
-      val pairs = Await.result(fPairs, Duration.Inf)
-      val bpe = Await.result(fBpe, Duration.Inf)
-      val nb = Await.result(fNb, Duration.Inf)
-      val copurchase = Await.result(fCopurchase, Duration.Inf)
-      odata ++ tf ++
-        pairs.take(4) ++ bpe ++ nb ++ pairs.drop(4) ++ copurchase
-    } finally pool.shutdown()
+  private val copurchasePairs = Artifact("copurchase_pairs") { (s, d) =>
+    val items = copurchaseItems(s, d)
+    items.select(col("o"), col("p").as("p1"))
+      .join(items.select(col("o"), col("p").as("p2")), Seq("o"))
+      .filter(col("p1") < col("p2"))
+      .groupBy(col("p1"), col("p2")).agg(count(lit(1)).as("pair_cnt"))
+      .filter(col("pair_cnt") >= 2)
+      // narrow derive of a wide frame: reshuffle so the standing
+      // checkpoint is sized by its own bytes (the ngramPairs lesson)
+      .repartition(col("p1")).localCheckpoint(true)
   }
+
+  /** x68's eval set: a 22-token window of every 50th doc. */
+  private def x68Eval(dd: DataFrame): DataFrame = dd.filter(col("doc_id") % 50 === 0)
+    .select(array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
+
+  /** The incremental-funnel gate's (x68) base warehouse: the
+    * deterministic initial prep run over the docs with
+    * doc_id % 3 != 0, laid once and COPIED per invocation (VERDICT
+    * r11 task 6: re-running the base load per rep dominated the key).
+    * Exports (pack/curriculum) are deferred to compaction cadence —
+    * the tick only needs corpus + index, and funnel counts are
+    * identical either way. NOT Scratch-tracked: the bench sweeps
+    * Scratch between queries, which would orphan the base mid-run; the
+    * dir dies with /tmp like the ODataPages renders. */
+  private val incrFunnelBase = Artifact("incr_funnel_base") { (s, d) =>
+    val dd = docs(s, d)
+    val baseDir = java.nio.file.Files
+      .createTempDirectory("incr_funnel_base").toString
+    graft.run.CorpusPrepJob.run(dd.filter(col("doc_id") % 3 =!= 0), x68Eval(dd),
+      new graft.sinks.StagingWriter(s, baseDir),
+      graft.run.CorpusPrepJob.PrepConfig(exports = false))
+    baseDir
+  }
+
+  /** Every shared artifact. Roots with the longest builds come first,
+    * so they start at once on the warm pool; dependents come last, so
+    * a warm thread waits on an in-flight build only when nothing else
+    * is left to start. */
+  val sharedArtifacts: Seq[Artifact[_]] = {
+    import graft.sources.odata.ODataPages
+    Seq(pairSetsShared, incrFunnelBase, docTfStats, nbHeldOut, bpeMerges,
+      copurchaseItems, ODataPages.ordersExpandRoot, ODataPages.ordersPages,
+      ODataPages.eventsPages, ODataPages.ordersLinkedPages, cappedTfStats,
+      copurchasePairs, minhashPairs, loosePairs, ngramPairs, dupComps)
+  }
+
+  /** Build every shared artifact in one DEDICATED warm-up phase,
+    * returning (artifact, seconds) per build — the bench convention
+    * that makes per-key clean cost SWEEP-ORDER INDEPENDENT (VERDICT r13
+    * task 4): without it, whichever family member runs first pays the
+    * shared build, and `SPARK_GRAFT_BENCH_ONLY=<one key>` cannot
+    * reproduce the full-sweep median. Charging the builds to a named
+    * phase is the `meta_refresh` convention. */
+  def warmShared(spark: SparkSession, dir: String): Seq[(String, Double)] =
+    Artifact.warm(spark, dir, sharedArtifacts)
 
   /** Composed training-data prep flow — the shape a real corpus pipeline
     * runs end-to-end: near-dup removal (MinHash keepers: the lower
@@ -699,9 +587,6 @@ object ExtQueries {
     // in one SQL chain (both closures, both containment joins).
     "x68_incr_funnel" -> ((s, d) => {
       val dd = docs(s, d)
-      val ev = dd.filter(col("doc_id") % 50 === 0)
-        .select(array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
-      val initial = dd.filter(col("doc_id") % 3 =!= 0)
       val exactOfHist = dd.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 === 0)
         .select((col("doc_id") + 4000000L).as("doc_id"), col("text"),
           col("lang"), col("source"))
@@ -717,30 +602,15 @@ object ExtQueries {
         .select(col("doc_id"), col("text"), col("lang"), col("source"))
         .unionByName(exactOfHist).unionByName(nearOfHist).unionByName(batchTwin)
       // The initial run() is DETERMINISTIC for a given fixture dir, so
-      // it is laid ONCE per (app, dir) into an untracked cache
-      // directory and each invocation starts from a fresh file COPY of
-      // it — the increment leg (the thing this gate pins) runs against
-      // byte-identical standing state either way, but a bench rep pays
-      // a directory copy instead of the full initial prep (VERDICT r11
-      // task 6: x68 was the one honest ~19 s bench key, dominated by
-      // re-running the base load per rep). The copy is per-invocation
-      // because increment APPENDS to the standing artifacts.
-      // The initial load defers its exports (pack/curriculum) to
-      // compaction cadence — the tick only needs corpus + index, and
-      // the export sorts are re-derivable (refreshArtifacts); funnel
-      // counts are identical either way.
-      val base = x68BaseCache.getOrCompute(
-        (s.sparkContext.applicationId, d)) {
-        val baseDir = java.nio.file.Files
-          .createTempDirectory("incr_funnel_base").toString
-        graft.run.CorpusPrepJob.run(initial, ev,
-          new graft.sinks.StagingWriter(s, baseDir),
-          graft.run.CorpusPrepJob.PrepConfig(exports = false))
-        baseDir
-      }
+      // it is the shared incr_funnel_base artifact and each invocation
+      // starts from a fresh COPY of it — the increment leg (the thing
+      // this gate pins) runs against byte-identical standing state
+      // either way. The copy is per-invocation because increment
+      // APPENDS to the standing artifacts.
+      val base = incrFunnelBase(s, d)
       val wh = graft.util.Scratch.dir("incr_funnel")
       linkTree(new java.io.File(base), new java.io.File(wh))
-      graft.run.CorpusPrepJob.increment(batch, ev,
+      graft.run.CorpusPrepJob.increment(batch, x68Eval(dd),
         new graft.sinks.StagingWriter(s, wh)).funnel
     }),
     // Corpus-level boilerplate-prefix removal (the CCNet/C4 site-level
@@ -791,7 +661,7 @@ object ExtQueries {
     }),
     // Duplicate-cluster labeling over the SHARED MinHash pair set
     // (x2/x14's cache): component = min doc_id reachable.
-    "x24_dup_components" -> (dupComps _),
+    "x24_dup_components" -> (dupComps(_, _)),
     // The SAME component labeling by two-phase large-star/small-star
     // contraction (O(log n) rounds vs label propagation's O(diameter)
     // — the 100 TB boilerplate-chain answer); identical output ⇒ the
@@ -1059,7 +929,7 @@ object ExtQueries {
           col("passes")),
         "forecast_ppm", "passes", "doc_id")),
     // Cross-split leakage audit: the x18 exact-Jaccard pair set (shared
-    // OnceCache) against the x20 hash-split assignment — near-dup pairs
+    // artifact) against the x20 hash-split assignment — near-dup pairs
     // straddling train/val/test (1 train-test + 1 train-val at sf0.01).
     "x274_split_leakage" -> ((s, d) =>
       Dedup.splitLeakage(ngramPairs(s, d),
@@ -1830,7 +1700,7 @@ object ExtQueries {
           col("o_orderpriority"), col("valid_from_us"))
     }),
     // Integer PageRank over the shared exact-Jaccard pair graph (the
-    // x18/x34 OnceCache set): hub copies inside duplication clusters.
+    // x18/x34 shared artifact): hub copies inside duplication clusters.
     // Fixed 5 iterations of an exact-integer recurrence, so the DuckDB
     // oracle replays it CTE-for-CTE and hash-compares.
     "x99_pagerank" -> ((s, d) =>
@@ -1965,7 +1835,7 @@ object ExtQueries {
     "x115_basket_affinity" -> ((s, d) =>
       Stats.basketAffinityFrom(
         copurchaseItems(s, d), copurchasePairs(s, d), minCount = 3L)),
-    // Dup-cluster profile: the x24 component labels (shared OnceCache)
+    // Dup-cluster profile: the x24 component labels (shared artifact)
     // joined back to doc stats — the curation review row per cluster.
     // Composition in the x81 convention; component aggregate is
     // map-side-combinable over the component-labeled frame.

@@ -224,34 +224,26 @@ object CorpusPrepJob {
   /** The tail of [[run]]: the MinHash index build, the derived
     * exports (pack/curriculum/mix) and the funnel write — independent
     * jobs over disjoint tables, all downstream of the corpus write —
-    * submitted from a 3-thread pool so each job's tasks back-fill the
-    * ramp/tail idle of the others (guide §2.6; r15). The funnel frame
-    * passed in is LAZY — it materializes inside its future. Await
-    * rethrows the first failure; the pool always shuts down. */
+    * submitted from a 3-thread [[graft.util.FanOut]] so each job's
+    * tasks back-fill the ramp/tail idle of the others (guide §2.6;
+    * r15). The funnel frame passed in is LAZY — it materializes inside
+    * its task. On a failure the surviving siblings' jobs are cancelled
+    * and their threads joined before the rethrow (ADVICE r15): no
+    * background write may race the caller's finally-unpersist or
+    * mutate tables after the run reported failure. */
   private def writeTailArtifacts(
       cfg: PrepConfig, writer: StagingWriter, corpus: DataFrame,
       funnelLazy: DataFrame): (DataFrame, Seq[String]) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val sc = corpus.sparkSession.sparkContext
-    // every tail job runs under ONE job group so a failed sibling can
-    // be cancelled (ADVICE r15: Await rethrows while the other futures
-    // keep writing in the background, racing the caller's
-    // finally-unpersist and mutating tables after the run reported
-    // failure). setJobGroup is thread-local — set it inside each
-    // future, on the pool thread that submits the jobs.
-    val groupId = s"prep-tail-${java.util.UUID.randomUUID()}"
-    def inGroup[T](body: => T): T = {
-      sc.setJobGroup(groupId, "prep tail artifacts", interruptOnCancel = true)
-      try body finally sc.clearJobGroup()
-    }
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fIndex = scala.concurrent.Future { inGroup {
+    // each task yields (funnel frame, export tables) — at most one of
+    // the two non-empty
+    val done = graft.util.FanOut.all[(Option[DataFrame], Seq[String])](
+      corpus.sparkSession.sparkContext, threads = 3)(Seq(
+      () => {
         Dedup.MinhashIndex.build(corpus, writer, IndexTable)
-      }}
-      val fExports = scala.concurrent.Future { inGroup {
-        if (!cfg.exports) Nil
+        (None, Nil)
+      },
+      () => {
+        if (!cfg.exports) (None, Nil)
         else {
           writer.write(
             Assemble.packBudget(corpus.filter(col("split") === "train"),
@@ -266,41 +258,24 @@ object CorpusPrepJob {
               MixTable, append = false)
             MixTable
           }
-          Seq(PackedTable, CurriculumTable) ++ mixArtifacts
+          (None, Seq(PackedTable, CurriculumTable) ++ mixArtifacts)
         }
-      }}
+      },
       // the funnel: one unioned aggregate query — every count is an
       // integer aggregate, map-side combinable, one small row per
       // stage (blocklist row only when configured — the default
       // funnel stays byte-identical, x62/x68 pin it), written eagerly
       // so it survives the caller's finally-release of the cached
       // intermediates it counts
-      val fFunnel = scala.concurrent.Future { inGroup {
+      () => {
         // checkpoint BEFORE the write: lazily the unioned aggregate
         // evaluated TWICE per run (once for the table write, once for
         // the caller's counts collect) — the increment() idiom
         val f = funnelLazy.localCheckpoint(true)
         writer.write(f, FunnelTable, append = false)
-        f
-      }}
-      try {
-        val funnel = scala.concurrent.Await
-          .result(fFunnel, scala.concurrent.duration.Duration.Inf)
-        val exports = scala.concurrent.Await
-          .result(fExports, scala.concurrent.duration.Duration.Inf)
-        scala.concurrent.Await
-          .result(fIndex, scala.concurrent.duration.Duration.Inf)
-        (funnel, exports)
-      } catch { case e: Throwable =>
-        // kill the surviving siblings' Spark jobs and WAIT for their
-        // threads before rethrowing — no background write may outlive
-        // the failed run
-        sc.cancelJobGroup(groupId)
-        pool.shutdownNow()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-        throw e
-      }
-    } finally pool.shutdown()
+        (Some(f), Nil)
+      }))
+    (done.flatMap(_._1).head, done.flatMap(_._2))
   }
 
   private def assembleFunnel(

@@ -71,20 +71,13 @@ final class RefreshJob(
     val t0 = System.nanoTime()
     val zone = ZoneId.of(zoneName(config.systemTimezone))
 
-    val results: Seq[Either[EntityError, (Seq[TableReport], EntityConfig)]] = {
-      import scala.concurrent._
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, parallelism))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val futs = config.entities.map { e =>
-        Future(runEntity(e, zone, incremental, extractionId, ts))
-      }
-      // unbounded by default (a 100 TB refresh takes what it takes); on
-      // a configured-timeout failure, cancel running tasks so no orphan
-      // write keeps appending after run() has thrown
-      try Await.result(Future.sequence(futs), timeout)
-      catch { case t: Throwable => pool.shutdownNow(); throw t }
-      finally pool.shutdown()
-    }
+    // unbounded by default (a 100 TB refresh takes what it takes); on
+    // a configured-timeout failure the entities' Spark jobs are
+    // cancelled before run() throws, so no orphan write keeps
+    // appending after it
+    val results: Seq[Either[EntityError, (Seq[TableReport], EntityConfig)]] =
+      graft.util.FanOut.all(spark.sparkContext, parallelism, timeout)(
+        config.entities.map(e => () => runEntity(e, zone, incremental, extractionId, ts)))
 
     val tables = results.collect { case Right((trs, _)) => trs }.flatten
     val errors = results.collect { case Left(err) => err }

@@ -1,8 +1,9 @@
 package graft.sources.odata
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, pmod, lit}
 import org.apache.spark.sql.types._
+
+import graft.util.Artifact
 
 /** Offline OData "server" materializer: renders a bounded, deterministic
   * slice of the `orders` parquet fixture as page files in the response
@@ -22,6 +23,12 @@ import org.apache.spark.sql.types._
   * byte-identical pages. Longs and strings only — JSON round-trips them
   * exactly; doubles/timestamps would re-open the float-format and
   * timezone hazards the connector's unit tests cover separately.
+  *
+  * Each render is a shared [[graft.util.Artifact]]: page files are
+  * immutable once written, so bench reps and repeated Verify calls
+  * reuse one render per fixture state. Renders are NOT tracked by
+  * Scratch — the bench sweeps Scratch dirs between queries, which
+  * would orphan a render mid-run.
   */
 object ODataPages {
 
@@ -36,12 +43,6 @@ object ODataPages {
     StructField("o_orderstatus", StringType),
     StructField("o_orderpriority", StringType)))
 
-  // one render per (application, fixture dir): page files are immutable
-  // once written, so bench reps and repeated Verify calls reuse them.
-  // NOT tracked by Scratch — the bench sweeps Scratch dirs between
-  // queries, which would orphan this cache's path mid-run.
-  private val cache = new graft.util.OnceCache[(String, String), String](8)
-
   /** Element schema of the nested `ORDERITEMS_SUBFORM` array in the
     * expand pages — longs + a string only, like [[ordersSchema]]. */
   val orderitemsElement: StructType = StructType(Seq(
@@ -49,8 +50,6 @@ object ODataPages {
     StructField("l_partkey", LongType),
     StructField("l_suppkey", LongType),
     StructField("l_returnflag", StringType)))
-
-  private val expandCache = new graft.util.OnceCache[(String, String), String](8)
 
   /** Render (once) the `$expand` response shape: a ROOT directory with
     * `ORDERS/page_*.json`, each order row carrying its lineitems
@@ -63,49 +62,48 @@ object ODataPages {
     * oracle is an inner join — itemless parents contribute nothing
     * either way). Items are sorted by `l_linenumber` inside each
     * order and orders by key: byte-identical pages every render. */
-  def ordersExpandRoot(spark: SparkSession, sfDir: String): String =
-    expandCache.getOrCompute((spark.sparkContext.applicationId, sfDir)) {
-      import org.apache.spark.sql.functions.{collect_list, sort_array, struct}
-      val items = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .filter(pmod(col("l_orderkey"), lit(Modulus)) === 0)
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_list(struct(
-          col("l_linenumber").cast("long").as("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"), col("l_returnflag"))))
-          .as("its"))
-      val rows = spark.read.parquet(s"$sfDir/orders.parquet")
-        .filter(pmod(col("o_orderkey"), lit(Modulus)) === 0)
-        .select(col("o_orderkey"), col("o_orderstatus"))
-        .join(items, col("o_orderkey") === col("l_orderkey"))
-        .orderBy("o_orderkey")
-        .select("o_orderkey", "o_orderstatus", "its")
-        .collect() // bounded: 1/Modulus of orders — see Scaladoc
-      val root = java.nio.file.Files.createTempDirectory("odata_root")
-      val dir = root.resolve("ORDERS")
-      java.nio.file.Files.createDirectory(dir)
-      val m = ODataTableProvider.mapper
-      rows.grouped(PageSize).zipWithIndex.foreach { case (page, i) =>
-        val rootNode = m.createObjectNode()
-        val arr = rootNode.putArray("value")
-        page.foreach { r =>
-          val o = arr.addObject()
-          o.put("o_orderkey", r.getLong(0))
-          o.put("o_orderstatus", r.getString(1))
-          val sub = o.putArray("ORDERITEMS_SUBFORM")
-          r.getSeq[org.apache.spark.sql.Row](2).foreach { it =>
-            val e = sub.addObject()
-            e.put("l_linenumber", it.getLong(0))
-            e.put("l_partkey", it.getLong(1))
-            e.put("l_suppkey", it.getLong(2))
-            e.put("l_returnflag", it.getString(3))
-          }
+  val ordersExpandRoot: Artifact[String] = Artifact("odata_expand") { (spark, sfDir) =>
+    import org.apache.spark.sql.functions.{collect_list, sort_array, struct}
+    val items = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .filter(pmod(col("l_orderkey"), lit(Modulus)) === 0)
+      .groupBy(col("l_orderkey"))
+      .agg(sort_array(collect_list(struct(
+        col("l_linenumber").cast("long").as("l_linenumber"),
+        col("l_partkey"), col("l_suppkey"), col("l_returnflag"))))
+        .as("its"))
+    val rows = spark.read.parquet(s"$sfDir/orders.parquet")
+      .filter(pmod(col("o_orderkey"), lit(Modulus)) === 0)
+      .select(col("o_orderkey"), col("o_orderstatus"))
+      .join(items, col("o_orderkey") === col("l_orderkey"))
+      .orderBy("o_orderkey")
+      .select("o_orderkey", "o_orderstatus", "its")
+      .collect() // bounded: 1/Modulus of orders — see Scaladoc
+    val root = java.nio.file.Files.createTempDirectory("odata_root")
+    val dir = root.resolve("ORDERS")
+    java.nio.file.Files.createDirectory(dir)
+    val m = ODataTableProvider.mapper
+    rows.grouped(PageSize).zipWithIndex.foreach { case (page, i) =>
+      val rootNode = m.createObjectNode()
+      val arr = rootNode.putArray("value")
+      page.foreach { r =>
+        val o = arr.addObject()
+        o.put("o_orderkey", r.getLong(0))
+        o.put("o_orderstatus", r.getString(1))
+        val sub = o.putArray("ORDERITEMS_SUBFORM")
+        r.getSeq[org.apache.spark.sql.Row](2).foreach { it =>
+          val e = sub.addObject()
+          e.put("l_linenumber", it.getLong(0))
+          e.put("l_partkey", it.getLong(1))
+          e.put("l_suppkey", it.getLong(2))
+          e.put("l_returnflag", it.getString(3))
         }
-        java.nio.file.Files.write(
-          dir.resolve(f"page_$i%05d.json"),
-          m.writeValueAsBytes(rootNode))
       }
-      root.toString
+      java.nio.file.Files.write(
+        dir.resolve(f"page_$i%05d.json"),
+        m.writeValueAsBytes(rootNode))
     }
+    root.toString
+  }
 
   val EventsModulus = 40
   val EventsPageSize = 60
@@ -120,8 +118,6 @@ object ODataPages {
     StructField("user_id", LongType),
     StructField("event_type", StringType)))
 
-  private val eventsCache = new graft.util.OnceCache[(String, String), String](8)
-
   /** Render (once) the TIMESTAMP-ordered events page server: the
     * `event_id % 40 = 0` slice sorted by (ts, event_id) and chunked
     * [[EventsPageSize]] per page — the layout a server that serves
@@ -135,60 +131,58 @@ object ODataPages {
     * as plain long bounds AND `ts` as tagged epoch-micros bounds
     * (`{"t":"ts","lo":…,"hi":…}`) — both sidecar shapes in one
     * directory, exercising the mixed-shape reader. */
-  def eventsPages(spark: SparkSession, sfDir: String): String =
-    eventsCache.getOrCompute((spark.sparkContext.applicationId, sfDir)) {
-      val rows = spark.read.parquet(s"$sfDir/events.parquet")
-        .filter(pmod(col("event_id"), lit(EventsModulus)) === 0)
-        // the fixture's physical ts is TIMESTAMP_NTZ (or raw nanos on
-        // old renders) — cast through TimestampType under the session
-        // UTC zone, the ParquetSimSource convention
-        .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-          col("user_id"), col("event_type"))
-        .orderBy("ts", "event_id")
-        .collect() // bounded: 1/EventsModulus of events — see Scaladoc
-      val dir = java.nio.file.Files.createTempDirectory("odata_events")
-      val m = ODataTableProvider.mapper
-      val counts = m.createObjectNode()
-      val ranges = m.createObjectNode()
-      // the ONE shared Timestamp→micros conversion (ODataFilters):
-      // sidecar bounds and row-side eval must agree bit-for-bit
-      def micros(t: java.sql.Timestamp): Long = ODataFilters.micros(t)
-      def iso(us: Long): String = {
-        val inst = java.time.Instant.ofEpochSecond(
-          Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
-        java.time.format.DateTimeFormatter
-          .ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS")
-          .withZone(java.time.ZoneOffset.UTC).format(inst)
-      }
-      rows.grouped(EventsPageSize).zipWithIndex.foreach { case (page, i) =>
-        val root = m.createObjectNode()
-        val arr = root.putArray("value")
-        page.foreach { r =>
-          val o = arr.addObject()
-          o.put("event_id", r.getLong(0))
-          o.put("ts", iso(micros(r.getTimestamp(1))))
-          o.put("user_id", r.getLong(2))
-          o.put("event_type", r.getString(3))
-        }
-        java.nio.file.Files.write(
-          dir.resolve(f"page_$i%05d.json"), m.writeValueAsBytes(root))
-        counts.put(f"page_$i%05d.json", page.length.toLong)
-        val pr = ranges.putObject(f"page_$i%05d.json")
-        val ids = page.map(_.getLong(0))
-        val ar = pr.putArray("event_id")
-        ar.add(ids.min); ar.add(ids.max)
-        val tss = page.map(r => micros(r.getTimestamp(1)))
-        val tr = pr.putObject("ts")
-        tr.put("t", "ts"); tr.put("lo", tss.min); tr.put("hi", tss.max)
-      }
-      java.nio.file.Files.write(
-        dir.resolve("_counts.meta"), m.writeValueAsBytes(counts))
-      java.nio.file.Files.write(
-        dir.resolve("_ranges.meta"), m.writeValueAsBytes(ranges))
-      dir.toString
+  val eventsPages: Artifact[String] = Artifact("odata_events") { (spark, sfDir) =>
+    val rows = spark.read.parquet(s"$sfDir/events.parquet")
+      .filter(pmod(col("event_id"), lit(EventsModulus)) === 0)
+      // the fixture's physical ts is TIMESTAMP_NTZ (or raw nanos on
+      // old renders) — cast through TimestampType under the session
+      // UTC zone, the ParquetSimSource convention
+      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
+        col("user_id"), col("event_type"))
+      .orderBy("ts", "event_id")
+      .collect() // bounded: 1/EventsModulus of events — see Scaladoc
+    val dir = java.nio.file.Files.createTempDirectory("odata_events")
+    val m = ODataTableProvider.mapper
+    val counts = m.createObjectNode()
+    val ranges = m.createObjectNode()
+    // the ONE shared Timestamp→micros conversion (ODataFilters):
+    // sidecar bounds and row-side eval must agree bit-for-bit
+    def micros(t: java.sql.Timestamp): Long = ODataFilters.micros(t)
+    def iso(us: Long): String = {
+      val inst = java.time.Instant.ofEpochSecond(
+        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
+      java.time.format.DateTimeFormatter
+        .ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS")
+        .withZone(java.time.ZoneOffset.UTC).format(inst)
     }
+    rows.grouped(EventsPageSize).zipWithIndex.foreach { case (page, i) =>
+      val root = m.createObjectNode()
+      val arr = root.putArray("value")
+      page.foreach { r =>
+        val o = arr.addObject()
+        o.put("event_id", r.getLong(0))
+        o.put("ts", iso(micros(r.getTimestamp(1))))
+        o.put("user_id", r.getLong(2))
+        o.put("event_type", r.getString(3))
+      }
+      java.nio.file.Files.write(
+        dir.resolve(f"page_$i%05d.json"), m.writeValueAsBytes(root))
+      counts.put(f"page_$i%05d.json", page.length.toLong)
+      val pr = ranges.putObject(f"page_$i%05d.json")
+      val ids = page.map(_.getLong(0))
+      val ar = pr.putArray("event_id")
+      ar.add(ids.min); ar.add(ids.max)
+      val tss = page.map(r => micros(r.getTimestamp(1)))
+      val tr = pr.putObject("ts")
+      tr.put("t", "ts"); tr.put("lo", tss.min); tr.put("hi", tss.max)
+    }
+    java.nio.file.Files.write(
+      dir.resolve("_counts.meta"), m.writeValueAsBytes(counts))
+    java.nio.file.Files.write(
+      dir.resolve("_ranges.meta"), m.writeValueAsBytes(ranges))
+    dir.toString
+  }
 
-  private val linkedCache = new graft.util.OnceCache[(String, String), String](8)
   val LinkedModulus = 97
   val LinkedPageSize = 60
 
@@ -208,108 +202,106 @@ object ODataPages {
     * ODataSourceSpec e2e both catch it. No `_counts.meta` is
     * rendered: a token server cannot support plan-time OFFSET
     * conversion, so `pushOffset` declines by construction. */
-  def ordersLinkedPages(spark: SparkSession, sfDir: String): String =
-    linkedCache.getOrCompute((spark.sparkContext.applicationId, sfDir)) {
-      val rows = spark.read.parquet(s"$sfDir/orders.parquet")
-        .filter(pmod(col("o_orderkey"), lit(LinkedModulus)) === 0)
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-        .orderBy("o_orderkey")
-        .collect() // bounded: 1/LinkedModulus of orders — see Scaladoc
-      val dir = java.nio.file.Files.createTempDirectory("odata_linked")
-      val m = ODataTableProvider.mapper
-      def token(i: Int): String = {
-        val h = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"graft-odata-page-$i".getBytes("UTF-8"))
-          .take(6).map(b => f"$b%02x").mkString
-        s"tok_$h.json"
-      }
-      // an empty slice still serves ONE (empty) head page — the chain
-      // walk needs a resolvable head, and an empty `value` array is
-      // exactly what a real server returns for an empty entity
-      val pages =
-        if (rows.isEmpty) Seq(Array.empty[org.apache.spark.sql.Row])
-        else rows.grouped(LinkedPageSize).toSeq
-      pages.zipWithIndex.foreach { case (page, i) =>
-        val root = m.createObjectNode()
-        val arr = root.putArray("value")
-        page.foreach { r =>
-          val o = arr.addObject()
-          o.put("o_orderkey", r.getLong(0))
-          o.put("o_custkey", r.getLong(1))
-          o.put("o_orderstatus", r.getString(2))
-          o.put("o_orderpriority", r.getString(3))
-        }
-        if (i + 1 < pages.size)
-          root.put(ODataTableProvider.NextLink, token(i + 1))
-        java.nio.file.Files.write(
-          dir.resolve(token(i)), m.writeValueAsBytes(root))
-      }
-      // the decoy: listed by a directory scan, unreachable by the chain
-      val decoy = m.createObjectNode()
-      val darr = decoy.putArray("value")
-      val drow = darr.addObject()
-      drow.put("o_orderkey", -1L)
-      drow.put("o_custkey", -1L)
-      drow.put("o_orderstatus", "X")
-      drow.put("o_orderpriority", "0-DECOY")
-      java.nio.file.Files.write(
-        dir.resolve("tok_decoy.json"), m.writeValueAsBytes(decoy))
-      val headMeta = m.createObjectNode()
-      headMeta.put("head", token(0))
-      java.nio.file.Files.write(
-        dir.resolve(ODataTableProvider.HeadMeta),
-        m.writeValueAsBytes(headMeta))
-      dir.toString
+  val ordersLinkedPages: Artifact[String] = Artifact("odata_linked") { (spark, sfDir) =>
+    val rows = spark.read.parquet(s"$sfDir/orders.parquet")
+      .filter(pmod(col("o_orderkey"), lit(LinkedModulus)) === 0)
+      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
+      .orderBy("o_orderkey")
+      .collect() // bounded: 1/LinkedModulus of orders — see Scaladoc
+    val dir = java.nio.file.Files.createTempDirectory("odata_linked")
+    val m = ODataTableProvider.mapper
+    def token(i: Int): String = {
+      val h = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"graft-odata-page-$i".getBytes("UTF-8"))
+        .take(6).map(b => f"$b%02x").mkString
+      s"tok_$h.json"
     }
+    // an empty slice still serves ONE (empty) head page — the chain
+    // walk needs a resolvable head, and an empty `value` array is
+    // exactly what a real server returns for an empty entity
+    val pages =
+      if (rows.isEmpty) Seq(Array.empty[org.apache.spark.sql.Row])
+      else rows.grouped(LinkedPageSize).toSeq
+    pages.zipWithIndex.foreach { case (page, i) =>
+      val root = m.createObjectNode()
+      val arr = root.putArray("value")
+      page.foreach { r =>
+        val o = arr.addObject()
+        o.put("o_orderkey", r.getLong(0))
+        o.put("o_custkey", r.getLong(1))
+        o.put("o_orderstatus", r.getString(2))
+        o.put("o_orderpriority", r.getString(3))
+      }
+      if (i + 1 < pages.size)
+        root.put(ODataTableProvider.NextLink, token(i + 1))
+      java.nio.file.Files.write(
+        dir.resolve(token(i)), m.writeValueAsBytes(root))
+    }
+    // the decoy: listed by a directory scan, unreachable by the chain
+    val decoy = m.createObjectNode()
+    val darr = decoy.putArray("value")
+    val drow = darr.addObject()
+    drow.put("o_orderkey", -1L)
+    drow.put("o_custkey", -1L)
+    drow.put("o_orderstatus", "X")
+    drow.put("o_orderpriority", "0-DECOY")
+    java.nio.file.Files.write(
+      dir.resolve("tok_decoy.json"), m.writeValueAsBytes(decoy))
+    val headMeta = m.createObjectNode()
+    headMeta.put("head", token(0))
+    java.nio.file.Files.write(
+      dir.resolve(ODataTableProvider.HeadMeta),
+      m.writeValueAsBytes(headMeta))
+    dir.toString
+  }
 
   /** Render (once) and return the page directory for `sfDir`'s orders. */
-  def ordersPages(spark: SparkSession, sfDir: String): String =
-    cache.getOrCompute((spark.sparkContext.applicationId, sfDir)) {
-      val rows = spark.read.parquet(s"$sfDir/orders.parquet")
-        .filter(pmod(col("o_orderkey"), lit(Modulus)) === 0)
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-        .orderBy("o_orderkey")
-        .collect() // bounded: 1/Modulus of orders, sorted — see Scaladoc
-      val dir = java.nio.file.Files.createTempDirectory("odata_pages")
-      val m = ODataTableProvider.mapper
-      val counts = m.createObjectNode()
-      val ranges = m.createObjectNode()
-      rows.grouped(PageSize).zipWithIndex.foreach { case (page, i) =>
-        val root = m.createObjectNode()
-        val arr = root.putArray("value")
-        page.foreach { r =>
-          val o = arr.addObject()
-          o.put("o_orderkey", r.getLong(0))
-          o.put("o_custkey", r.getLong(1))
-          o.put("o_orderstatus", r.getString(2))
-          o.put("o_orderpriority", r.getString(3))
-        }
-        java.nio.file.Files.write(
-          dir.resolve(f"page_$i%05d.json"),
-          m.writeValueAsBytes(root))
-        counts.put(f"page_$i%05d.json", page.length.toLong)
-        // per-page [min, max] of the long key columns — what a paged
-        // server ordered by key knows for free about each page slice
-        // (the runtime-filtering analogue of a parquet footer's
-        // column range): page pruning metadata, never row data
-        val pr = ranges.putObject(f"page_$i%05d.json")
-        Seq("o_orderkey" -> 0, "o_custkey" -> 1).foreach { case (c, idx) =>
-          val vs = page.map(_.getLong(idx))
-          val ar = pr.putArray(c)
-          ar.add(vs.min); ar.add(vs.max)
-        }
+  val ordersPages: Artifact[String] = Artifact("odata_pages") { (spark, sfDir) =>
+    val rows = spark.read.parquet(s"$sfDir/orders.parquet")
+      .filter(pmod(col("o_orderkey"), lit(Modulus)) === 0)
+      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
+      .orderBy("o_orderkey")
+      .collect() // bounded: 1/Modulus of orders, sorted — see Scaladoc
+    val dir = java.nio.file.Files.createTempDirectory("odata_pages")
+    val m = ODataTableProvider.mapper
+    val counts = m.createObjectNode()
+    val ranges = m.createObjectNode()
+    rows.grouped(PageSize).zipWithIndex.foreach { case (page, i) =>
+      val root = m.createObjectNode()
+      val arr = root.putArray("value")
+      page.foreach { r =>
+        val o = arr.addObject()
+        o.put("o_orderkey", r.getLong(0))
+        o.put("o_custkey", r.getLong(1))
+        o.put("o_orderstatus", r.getString(2))
+        o.put("o_orderpriority", r.getString(3))
       }
-      // per-page row counts — the metadata that lets a pushed global
-      // OFFSET ($skip) convert into (start page, in-page skip) at PLAN
-      // time without reading any page. The production server publishes
-      // the same knowledge through $count/$skiptoken paging.
       java.nio.file.Files.write(
-        dir.resolve("_counts.meta"), m.writeValueAsBytes(counts))
-      // per-page key ranges — feeds SupportsRuntimeFiltering page
-      // pruning (dim-join build keys pruning fact pages at EXECUTION
-      // time, the DSv2 dynamic-partition-pruning rung)
-      java.nio.file.Files.write(
-        dir.resolve("_ranges.meta"), m.writeValueAsBytes(ranges))
-      dir.toString
+        dir.resolve(f"page_$i%05d.json"),
+        m.writeValueAsBytes(root))
+      counts.put(f"page_$i%05d.json", page.length.toLong)
+      // per-page [min, max] of the long key columns — what a paged
+      // server ordered by key knows for free about each page slice
+      // (the runtime-filtering analogue of a parquet footer's
+      // column range): page pruning metadata, never row data
+      val pr = ranges.putObject(f"page_$i%05d.json")
+      Seq("o_orderkey" -> 0, "o_custkey" -> 1).foreach { case (c, idx) =>
+        val vs = page.map(_.getLong(idx))
+        val ar = pr.putArray(c)
+        ar.add(vs.min); ar.add(vs.max)
+      }
     }
+    // per-page row counts — the metadata that lets a pushed global
+    // OFFSET ($skip) convert into (start page, in-page skip) at PLAN
+    // time without reading any page. The production server publishes
+    // the same knowledge through $count/$skiptoken paging.
+    java.nio.file.Files.write(
+      dir.resolve("_counts.meta"), m.writeValueAsBytes(counts))
+    // per-page key ranges — feeds SupportsRuntimeFiltering page
+    // pruning (dim-join build keys pruning fact pages at EXECUTION
+    // time, the DSv2 dynamic-partition-pruning rung)
+    java.nio.file.Files.write(
+      dir.resolve("_ranges.meta"), m.writeValueAsBytes(ranges))
+    dir.toString
+  }
 }

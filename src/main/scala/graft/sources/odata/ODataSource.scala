@@ -194,7 +194,7 @@ object ODataTableProvider {
     else {
       val in = fs.open(p)
       val node = try mapper.readTree(in) finally in.close()
-      Some(node.fields().asScala
+      Some(node.properties().iterator().asScala
         .map(e => e.getKey -> e.getValue.asLong()).toMap)
     }
   }
@@ -233,8 +233,8 @@ object ODataTableProvider {
       else {
         val in = fs.open(p)
         val node = try mapper.readTree(in) finally in.close()
-        Some(node.fields().asScala.map { e =>
-          e.getKey -> e.getValue.fields().asScala.flatMap { c =>
+        Some(node.properties().iterator().asScala.map { e =>
+          e.getKey -> e.getValue.properties().iterator().asScala.flatMap { c =>
             val v = c.getValue
             // NUMERIC bounds only: Jackson's asLong() coerces a
             // non-numeric node to 0, and a silently-minted [0, 0]

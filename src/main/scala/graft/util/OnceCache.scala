@@ -1,6 +1,6 @@
 package graft.util
 
-import java.util.concurrent.{CompletableFuture, CompletionException}
+import java.util.concurrent.{CompletableFuture, ExecutionException}
 
 /** Bounded compute-once cache: `getOrCompute` runs the loader for a key
   * at most once per residency (concurrent callers of the SAME key wait
@@ -29,7 +29,7 @@ final class OnceCache[K, V](maxEntries: Int) {
     new java.util.LinkedHashMap[K, CompletableFuture[V]](16, 0.75f, false) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[K, CompletableFuture[V]]): Boolean =
-        size() > maxEntries && e.getValue.isDone
+        this.size() > maxEntries && e.getValue.isDone
     }
 
   def getOrCompute(key: K)(load: => V): V = {
@@ -54,8 +54,10 @@ final class OnceCache[K, V](maxEntries: Int) {
           throw t
       }
     } else {
-      try fut.join()
-      catch { case e: CompletionException => throw e.getCause }
+      // get(), not join(): a waiter stays interruptible, so a pool
+      // that is shut down on a sibling's failure can reclaim it
+      try fut.get()
+      catch { case e: ExecutionException => throw e.getCause }
     }
   }
 
