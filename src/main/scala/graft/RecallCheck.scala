@@ -51,7 +51,7 @@ object RecallCheck {
       .filter(col("i").cast("double") / (col("sz_a") + col("sz_b") - col("i")) >= 0.8)
       .select("a_id", "b_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lshMinhash = Dedup.minhashNeardup(docs)
+    val lshMinhash = Dedup.minhashNeardupMaterialized(docs)
       .select("a_id", "b_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     hs.unpersist(blocking = false)

@@ -430,10 +430,10 @@ object Dedup {
     * the verify join's shingles) is benchmark-sized and BROADCAST; the
     * corpus streams through its shingle projection once and never
     * shuffles in full. Candidates come from the same 16×4 banding as
-    * [[minhashNeardup]] (recall regime verified by RecallCheck), with
-    * the train-side band buckets capped — an over-full bucket is
-    * boilerplate, and here it would fan out across every eval doc in
-    * the bucket. */
+    * [[minhashNeardupMaterialized]] (recall regime verified by
+    * RecallCheck), with the train-side band buckets capped — an
+    * over-full bucket is boilerplate, and here it would fan out across
+    * every eval doc in the bucket. */
   /** Cost profile (r8, sf0.1, local[16], steady-state after one JIT
     * rep): full query ≈ 2.1 s of which corpus shingling is 0.2–0.3 s —
     * the banded-candidates + verify join dominates, so making the
@@ -525,28 +525,17 @@ object Dedup {
     * array_intersect over string arrays — same result unless two
     * distinct shingles of one pair collide in 64 bits (P ≈ |sh|²/2⁶⁴,
     * vanishing), and the narrow (id, hash) rows shuffle instead of
-    * document-sized arrays. |∪| = |A| + |B| − |∩|. */
-  def minhashNeardup(
-      docs: DataFrame,
-      threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    // the shingle+hash explode feeds FOUR plan subtrees (bands, sizes,
-    // both intersection joins) — persist the narrow (doc_id, h) rows so
-    // text is parsed once; spills to disk at scale, evicted by LRU.
-    // NOTE: the returned frame is lazy, so this persist outlives the
-    // call (LRU-evicted eventually) — long-lived sessions should prefer
-    // [[minhashNeardupMaterialized]], which scopes it.
-    val hs = shingleHashes(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    neardupFrom(hs, threshold, maxBucket)
-  }
-
-  /** [[minhashNeardup]] computed EAGERLY: the (small) verified pair set
-    * is materialized with localCheckpoint and the shingle-hash cache is
-    * released before returning — nothing lingers in the session's cache
-    * budget, and the result can be consumed any number of times without
-    * re-running the LSH pipeline (the ingest-once shape a production
-    * corpus uses for its near-dup artifact). */
+    * document-sized arrays. |∪| = |A| + |B| − |∩|.
+    *
+    * Computed EAGERLY: the shingle+hash explode feeds four plan
+    * subtrees (bands, sizes, both intersection joins), so the narrow
+    * (doc_id, h) rows are persisted and text is parsed once; the (small)
+    * verified pair set is materialized with localCheckpoint and the
+    * shingle-hash cache is released before returning — nothing lingers
+    * in the session's cache budget, and the result can be consumed any
+    * number of times without re-running the LSH pipeline (the
+    * ingest-once shape a production corpus uses for its near-dup
+    * artifact). */
   def minhashNeardupMaterialized(
       docs: DataFrame,
       threshold: Double = 0.8,
@@ -634,17 +623,9 @@ object Dedup {
     * would shrink the prefix below the guarantee), using
     * rn ≤ |x| − ceil(t·|x|) + 1  ⟺  tNum·|x| ≤ tDen·(|x| − rn + 1).
     *
-    * Returns (a_id, b_id, jaccard) for every pair with Jaccard ≥ t;
-    * lazy, so the shingle-hash persist outlives the call (LRU-evicted) —
-    * prefer [[ngramJaccardJoinMaterialized]] in long-lived sessions. */
-  def ngramJaccardJoin(docs: DataFrame, tNum: Int = 7, tDen: Int = 10): DataFrame = {
-    val hs = shingleHashes(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ngramJaccardFrom(hs, tNum, tDen)
-  }
-
-  /** [[ngramJaccardJoin]] computed eagerly with the shingle cache
-    * released before returning (mirrors [[minhashNeardupMaterialized]]). */
+    * Returns (a_id, b_id, jaccard) for every pair with Jaccard ≥ t,
+    * computed eagerly with the shingle cache released before returning
+    * (mirrors [[minhashNeardupMaterialized]]). */
   def ngramJaccardJoinMaterialized(docs: DataFrame, tNum: Int = 7, tDen: Int = 10): DataFrame = {
     val hs = shingleHashes(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -694,9 +675,9 @@ object Dedup {
       .localCheckpoint(true)
   }
 
-  /** [[ngramJaccardJoin]]'s (a_id, b_id, jaccard) rows derived from
-    * the loose pair frame by one integer filter — complete for any
-    * threshold ≥ 1/2 (the frame's floor) by the prefix bound's
+  /** [[ngramJaccardJoinMaterialized]]'s (a_id, b_id, jaccard) rows
+    * derived from the loose pair frame by one integer filter — complete
+    * for any threshold ≥ 1/2 (the frame's floor) by the prefix bound's
     * monotonicity; `jaccard` is the same single division of the same
     * exact integers, so the derived rows are bit-identical to the
     * direct join's. */
@@ -966,9 +947,10 @@ object Dedup {
     * container side exposes everything, so B contributes its FULL
     * shingle stream (no symmetric prefix, no length filter: |B| is
     * unbounded relative to |A| by design — that asymmetry IS the
-    * semantics). Same integer threshold algebra as [[ngramJaccardJoin]]
-    * (never float ceil). Exact intersection verify then gives precision
-    * 1.0 — recall and precision both exact.
+    * semantics). Same integer threshold algebra as
+    * [[ngramJaccardJoinMaterialized]] (never float ceil). Exact
+    * intersection verify then gives precision 1.0 — recall and
+    * precision both exact.
     *
     * Scale shape: candidate volume = Σ over A-prefix tokens of df(h) —
     * prefixes keep each doc's RAREST tokens, so the container-side
@@ -1288,9 +1270,9 @@ object Dedup {
     * the stored bands (batch side broadcast — the incremental contract
     * is |batch| ≪ |corpus|); the stored buckets get the usual
     * [[BucketCap]] guard. Within-batch pairs are NOT emitted — run
-    * [[minhashNeardup]] on the batch for those. Id spaces are assumed
-    * disjoint (a shared id would pair a document with its own history,
-    * which is exactly what an UPDATE wants anyway). */
+    * [[minhashNeardupMaterialized]] on the batch for those. Id spaces
+    * are assumed disjoint (a shared id would pair a document with its
+    * own history, which is exactly what an UPDATE wants anyway). */
   def neardupAgainstIndex(
       newDocs: DataFrame,
       writer: graft.sinks.StagingWriter,
@@ -1341,65 +1323,14 @@ object Dedup {
     * both 3 and 7 — while component labeling keeps exactly one document
     * per duplicate cluster.
     *
-    * Algorithm: iterative min-label propagation — each round every node
-    * takes min(own label, neighbors' labels); converges in O(component
-    * diameter) rounds, and near-dup clusters are shallow (a dup cluster's
-    * diameter is small by construction — everything is similar to the
-    * seed). Each round is one join + one map-side-combinable min
-    * aggregate; `localCheckpoint` truncates the lineage so the plan
-    * doesn't deepen per round. The convergence probe is an `observe`
-    * metric ON the label-update job itself (changed-label count folded
-    * into the checkpoint action — per-round driver state is a single
-    * long, and there is no second join+isEmpty job per round). For
-    * adversarial long-chain graphs (not the dedup shape) min-label
-    * propagation needs O(component diameter) rounds —
-    * [[dupComponentsStar]] is the two-phase large-star/small-star
-    * variant (Kiveris et al., "Connected Components in MapReduce",
-    * SoCC'14) that converges in O(log n) rounds regardless of
-    * diameter; it produces the IDENTICAL labeling (spec-pinned on
+    * Algorithm: TWO-PHASE LARGE-STAR/SMALL-STAR (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14).
+    * Min-label propagation needs O(component diameter) rounds — a
+    * 10⁶-long near-dup chain (pathological boilerplate) costs it 10⁶
+    * rounds — while star contraction converges in O(log n) rounds
+    * regardless of diameter, with the IDENTICAL labeling (ExtSpec
+    * cross-proves it against a min-label propagation reference on
     * planted chain/star/clique graphs).
-    *
-    * Returns (doc_id, component) for every doc that appears in ≥ 1
-    * pair; singleton documents are their own implicit component. */
-  def dupComponents(pairs: DataFrame): DataFrame = {
-    // undirected edges, both directions, so one join sees all neighbors
-    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(true)
-    var converged = false
-    while (!converged) {
-      val viaNeighbors = edges
-        .join(labels.select(col("id").as("dst"), col("component")), "dst")
-        .groupBy(col("src").as("id")).agg(min(col("component")).as("nc"))
-      // old and new labels meet in this projection anyway (the least()),
-      // so the changed count rides the eager-checkpoint action for free
-      val obs = org.apache.spark.sql.Observation()
-      val next = labels.withColumnRenamed("component", "old")
-        .join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), col("old"),
-          least(col("old"), coalesce(col("nc"), col("old"))).as("component"))
-        .observe(obs, sum(when(col("component") =!= col("old"), 1L)
-          .otherwise(0L)).as("changed"))
-        .select(col("id"), col("component"))
-        .localCheckpoint(true)
-      converged = Option(obs.get("changed")).forall(_.asInstanceOf[Long] == 0L)
-      labels = next
-    }
-    labels.select(col("id").as("doc_id"), col("component"))
-  }
-
-  /** Connected components by TWO-PHASE LARGE-STAR/SMALL-STAR (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond", SoCC'14)
-    * — the adversarial-diameter answer [[dupComponents]]' scaladoc
-    * promises (VERDICT r12 task 3): a 10⁶-long near-dup chain
-    * (pathological boilerplate) costs min-label propagation 10⁶
-    * rounds, while star contraction converges in O(log n) rounds
-    * regardless of diameter, with the IDENTICAL (doc_id, component =
-    * min reachable id) labeling.
     *
     * Each round rewrites the edge set twice. LARGE-STAR: for every
     * center u with neighborhood Γ(u), m = min(Γ(u) ∪ \{u\}); every
@@ -1407,21 +1338,19 @@ object Dedup {
     * SMALL-STAR over the canonical big→small edges: for every big
     * end u, m = min(its small neighbors) (< u always); every other
     * small neighbor and u itself re-link to m. Both steps preserve
-    * connectivity and the vertex set (the paper's invariants; the
-    * spec cross-proves the labeling against [[dupComponents]]), and
+    * connectivity and the vertex set (the paper's invariants), and
     * the fixpoint is the star forest rooted at component minima.
     *
     * Scale shape: per round, two map-side-combinable min aggregates
     * and two equi-joins on the center key — no window, no driver
     * state beyond the convergence probe; each edge frame eagerly
-    * checkpoints so lineage stays one round deep (the
-    * [[dupComponents]] loop discipline). Convergence is an exact
-    * set-equality probe (|B| = |A∩B| = |A|) whose inputs ride the
-    * checkpoint action as observe metrics — one Spark action per
-    * round, the [[dupComponents]] idiom.
+    * checkpoints so lineage stays one round deep. Convergence is an
+    * exact set-equality probe (|B| = |A∩B| = |A|) whose inputs ride
+    * the checkpoint action as observe metrics — one Spark action per
+    * round.
     *
-    * Same contract as [[dupComponents]]: (doc_id, component) for
-    * every doc in ≥ 1 pair. */
+    * Returns (doc_id, component) for every doc that appears in ≥ 1
+    * pair; singleton documents are their own implicit component. */
   def dupComponentsStar(pairs: DataFrame): DataFrame =
     dupComponentsStarRounds(pairs)._1
 
@@ -1521,8 +1450,8 @@ object Dedup {
           coalesce(col("component"), col("doc_id")).as("component")), 0)
     }
     // ONE action per round (VERDICT r13 task 3 — the observe-metric
-    // idiom [[dupComponents]] pinned): the set-equality probe rides
-    // the checkpoint action itself. New edge set B equals old set A
+    // idiom): the set-equality probe rides the checkpoint action
+    // itself. New edge set B equals old set A
     // iff |B| = |A∩B| and |B| = |A| (both sides are distinct); |A| is
     // last round's |B| (seeded by the observe metric on the canonical
     // edges' checkpoint — no separate count() job), |B| and |A∩B| are
@@ -1691,7 +1620,7 @@ object Dedup {
     * dominate decides the strategy: a fat size-2 band is near-dup
     * noise, a long tail of giant clusters is template spam).
     * Components label only docs appearing in ≥ 1 pair
-    * ([[dupComponents]]' contract), so the singleton row is the
+    * ([[dupComponentsStar]]' contract), so the singleton row is the
     * corpus minus the labeled mass, joined at size 1; Σ n_docs over
     * the histogram equals the corpus count by construction (the
     * spec's identity).
@@ -1718,7 +1647,7 @@ object Dedup {
   }
 
   /** Canonical-keeper selection per duplicate component — the step
-    * between [[dupComponents]]' labeling and the corpus rewrite: every
+    * between [[dupComponentsStar]]' labeling and the corpus rewrite: every
     * component keeps its BEST member (highest quality score, doc_id
     * tiebreak), not blindly its lowest id — pairwise lowest-id-survives
     * can keep a truncated or boilerplate copy over the clean one. Both
@@ -1731,7 +1660,7 @@ object Dedup {
     * sized (shallow, small), so per-partition state is trivial.
     * Documents outside any component are implicitly their own keepers
     * (components only label docs appearing in ≥ 1 pair, per
-    * [[dupComponents]]). */
+    * [[dupComponentsStar]]). */
   def canonicalPick(docs: DataFrame, components: DataFrame): DataFrame = {
     // join FIRST, score the survivors: components cover only docs in
     // ≥ 1 pair (a few percent of a real corpus), so scoring before the

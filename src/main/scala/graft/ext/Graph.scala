@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over operator-derived edge sets — the
-  * family beyond [[Dedup.dupComponents]]' connected components. The
+  * family beyond [[Dedup.dupComponentsStar]]' connected components. The
   * first member is PageRank over the near-dup pair graph: inside a
   * duplication cluster the highest-rank node is the "hub" copy that
   * everything else points at (mirror roots, template sources), a

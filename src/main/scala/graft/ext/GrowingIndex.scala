@@ -218,7 +218,7 @@ abstract class NeardupIndex[T] extends GrowingIndex {
     * batch-partition overwrite, and the pair set drops self-matches (a
     * replayed row meeting its own indexed copy) and double-finds (a
     * within-batch pair the replayed probe finds again). Keeper
-    * semantics are pairwise b-side drop; run [[Dedup.dupComponents]]
+    * semantics are pairwise b-side drop; run [[Dedup.dupComponentsStar]]
     * over `<table>_pairs` for transitive clusters. Ids must be unique
     * across batches. */
   def ingestBatch(

@@ -50,8 +50,9 @@ object ExtQueries {
   // run. The per-row vector work here is too cheap to amortize the
   // stage break; at production scale a many-row-group table already
   // plans wide and the widen was a no-op anyway. The ×32
-  // replicate-explode site (x239) KEEPS its widen — there the
-  // per-row fan-out genuinely multiplies scan-stage work.
+  // replicate-explode site (x239) KEEPS a hash repartition of its
+  // scan — there the per-row fan-out genuinely multiplies scan-stage
+  // work.
   private def emb(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/embeddings.parquet")
 
@@ -242,8 +243,9 @@ object ExtQueries {
       .repartition(col("p1")).localCheckpoint(true)
   }
 
-  /** x68's eval set: a 22-token window of every 50th doc. */
-  private def x68Eval(dd: DataFrame): DataFrame = dd.filter(col("doc_id") % 50 === 0)
+  /** The planted eval set of the decontamination and prep keys (x19's
+    * construction): a 22-token window of every 50th doc. */
+  private def evalWindow(dd: DataFrame): DataFrame = dd.filter(col("doc_id") % 50 === 0)
     .select(array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
 
   /** The incremental-funnel gate's (x68) base warehouse: the
@@ -259,7 +261,7 @@ object ExtQueries {
     val dd = docs(s, d)
     val baseDir = java.nio.file.Files
       .createTempDirectory("incr_funnel_base").toString
-    graft.run.CorpusPrepJob.run(dd.filter(col("doc_id") % 3 =!= 0), x68Eval(dd),
+    graft.run.CorpusPrepJob.run(dd.filter(col("doc_id") % 3 =!= 0), evalWindow(dd),
       new graft.sinks.StagingWriter(s, baseDir),
       graft.run.CorpusPrepJob.PrepConfig(exports = false))
     baseDir
@@ -440,9 +442,7 @@ object ExtQueries {
     // oracle row is non-vacuous; near-dups of sliced docs may hit too.
     "x19_decontaminate" -> ((s, d) => {
       val dd = docs(s, d)
-      val ev = dd.filter(col("doc_id") % 50 === 0)
-        .select(array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
-      Dedup.decontaminate(dd, ev)
+      Dedup.decontaminate(dd, evalWindow(dd))
     }),
     // Bloom-pre-filtered decontamination: the scale path for when the
     // eval n-gram set outgrows a broadcast. Bit-identical output to x19
@@ -451,17 +451,13 @@ object ExtQueries {
     // set, same oracle SQL.
     "x53_bloom_decontaminate" -> ((s, d) => {
       val dd = docs(s, d)
-      val ev = dd.filter(col("doc_id") % 50 === 0)
-        .select(array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
-      graft.ext.Bloom.decontaminateBloom(dd, ev, bits = 1 << 16, k = 5)
+      graft.ext.Bloom.decontaminateBloom(dd, evalWindow(dd), bits = 1 << 16, k = 5)
     }),
     // Graded contamination (matched/total distinct 13-grams + ppm) over
     // the same planted eval set as x19 — the trim-vs-drop report.
     "x54_contamination_rate" -> ((s, d) => {
       val dd = docs(s, d)
-      val ev = dd.filter(col("doc_id") % 50 === 0)
-        .select(array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
-      Dedup.contaminationRate(dd, ev)
+      Dedup.contaminationRate(dd, evalWindow(dd))
     }),
     // Cross-split leakage: the decontamination report run BETWEEN a
     // split's own halves (did test leak into train?) — the check every
@@ -525,9 +521,7 @@ object ExtQueries {
     // (the x39 convention), never the body.
     "x64_decontaminate_trim" -> ((s, d) => {
       val dd = docs(s, d)
-      val ev = dd.filter(col("doc_id") % 50 === 0)
-        .select(array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
-      Dedup.decontaminateTrim(dd, ev)
+      Dedup.decontaminateTrim(dd, evalWindow(dd))
     }),
     // FUZZY decontamination: MinHash near-dup (j >= 0.8) between the
     // corpus and a planted eval set — every 50th doc's FULL text with
@@ -566,12 +560,10 @@ object ExtQueries {
       val copies = base.filter(col("doc_id") % 25 === 0)
         .select((col("doc_id") + 2000000L).as("doc_id"),
           upper(col("text")).as("text"), col("lang"), col("source"))
-      val ev = base.filter(col("doc_id") % 50 === 0)
-        .select(array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
       val w = new graft.sinks.StagingWriter(s,
         graft.util.Scratch.dir("prep_job"))
       graft.run.CorpusPrepJob
-        .run(damaged.unionByName(copies), ev, w).funnel
+        .run(damaged.unionByName(copies), evalWindow(base), w).funnel
     }),
     // The INCREMENTAL leg of the composed prep job
     // (CorpusPrepJob.increment): an initial run() over the %3≠0 docs
@@ -610,7 +602,7 @@ object ExtQueries {
       val base = incrFunnelBase(s, d)
       val wh = graft.util.Scratch.dir("incr_funnel")
       linkTree(new java.io.File(base), new java.io.File(wh))
-      graft.run.CorpusPrepJob.increment(batch, x68Eval(dd),
+      graft.run.CorpusPrepJob.increment(batch, evalWindow(dd),
         new graft.sinks.StagingWriter(s, wh)).funnel
     }),
     // Corpus-level boilerplate-prefix removal (the CCNet/C4 site-level
@@ -1312,12 +1304,12 @@ object ExtQueries {
     // carve per replicate.
     // the replicate explode (×32) + salted md5 run fused into the
     // orders scan — a single task on the one-row-group fixture file
-    // (r15 profile: a 2 s single-task job); widen parallelizes the
-    // per-row work, no-op once the table plans as many splits
+    // (r15 profile: a 2 s single-task job); hashing the scan across
+    // the cores parallelizes the per-row work
     "x239_subsample_p50" -> ((s, d) =>
       Stats.subsampleMedians(
-        graft.util.Scans.widen(
-          s.read.parquet(s"$d/orders.parquet"), "o_orderkey"),
+        s.read.parquet(s"$d/orders.parquet")
+          .repartition(s.sparkContext.defaultParallelism, col("o_orderkey")),
         "o_orderkey",
         expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))),
     // Join-size forecast from key histograms: events x orders on the
@@ -2128,9 +2120,7 @@ object ExtQueries {
     // construction + one source aggregate.
     "x117_contamination_by_source" -> ((s, d) => {
       val dd = docs(s, d)
-      val ev = dd.filter(col("doc_id") % 50 === 0)
-        .select(array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
-      Dedup.decontaminate(dd, ev)
+      Dedup.decontaminate(dd, evalWindow(dd))
         .join(dd.select(col("doc_id"), col("source")), Seq("doc_id"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),

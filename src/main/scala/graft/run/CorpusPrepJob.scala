@@ -121,28 +121,66 @@ object CorpusPrepJob {
       docs: DataFrame,
       evalDocs: DataFrame,
       writer: StagingWriter,
-      cfg: PrepConfig = PrepConfig()): PrepReport = {
+      cfg: PrepConfig = PrepConfig()): PrepReport =
+    stages(docs, evalDocs, cfg)(
+      standing = identity, history = identity,
+      // the split rides the cleaned corpus to disk — THE durable
+      // deliverable — through the crash-safe swap: a re-run that dies
+      // mid-write must leave the PREVIOUS corpus readable. Downstream
+      // reads it back, so its lineage starts at the warehouse, not at
+      // the raw scan.
+      land = { withSplit =>
+        writer.writeAndSwap(withSplit, CorpusTable)
+        writer.read(CorpusTable)
+      }) { (corpus, funnel) =>
+      // the index build, the derived exports and the funnel are
+      // INDEPENDENT actions over disjoint tables, all downstream of the
+      // one corpus write — [[writeTailArtifacts]] runs them from a small
+      // thread pool (guide §2.6 overlap; r15 — the tail was 4-6
+      // sequential actions, each leaving most cores idle at bench
+      // scale). Per-table artifacts are byte-identical to the
+      // sequential order.
+      val (written, exportArtifacts) = writeTailArtifacts(cfg, writer, corpus, funnel)
+      report(written, Seq(CorpusTable, IndexTable) ++ exportArtifacts :+ FunnelTable)
+    }
 
-    // stage 0 (optional): HTML→text landing extraction, fused into
-    // the same scan as normalization (both pure projections).
-    // stage 1→2: normalize, then the Gopher hard gate on the repaired
-    // text. Persisted: feeds the gate flags, the gated frame, and the
-    // raw funnel count — text is parsed once.
+  /** The ONE stage chain [[run]] and [[increment]] share — an
+    * incremental tick is the initial load's work bounded by the batch:
+    * landing (optional HTML→text, fused into the normalize scan) →
+    * normalize → Gopher gate → optional blocklist → exact dedup →
+    * near-dup component rewrite → decontaminate → split, plus the lazy
+    * funnel over those stages. The callers supply only what differs:
+    *
+    *   - `standing`: applied to the exact-dedup survivors before they
+    *     are persisted (the increment's standing-corpus anti-join);
+    *   - `history`: applied to the near-dup rewrite's survivors (the
+    *     increment's stored-index probe);
+    *   - `land`: where the split frame lands; the funnel counts `5_clean`
+    *     and the split rows over what it returns.
+    *
+    * `finish` receives the landed frame and the LAZY funnel and runs
+    * inside the chain's scope: the two text-bearing intermediates that
+    * feed several consumers (the normalized batch and the exact-dedup
+    * survivors) are persisted here and RELEASED in the finally (the
+    * sourceDrift ownership convention), so every funnel leg must
+    * materialize before `finish` returns. */
+  private def stages[A](docs: DataFrame, evalDocs: DataFrame, cfg: PrepConfig)(
+      standing: DataFrame => DataFrame,
+      history: DataFrame => DataFrame,
+      land: DataFrame => DataFrame)(
+      finish: (DataFrame, DataFrame) => A): A = {
     val landed =
-      if (cfg.htmlInput)
-        docs.withColumn("text", TextStats.htmlToText(col("text")))
+      if (cfg.htmlInput) docs.withColumn("text", TextStats.htmlToText(col("text")))
       else docs
     val normalized = TextStats.normalized(landed)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // gopher pass-ids computed ONCE, eagerly checkpointed (r15): the
     // dedup gate join AND the 2_gate_passed funnel count consume it —
-    // lazily each re-ran the regex-heavy gopherRules text pass
+    // lazily each re-ran the regex-heavy gopherRules text pass (r16 A/B
+    // re-confirmed on the increment: ~0.6 s slower per tick)
     val gateIds = TextStats.gopherRules(normalized)
       .filter(col("passes")).select("doc_id").localCheckpoint(true)
-    // stage 3: exact dedup keeps the lowest doc_id per content hash —
-    // ONE shuffle on the hash; dup groups are tiny. Persisted: feeds
-    // the pair set, the component join, decontamination, the funnel.
-    val gatedForDedup = {
+    val gated = {
       val gated0 = normalized.join(gateIds, "doc_id")
       // optional C4 blocklist gate — empty list leaves the frame (and
       // therefore every downstream count) byte-identical
@@ -152,20 +190,21 @@ object CorpusPrepJob {
           .filter(col("flagged")).select("doc_id"),
         Seq("doc_id"), "left_anti")
     }
+    // exact dedup keeps the lowest doc_id per content hash — ONE
+    // shuffle on the hash; dup groups are tiny. Persisted: feeds the
+    // pair set, the component join, decontamination, the funnel.
     val exactKept = {
       val byHash = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-      gatedForDedup.withColumn("__rn", row_number().over(byHash))
-        .filter(col("__rn") === 1).drop("__rn")
+      standing(gated.withColumn("__rn", row_number().over(byHash))
+        .filter(col("__rn") === 1).drop("__rn"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
     try {
-      val gatedCount = gateIds // the checkpointed pass-ids, counted
-
-      // stage 4: near-dup pairs → components (star contraction —
-      // label-identical to min-label propagation, spec-proved, but
-      // O(log n) rounds where a boilerplate chain stalls min-label) →
-      // canonical keeper; non-keepers are rewritten away. The pair
-      // set is the ingest artifact shape — built once, consumed twice.
+      // near-dup pairs → components (star contraction — label-identical
+      // to min-label propagation, spec-proved, but O(log n) rounds where
+      // a boilerplate chain stalls min-label) → canonical keeper;
+      // non-keepers are rewritten away. The pair set is materialized
+      // once and also feeds the audit rows.
       val pairs = Dedup.minhashNeardupMaterialized(exactKept, cfg.neardupThreshold)
       val components = Dedup.dupComponentsStar(pairs)
       val keepers = Dedup.canonicalPick(exactKept, components)
@@ -173,143 +212,60 @@ object CorpusPrepJob {
         .join(keepers.select(col("component"), col("keeper_id")), "component")
         .filter(col("doc_id") =!= col("keeper_id"))
         .select("doc_id")
-      val neardupKept = exactKept.join(dropIds, Seq("doc_id"), "left_anti")
+      val neardupKept = history(exactKept.join(dropIds, Seq("doc_id"), "left_anti"))
 
-      // stage 5: benchmark decontamination over the deduped survivors
+      // benchmark decontamination over the deduped survivors
       val contaminatedIds = Dedup
         .decontaminate(neardupKept, evalDocs, cfg.decontamNgram)
         .filter(col("contaminated")).select("doc_id")
       val clean = neardupKept.join(contaminatedIds, Seq("doc_id"), "left_anti")
 
-      // stage 6: content-hash split rides the cleaned corpus to disk —
-      // THE durable deliverable; downstream stages read it back, so
-      // their lineage starts at the warehouse, not at the raw scan.
-      // The split attaches as a COLUMN (splitAssigned): joining
-      // hashSplit back would evaluate the clean subtree — the whole
-      // decontamination pass — twice inside the one write action
-      val withSplit = Assemble.splitAssigned(
-        clean, cfg.trainPermille, cfg.valPermille, cfg.splitSalt)
-      // through the crash-safe swap: a re-run that dies mid-write must
-      // leave the PREVIOUS corpus readable (the curriculumExport
-      // lesson); the cheap derived artifacts below are re-derivable
-      // from this table, so they keep plain overwrite
-      writer.writeAndSwap(withSplit, CorpusTable)
-      val corpus = writer.read(CorpusTable)
-
-      // artifacts: the MinHash index the streaming ingest loop grows
-      // ([[Dedup.MinhashIndex]] appends / compaction), then — unless the
-      // caller defers them to compaction cadence (cfg.exports) — the
-      // packed train sequences, the curriculum export, the optional
-      // mixture
-      // the index build, the derived exports and the funnel are
-      // INDEPENDENT actions over disjoint tables, all downstream of
-      // the one corpus write — [[writeTailArtifacts]] runs them from
-      // a small thread pool (guide §2.6 overlap; r15 — the tail was
-      // 4-6 sequential actions, each leaving most cores idle at
-      // bench scale). Per-table artifacts are byte-identical to the
-      // sequential order.
-      val (funnel, exportArtifacts) = writeTailArtifacts(cfg, writer,
-        corpus, assembleFunnel(cfg, normalized, gatedCount,
-          gatedForDedup, exactKept, neardupKept, corpus, pairs))
-
-      val counts = funnel.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      PrepReport(funnel, counts, quarantined = 0L,
-        artifacts = Seq(CorpusTable, IndexTable) ++ exportArtifacts :+ FunnelTable)
+      // the content-hash split attaches as a COLUMN (splitAssigned):
+      // joining hashSplit back would evaluate the clean subtree — the
+      // whole decontamination pass — twice inside the one landing action
+      val split = land(Assemble.splitAssigned(
+        clean, cfg.trainPermille, cfg.valPermille, cfg.splitSalt))
+      finish(split, funnel(cfg, Seq(
+        "1_raw" -> normalized, "2_gate_passed" -> gateIds) ++
+        (if (cfg.blocklist.isEmpty) Nil else Seq("2b_blocklist_passed" -> gated)) ++
+        Seq("3_exact_unique" -> exactKept, "4_neardup_kept" -> neardupKept),
+        split, pairs))
     } finally {
       normalized.unpersist(blocking = false)
       exactKept.unpersist(blocking = false)
     }
   }
 
-  /** The tail of [[run]]: the MinHash index build, the derived
-    * exports (pack/curriculum/mix) and the funnel write — independent
-    * jobs over disjoint tables, all downstream of the corpus write —
-    * submitted from a 3-thread [[graft.util.FanOut]] so each job's
-    * tasks back-fill the ramp/tail idle of the others (guide §2.6;
-    * r15). The funnel frame passed in is LAZY — it materializes inside
-    * its task. On a failure the surviving siblings' jobs are cancelled
-    * and their threads joined before the rethrow (ADVICE r15): no
-    * background write may race the caller's finally-unpersist or
-    * mutate tables after the run reported failure. */
-  private def writeTailArtifacts(
-      cfg: PrepConfig, writer: StagingWriter, corpus: DataFrame,
-      funnelLazy: DataFrame): (DataFrame, Seq[String]) = {
-    // each task yields (funnel frame, export tables) — at most one of
-    // the two non-empty
-    val done = graft.util.FanOut.all[(Option[DataFrame], Seq[String])](
-      corpus.sparkSession.sparkContext, threads = 3)(Seq(
-      () => {
-        Dedup.MinhashIndex.build(corpus, writer, IndexTable)
-        (None, Nil)
-      },
-      () => {
-        if (!cfg.exports) (None, Nil)
-        else {
-          writer.write(
-            Assemble.packBudget(corpus.filter(col("split") === "train"),
-              cfg.packTokens, cfg.packShards),
-            PackedTable, append = false)
-          Assemble.curriculumExport(corpus, writer, CurriculumTable,
-            cfg.curriculumShards)
-          val mixArtifacts = cfg.mixBudget.toSeq.map { budget =>
-            writer.write(
-              Assemble.temperatureMix(
-                corpus.filter(col("split") === "train"), budget),
-              MixTable, append = false)
-            MixTable
-          }
-          (None, Seq(PackedTable, CurriculumTable) ++ mixArtifacts)
-        }
-      },
-      // the funnel: one unioned aggregate query — every count is an
-      // integer aggregate, map-side combinable, one small row per
-      // stage (blocklist row only when configured — the default
-      // funnel stays byte-identical, x62/x68 pin it), written eagerly
-      // so it survives the caller's finally-release of the cached
-      // intermediates it counts
-      () => {
-        // checkpoint BEFORE the write: lazily the unioned aggregate
-        // evaluated TWICE per run (once for the table write, once for
-        // the caller's counts collect) — the increment() idiom
-        val f = funnelLazy.localCheckpoint(true)
-        writer.write(f, FunnelTable, append = false)
-        (Some(f), Nil)
-      }))
-    (done.flatMap(_._1).head, done.flatMap(_._2))
-  }
-
-  private def assembleFunnel(
-      cfg: PrepConfig, normalized: DataFrame, gatedCount: DataFrame,
-      gatedForDedup: DataFrame, exactKept: DataFrame,
-      neardupKept: DataFrame, corpus: DataFrame,
-      pairs: DataFrame): DataFrame = {
+  /** The funnel: one unioned aggregate query — every count is an
+    * integer aggregate, map-side combinable, one small row per stage —
+    * over the named stage frames, then `5_clean` and one
+    * `6_split_<split>` row per split over the LANDED frame (≡ clean:
+    * the split column is 1:1, so the decontamination subtree is never
+    * evaluated a second time), then the opt-in audit rows. The
+    * blocklist row exists only when configured and the audit rows only
+    * on opt-in, so the default funnel stays byte-identical (x62/x68 pin
+    * it). LAZY: the caller checkpoints it once. */
+  private def funnel(
+      cfg: PrepConfig, counted: Seq[(String, DataFrame)],
+      split: DataFrame, pairs: DataFrame): DataFrame = {
     def stage(name: String, d: DataFrame): DataFrame =
       d.agg(count(lit(1)).as("n_docs"))
         .select(lit(name).as("stage"), col("n_docs"))
-    val head = stage("1_raw", normalized)
-      .unionByName(stage("2_gate_passed", gatedCount))
-    val base = (if (cfg.blocklist.isEmpty) head
-     else head.unionByName(stage("2b_blocklist_passed", gatedForDedup)))
-      .unionByName(stage("3_exact_unique", exactKept))
-      .unionByName(stage("4_neardup_kept", neardupKept))
-      // 5_clean counts the written-back corpus (≡ clean: the split
-      // join is inner 1:1 and writeAndSwap observed every row) —
-      // counting `clean` here re-evaluated the whole decontamination
-      // subtree a second time per run
-      .unionByName(stage("5_clean", corpus))
-      .unionByName(corpus.groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
+    val base = (counted :+ ("5_clean" -> split))
+      .map { case (name, d) => stage(name, d) }.reduce(_ unionByName _)
+      .unionByName(split.groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
         .select(concat(lit("6_split_"), col("split")).as("stage"), col("n_docs")))
-    (if (!cfg.auditRows) base
-     else base.unionByName(auditFunnelRows(pairs, corpus)))
-      .localCheckpoint(true)
+    if (!cfg.auditRows) base
+    else base.unionByName(auditFunnelRows(pairs, split))
   }
 
   /** The two opt-in audit rows (cfg.auditRows — see the knob's
-    * scaladoc): both read the WRITTEN corpus, so they audit what
-    * downstream actually consumes, not an intermediate. The leakage
-    * join touches only the (small) pair set — pairs whose endpoints
-    * were rewritten away vanish at the inner join; the PII row is one
-    * codegen'd predicate sum riding a corpus scan. */
+    * scaladoc): both read the LANDED split frame — the written corpus
+    * of a [[run]], the batch survivors of an [[increment]] — so they
+    * audit what downstream actually consumes, not an intermediate. The
+    * leakage join touches only the (small) pair set — pairs whose
+    * endpoints were rewritten away vanish at the inner join; the PII row
+    * is one codegen'd predicate sum riding a scan. */
   private def auditFunnelRows(pairs: DataFrame, corpus: DataFrame): DataFrame = {
     val leaky = Dedup
       .splitLeakage(pairs, corpus.select(col("doc_id"), col("split")))
@@ -323,10 +279,65 @@ object CorpusPrepJob {
     leaky.unionByName(pii)
   }
 
+  private def report(funnel: DataFrame, artifacts: Seq[String]): PrepReport =
+    PrepReport(funnel, funnel.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
+      quarantined = 0L, artifacts = artifacts)
+
+  /** The tail of [[run]]: the MinHash index build, the derived
+    * exports ([[writeExports]], unless the caller defers them with
+    * `cfg.exports`) and the funnel write — independent jobs over
+    * disjoint tables, all downstream of the corpus write — submitted
+    * from a 3-thread [[graft.util.FanOut]] so each job's tasks back-fill
+    * the ramp/tail idle of the others (guide §2.6; r15). The funnel
+    * frame passed in is LAZY — it is checkpointed once, inside its task,
+    * before the write, so the table write and the caller's counts
+    * collect read one evaluation. On a failure the surviving siblings'
+    * jobs are cancelled and their threads joined before the rethrow
+    * (ADVICE r15): no background write may race the caller's
+    * finally-unpersist or mutate tables after the run reported failure.
+    * Returns the written funnel and the export tables. */
+  private def writeTailArtifacts(
+      cfg: PrepConfig, writer: StagingWriter, corpus: DataFrame,
+      funnelLazy: DataFrame): (DataFrame, Seq[String]) = {
+    // each task yields (funnel frame, export tables) — at most one of
+    // the two non-empty
+    val done = graft.util.FanOut.all[(Option[DataFrame], Seq[String])](
+      corpus.sparkSession.sparkContext, threads = 3)(Seq(
+      () => {
+        Dedup.MinhashIndex.build(corpus, writer, IndexTable)
+        (None, Nil)
+      },
+      () => (None, if (cfg.exports) writeExports(cfg, writer, corpus) else Nil),
+      () => {
+        val f = funnelLazy.localCheckpoint(true)
+        writer.write(f, FunnelTable, append = false)
+        (Some(f), Nil)
+      }))
+    (done.flatMap(_._1).head, done.flatMap(_._2))
+  }
+
+  /** The derived exports over a corpus table — the packed train
+    * sequences, the curriculum export and the optional mixture — each
+    * through the crash-safe [[graft.sinks.StagingWriter.writeAndSwap]]
+    * (a plain Overwrite deletes the live table before writing a byte).
+    * Returns the tables written. */
+  private def writeExports(
+      cfg: PrepConfig, writer: StagingWriter, corpus: DataFrame): Seq[String] = {
+    val train = corpus.filter(col("split") === "train")
+    writer.writeAndSwap(
+      Assemble.packBudget(train, cfg.packTokens, cfg.packShards), PackedTable)
+    Assemble.curriculumExport(corpus, writer, CurriculumTable, cfg.curriculumShards)
+    val mix = cfg.mixBudget.toSeq.map { budget =>
+      writer.writeAndSwap(Assemble.temperatureMix(train, budget), MixTable)
+      MixTable
+    }
+    Seq(PackedTable, CurriculumTable) ++ mix
+  }
+
   /** The refresh leg of the lifecycle — [[run]] is the corpus analog
     * of [[Platform.initialDataLoad]]; this is its `refreshData`: clean
     * a NEW batch against the STANDING artifacts and grow them, never
-    * re-touching history. Stages mirror [[run]] with the two
+    * re-touching history. It runs [[run]]'s stage chain with the two
     * incremental twists a production tick needs:
     *
     *   - exact dedup is within-batch AND against the standing corpus
@@ -343,10 +354,10 @@ object CorpusPrepJob {
     * streaming — sees this one as history. The curriculum/pack exports
     * are compaction-cadence jobs, deliberately NOT re-run per tick
     * (re-sorting the full corpus per batch would be quadratic over a
-    * day of ticks); re-run [[run]]-style exports when compaction runs.
-    * The returned funnel describes THIS batch only and is not written
-    * over the initial run's funnel table — publishing cadence belongs
-    * to the caller.
+    * day of ticks); [[refreshArtifacts]] re-derives them. The returned
+    * funnel describes THIS batch only and is not written over the
+    * initial run's funnel table — publishing cadence belongs to the
+    * caller.
     *
     * Delivery semantics: EXACTLY-ONCE per batch when a `batchId` is
     * supplied — the tick then runs the flat-table replay protocol:
@@ -383,94 +394,29 @@ object CorpusPrepJob {
     batchId.foreach { id =>
       batchSliceTables.foreach(t => writer.deleteBatchSlice(t, id))
     }
-    val normalized = TextStats.normalized(newDocs)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // one gopher evaluation per tick — the [[run]] gateIds rationale
-    // (r16 A/B re-confirmed: the lazy form re-runs the regex pass in
-    // two consumers and measures ~0.6 s SLOWER per tick)
-    val gateIds = TextStats.gopherRules(normalized)
-      .filter(col("passes")).select("doc_id").localCheckpoint(true)
-    val exactKept = {
-      val gated0 = normalized.join(gateIds, "doc_id")
-      // the same optional blocklist gate as [[run]] — a batch must
-      // clear the same bar as the initial build or the corpus drifts
-      val gated =
-        if (cfg.blocklist.isEmpty) gated0
-        else gated0.join(
-          TextStats.blocklistFilter(gated0, cfg.blocklist)
-            .filter(col("flagged")).select("doc_id"),
-          Seq("doc_id"), "left_anti")
-      val byHash = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-      val batchUniq = gated.withColumn("__rn", row_number().over(byHash))
-        .filter(col("__rn") === 1).drop("__rn")
+    stages(newDocs, evalDocs, cfg)(
       // standing-corpus digests ride the scan projection — narrow
-      batchUniq.join(
+      standing = batchUniq => batchUniq.join(
         writer.read(CorpusTable).select(md5(col("text")).as("__corpus_hash")).distinct(),
-        md5(batchUniq("text")) === col("__corpus_hash"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    try {
-      val gatedCount = gateIds
-
-      // within-batch near-dup rewrite, then the history probe —
-      // star-contraction components here too (the [[run]] rationale:
-      // diameter-safe in O(log n) rounds, label-identical)
-      val pairs = Dedup.minhashNeardupMaterialized(exactKept, cfg.neardupThreshold)
-      val components = Dedup.dupComponentsStar(pairs)
-      val keepers = Dedup.canonicalPick(exactKept, components)
-      val dropIds = components
-        .join(keepers.select(col("component"), col("keeper_id")), "component")
-        .filter(col("doc_id") =!= col("keeper_id"))
-        .select("doc_id")
-      val batchKept = exactKept.join(dropIds, Seq("doc_id"), "left_anti")
-      val dupOfHistory = Dedup
-        .neardupAgainstIndex(batchKept, writer, IndexTable, cfg.neardupThreshold)
-        .select(col("b_id").as("doc_id")).distinct()
+        md5(batchUniq("text")) === col("__corpus_hash"), "left_anti"),
       // eager: the component rewrite + stored-index probe chain is the
       // tick's most expensive subtree and BOTH the split chain and the
       // funnel read it — without the checkpoint each consumer re-ran
-      // the probe (a second full evaluation per tick). Batch-bounded,
-      // so the materialization is cheap at any corpus scale.
-      val neardupKept = batchKept.join(dupOfHistory, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
-
-      val contaminatedIds = Dedup
-        .decontaminate(neardupKept, evalDocs, cfg.decontamNgram)
-        .filter(col("contaminated")).select("doc_id")
-      val clean = neardupKept.join(contaminatedIds, Seq("doc_id"), "left_anti")
-
-      val withSplit = Assemble.splitAssigned(
-        clean, cfg.trainPermille, cfg.valPermille, cfg.splitSalt)
-        // eager before the appends: the writes must see ONE evaluation
-        // of the batch chain, and the corpus append must not re-read
-        // the corpus it is appending to via the anti-join lineage
-        .localCheckpoint(true)
-
-      // the funnel is ALSO materialized before the artifacts grow —
-      // a lazy count evaluated after the append would re-run the
+      // the probe. Batch-bounded, so the materialization is cheap at
+      // any corpus scale.
+      history = batchKept => batchKept.join(
+        Dedup.neardupAgainstIndex(batchKept, writer, IndexTable, cfg.neardupThreshold)
+          .select(col("b_id").as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti").localCheckpoint(true),
+      // eager before the appends: the writes must see ONE evaluation
+      // of the batch chain, and the corpus append must not re-read the
+      // corpus it is appending to via the anti-join lineage
+      land = _.localCheckpoint(true)) { (withSplit, funnelLazy) =>
+      // the funnel is ALSO materialized before the artifacts grow — a
+      // lazy count evaluated after the append would re-run the
       // standing-corpus anti-join against a corpus that now contains
       // this batch's own survivors and report them as duplicates
-      def stage(name: String, d: DataFrame): DataFrame =
-        d.agg(count(lit(1)).as("n_docs"))
-          .select(lit(name).as("stage"), col("n_docs"))
-      // every funnel leg reads a persisted or checkpointed frame:
-      // 5_clean counts withSplit (≡ clean — hashSplit emits exactly
-      // one row per input doc and the join is inner 1:1), so the
-      // decontamination subtree is never evaluated twice
-      val funnelBase = stage("1_raw", normalized)
-        .unionByName(stage("2_gate_passed", gatedCount))
-        .unionByName(stage("3_exact_unique", exactKept))
-        .unionByName(stage("4_neardup_kept", neardupKept))
-        .unionByName(stage("5_clean", withSplit))
-        .unionByName(withSplit.groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
-          .select(concat(lit("6_split_"), col("split")).as("stage"), col("n_docs")))
-      // the same opt-in audit rows as [[run]], over THIS batch's
-      // survivors (the withSplit checkpoint — no standing-table read,
-      // so the rows stay batch-scoped like every other funnel leg)
-      val funnel = (if (!cfg.auditRows) funnelBase
-        else funnelBase.unionByName(auditFunnelRows(pairs, withSplit)))
-        .localCheckpoint(true)
-
+      val funnel = funnelLazy.localCheckpoint(true)
       batchId match {
         case Some(id) =>
           writer.appendBatchSlice(withSplit, CorpusTable, id)
@@ -480,12 +426,7 @@ object CorpusPrepJob {
           writer.write(withSplit, CorpusTable, append = true)
           Dedup.MinhashIndex.append(withSplit, writer, IndexTable)
       }
-      val counts = funnel.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      PrepReport(funnel, counts, quarantined = 0L,
-        artifacts = Seq(CorpusTable, IndexTable))
-    } finally {
-      normalized.unpersist(blocking = false)
-      exactKept.unpersist(blocking = false)
+      report(funnel, Seq(CorpusTable, IndexTable))
     }
   }
 
@@ -503,21 +444,18 @@ object CorpusPrepJob {
   /** The compaction-cadence job [[increment]]'s contract defers to:
     * re-derive every derived artifact from the (appended-to) corpus
     * table — a fresh MinHash index built in one pass (collapsing the
-    * per-tick append files), the packed train sequences, the
-    * curriculum export, the optional mixture. Run this when the tick
-    * count makes the index's file listing expensive or the exports
-    * stale; the corpus table itself is never rewritten (it is the
-    * source of truth the derivations read).
+    * per-tick append files) and the derived exports ([[writeExports]]).
+    * Run this when the tick count makes the index's file listing
+    * expensive or the exports stale; the corpus table itself is never
+    * rewritten (it is the source of truth the derivations read).
     *
     * CRASH-SAFE throughout: the index rebuild stages all three
     * artifacts under `__rebuild*` names and swaps them in through the
     * sink's backup protocol (`Dedup.MinhashIndex.rebuild` — a refresh
     * that dies mid-rebuild leaves the PREVIOUS index probe-consistent,
     * which matters because the INCREMENTAL ingest loops keep probing
-    * it between refreshes), and the derived exports go through the
-    * same [[graft.sinks.StagingWriter.writeAndSwap]] as the corpus
-    * write (a plain Overwrite deletes the live table before writing a
-    * byte). */
+    * it between refreshes), and every export is swapped in the same
+    * way. */
   def refreshArtifacts(
       writer: StagingWriter,
       cfg: PrepConfig = PrepConfig()): Unit = {
@@ -535,17 +473,10 @@ object CorpusPrepJob {
     }
     val corpus = writer.read(CorpusTable)
     Dedup.MinhashIndex.rebuild(corpus, writer, IndexTable)
-    writer.writeAndSwap(
-      Assemble.packBudget(corpus.filter(col("split") === "train"),
-        cfg.packTokens, cfg.packShards),
-      PackedTable)
-    Assemble.curriculumExport(corpus, writer, CurriculumTable, cfg.curriculumShards)
-    cfg.mixBudget.foreach { budget =>
-      writer.writeAndSwap(
-        Assemble.temperatureMix(corpus.filter(col("split") === "train"), budget),
-        MixTable)
-    }
+    writeExports(cfg, writer, corpus)
+    ()
   }
+
 
   /** JSONL landing entry point: quarantine-splitting ingest
     * ([[JsonlIngest]]), then [[run]] over the parsed side. The

@@ -346,14 +346,28 @@ class CorpusPrepJobSpec extends SparkSpec {
     val plain = CorpusPrepJob.run(docs, evalDocs, new StagingWriter(spark, whPlain))
     // wrap every doc in markup the landing stage must strip; the
     // extraction round-trips, so every downstream count must match
-    val wrapped = docs.withColumn("text",
+    def wrapped(d: org.apache.spark.sql.DataFrame) = d.withColumn("text",
       concat(lit("<html><p>"),
         regexp_replace(col("text"), " value ", " <b>value</b> "),
         lit("</p></html>")))
-    val html = CorpusPrepJob.run(wrapped, evalDocs, new StagingWriter(spark, whHtml),
+    val html = CorpusPrepJob.run(wrapped(docs), evalDocs, new StagingWriter(spark, whHtml),
       CorpusPrepJob.PrepConfig(htmlInput = true))
     assert(html.stageCounts == plain.stageCounts,
       s"landing extraction changed the funnel: ${html.stageCounts} vs ${plain.stageCounts}")
+
+    // the increment leg lands markup the same way: a wrapped batch
+    // ticks to the same funnel as its plain copy against the same
+    // standing corpus
+    val batch = incrementBatch
+    val plainTick = CorpusPrepJob.increment(batch, evalDocs,
+      new StagingWriter(spark, whPlain))
+    val htmlTick = CorpusPrepJob.increment(wrapped(batch), evalDocs,
+      new StagingWriter(spark, whHtml), CorpusPrepJob.PrepConfig(htmlInput = true))
+    assert(plainTick.stageCounts("3_exact_unique") < plainTick.stageCounts("1_raw") &&
+      plainTick.stageCounts("5_clean") > 0, s"vacuous batch: ${plainTick.stageCounts}")
+    assert(htmlTick.stageCounts == plainTick.stageCounts,
+      s"landing extraction changed the tick funnel: ${htmlTick.stageCounts} vs " +
+        s"${plainTick.stageCounts}")
   }
 
   test("blocklist: listed-term docs drop between gate and dedup; empty list is identity") {
@@ -378,6 +392,22 @@ class CorpusPrepJobSpec extends SparkSpec {
       "a blocklisted doc reached the corpus")
     // the same corpus WITHOUT the term is untouched by the gate
     assert(off.stageCounts("1_raw") == on.stageCounts("1_raw"))
+
+    // the increment leg clears the same bar and reports it
+    val onWriter = new StagingWriter(spark, whOn)
+    val tick = CorpusPrepJob.increment(incrementBatch, evalDocs, onWriter,
+      CorpusPrepJob.PrepConfig(blocklist = Seq("customer")))
+    val tickPassed = tick.stageCounts("2b_blocklist_passed")
+    assert(tickPassed < tick.stageCounts("2_gate_passed"),
+      s"tick blocklist dropped nothing: ${tick.stageCounts}")
+    assert(tick.stageCounts("3_exact_unique") <= tickPassed,
+      s"tick dedup saw blocked docs: ${tick.stageCounts}")
+    val grown = onWriter.read(CorpusPrepJob.CorpusTable)
+    val landed = grown.filter(col("doc_id") >= 7000000L).count()
+    assert(landed == tick.stageCounts("5_clean") && landed > 0,
+      s"vacuous tick: ${tick.stageCounts}")
+    assert(grown.filter(col("text").contains("customer")).count() == 0,
+      "a blocklisted batch doc reached the corpus")
   }
 
   test("exports=false: run defers pack/curriculum to refreshArtifacts; funnel identical") {
@@ -458,6 +488,23 @@ class CorpusPrepJobSpec extends SparkSpec {
     val mixed = writer.read(CorpusPrepJob.MixTable)
     assert(mixed.count() <= 10L)
     assert(mixed.count() > 0L)
+  }
+
+  /** An increment batch against a corpus prepped from the full fixture:
+    * exact copies of every 10th doc (dropped at the standing-corpus
+    * anti-join), suffixed near copies of the docs ≡ 5 mod 10 (dropped
+    * at the index probe) and token-reversed docs ≡ 3 mod 10 (new text
+    * that shares no 3-gram shingle order with the corpus). */
+  private def incrementBatch = {
+    val d = docs.select("doc_id", "text", "lang", "source")
+    d.filter(col("doc_id") % 10 === 0)
+      .withColumn("doc_id", col("doc_id") + 7000000L)
+      .unionByName(d.filter(col("doc_id") % 10 === 5)
+        .withColumn("doc_id", col("doc_id") + 8000000L)
+        .withColumn("text", concat(col("text"), lit(" zz incr suffix"))))
+      .unionByName(d.filter(col("doc_id") % 10 === 3)
+        .withColumn("doc_id", col("doc_id") + 9000000L)
+        .withColumn("text", array_join(reverse(split(col("text"), " ")), " ")))
   }
 
   private def jsonStr(s: String): String =

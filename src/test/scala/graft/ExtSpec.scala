@@ -478,7 +478,7 @@ class ExtSpec extends SparkSpec {
     val nearDup = (1 to 40).map(i => if (i == 20) "CHANGED" else s"w$i").mkString(" ")
     val other = (100 to 140).map(i => s"z$i").mkString(" ")
     val d = docsDf(1L -> base, 2L -> nearDup, 3L -> other)
-    val pairs = Dedup.minhashNeardup(d, threshold = 0.7).collect()
+    val pairs = Dedup.minhashNeardupMaterialized(d, threshold = 0.7).collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
     assert(pairs.head.getAs[Double]("jaccard") > 0.8)
   }
@@ -486,7 +486,7 @@ class ExtSpec extends SparkSpec {
   test("ngramJaccardJoin equals a driver-side brute force on the fixture") {
     graft.functions.GraftFunctions.register(spark)
     val d = spark.read.parquet(s"$sf/documents.parquet")
-    val got = Dedup.ngramJaccardJoin(d, 7, 10)
+    val got = Dedup.ngramJaccardJoinMaterialized(d, 7, 10)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     // independent oracle: shingle STRING sets + plain Scala set algebra
     // on the driver (also catches a 64-bit shingle-hash collision)
@@ -553,7 +553,7 @@ class ExtSpec extends SparkSpec {
       2L -> "t1 t2 t3 t4 t5 t6",
       3L -> "t1 t2 t3 t4",
       4L -> "u1 u2 u3 u4 u5")
-    val r = Dedup.ngramJaccardJoin(d, 4, 5).collect()
+    val r = Dedup.ngramJaccardJoinMaterialized(d, 4, 5).collect()
     assert(r.map(x => (x.getLong(0), x.getLong(1))).toSet == Set((1L, 2L)))
     assert(r.head.getAs[Double]("jaccard") == 0.8)
     // length filter alone must already drop (1,3): 2*5 < 5*4
@@ -882,7 +882,7 @@ class ExtSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // ground truth: the one-shot near-dup over everything, restricted to
     // cross pairs, re-oriented to (corpus side, batch side)
-    val want = Dedup.minhashNeardup(all, threshold = 0.8).collect()
+    val want = Dedup.minhashNeardupMaterialized(all, threshold = 0.8).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .collect {
         case (a, b, j) if a % 10 != 0 && b % 10 == 0 => (a, b, j)
@@ -943,7 +943,7 @@ class ExtSpec extends SparkSpec {
       // default path (these graphs sit under StarLocalMaxEdges, so
       // this exercises the driver-side union-find fast path)...
       val viaStar = labelMap(Dedup.dupComponentsStar(pairs))
-      val viaProp = labelMap(Dedup.dupComponents(pairs))
+      val viaProp = labelMap(MinLabelComponents(pairs))
       assert(viaStar == viaProp, s"$name: star labeling drifted")
       // ...and the DISTRIBUTED star path (threshold 0) must emit the
       // IDENTICAL labels — the fast path is an optimization, never a
@@ -1031,7 +1031,7 @@ class ExtSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     val comp =
       try {
-        val m = Dedup.dupComponents(pairs)
+        val m = MinLabelComponents(pairs)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         // the listener bus is async — poll until the count is stable
         var last = -1
@@ -1289,7 +1289,7 @@ class ExtSpec extends SparkSpec {
     spark.sharedState.cacheManager.clearCache()
     val pairs = Dedup.minhashNeardupMaterialized(d, threshold = 0.7)
     // the shingle persist must not outlive the call (round-2 finding:
-    // lazy minhashNeardup leaks its MEMORY_AND_DISK frame into the
+    // the since-deleted lazy form leaked its MEMORY_AND_DISK frame into the
     // session's cache budget); localCheckpoint is RDD-level, so an empty
     // cacheManager proves the plan-level cache was released
     assert(spark.sharedState.cacheManager.isEmpty, "shingle cache lingered")
@@ -7607,7 +7607,7 @@ class ExtSpec extends SparkSpec {
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got.keySet == Set(5L, 6L, 7L, 8L, 9L), s"got $got")
     // total bucketed pairs == the exact join at the same floor
-    val exact = graft.ext.Dedup.ngramJaccardJoin(docs, 1, 2).count()
+    val exact = graft.ext.Dedup.ngramJaccardJoinMaterialized(docs, 1, 2).count()
     assert(got.values.map(_._2).sum == exact, s"got $got vs exact $exact")
     // theoretical S-curve: recompute the staged floors in BigInt
     def theo(mid: Long): Long = {
