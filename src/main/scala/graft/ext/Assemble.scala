@@ -544,9 +544,7 @@ object Assemble {
     val rows = events
       .filter(col(tsCol).isNotNull && col(key).isNotNull)
       .select(col(key),
-        expr(Stats.epochFloorDiv(
-          s"unix_micros(CAST($tsCol AS TIMESTAMP))", 86400000000L))
-          .as("day"))
+        Stats.day(s"unix_micros(CAST($tsCol AS TIMESTAMP))").as("day"))
     // max over ONE tiny aggregate; crossJoin(broadcast) keeps the big
     // side un-shuffled
     val newest = rows.agg(max(col("day")).as("max_day"))

@@ -77,10 +77,7 @@ object Sessions {
     require(windowDays > 0, s"windowDays $windowDays must be positive")
     val daily = events
       .filter(col("ts").isNotNull) // NULL-day ordering differs per engine
-      .select(col("user_id"),
-        // integer DIV, not `/` (Spark's `/` is double division); the
-        // epoch is positive here so truncation == floor on both engines
-        expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").as("day"))
+      .select(col("user_id"), Stats.day(Stats.EpochUs).as("day"))
       .groupBy(col("user_id"), col("day"))
       .agg(count(lit(1)).as("n_events"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
@@ -147,8 +144,7 @@ object Sessions {
   def activeUsers(events: DataFrame, windowDays: Int = 7): DataFrame = {
     require(windowDays > 0, s"windowDays $windowDays must be positive")
     val act = events.filter(col("ts").isNotNull)
-      .select(col("user_id"),
-        expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").as("day"))
+      .select(col("user_id"), Stats.day(Stats.EpochUs).as("day"))
       .distinct()
     val dau = act.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val wau = act
@@ -809,8 +805,6 @@ object Sessions {
     * events in one task. */
   def transitionDwell(
       events: DataFrame, ps: Seq[Int] = Seq(50, 90)): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
-      s"percentiles $ps must be in [1, 100]")
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("us"), col("event_id"))
     val gaps = events
@@ -825,18 +819,7 @@ object Sessions {
         expr("(us - prev_us) DIV 1000000").as("dwell_s"))
     val hist = gaps.groupBy(col("from_type"), col("to_type"), col("dwell_s"))
       .agg(count(lit(1)).as("cnt"))
-    val cum = hist.withColumn("cum", sum(col("cnt")).over(
-      Window.partitionBy(col("from_type"), col("to_type"))
-        .orderBy(col("dwell_s"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val targets = hist.groupBy(col("from_type"), col("to_type"))
-      .agg(sum(col("cnt")).as("n"))
-      .select(col("from_type"), col("to_type"), col("n"),
-        explode(typedLit(ps)).as("p"))
-      .withColumn("target_rn", expr("(p * n + 99) DIV 100"))
-    cum.join(broadcast(targets), Seq("from_type", "to_type"))
-      .filter(col("cum") >= col("target_rn") &&
-        col("cum") - col("cnt") < col("target_rn"))
+    Stats.percentileDisc(hist, Seq("from_type", "to_type"), "dwell_s", "cnt", ps)
       .select(col("from_type"), col("to_type"), col("p"),
         col("n").as("n_transitions"), col("dwell_s").as("dwell_s_at_p"))
   }
@@ -865,8 +848,6 @@ object Sessions {
       stages: Seq[String] = Seq("view", "click", "purchase"),
       ps: Seq[Int] = Seq(50, 90)): DataFrame = {
     require(stages.size >= 2, s"need at least two stages, got $stages")
-    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
-      s"percentiles $ps must be in [1, 100]")
     val firsts = events.filter(col("ts").isNotNull)
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts").cast("timestamp")).as("us"))
@@ -884,15 +865,7 @@ object Sessions {
     }.reduce(_ unionByName _)
     val hist = lags.groupBy(col("stage"), col("lag_s"))
       .agg(count(lit(1)).as("cnt"))
-    val wCum = Window.partitionBy(col("stage")).orderBy(col("lag_s"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = hist.withColumn("cum", sum(col("cnt")).over(wCum))
-    val targets = hist.groupBy(col("stage")).agg(sum(col("cnt")).as("n"))
-      .select(col("stage"), col("n"), explode(typedLit(ps.toList)).as("p"))
-      .withColumn("target_rn", expr("(p * n + 99) DIV 100"))
-    cum.join(broadcast(targets), Seq("stage"))
-      .filter(col("cum") >= col("target_rn") &&
-        col("cum") - col("cnt") < col("target_rn"))
+    Stats.percentileDisc(hist, Seq("stage"), "lag_s", "cnt", ps)
       .select(col("stage"), col("p"), col("n").as("n_users"),
         col("lag_s").as("lag_s_at_p"))
   }
@@ -914,8 +887,7 @@ object Sessions {
     * the matrix. */
   def cohortRetention(events: DataFrame): DataFrame = {
     val withDay = events.filter(col("ts").isNotNull)
-      .select(col("user_id"),
-        expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").as("day"))
+      .select(col("user_id"), Stats.day(Stats.EpochUs).as("day"))
     val active = withDay.distinct()
     val firstTouch = active.groupBy(col("user_id"))
       .agg(min(col("day")).as("cohort_day"))
@@ -1053,7 +1025,7 @@ object Sessions {
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"))
       .withColumn("gap", col("us") - lag(col("us"), 1).over(byUser))
-      .withColumn("day", expr("us DIV 86400000000"))
+      .withColumn("day", Stats.day("us"))
     val gaps = base.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         min(col("gap")).as("min_gap_us"))
@@ -1081,21 +1053,17 @@ object Sessions {
     * retention says who came back; this says what today's actives
     * are MADE OF, the first chart a growth review asks for.
     *
-    * Day boundaries floor-divide the epoch (the X160 convention —
-    * Spark DIV truncates toward zero, DuckDB `//` floors; pre-1970
-    * events would diverge under plain DIV). Scale shape: the corpus
-    * collapses map-side to distinct (user, day); the lag window
-    * shuffles once on user_id and the closing per-day aggregate is
-    * map-side-combinable, bounded by the day domain. */
+    * Day boundaries floor-divide the epoch ([[Stats.day]]; a plain
+    * DIV truncates, so pre-1970 events would land a day late). Scale
+    * shape: the corpus collapses map-side to distinct (user, day); the
+    * lag window shuffles once on user_id and the closing per-day
+    * aggregate is map-side-combinable, bounded by the day domain. */
   def growthAccounting(
       events: DataFrame, resurrectDays: Int = 14): DataFrame = {
     require(resurrectDays >= 1, s"resurrectDays $resurrectDays must be >= 1")
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("day"))
     events.filter(col("ts").isNotNull)
-      .select(col("user_id"),
-        expr("(unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 - " +
-          "(CASE WHEN unix_micros(CAST(ts AS TIMESTAMP)) % 86400000000 < 0 " +
-          "THEN 1 ELSE 0 END))").as("day"))
+      .select(col("user_id"), Stats.day(Stats.EpochUs).as("day"))
       .distinct()
       .withColumn("prev_day", lag(col("day"), 1).over(byUser))
       .groupBy(col("day"))
@@ -1272,9 +1240,7 @@ object Sessions {
       .filter(col("ts").isNotNull &&
         col("event_type").isin(startType, eventType))
       .select(col("user_id"), col("event_type"),
-        expr("(unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 - " +
-          "(CASE WHEN unix_micros(CAST(ts AS TIMESTAMP)) % 86400000000 < 0 " +
-          "THEN 1 ELSE 0 END))").as("day"))
+        Stats.day(Stats.EpochUs).as("day"))
     val starts = e.filter(col("event_type") === startType)
       .groupBy(col("user_id")).agg(min(col("day")).as("t0"))
     val horizon = e.agg(max(col("day")).as("h"))
@@ -1389,7 +1355,7 @@ object Sessions {
       .agg(count(lit(1)).as("n_events_w"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("n_purchases_w"),
-        countDistinct(expr(Stats.epochFloorDiv("us", 86400000000L)))
+        countDistinct(Stats.day("us"))
           .as("days_active_w"))
     val seen = ev
       .filter(col("us") >= col("split_us") && col("us") < col("split_us") + wUs)

@@ -118,20 +118,58 @@ object Stats {
         max(col("k")).as("max_k"))
   }
 
+  /** Nearest rank ⌈p·n/100⌉ of percentile `p` among `n` ordered
+    * items, in integer arithmetic — both arguments are SQL snippets. */
+  private[graft] def nearestRank(p: String, n: String): Column =
+    expr(s"($p * $n + 99) DIV 100")
+
+  /** Exact PERCENTILE_DISC by histogram carve — the one selection
+    * every quantile operator here shares. `hist` holds one row per
+    * (`keys`…, `value`) bin with its `weight` (a row count, or any
+    * non-negative mass); the value at p is the smallest bin whose
+    * cumulative weight reaches [[nearestRank]] of the group's total,
+    * i.e. the bin whose interval (cum − weight, cum] holds the target.
+    * A zero-weight bin has an empty interval and is never selected.
+    * No keys = one global group; a group with a NULL key drops out
+    * (the targets join on the keys by equality). `extra` are further
+    * per-group aggregates over `hist`, carried next to `n`.
+    *
+    * Output: (keys…, value, n, extra…, p), one row per group × p; an
+    * empty histogram yields no rows. Scale shape: the cumulative
+    * window runs over the histogram's bins, and the per-group targets
+    * (groups × |ps| rows) broadcast onto it. */
+  private[graft] def percentileDisc(
+      hist: DataFrame, keys: Seq[String], value: String, weight: String,
+      ps: Seq[Int], extra: Column*): DataFrame = {
+    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
+      s"percentiles $ps must be in [1, 100]")
+    val cum = hist.withColumn("cum", sum(col(weight)).over(
+      Window.partitionBy(keys.map(col): _*).orderBy(col(value))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val totals = hist.groupBy(keys.map(col): _*)
+      .agg(sum(col(weight)).as("n"), extra: _*)
+    val targets = totals
+      .withColumn("p", explode(typedLit(ps)))
+      .withColumn("target_rn", nearestRank("p", "n"))
+    val out = (keys :+ value) ++ totals.columns.drop(keys.size) :+ "p"
+    cum.join(broadcast(targets), keys)
+      .filter(col("cum") >= col("target_rn") &&
+        col("cum") - col(weight) < col("target_rn"))
+      .select(out.map(col): _*)
+  }
+
   /** Per-language exact character-length percentiles (PERCENTILE_DISC
     * semantics) via histogram selection: for each lang and each p in
     * `ps`, the smallest `n_chars` whose cumulative frequency reaches
     * rank ⌈p·n/100⌉. Output: (lang, p, n_docs, n_chars_at_p), one row
     * per lang × p. */
   def lengthQuantiles(docs: DataFrame, ps: Seq[Int] = Seq(50, 90, 99)): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
-      s"percentiles $ps must be in [1, 100]")
     // corpus → histogram: the ONLY stage that touches every row, and
     // it is a map-side-combinable count on (lang, n_chars). NULL text
     // is excluded up front — PERCENTILE_DISC ignores NULLs, and the
     // engines order a NULL bin differently (Spark first, DuckDB last),
     // which would shift every cumulative count. NULL lang is excluded
-    // EXPLICITLY too: the non-null-safe join below would otherwise
+    // EXPLICITLY too: the carve's key equi-join would otherwise
     // drop that group silently after counting it — an unlabeled group
     // is out of scope for a per-language report, but by contract, not
     // by join accident.
@@ -140,17 +178,7 @@ object Stats {
       .select(col("lang"), length(col("text")).as("n_chars"))
       .groupBy(col("lang"), col("n_chars"))
       .agg(count(lit(1)).as("cnt"))
-    val wCum = Window.partitionBy(col("lang")).orderBy(col("n_chars"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = hist.withColumn("cum", sum(col("cnt")).over(wCum))
-    val targets = hist.groupBy(col("lang")).agg(sum(col("cnt")).as("n"))
-      .select(col("lang"), col("n"), explode(typedLit(ps)).as("p"))
-      .withColumn("target_rn", expr("(p * n + 99) DIV 100"))
-    // smallest bin whose cumulative count reaches the target rank =
-    // the bin where the target falls inside (cum - cnt, cum]
-    cum.join(broadcast(targets), Seq("lang"))
-      .filter(col("cum") >= col("target_rn") &&
-        col("cum") - col("cnt") < col("target_rn"))
+    percentileDisc(hist, Seq("lang"), "n_chars", "cnt", ps)
       .select(col("lang"), col("p"), col("n").as("n_docs"),
         col("n_chars").as("n_chars_at_p"))
   }
@@ -170,27 +198,13 @@ object Stats {
     * types × days × percentiles. */
   def dailyValueQuantiles(
       events: DataFrame, ps: Seq[Int] = Seq(50, 90)): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
-      s"percentiles $ps must be in [1, 100]")
     val hist = events
       .filter(col("ts").isNotNull && col("value").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"),
+      .select(col("event_type"), day(EpochUs).as("day"),
         expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
       .groupBy(col("event_type"), col("day"), col("cents"))
       .agg(count(lit(1)).as("cnt"))
-    val wCum = Window.partitionBy(col("event_type"), col("day"))
-      .orderBy(col("cents"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = hist.withColumn("cum", sum(col("cnt")).over(wCum))
-    val targets = hist.groupBy(col("event_type"), col("day"))
-      .agg(sum(col("cnt")).as("n"))
-      .select(col("event_type"), col("day"), col("n"),
-        explode(typedLit(ps)).as("p"))
-      .withColumn("target_rn", expr("(p * n + 99) DIV 100"))
-    cum.join(broadcast(targets), Seq("event_type", "day"))
-      .filter(col("cum") >= col("target_rn") &&
-        col("cum") - col("cnt") < col("target_rn"))
+    percentileDisc(hist, Seq("event_type", "day"), "cents", "cnt", ps)
       .select(col("event_type"), col("day"), col("p"),
         col("n").as("n_events"), col("cents").as("cents_at_p"))
   }
@@ -296,6 +310,46 @@ object Stats {
       .select(col("doc_id"), col("lang"), col("n_chars"), col("z"))
   }
 
+  /** Epoch-bucket FLOOR division as a SQL snippet. Spark's `DIV`
+    * truncates toward zero, so a pre-1970 (negative-epoch) timestamp
+    * would land one bucket too high; this spelling floors. DuckDB's
+    * `//` truncates as well (DuckDB 1.0.0:
+    * `epoch_us(TIMESTAMP '1969-12-31 12:00:00') // 86400000000` is
+    * 0, not −1), so the oracles' `//` buckets agree with this one only
+    * because the fixture epochs are non-negative. `us` must be a cheap
+    * attribute/expr snippet (it is re-evaluated twice). Non-negative
+    * bucket POSITIONS (hour-of-day, day-of-week) additionally go
+    * through `pmod` at the call site — `%` follows the dividend's
+    * sign. Day buckets go through [[day]]; this stays for the week,
+    * N-day and hour divisors. */
+  private[graft] def epochFloorDiv(us: String, d: Long): String =
+    s"(($us) DIV $d - (CASE WHEN ($us) % $d < 0 THEN 1 ELSE 0 END))"
+
+  /** The event timestamp in epoch microseconds, as a SQL snippet. */
+  private[graft] val EpochUs = "unix_micros(CAST(ts AS TIMESTAMP))"
+
+  /** The epoch day of an epoch-microsecond SQL snippet — THE day
+    * bucket, floored ([[epochFloorDiv]]): 1969-12-31T12:00 is day −1. */
+  private[graft] def day(us: String): Column =
+    expr(epochFloorDiv(us, 86400000000L))
+
+  /** Events per (event_type, day) over the rows with a timestamp:
+    * (event_type, day, n). Callers rename `n`; a caller narrowing the
+    * event types filters the result on `event_type`, and the predicate
+    * pushes below the count into the scan. */
+  private[graft] def dailyCounts(events: DataFrame): DataFrame =
+    events.filter(col("ts").isNotNull)
+      .select(col("event_type"), day(EpochUs).as("day"))
+      .groupBy(col("event_type"), col("day"))
+      .agg(count(lit(1)).as("n"))
+
+  /** The dense day grid spanning the global [min, max] of `days`'s
+    * `day` column: (day, d0), one row per calendar day, d0 the first.
+    * Absence is data — a zero-event day is a row here, not a gap. */
+  private[graft] def dayGrid(days: DataFrame): DataFrame =
+    days.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
+      .select(explode(sequence(col("d0"), col("d1"))).as("day"), col("d0"))
+
   /** Event-rate anomaly flags: per (event_type, day) counts, flagged
     * when the day sits more than `sigmas` population standard
     * deviations from that type's across-days mean — the feed-health
@@ -312,26 +366,10 @@ object Stats {
     * first (ONE shuffle, bounded by the calendar × type product, not
     * the event count); the per-type moments are a second aggregate
     * over that tiny frame, broadcast back. */
-  /** Epoch-bucket floor division as a SQL snippet: Spark's `DIV`
-    * truncates toward zero while DuckDB's `//` floors, so pre-1970
-    * (negative-epoch) timestamps would land in a bucket one too high
-    * on the Spark side — the sign hazard kendallTau decomposes around
-    * explicitly (ADVICE r8 #2). `us` must be a cheap attribute/expr
-    * snippet (it is re-evaluated three times). Non-negative bucket
-    * POSITIONS (hour-of-day, day-of-week) additionally go through
-    * `pmod` at the call site — `%` follows the dividend's sign. */
-  private[graft] def epochFloorDiv(us: String, d: Long): String =
-    s"(($us) DIV $d - (CASE WHEN ($us) % $d < 0 THEN 1 ELSE 0 END))"
-  private val EpochUs = "unix_micros(CAST(ts AS TIMESTAMP))"
-
   def dailyAnomaly(events: DataFrame, sigmas: Int = 3): DataFrame = {
     require(sigmas > 0, s"sigmas $sigmas must be positive")
     def dec(c: Column): Column = c.cast("decimal(38,0)")
-    val daily = events.filter(col("ts").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
+    val daily = dailyCounts(events).withColumnRenamed("n", "c")
     val moments = daily.groupBy(col("event_type").as("m_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("c")).as("s1"),
@@ -638,17 +676,12 @@ object Stats {
     * zero pairs), because "no trend observable yet" is a monitoring
     * datum, not an absence. */
   def mannKendall(events: DataFrame): DataFrame = {
-    val daily = events
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
+    val daily = dailyCounts(events).filter(col("event_type").isNotNull)
+      .withColumnRenamed("n", "c")
     val span = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val grid = span.select(explode(sequence(col("d0"), col("d1"))).as("day"))
     val types = daily.select(col("event_type")).distinct()
     val dense = types
-      .crossJoin(grid)
+      .crossJoin(dayGrid(daily))
       .join(daily, Seq("event_type", "day"), "left")
       .select(col("event_type"), col("day"),
         coalesce(col("c"), lit(0L)).as("c"))
@@ -828,11 +861,7 @@ object Stats {
     // the daily frame feeds the span aggregate AND the anti-join —
     // persist the calendar-bounded frame or both re-pay the corpus
     // count (the sourceOverlap lesson)
-    val daily = events.filter(col("ts").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("n"))
+    val daily = dailyCounts(events)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val span = daily.groupBy(col("event_type"))
@@ -982,7 +1011,7 @@ object Stats {
   def dowProfile(events: DataFrame): DataFrame = {
     val daily = events.filter(col("ts").isNotNull)
       .select(col("event_type"),
-        expr(s"pmod(${epochFloorDiv(EpochUs, 86400000000L)} + 3, 7) + 1")
+        (pmod(day(EpochUs) + 3, lit(7)) + 1)
           .as("dow"))
       .groupBy(col("event_type"), col("dow"))
       .agg(count(lit(1)).as("n_events"))
@@ -1092,32 +1121,19 @@ object Stats {
     * Scale shape: one map-side customer fold, one LTV-value histogram
     * (cardinality bounded by distinct LTV values — the X42 caveat: a
     * near-unique money column bounds the prefix task by customer
-    * cardinality, the audited-report trade), selection legs per
-    * requested percentile over the tiny crossed frame. The oracle
-    * cross-proves via the naive global row_number ranking. */
+    * cardinality, the audited-report trade), then the one
+    * [[percentileDisc]] carve for every requested percentile. Empty
+    * input yields no rows, as the oracle's naive global row_number
+    * ranking (the cross-proof) does. */
   def ltvQuantiles(orders: DataFrame, ps: Seq[Int] = Seq(50, 90, 99)): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
-      s"percentiles $ps must be in [1, 100]")
     val ltv = orders.filter(col("o_custkey").isNotNull)
       .select(col("o_custkey"),
         expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)").as("cents"))
       .groupBy(col("o_custkey")).agg(sum(col("cents")).as("ltv"))
-    // the totals aggregate and every percentile leg scan the
-    // histogram, but the shared exchange subtree is identical across
-    // legs — ReuseExchange runs the orders fold once (probed: 1
-    // FileScan, 5 ReusedExchange); no persist needed
     val hist = ltv.groupBy(col("ltv")).agg(count(lit(1)).as("cnt"))
-      .withColumn("cum", sum(col("cnt")).over(
-        Window.orderBy(col("ltv"))
-          .rowsBetween(Window.unboundedPreceding, 0)))
-    val tot = hist.agg(sum(col("cnt")).as("n_customers"))
-    val h = hist.crossJoin(broadcast(tot))
-    ps.map { p =>
-      h.filter(expr(s"cum >= ($p * n_customers + 99) DIV 100"))
-        .agg(max(col("n_customers")).as("n_customers"),
-          min(col("ltv")).as("ltv_cents_at_p"))
-        .select(lit(p).as("p"), col("n_customers"), col("ltv_cents_at_p"))
-    }.reduce(_.unionByName(_))
+    percentileDisc(hist, Nil, "ltv", "cnt", ps)
+      .select(col("p"), col("n").as("n_customers"),
+        col("ltv").as("ltv_cents_at_p"))
   }
 
   /** Market-basket co-occurrence (basket affinity): for every part
@@ -1303,13 +1319,11 @@ object Stats {
       budgetPpm: Long = 20000L, windowDays: Int = 7): DataFrame = {
     require(windowDays >= 1, s"windowDays $windowDays must be positive")
     val daily = events.filter(col("ts").isNotNull)
-      .select(expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"),
+      .select(day(EpochUs).as("day"),
         when(col("event_type") === errorType, 1L).otherwise(0L).as("e"))
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n"), sum(col("e")).as("errs"))
-    val grid = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val dense = grid.join(daily, Seq("day"), "left")
+    val dense = dayGrid(daily).join(daily, Seq("day"), "left")
       .select(col("day"), coalesce(col("n"), lit(0L)).as("n"),
         coalesce(col("errs"), lit(0L)).as("errs"))
     val w = Window.orderBy(col("day"))
@@ -1353,15 +1367,8 @@ object Stats {
         explode(typedLit((0 until reps).toList)).as("rep"))
       .filter(expr("shiftright(h, rep) & 1") === 0)
       .groupBy(col("rep"), col("v")).agg(count(lit(1)).as("cnt"))
-    val cum = hist.withColumn("cum", sum(col("cnt")).over(
-      Window.partitionBy(col("rep")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val targets = hist.groupBy(col("rep")).agg(sum(col("cnt")).as("n_rows"))
-      .withColumn("target_rn", expr("(50 * n_rows + 99) DIV 100"))
-    cum.join(broadcast(targets), Seq("rep"))
-      .filter(col("cum") >= col("target_rn") &&
-        col("cum") - col("cnt") < col("target_rn"))
-      .select(col("rep").cast("long").as("rep"), col("n_rows"),
+    percentileDisc(hist, Seq("rep"), "v", "cnt", Seq(50))
+      .select(col("rep").cast("long").as("rep"), col("n").as("n_rows"),
         col("v").as("p50"))
   }
 
@@ -1422,9 +1429,7 @@ object Stats {
     val base = orders
       .filter(col("o_orderdate").isNotNull && col("o_orderpriority").isNotNull)
       .select(col("o_orderpriority").as("segment"),
-        expr(epochFloorDiv(
-          "unix_micros(CAST(o_orderdate AS TIMESTAMP))",
-          86400000000L)).as("day"),
+        day("unix_micros(CAST(o_orderdate AS TIMESTAMP))").as("day"),
         expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"))
     val split = base.agg(expr("min(day) + (max(day) - min(day)) DIV 2")
       .as("split"))
@@ -1475,17 +1480,8 @@ object Stats {
         armColumn("user_id", experiment,
           Seq("control" -> 500, "treatment" -> 500)).as("arm"))
     val hist = purchases.groupBy(col("cents")).agg(count(lit(1)).as("cnt"))
-      .withColumn("cum", sum(col("cnt")).over(
-        Window.orderBy(col("cents"))
-          .rowsBetween(Window.unboundedPreceding, 0)))
-    val tot = hist.agg(sum(col("cnt")).as("n"))
-    val h = hist.crossJoin(broadcast(tot))
-    def bound(p: Int, name: String) =
-      h.filter(expr(s"cum >= ($p * n + 99) DIV 100"))
-        .agg(min(col("cents")).as(name))
     val clamped = purchases
-      .crossJoin(broadcast(bound(loP, "lo")))
-      .crossJoin(broadcast(bound(hiP, "hi")))
+      .crossJoin(broadcast(clampBounds(hist, "cents", loP, hiP)))
       .select(col("arm"), col("lo"), col("hi"),
         least(greatest(col("cents"), col("lo")), col("hi")).as("w"))
     clamped
@@ -1537,7 +1533,7 @@ object Stats {
       .filter(col("event_type") === "purchase" && col("ts").isNotNull &&
         col("user_id").isNotNull && col("value").isNotNull)
       .select(col("user_id"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"),
+        day(EpochUs).as("day"),
         expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
     val split = base.agg(expr("min(day) + (max(day) - min(day)) DIV 2")
       .as("split"))
@@ -1589,7 +1585,7 @@ object Stats {
     val base = events
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(col("user_id"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
+        day(EpochUs).as("day"))
     val firstDay = base
       .groupBy(col("user_id")).agg(min(col("day")).as("day"))
       .select(col("day"),
@@ -1598,9 +1594,7 @@ object Stats {
       .groupBy(col("day"), col("arm")).agg(count(lit(1)).as("c"))
     // the grid spans the OBSERVED event range, not just entry days —
     // "the day the ratio broke" must extend through quiet days too
-    val grid = base.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val daily = grid
+    val daily = dayGrid(base)
       .join(firstDay.filter(col("arm") === "control")
         .select(col("day"), col("c").as("nc")), Seq("day"), "left")
       .join(firstDay.filter(col("arm") === "treatment")
@@ -1713,11 +1707,7 @@ object Stats {
     * cardinality; the lag window and the moment fold run over that
     * calendar-bounded frame. */
   def dailyAutocorr(events: DataFrame): DataFrame = {
-    val daily = events.filter(col("ts").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(events).withColumnRenamed("n", "x")
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
     daily.withColumn("y", lead(col("x"), 1).over(w))
       .filter(col("y").isNotNull)
@@ -1801,6 +1791,15 @@ object Stats {
           .as("pct_ppm"))
   }
 
+  /** The global P`loP`/P`hiP` values of a (`value`, cnt) histogram
+    * as ONE row (lo, hi) — both NULL on an empty histogram — for a
+    * clamp to cross-join: one [[percentileDisc]] carve, pivoted. */
+  private def clampBounds(
+      hist: DataFrame, value: String, loP: Int, hiP: Int): DataFrame =
+    percentileDisc(hist, Nil, value, "cnt", Seq(loP, hiP))
+      .agg(min(when(col("p") === loP, col(value))).as("lo"),
+        min(when(col("p") === hiP, col(value))).as("hi"))
+
   /** Winsorization: clamp a signal at its exact P`loP`/P`hiP` bounds
     * (rank-selection semantics, the X42 construction) — the robust-
     * statistics transform that tames outliers WITHOUT dropping rows
@@ -1818,17 +1817,8 @@ object Stats {
       s"bounds [$loP, $hiP] must satisfy 1 <= lo < hi <= 100")
     val nn = df.filter(col(value).isNotNull)
     val hist = nn.groupBy(col(value)).agg(count(lit(1)).as("cnt"))
-      .withColumn("cum", sum(col("cnt")).over(
-        Window.orderBy(col(value))
-          .rowsBetween(Window.unboundedPreceding, 0)))
-    val tot = hist.agg(sum(col("cnt")).as("n"))
-    val h = hist.crossJoin(broadcast(tot))
-    def bound(p: Int, name: String) =
-      h.filter(expr(s"cum >= ($p * n + 99) DIV 100"))
-        .agg(min(col(value)).as(name))
     nn.select(col(id), col(value))
-      .crossJoin(broadcast(bound(loP, "lo")))
-      .crossJoin(broadcast(bound(hiP, "hi")))
+      .crossJoin(broadcast(clampBounds(hist, value, loP, hiP)))
       .select(col(id), col(value),
         least(greatest(col(value), col("lo")), col("hi"))
           .as(s"${value}_winsorized"))
@@ -1842,8 +1832,6 @@ object Stats {
     * [[lengthQuantiles]] construction keyed on priority. */
   def shipLagQuantiles(orders: DataFrame, lineitem: DataFrame,
       ps: Seq[Int] = Seq(50, 90)): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
-      s"percentiles $ps must be in [1, 100]")
     val lag = lineitem
       .select(col("l_orderkey").as("o_orderkey"),
         expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))").as("ship_us"))
@@ -1853,22 +1841,11 @@ object Stats {
       .select(col("o_orderpriority"),
         // floor, not truncate: a negative lag (data-entry error, ship
         // before order) must land in the same day bucket as DuckDB's //
-        expr(epochFloorDiv("ship_us - order_us", 86400000000L))
+        day("ship_us - order_us")
           .as("lag_days"))
     val hist = lag.groupBy(col("o_orderpriority"), col("lag_days"))
       .agg(count(lit(1)).as("cnt"))
-    val wCum = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("lag_days"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = hist.withColumn("cum", sum(col("cnt")).over(wCum))
-    val targets = hist.groupBy(col("o_orderpriority"))
-      .agg(sum(col("cnt")).as("n"))
-      .select(col("o_orderpriority"), col("n"),
-        explode(typedLit(ps)).as("p"))
-      .withColumn("target_rn", expr("(p * n + 99) DIV 100"))
-    cum.join(broadcast(targets), Seq("o_orderpriority"))
-      .filter(col("cum") >= col("target_rn") &&
-        col("cum") - col("cnt") < col("target_rn"))
+    percentileDisc(hist, Seq("o_orderpriority"), "lag_days", "cnt", ps)
       .select(col("o_orderpriority"), col("p"), col("n").as("n_items"),
         col("lag_days").as("lag_days_at_p"))
   }
@@ -1890,30 +1867,18 @@ object Stats {
   def repeatPurchaseGaps(
       orders: DataFrame, customer: DataFrame,
       ps: Seq[Int] = Seq(50, 90)): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
-      s"percentiles $ps must be in [1, 100]")
     val byCust = Window.partitionBy(col("o_custkey")).orderBy(col("day"))
     val gaps = orders
       .filter(col("o_orderdate").isNotNull && col("o_custkey").isNotNull)
       .select(col("o_custkey"),
-        expr(epochFloorDiv("unix_micros(CAST(o_orderdate AS TIMESTAMP))",
-          86400000000L)).as("day"))
+        day("unix_micros(CAST(o_orderdate AS TIMESTAMP))").as("day"))
       .withColumn("gap_days", col("day") - lag(col("day"), 1).over(byCust))
       .filter(col("gap_days").isNotNull)
       .join(broadcast(customer.select(col("c_custkey").as("o_custkey"),
         col("c_mktsegment"))), Seq("o_custkey"))
     val hist = gaps.groupBy(col("c_mktsegment"), col("gap_days"))
       .agg(count(lit(1)).as("cnt"))
-    val cum = hist.withColumn("cum", sum(col("cnt")).over(
-      Window.partitionBy(col("c_mktsegment")).orderBy(col("gap_days"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val targets = hist.groupBy(col("c_mktsegment"))
-      .agg(sum(col("cnt")).as("n"))
-      .select(col("c_mktsegment"), col("n"), explode(typedLit(ps)).as("p"))
-      .withColumn("target_rn", expr("(p * n + 99) DIV 100"))
-    cum.join(broadcast(targets), Seq("c_mktsegment"))
-      .filter(col("cum") >= col("target_rn") &&
-        col("cum") - col("cnt") < col("target_rn"))
+    percentileDisc(hist, Seq("c_mktsegment"), "gap_days", "cnt", ps)
       .select(col("c_mktsegment"), col("p"), col("n").as("n_gaps"),
         col("gap_days").as("gap_days_at_p"))
   }
@@ -2102,16 +2067,7 @@ object Stats {
     require(fenceHalf >= 0, s"fence half-steps $fenceHalf must be >= 0")
     val hist = df.filter(col(value).isNotNull && col(group).isNotNull)
       .groupBy(col(group), col(value)).agg(count(lit(1)).as("cnt"))
-    val cum = hist.withColumn("cum", sum(col("cnt")).over(
-      Window.partitionBy(col(group)).orderBy(col(value))
-        .rowsBetween(Window.unboundedPreceding, 0)))
-    val targets = hist.groupBy(col(group))
-      .agg(sum(col("cnt")).as("n"))
-      .select(col(group), col("n"), explode(typedLit(Seq(25, 75))).as("p"))
-      .withColumn("target_rn", expr("(p * n + 99) DIV 100"))
-    val fences = cum.join(broadcast(targets), Seq(group))
-      .filter(col("cum") >= col("target_rn") &&
-        col("cum") - col("cnt") < col("target_rn"))
+    val fences = percentileDisc(hist, Seq(group), value, "cnt", Seq(25, 75))
       .groupBy(col(group), col("n"))
       .agg(min(when(col("p") === 25, col(value))).as("q1"),
         min(when(col("p") === 75, col(value))).as("q3"))
@@ -2140,8 +2096,8 @@ object Stats {
           .rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("n", sum(col("cnt")).over(Window.partitionBy(col(group))))
     hist
-      .withColumn("lo_rank", expr(s"($pLo * n + 99) DIV 100"))
-      .withColumn("hi_rank", expr(s"n - ($pHi * n + 99) DIV 100"))
+      .withColumn("lo_rank", nearestRank(pLo.toString, "n"))
+      .withColumn("hi_rank", col("n") - nearestRank(pHi.toString, "n"))
       .withColumn("kept", greatest(lit(0L),
         least(col("cum"), col("hi_rank")) -
           greatest(col("cum") - col("cnt"), col("lo_rank"))))
@@ -2417,15 +2373,15 @@ object Stats {
     * full-outer day merge and the two cumulative windows run over the
     * day domain. */
   def backlogCurve(orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    def day(c: String): Column =
-      expr(epochFloorDiv(s"unix_micros(CAST($c AS TIMESTAMP))", 86400000000L))
+    def dateDay(c: String): Column =
+      day(s"unix_micros(CAST($c AS TIMESTAMP))")
     val ordered = lineitem.select(col("l_orderkey"))
       .join(orders.filter(col("o_orderdate").isNotNull)
         .select(col("o_orderkey").as("l_orderkey"),
-          day("o_orderdate").as("day")), Seq("l_orderkey"))
+          dateDay("o_orderdate").as("day")), Seq("l_orderkey"))
       .groupBy(col("day")).agg(count(lit(1)).as("n_ordered"))
     val shipped = lineitem.filter(col("l_shipdate").isNotNull)
-      .select(day("l_shipdate").as("day"))
+      .select(dateDay("l_shipdate").as("day"))
       .groupBy(col("day")).agg(count(lit(1)).as("n_shipped"))
     val w = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -2527,12 +2483,7 @@ object Stats {
   def changepointCusum(events: DataFrame): DataFrame = {
     val byType = Window.partitionBy(col("event_type"))
     val ordered = byType.orderBy(col("day"))
-    val daily = events.filter(col("ts").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
-    val cusum = daily
+    val cusum = dailyCounts(events).withColumnRenamed("n", "c")
       .withColumn("n", sum(lit(1L)).over(byType))
       .withColumn("t", sum(col("c")).over(byType))
       .withColumn("s", sum(col("n") * col("c") - col("t")).over(
@@ -2602,8 +2553,7 @@ object Stats {
     require(bands >= 1, s"band count $bands must be positive")
     val o = orders.filter(col("o_orderdate").isNotNull).select(
       col("o_custkey"),
-      expr(epochFloorDiv("unix_micros(CAST(o_orderdate AS TIMESTAMP))",
-        86400000000L)).as("day"),
+      day("unix_micros(CAST(o_orderdate AS TIMESTAMP))").as("day"),
       expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)").as("cents"))
     val maxDay = o.agg(max(col("day")).as("max_day"))
     // deliberately LAZY: a persist here was tried and REVERTED — the
@@ -2858,26 +2808,19 @@ object Stats {
     * frame. */
   def robustDailyAnomaly(events: DataFrame, k: Int = 5): DataFrame = {
     require(k > 0, s"k $k must be positive")
-    def medianOf(df: DataFrame, value: String, out: String): DataFrame = {
-      val byType = Window.partitionBy(col("event_type"))
-      df.groupBy(col("event_type"), col(value)).agg(count(lit(1)).as("h"))
-        .withColumn("cum", sum(col("h")).over(
-          byType.orderBy(col(value))
-            .rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("n", sum(col("h")).over(byType))
-        .filter(col("cum") >= expr("(n + 1) DIV 2"))
+    // one row per type; the min keeps `out` nullable, the schema the
+    // report has always had
+    def medianOf(df: DataFrame, value: String, out: String): DataFrame =
+      percentileDisc(
+        df.groupBy(col("event_type"), col(value)).agg(count(lit(1)).as("h")),
+        Seq("event_type"), value, "h", Seq(50))
         .groupBy(col("event_type")).agg(min(col(value)).as(out))
-    }
     // both intermediates are types × days small AND multi-consumer
     // (daily feeds the median carve and the deviation frame; dev
     // feeds the MAD carve and the output) — pin them so the corpus
     // is scanned exactly once, and so the carve-derived join-backs
     // are against a settled frame, not a recomputed self-join
-    val daily = events.filter(col("ts").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
+    val daily = dailyCounts(events).withColumnRenamed("n", "c")
       .localCheckpoint(true)
     val dev = daily
       .join(broadcast(medianOf(daily, "c", "med")), Seq("event_type"))
@@ -2911,11 +2854,7 @@ object Stats {
       events: DataFrame, shortLag: Int = 1, longLag: Int = 7): DataFrame = {
     require(shortLag >= 1 && longLag > shortLag,
       s"lags ($shortLag, $longLag) must be positive and ordered")
-    val daily = events.filter(col("ts").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("cnt"))
+    val daily = dailyCounts(events).withColumnRenamed("n", "cnt")
     val grid = daily.groupBy(col("event_type"))
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(col("event_type"),
@@ -3062,8 +3001,6 @@ object Stats {
     * suffices; exact here, where the audit IS the product). */
   def watermarkLateness(
       events: DataFrame, ps: Seq[Int] = Seq(50, 90, 99)): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
-      s"percentiles $ps must be in [1, 100]")
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("arrival"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -3076,22 +3013,12 @@ object Stats {
           lit(0L)))
     val hist = late.groupBy(col("event_type"), col("late_us"))
       .agg(count(lit(1)).as("cnt"))
-    val cum = hist.withColumn("cum", sum(col("cnt")).over(
-      Window.partitionBy(col("event_type")).orderBy(col("late_us"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val targets = hist.groupBy(col("event_type"))
-      .agg(sum(col("cnt")).as("n_events"),
-        coalesce(sum(when(col("late_us") > 0, col("cnt"))), lit(0L))
-          .as("n_late"),
-        max(col("late_us")).as("max_late_us"))
-      .select(col("event_type"), col("n_events"), col("n_late"),
-        col("max_late_us"), explode(typedLit(ps.toList)).as("p"))
-      .withColumn("target_rn", expr("(p * n_events + 99) DIV 100"))
-    cum.join(broadcast(targets), Seq("event_type"))
-      .filter(col("cum") >= col("target_rn") &&
-        col("cum") - col("cnt") < col("target_rn"))
-      .select(col("event_type"), col("p"), col("n_events"), col("n_late"),
-        col("max_late_us"), col("late_us").as("late_us_at_p"))
+    percentileDisc(hist, Seq("event_type"), "late_us", "cnt", ps,
+      coalesce(sum(when(col("late_us") > 0, col("cnt"))), lit(0L))
+        .as("n_late"),
+      max(col("late_us")).as("max_late_us"))
+      .select(col("event_type"), col("p"), col("n").as("n_events"),
+        col("n_late"), col("max_late_us"), col("late_us").as("late_us_at_p"))
   }
 
   /** Incremental rollup maintenance — the partial-aggregate MERGE
@@ -3129,7 +3056,7 @@ object Stats {
     val split = rows.agg(
       expr("min(us) + (max(us) - min(us)) DIV 2").as("split_us"))
     val keyed = rows.crossJoin(broadcast(split))
-      .withColumn("day", expr(epochFloorDiv("us", 86400000000L)))
+      .withColumn("day", day("us"))
     def partial(df: DataFrame): DataFrame =
       df.groupBy(col("day"), col("event_type")).agg(
         count(lit(1)).as("n"),
@@ -3281,26 +3208,15 @@ object Stats {
     * per-source mass — beyond any single source. */
   def weightedQuantiles(
       docs: DataFrame, ps: Seq[Int] = Seq(50, 90)): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
-      s"percentiles $ps must be in [1, 100]")
     val hist = docs
       .filter(col("text").isNotNull && col("source").isNotNull)
       .select(col("source"), length(col("text")).cast("long").as("v"))
       .groupBy(col("source"), col("v"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("w", col("cnt") * col("v"))
-    val wCum = Window.partitionBy(col("source")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = hist.withColumn("cum_w", sum(col("w")).over(wCum))
-    val targets = hist.groupBy(col("source"))
-      .agg(sum(col("w")).as("char_mass"), sum(col("cnt")).as("n_docs"))
-      .select(col("source"), col("char_mass"), col("n_docs"),
-        explode(typedLit(ps.toList)).as("p"))
-      .withColumn("target_w", expr("(p * char_mass + 99) DIV 100"))
-    cum.join(broadcast(targets), Seq("source"))
-      .filter(col("cum_w") >= col("target_w") &&
-        col("cum_w") - col("w") < col("target_w"))
-      .select(col("source"), col("p"), col("n_docs"), col("char_mass"),
+    percentileDisc(hist, Seq("source"), "v", "w", ps,
+      sum(col("cnt")).as("n_docs"))
+      .select(col("source"), col("p"), col("n_docs"), col("n").as("char_mass"),
         col("v").as("chars_at_p"))
   }
 
@@ -3375,7 +3291,7 @@ object Stats {
     val days = events
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(col("user_id"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
+        day(EpochUs).as("day"))
       .distinct()
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
     days.withColumn("grp", col("day") - row_number().over(w))
@@ -3478,16 +3394,8 @@ object Stats {
     * Scale shape: one (type, day) map-side count, a dimension-sized
     * grid join, one per-type moment aggregate — type-count output. */
   def dailyTrend(events: DataFrame): DataFrame = {
-    val daily = events.filter(col("ts").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
-    val span = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val grid = span
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"),
-        col("d0"))
-    val series = grid
+    val daily = dailyCounts(events).withColumnRenamed("n", "c")
+    val series = dayGrid(daily)
       .crossJoin(daily.select(col("event_type")).distinct())
       .join(daily, Seq("event_type", "day"), "left")
       .select(col("event_type"), (col("day") - col("d0")).as("x"),
@@ -3577,15 +3485,8 @@ object Stats {
     * distinct slope values, not pair count), and the carve picks the
     * first key whose cumulative count reaches the median rank. */
   def theilSenTrend(events: DataFrame): DataFrame = {
-    val daily = events.filter(col("ts").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
-    val span = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val grid = span
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"), col("d0"))
-    val series = grid
+    val daily = dailyCounts(events).withColumnRenamed("n", "c")
+    val series = dayGrid(daily)
       .crossJoin(daily.select(col("event_type")).distinct())
       .join(daily, Seq("event_type", "day"), "left")
       .select(col("event_type"), (col("day") - col("d0")).as("x"),
@@ -3637,14 +3538,8 @@ object Stats {
     * window inside type partitions over the days-bounded grid; one
     * type-sized aggregate. */
   def dailyDrawdown(events: DataFrame): DataFrame = {
-    val daily = events.filter(col("ts").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
-    val span = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val grid = span.select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val series = grid
+    val daily = dailyCounts(events).withColumnRenamed("n", "c")
+    val series = dayGrid(daily)
       .crossJoin(daily.select(col("event_type")).distinct())
       .join(daily, Seq("event_type", "day"), "left")
       .select(col("event_type"), col("day"),
@@ -3679,14 +3574,8 @@ object Stats {
   def seasonalityStrength(events: DataFrame): DataFrame = {
     def floorDivDec(a: String, b: String): String =
       s"CAST((($a) - pmod($a, $b)) / ($b) AS DECIMAL(38,0))"
-    val daily = events.filter(col("ts").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
-    val span = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val grid = span.select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val series = grid
+    val daily = dailyCounts(events).withColumnRenamed("n", "c")
+    val series = dayGrid(daily)
       .crossJoin(daily.select(col("event_type")).distinct())
       .join(daily, Seq("event_type", "day"), "left")
       .select(col("event_type"),
@@ -3947,7 +3836,7 @@ object Stats {
     val firstDay = events
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(col("user_id"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
+        day(EpochUs).as("day"))
       .groupBy(col("user_id")).agg(min(col("day")).as("day"))
     firstDay.groupBy(col("day")).agg(count(lit(1)).as("new_users"))
       .withColumn("cum_users",
@@ -4061,16 +3950,10 @@ object Stats {
       maxLag: Int = 3): DataFrame = {
     require(maxLag >= 1, s"maxLag $maxLag must be positive")
     require(typeX != typeY, "lead-lag needs two distinct event types")
-    val daily = events
-      .filter(col("ts").isNotNull &&
-        col("event_type").isin(typeX, typeY))
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
-    val grid = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    def series(t: String, out: String): DataFrame = grid
+    val daily = dailyCounts(events)
+      .filter(col("event_type").isin(typeX, typeY))
+      .withColumnRenamed("n", "c")
+    def series(t: String, out: String): DataFrame = dayGrid(daily)
       .join(daily.filter(col("event_type") === t)
         .select(col("day"), col("c")), Seq("day"), "left")
       .select(col("day"), coalesce(col("c"), lit(0L)).as(out))
@@ -4258,14 +4141,12 @@ object Stats {
       .filter(col("ts").isNotNull && col("event_type").isNotNull &&
         col("value").isNotNull)
       .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"),
+        day(EpochUs).as("day"),
         expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
       .groupBy(col("event_type"), col("day"))
       .agg(sum(col("cents")).as("day_cents"))
-    val grid = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
     val dense = daily.select(col("event_type")).distinct()
-      .crossJoin(grid)
+      .crossJoin(dayGrid(daily))
       .join(daily, Seq("event_type", "day"), "left")
     val filled = dense.withColumn("last_day",
       max(when(col("day_cents").isNotNull, col("day")))
@@ -4308,16 +4189,10 @@ object Stats {
   def ewmaTrend(events: DataFrame, maxLookback: Int = 20): DataFrame = {
     require(maxLookback >= 0 && maxLookback <= 40,
       s"maxLookback $maxLookback out of [0, 40]")
-    val daily = events
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .select(col("event_type"),
-        expr(epochFloorDiv(EpochUs, 86400000000L)).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
-    val grid = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
+    val daily = dailyCounts(events).filter(col("event_type").isNotNull)
+      .withColumnRenamed("n", "c")
     val dense = daily.select(col("event_type")).distinct()
-      .crossJoin(grid)
+      .crossJoin(dayGrid(daily))
       .join(daily, Seq("event_type", "day"), "left")
       .select(col("event_type"), col("day"),
         coalesce(col("c"), lit(0L)).as("c"))

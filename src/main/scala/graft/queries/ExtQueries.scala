@@ -1225,11 +1225,9 @@ object ExtQueries {
     // while the untouched types sit at the k-group sampling noise
     // floor E[eta2] ~ (k-1)/(n_days-1) ~ 0.21e6 (30-day fixture).
     "x257_seasonality" -> ((s, d) => {
-      val dayExpr = Stats.epochFloorDiv(
-        "unix_micros(CAST(ts AS TIMESTAMP))", 86400000000L)
       val damaged = events(s, d).select("event_id", "event_type", "ts")
         .filter(!(col("event_type") === "view" &&
-          expr(s"pmod(($dayExpr) + 3, 7)").isin(5, 6) &&
+          pmod(Stats.day(Stats.EpochUs) + 3, lit(7)).isin(5, 6) &&
           col("event_id") % 5 =!= 0))
       Stats.seasonalityStrength(damaged)
     }),
@@ -1706,8 +1704,7 @@ object ExtQueries {
     // gap report must recover exactly.
     "x101_ingest_gaps" -> ((s, d) => {
       val withDay = events(s, d).select(col("event_type"), col("ts"))
-        .withColumn("day",
-          expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"))
+        .withColumn("day", Stats.day(Stats.EpochUs))
       Stats.ingestGaps(withDay
         .filter(!(col("event_type") === "click" &&
           col("day").isin(19730L, 19740L)))

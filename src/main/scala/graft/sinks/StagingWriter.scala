@@ -31,6 +31,7 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
     * the write job itself. `append=false` replaces the standing table
     * (full refresh). */
   def write(df: DataFrame, table: String, append: Boolean): Long = {
+    recoverSwap(table)
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("rows"))
       .write.mode(if (append) SaveMode.Append else SaveMode.Overwrite)
@@ -73,8 +74,10 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
     * delete backup, checking every rename. A crash between the two
     * renames leaves the full table at the backup path (recoverable by
     * one rename), never a half-written or missing table. */
-  def compact(table: String, pk: Seq[String]): Long =
+  def compact(table: String, pk: Seq[String]): Long = {
+    recoverSwap(table)
     writeAndSwap(latestPerPk(read(table), pk), table)
+  }
 
   /** stg→final promotion (the reference's roadmap step,
     * readme.md:723-731): materialize the latest-extraction-per-PK view
@@ -83,8 +86,10 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
     * full append history, so promotion is repeatable after every
     * incremental batch and the final table is always one row per PK.
     * Returns the rows in the promoted table. */
-  override def promote(entity: String, pk: Seq[String]): Long =
+  override def promote(entity: String, pk: Seq[String]): Long = {
+    recoverSwap(stagingName(entity))
     writeAndSwap(latestPerPk(read(stagingName(entity)), pk), entity.toLowerCase)
+  }
 
   /** Write `df` at `table` with the crash-safe swap: write tmp, then
     * [[swapIn]] (rename live→backup → rename tmp→live → delete backup,
@@ -116,11 +121,15 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
     * rename(live→backup) and rename(tmp→live) leaves the standing
     * table at `<table>__swap_bak` and NOTHING live. Restore it with
     * the one rename the protocol prescribes; returns true when a
-    * backup was restored. The non-idempotent apply ticks
-    * ([[graft.streaming.EventsStream.scd2ApplyBatch]]/`cdcApplyBatch`)
-    * call this BEFORE their `exists()` check — without it a tick
-    * replayed into that crash window would take the seed-fresh branch
-    * and silently discard the standing history (ADVICE r12). A stale
+    * backup was restored. Every entry point that writes into a table
+    * calls this first — an append over the stranded backup would
+    * re-create the table from one batch, and the next [[swapIn]]'s
+    * `delete(bak)` would destroy the history. The non-idempotent
+    * apply ticks ([[graft.streaming.EventsStream.scd2ApplyBatch]]/
+    * `cdcApplyBatch`) also call it BEFORE their `exists()` check —
+    * without it a tick replayed into that crash window would take
+    * the seed-fresh branch and silently discard the standing history
+    * (ADVICE r12). `read` does not restore: it only reads. A stale
     * backup NEXT TO a live table (crash after the activate rename,
     * before the backup delete) is not restored — the live table is
     * newer; the next swap's leading `delete(bak)` reaps it. */
@@ -149,10 +158,12 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
   /** Append into an existing partitioned table — new files land inside
     * the matching partition directories, so planning-time partition
     * pruning keeps working across appends (the growing-index write). */
-  def appendPartitioned(df: DataFrame, table: String, partCol: String): Unit =
+  def appendPartitioned(df: DataFrame, table: String, partCol: String): Unit = {
+    recoverSwap(table)
     df.write.mode(SaveMode.Append)
       .partitionBy(partCol)
       .parquet(path(table))
+  }
 
   /** IDEMPOTENT per-batch write: the frame lands as partition
     * `ingest_batch=<batchId>` under DYNAMIC partition overwrite, so an
@@ -162,12 +173,14 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
     * partitions never notice. Readers see `ingest_batch` as an extra
     * column; a first write creates the table in partitioned layout
     * (never mix with flat writes to the same path). */
-  def writeBatchPartition(df: DataFrame, table: String, batchId: Long): Unit =
+  def writeBatchPartition(df: DataFrame, table: String, batchId: Long): Unit = {
+    recoverSwap(table)
     df.withColumn("ingest_batch", org.apache.spark.sql.functions.lit(batchId))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("ingest_batch")
       .parquet(path(table))
+  }
 
   /** Replace `table` with the already-written `tmpTable` under the
     * [[compact]] backup protocol (rename live→backup, tmp→live, drop
@@ -177,6 +190,7 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
     * atomicity ACROSS artifacts is the caller's contract to document
     * (two renames cannot be one). */
   def swapIn(tmpTable: String, table: String): Unit = {
+    recoverSwap(table)
     val tmp = new Path(path(tmpTable))
     require(fs.exists(tmp), s"swapIn: staged table $tmpTable does not exist")
     val dst = new Path(path(table))
@@ -209,6 +223,7 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
     * asserts it cheaply). */
   def compactBatchPartitions(table: String, files: Int = 1): Long = {
     require(files > 0, s"files must be positive, got $files")
+    recoverSwap(table)
     val df = read(table)
       .drop("ingest_batch")
       .repartition(files)
@@ -235,6 +250,7 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
     df.observe(obs, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(stage.toString)
     val rows = obs.get("rows").asInstanceOf[Long]
+    recoverSwap(table)
     val dst = new Path(path(table))
     if (!fs.exists(dst)) fs.mkdirs(dst)
     // defensive: a crashed earlier move of THIS batch left a partial

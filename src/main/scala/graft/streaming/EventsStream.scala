@@ -219,7 +219,7 @@ object EventsStream {
                 BotState(0L, Long.MinValue, Long.MaxValue, Long.MinValue, 0L, 0L, 0L))
               ordered.foreach { e =>
                 val us = tsUs(e.ts)
-                val day = us / dayUs
+                val day = Math.floorDiv(us, dayUs)
                 val gap = if (s.nEvents == 0L) Long.MaxValue else us - s.lastUs
                 val (cd, cc, ad) =
                   if (day == s.curDay) (day, s.curDayCount + 1L, s.activeDays)
@@ -512,8 +512,7 @@ object EventsStream {
       .select(col("event_type"),
         expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"),
         expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
-      .withColumn("day",
-        expr(graft.ext.Stats.epochFloorDiv("us", 86400000000L)))
+      .withColumn("day", graft.ext.Stats.day("us"))
       .groupBy(col("day"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         coalesce(sum(col("cents")), lit(0L)).as("cents"),
@@ -557,11 +556,14 @@ object EventsStream {
       .start()
 
   /** Stream → staging: every micro-batch lands through the SAME
-    * EntityWriter the batch refresh uses (append mode), with a
-    * checkpoint for exactly-once batch ids — the Structured Streaming
-    * replacement for the reference's hand-rolled lastRun micro-batching.
-    * On restart, Spark replays from the checkpointed offset and
-    * re-delivers only unacknowledged batches. */
+    * EntityWriter the batch refresh uses, as a plain append — the
+    * Structured Streaming replacement for the reference's hand-rolled
+    * lastRun micro-batching. Delivery is AT-LEAST-ONCE: on restart
+    * Spark replays from the checkpointed offset, and a crash between
+    * the append and the checkpoint commit re-delivers that batch, which
+    * then lands twice. Where duplicates matter, use a batch-id-keyed
+    * idempotent write instead: `StagingWriter.writeBatchPartition`
+    * (parquet) or `JdbcStagingWriter.writeBatchIdempotent` (JDBC). */
   def streamToStaging(
       events: DataFrame,
       writer: graft.sinks.EntityWriter,

@@ -7871,4 +7871,29 @@ class ExtSpec extends SparkSpec {
     assert(got(1L) == ((4L, 2L, 500000L)), s"got $got")
     assert(got(2L) == ((2L, 2L, 0L)), s"got $got")
   }
+
+  test("day buckets floor: 1969-12-31T12:00 is day -1 and 1970-01-01T12:00 " +
+    "day 0 in every daily operator, batch and streaming") {
+    import graft.streaming.EventsStream
+    // one user: a view half a day before the epoch, a purchase half a
+    // day after it; a truncating DIV would put both on day 0
+    val events = Seq(
+      EventsStream.Event(1L, new java.sql.Timestamp(-43200000L), 7L, "view", 1.0),
+      EventsStream.Event(2L, new java.sql.Timestamp(43200000L), 7L, "purchase", 2.0))
+      .toDS()
+    val ev = events.toDF()
+    def longs(df: org.apache.spark.sql.DataFrame, c: String): Seq[Long] =
+      df.select(col(c)).as[Long].collect().toSeq.sorted
+
+    assert(longs(Stats.dailyAnomaly(ev), "day") == Seq(-1L, 0L))
+    assert(longs(Sessions.rollingDaily(ev), "day") == Seq(-1L, 0L))
+    assert(longs(Sessions.activeUsers(ev), "day") == Seq(-1L, 0L))
+    assert(Sessions.cohortRetention(ev).select("cohort_day", "day_offset")
+      .as[(Long, Long)].collect().toSet == Set((-1L, 0L), (-1L, 1L)))
+    assert(longs(Sessions.botFlags(ev), "active_days") == Seq(2L))
+    assert(longs(Sessions.growthAccounting(ev), "day") == Seq(-1L, 0L))
+    assert(longs(Sessions.kaplanMeier(ev), "t_days") == Seq(1L))
+    assert(EventsStream.botState(spark, events, timeoutMs = None)
+      .collect().map(_.active_days).toSeq == Seq(2L))
+  }
 }

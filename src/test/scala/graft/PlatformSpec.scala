@@ -4,8 +4,9 @@ import graft.catalog.SchemaRegistry
 import graft.config.ConfigStore
 import graft.model._
 import graft.run.Platform
-import graft.sinks.{Ddl, JdbcStagingWriter, StagingWriter}
+import graft.sinks.{Ddl, EntityWriter, JdbcStagingWriter, StagingWriter}
 import graft.sources.ParquetSimSource
+import org.apache.spark.sql.DataFrame
 
 /** D-family (DDL/catalog), JDBC sink, durable config store, and
   * control-plane coverage — the §2.7 rows plus the reference's lifecycle
@@ -178,40 +179,66 @@ class JdbcStagingWriterSpec extends SparkSpec {
     } finally conn.close()
   }
 
-  test("JDBC swap crash recovery: an orphaned backup is restored, never dropped") {
+  /** A crash between the two swap renames leaves the live table gone
+    * and the ONLY full copy of its history at `<table>__swap_bak`;
+    * every mutating call must restore it first. */
+  private def assertSwapCrashRecovery(
+      w: EntityWriter, write: (DataFrame, Boolean) => Long,
+      read: () => DataFrame, compact: () => Long,
+      crash: String => Unit): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.functions.lit
-    val url = s"jdbc:derby:memory:crash${System.nanoTime()};create=true"
-    val w = new JdbcStagingWriter(spark, url)
     def batch(runId: String, ts: String, rows: (String, Long)*) =
       rows.toDF("ordname", "qty")
         .withColumn("extractionid", lit(runId))
         .withColumn("extractiontimestamputc", lit(java.sql.Timestamp.valueOf(ts)))
-    w.writeEntity(batch("r1", "2024-01-01 00:00:00", "a" -> 1L, "b" -> 2L),
-      meta, append = false)
-
-    // simulate a crash between the two swap renames: live gone, the
-    // ONLY full copy of the history sits at the backup name
-    def crash(table: String): Unit = {
-      val conn = java.sql.DriverManager.getConnection(url)
-      try conn.createStatement()
-        .executeUpdate(s"RENAME TABLE $table TO ${table}__swap_bak")
-      finally conn.close()
-    }
-    crash("stg_orders")
+    write(batch("r1", "2024-01-01 00:00:00", "a" -> 1L, "b" -> 2L), false)
+    crash(w.stagingName("ORDERS"))
 
     // an incremental append must restore the history first, NOT
-    // re-create an empty table over the orphaned backup
-    w.writeEntity(batch("r2", "2024-01-02 00:00:00", "c" -> 3L),
-      meta, append = true)
-    assert(w.read("ORDERS").count() == 3, "pre-crash staging history lost")
+    // re-create the table from one batch over the orphaned backup
+    write(batch("r2", "2024-01-02 00:00:00", "c" -> 3L), true)
+    assert(read().count() == 3, "pre-crash staging history lost")
 
     // compacting a crashed table restores it before reading
-    crash("stg_orders")
-    assert(w.compact(w.stagingName("ORDERS"), Seq("ordname")) == 3)
-    assert(w.read("ORDERS").collect().map(r =>
+    crash(w.stagingName("ORDERS"))
+    assert(compact() == 3)
+    assert(read().collect().map(r =>
       r.getAs[String]("ordname") -> r.getAs[Long]("qty")).toMap ==
       Map("a" -> 1L, "b" -> 2L, "c" -> 3L))
+
+    // promoting a crashed staging table restores it before reading
+    crash(w.stagingName("ORDERS"))
+    assert(w.promote("ORDERS", Seq("ordname")) == 3)
+    assert(read().count() == 3)
+  }
+
+  test("JDBC swap crash recovery: an orphaned backup is restored, never dropped") {
+    val url = s"jdbc:derby:memory:crash${System.nanoTime()};create=true"
+    val w = new JdbcStagingWriter(spark, url)
+    assertSwapCrashRecovery(w,
+      (df, append) => w.writeEntity(df, meta, append),
+      () => w.read("ORDERS"),
+      () => w.compact(w.stagingName("ORDERS"), Seq("ordname")),
+      table => {
+        val conn = java.sql.DriverManager.getConnection(url)
+        try conn.createStatement()
+          .executeUpdate(s"RENAME TABLE $table TO ${table}__swap_bak")
+        finally conn.close()
+      })
+  }
+
+  test("parquet swap crash recovery: an orphaned backup is restored, never dropped") {
+    val w = new StagingWriter(spark, tmpDir("crash_wh"))
+    assertSwapCrashRecovery(w,
+      (df, append) => w.writeEntity(df, "ORDERS", append),
+      () => w.read(w.stagingName("ORDERS")),
+      () => w.compact(w.stagingName("ORDERS"), Seq("ordname")),
+      table => {
+        val live = new org.apache.hadoop.fs.Path(w.path(table))
+        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        assert(fs.rename(live, new org.apache.hadoop.fs.Path(w.path(table) + "__swap_bak")))
+      })
   }
 }
 

@@ -1,0 +1,85 @@
+#!/usr/bin/env python3
+"""Diff two `graft.PlanDump` output directories, plan by plan.
+
+PlanDump writes one `<query>_<suffix>.txt` per query. This tool pairs the
+files of the two directories by query name (the suffix is everything after
+the last `_`), normalizes away what differs between two runs of the same
+plan, and prints a unified diff for every query whose plans still differ:
+
+  - expression ids (`#123`, `#123L`) become `#`;
+  - `plan_id=N` and `id=N` numbers are dropped;
+  - directories in file paths (`file:/.../orders.parquet`) become `<dir>/`,
+    so two checkouts reading the same fixture from different places match,
+    and the random suffix of a temp-dir name (`odata_pages1532...`) goes;
+  - RDD ids (`MapPartitionsRDD[651]`) and the source line of a checkpoint's
+    call site (`at Stats.scala:1184`) are dropped: they follow execution
+    order and line positions, not the plan.
+
+A query present in only one directory counts as a difference.
+
+Usage: python3 tools/plandiff.py <dirA> <dirB> [--quiet]
+  --quiet  print only the per-query verdict lines and the summary
+Exit status: 0 when every plan matches, 1 on any difference.
+"""
+import difflib
+import os
+import re
+import sys
+
+EXPR_ID = re.compile(r"#\d+")
+NUMBERED_ID = re.compile(r"\b(plan_id|id)=\d+")
+PATH_DIR = re.compile(r"(?:file:)?(?:/[^/\s\],\[]+)+/(?=[^/\s\],\[]+)")
+TEMP_SUFFIX = re.compile(r"(?<=<dir>/)([A-Za-z_]+)\d{8,}")
+RDD_ID = re.compile(r"RDD\[\d+\]")
+SOURCE_LINE = re.compile(r"(\.scala):\d+")
+
+
+def normalize(text):
+    out = []
+    for line in text.splitlines():
+        line = EXPR_ID.sub("#", line)
+        line = NUMBERED_ID.sub(r"\1=", line)
+        line = PATH_DIR.sub("<dir>/", line)
+        line = TEMP_SUFFIX.sub(r"\1", line)
+        line = RDD_ID.sub("RDD[]", line)
+        line = SOURCE_LINE.sub(r"\1:", line)
+        out.append(line.rstrip())
+    return out
+
+
+def plans(d):
+    found = {}
+    for name in sorted(os.listdir(d)):
+        if name.endswith(".txt") and "_" in name:
+            found[name[:-len(".txt")].rsplit("_", 1)[0]] = os.path.join(d, name)
+    return found
+
+
+def main(argv):
+    quiet = "--quiet" in argv
+    args = [a for a in argv if a != "--quiet"]
+    if len(args) != 2:
+        sys.exit(__doc__)
+    a, b = plans(args[0]), plans(args[1])
+    differ = 0
+    for key in sorted(set(a) | set(b)):
+        if key not in a or key not in b:
+            differ += 1
+            print(f"ONLY  {key}: only in {args[0] if key in a else args[1]}")
+            continue
+        with open(a[key], encoding="utf-8") as fa, open(b[key], encoding="utf-8") as fb:
+            la, lb = normalize(fa.read()), normalize(fb.read())
+        if la == lb:
+            print(f"SAME  {key}")
+            continue
+        differ += 1
+        print(f"DIFF  {key}")
+        if not quiet:
+            sys.stdout.writelines(line + "\n" for line in difflib.unified_diff(
+                la, lb, a[key], b[key], lineterm=""))
+    print(f"{len(set(a) | set(b)) - differ} same, {differ} different")
+    return 1 if differ else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
