@@ -65,6 +65,9 @@ object Assemble {
       salt: String = "split-v1"): DataFrame =
     docs.withColumn("split", splitColumn(trainPermille, valPermille, salt))
 
+  /** Every value the split column takes. */
+  val SplitNames: Seq[String] = Seq("train", "val", "test")
+
   /** The [[hashSplit]] assignment as a column — shared with
     * [[splitBalance]] so the audit can never drift from the split it
     * audits. */

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -529,20 +529,31 @@ object Dedup {
     *
     * Computed EAGERLY: the shingle+hash explode feeds four plan
     * subtrees (bands, sizes, both intersection joins), so the narrow
-    * (doc_id, h) rows are persisted and text is parsed once; the (small)
-    * verified pair set is materialized with localCheckpoint and the
+    * (doc_id, h) rows are persisted and text is parsed once; the
     * shingle-hash cache is released before returning — nothing lingers
     * in the session's cache budget, and the result can be consumed any
     * number of times without re-running the LSH pipeline (the
     * ingest-once shape a production corpus uses for its near-dup
-    * artifact). */
+    * artifact).
+    *
+    * Input-adaptive: at most [[LocalMaxShingleRows]] shingle rows are
+    * verified DRIVER-SIDE and returned as a local frame; above the
+    * bound the distributed plan runs and its pair set is materialized
+    * with localCheckpoint. Both paths emit the same rows. */
   def minhashNeardupMaterialized(
       docs: DataFrame,
       threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    minhashNeardupBounded(docs, threshold, maxBucket, LocalMaxShingleRows)
+
+  /** [[minhashNeardupMaterialized]] with the driver-side bound explicit
+    * (0 forces the distributed plan — the equality spec's switch). */
+  private[graft] def minhashNeardupBounded(
+      docs: DataFrame, threshold: Double, maxBucket: Int,
+      localMaxShingleRows: Long): DataFrame = {
     val hs = shingleHashes(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try minhashNeardupFromShingles(hs, threshold, maxBucket)
+    try minhashNeardupFromShingles(hs, threshold, maxBucket, localMaxShingleRows)
     finally hs.unpersist(blocking = false)
   }
 
@@ -555,14 +566,173 @@ object Dedup {
   private[graft] def minhashNeardupFromShingles(
       hs: DataFrame,
       threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket): DataFrame =
-    neardupFrom(hs, threshold, maxBucket).localCheckpoint(true)
+      maxBucket: Int = DefaultMaxBucket,
+      localMaxShingleRows: Long = LocalMaxShingleRows): DataFrame =
+    collectShingles(hs, localMaxShingleRows) match {
+      case Some(rows) =>
+        val docs = LocalShingles.of(rows)
+        val buckets = scala.collection.mutable.HashMap.empty[(Int, Long), List[Long]]
+        docs.foreach { case (d, s) =>
+          s.bandKeys.zipWithIndex.foreach { case (bh, j) =>
+            buckets((j, bh)) = d :: buckets.getOrElse((j, bh), Nil)
+          }
+        }
+        val cand = buckets.valuesIterator.filter(_.size <= maxBucket)
+          .flatMap(ms => for (a <- ms; b <- ms if a < b) yield (a, b))
+          .toSet
+        localPairs(hs.sparkSession, cand.iterator.flatMap { case (a, b) =>
+          docs(a).jaccard(docs(b), docs(a).size, docs(b).size).map((a, b, _))
+        }, threshold)
+      case None => neardupFrom(hs, threshold, maxBucket).localCheckpoint(true)
+    }
 
   private def neardupFrom(hs: DataFrame, threshold: Double, maxBucket: Int): DataFrame = {
     val sizes = hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     pairJaccard(hs, sizes, minhashCandidatesFrom(hs, maxBucket))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
+  }
+
+  /** Below this many (doc_id, h) shingle rows the MinHash verify
+    * ([[minhashNeardupMaterialized]]), the stored-index probe
+    * ([[neardupAgainstIndex]]) and the index's artifact frames
+    * ([[MinhashIndexFamily]]) run DRIVER-SIDE — the bounded collect
+    * class of [[StarLocalMaxEdges]] (centroids, codebooks, Bloom
+    * words): 200k rows are ≈ 3.2 MB of longs, and every read is bounded
+    * ([[collectAtMost]]: no task ships more than the bound, and the
+    * driver drops results once their total passes it), so an over-bound
+    * input never lands on the driver. A batch-sized input otherwise pays
+    * the distributed plan's fixed cost — under AQE every exchange of
+    * the banding self-join, the bucket-cap window and the verify joins
+    * is its own job, so a 265-doc increment spent 24 jobs on the
+    * within-batch verify and 19 on the index probe. The driver path
+    * computes the same 64 minhashes, 16 band keys, bucket cap,
+    * candidates and multiset intersection with the same hash chain
+    * ([[LocalShingles]]), so its pair set is bit-identical; an
+    * over-bound input, or a bound of 0 (the force-distributed switch
+    * the equality spec uses), takes the distributed plan. */
+  val LocalMaxShingleRows = 200000L
+
+  /** The bounded collect of a CALLER-persisted (doc_id, h) frame: its
+    * rows when there are at most `maxRows` and every doc id is a
+    * non-null LONG (the driver path is Long-typed), else None — the
+    * distributed plan then finds the cache built by the same job.
+    * `maxRows <= 0` returns None without touching the frame. */
+  private def collectShingles(hs: DataFrame, maxRows: Long): Option[Array[(Long, Long)]] =
+    if (maxRows <= 0 || hs.schema("doc_id").dataType != org.apache.spark.sql.types.LongType) None
+    else collectAtMost(hs, maxRows)
+      .filter(_.forall(!_.isNullAt(0)))
+      .map(_.map(r => (r.getLong(0), r.getLong(1))))
+
+  /** `df`'s rows when it has at most `maxRows`, else None — ONE job:
+    * each task returns at most `maxRows + 1` rows and the driver keeps
+    * results only while their running total is within the bound, so an
+    * over-full input costs at most two bounds of driver memory, never
+    * its size. */
+  private def collectAtMost(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
+    val cap = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
+    val rdd = df.rdd
+    val parts = new Array[Array[Row]](rdd.getNumPartitions)
+    var total = 0L
+    df.sparkSession.sparkContext.runJob(rdd,
+      (it: Iterator[Row]) => it.take(cap).toArray,
+      (i: Int, rows: Array[Row]) => {
+        total += rows.length
+        if (total <= maxRows) parts(i) = rows
+      })
+    if (total > maxRows) None else Some(parts.flatten)
+  }
+
+  /** One document's shingle multiset on the driver: distinct hashes
+    * ascending with their row multiplicities. Mirrors the distributed
+    * verify exactly — `size` is the row count the `sizes` aggregate
+    * counts, [[meet]] the row count of the (a_id, h) ⋈ (b_id, h) join
+    * (Σ cntA·cntB), and [[bandKeys]] the [[minhashBandsFrom]] keys. */
+  private final class LocalShingles(val hs: Array[Long], val cnt: Array[Int]) {
+    val size: Long = cnt.foldLeft(0L)(_ + _)
+
+    def meet(o: LocalShingles): Long = {
+      var i = 0
+      var j = 0
+      var m = 0L
+      while (i < hs.length && j < o.hs.length) {
+        if (hs(i) < o.hs(j)) i += 1
+        else if (hs(i) > o.hs(j)) j += 1
+        else { m += cnt(i).toLong * o.cnt(j); i += 1; j += 1 }
+      }
+      m
+    }
+
+    /** The verify's `i / (sz_a + sz_b − i)` — the same single double
+      * division of the same integers — for a pair that shares a row
+      * (the distributed join emits no pair with i = 0). */
+    def jaccard(o: LocalShingles, szA: Long, szB: Long): Option[Double] = {
+      val i = meet(o)
+      if (i == 0L) None else Some(i.toDouble / (szA + szB - i).toDouble)
+    }
+
+    /** Slot k = min over rows of xxhash64(h, k) and band j = xxhash64 of
+      * slots 4j..4j+3 — the `xxhash64(col("h"), lit(k))` and band
+      * expressions, each a hash chain from Spark's seed 42. */
+    lazy val bandKeys: Array[Long] = {
+      import org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash
+      import org.apache.spark.sql.types.{IntegerType, LongType}
+      val m = Array.fill(numHashes)(Long.MaxValue)
+      hs.foreach { h =>
+        val base = hash(h, LongType, 42L)
+        var k = 0
+        while (k < numHashes) {
+          val v = hash(k, IntegerType, base)
+          if (v < m(k)) m(k) = v
+          k += 1
+        }
+      }
+      Array.tabulate(bands) { j =>
+        (0 until rowsPerBand).foldLeft(42L)((seed, r) =>
+          hash(m(j * rowsPerBand + r), LongType, seed))
+      }
+    }
+  }
+
+  private object LocalShingles {
+    /** Group collected (doc_id, h) rows per document. */
+    def of(rows: Array[(Long, Long)]): Map[Long, LocalShingles] =
+      rows.groupMap(_._1)(_._2).map { case (d, hs) =>
+        val sorted = hs.sorted
+        val distinct = scala.collection.mutable.ArrayBuilder.make[Long]
+        val cnt = scala.collection.mutable.ArrayBuilder.make[Int]
+        var k = 0
+        while (k < sorted.length) {
+          var e = k
+          while (e < sorted.length && sorted(e) == sorted(k)) e += 1
+          distinct += sorted(k); cnt += (e - k)
+          k = e
+        }
+        d -> new LocalShingles(distinct.result(), cnt.result())
+      }
+  }
+
+  private val pairSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("a_id", org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("b_id", org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("jaccard", org.apache.spark.sql.types.DoubleType)))
+
+  /** Verified (a_id, b_id, jaccard) rows at or above `threshold` as a
+    * LOCAL frame, ordered by (a_id, b_id, jaccard): its static size
+    * lets every downstream join plan it as a broadcast. */
+  private def localPairs(
+      spark: SparkSession, pairs: Iterator[(Long, Long, Double)],
+      threshold: Double): DataFrame =
+    localFrame(spark, pairSchema, pairs.filter(_._3 >= threshold).toSeq.sorted(
+      Ordering.Tuple3(Ordering.Long, Ordering.Long, Ordering.Double.TotalOrdering))
+      .map { case (a, b, j) => Row(a, b, j) })
+
+  /** Driver-held rows as a local frame (a `LocalRelation`). */
+  private def localFrame(
+      spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Exact Jaccard for each candidate (a_id, b_id) pair: |∩| by a
@@ -1239,7 +1409,17 @@ object Dedup {
     * 16 bytes for the shingle table); re-shingling the corpus per batch
     * would instead re-pay the full text parse on every ingest tick. One
     * persisted shingle parse feeds all three writes. */
-  object MinhashIndex extends NeardupIndex[Double] with GrowingIndex.NoSidecar {
+  object MinhashIndex extends MinhashIndexFamily(LocalMaxShingleRows)
+
+  /** [[MinhashIndex]] with the driver-side bound of its parse, verify and
+    * probe explicit ([[LocalMaxShingleRows]]; 0 forces the distributed
+    * plans — the equality spec's switch). Below the bound the three
+    * artifact frames are computed on the driver from the collected
+    * shingle rows and written as single-file local frames — no
+    * aggregate jobs; the values and schemas are the distributed
+    * frames'. */
+  class MinhashIndexFamily private[graft] (localMaxShingleRows: Long)
+      extends NeardupIndex[Double] with GrowingIndex.NoSidecar {
     val artifacts = Seq("__shingles", "__sizes", "__bands")
     val idCol = "doc_id"
     val defaultThreshold = 0.8
@@ -1248,18 +1428,33 @@ object Dedup {
       val hs = shingleHashes(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        emit(hs)
-        emit(hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")))
-        emit(minhashBandsFrom(hs))
+        val sizes = hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+        val bandRows = minhashBandsFrom(hs)
+        collectShingles(hs, localMaxShingleRows) match {
+          case Some(rows) =>
+            val byDoc = LocalShingles.of(rows).toSeq.sortBy(_._1)
+            def local(like: DataFrame, rows: Seq[Row]): DataFrame =
+              localFrame(hs.sparkSession, like.schema, rows).coalesce(1)
+            emit(local(hs, rows.toSeq.map { case (d, h) => Row(d, h) }))
+            emit(local(sizes, byDoc.map { case (d, s) => Row(d, s.size) }))
+            emit(local(bandRows, byDoc.flatMap { case (d, s) =>
+              s.bandKeys.zipWithIndex.map { case (bh, j) => Row(d, j, bh) }
+            }))
+          case None =>
+            emit(hs)
+            emit(sizes)
+            emit(bandRows)
+        }
       } finally hs.unpersist(blocking = false)
     }
 
     protected def pairsWithin(batch: DataFrame, threshold: Double): DataFrame =
-      minhashNeardupMaterialized(batch, threshold)
+      minhashNeardupBounded(batch, threshold, DefaultMaxBucket, localMaxShingleRows)
 
     protected def pairsAgainst(batch: DataFrame, writer: graft.sinks.StagingWriter,
         table: String, threshold: Double): DataFrame =
-      neardupAgainstIndex(batch, writer, table, threshold)
+      neardupAgainstIndexBounded(batch, writer, table, threshold, DefaultMaxBucket,
+        localMaxShingleRows)
   }
 
   /** Incremental near-dup: pairs (a_id = indexed corpus doc, b_id = new
@@ -1267,27 +1462,115 @@ object Dedup {
     * [[MinhashIndex]] artifact. Only the NEW batch is shingled and
     * banded; the corpus side is read back as narrow integer rows.
     * Candidates = band-bucket collisions between the batch's bands and
-    * the stored bands (batch side broadcast — the incremental contract
-    * is |batch| ≪ |corpus|); the stored buckets get the usual
-    * [[BucketCap]] guard. Within-batch pairs are NOT emitted — run
+    * the stored bands; the stored buckets get the usual [[BucketCap]]
+    * guard. Within-batch pairs are NOT emitted — run
     * [[minhashNeardupMaterialized]] on the batch for those. Id spaces
     * are assumed disjoint (a shared id would pair a document with its
-    * own history, which is exactly what an UPDATE wants anyway). */
+    * own history, which is exactly what an UPDATE wants anyway).
+    *
+    * Two plans, one pair set (the incremental contract is |batch| ≪
+    * |corpus|). A batch of at most [[LocalMaxShingleRows]] shingle rows
+    * (the bounded collect class) probes the
+    * index through NARROW scans only, each collected under the same
+    * bound and verified on the driver: `__bands` semi-joined with the
+    * batch's band keys (every stored row of the touched buckets, so the
+    * cap counts whole buckets), then `__sizes` and `__shingles`
+    * semi-joined with the candidate `a_id`s — each semi-join a
+    * membership filter inside the scan, so nothing of the standing
+    * index is shuffled or broadcast. A larger batch or a stored read
+    * over the bound runs the distributed plan
+    * ([[neardupAgainstIndexPlan]], the batch's bands broadcast into the
+    * stored band scan). */
   def neardupAgainstIndex(
       newDocs: DataFrame,
       writer: graft.sinks.StagingWriter,
       table: String,
       threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    neardupAgainstIndexBounded(newDocs, writer, table, threshold, maxBucket,
+      LocalMaxShingleRows)
+
+  /** [[neardupAgainstIndex]] with the driver-side bound explicit (0
+    * forces the distributed plan — the equality spec's switch). */
+  private[graft] def neardupAgainstIndexBounded(
+      newDocs: DataFrame,
+      writer: graft.sinks.StagingWriter,
+      table: String,
+      threshold: Double,
+      maxBucket: Int,
+      localMaxShingleRows: Long): DataFrame = {
     val newHs = shingleHashes(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // eager result + scoped cache: the incremental tick runs repeatedly
     // in a long-lived session, so leaking one cached shingle table per
     // batch would squeeze executor storage until LRU evicts real work
     // (same contract as minhashNeardupMaterialized)
-    try neardupAgainstIndexPlan(newHs, writer, table, threshold, maxBucket)
-      .localCheckpoint(true)
+    try collectShingles(newHs, localMaxShingleRows)
+      .flatMap(rows => probeLocal(LocalShingles.of(rows), writer, table,
+        threshold, maxBucket, localMaxShingleRows))
+      .getOrElse(neardupAgainstIndexPlan(newHs, writer, table, threshold, maxBucket)
+        .localCheckpoint(true))
     finally newHs.unpersist(blocking = false)
+  }
+
+  /** The driver-side probe of [[neardupAgainstIndex]]; None when the
+    * index's ids are not LONG or a stored read exceeds `maxRows`. Each
+    * stored read is a semi-join by a membership filter over the
+    * driver's key set, evaluated inside the scan: no exchange, and no
+    * broadcast build job (an `isin` literal list would cost analysis
+    * time linear in thousands of keys on every tick). */
+  private def probeLocal(
+      batch: Map[Long, LocalShingles],
+      writer: graft.sinks.StagingWriter,
+      table: String,
+      threshold: Double,
+      maxBucket: Int,
+      maxRows: Long): Option[DataFrame] = {
+    val storedBands = writer.read(s"${table}__bands")
+    val spark = storedBands.sparkSession
+    if (storedBands.schema("doc_id").dataType != org.apache.spark.sql.types.LongType)
+      return None
+    def narrow(artifact: String, ids: Set[Long], cols: String*): Option[Array[Row]] =
+      collectAtMost(writer.read(table + artifact)
+        .filter(udf((d: Long) => ids(d)).apply(col("doc_id")))
+        .select(cols.map(col): _*), maxRows)
+    val keyed = batch.toSeq.flatMap { case (b, s) =>
+      s.bandKeys.zipWithIndex.map { case (bh, j) => ((j, bh), b) }
+    }
+    if (keyed.isEmpty) return Some(localPairs(spark, Iterator.empty, threshold))
+    val keys = keyed.map(_._1).toSet
+    // every stored row of each bucket the batch touches, so the cap
+    // counts WHOLE buckets
+    collectAtMost(storedBands
+      .filter(udf((j: Int, bh: Long) => keys((j, bh))).apply(col("band"), col("band_hash")))
+      .select(col("band"), col("band_hash"), col("doc_id")), maxRows)
+      .filter(_.forall(!_.isNullAt(2)))
+      .flatMap { stored =>
+        val members = stored.map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2)))
+          .groupMap(_._1)(_._2)
+          .filter(_._2.length <= maxBucket)
+        val cand = keyed.flatMap { case (k, b) =>
+          members.getOrElse(k, Array.empty[Long]).map((_, b))
+        }.distinct
+        val ids = cand.map(_._1).toSet
+        if (ids.isEmpty) Some(localPairs(spark, Iterator.empty, threshold))
+        else for {
+          // one size per stored row of a doc: the distributed verify
+          // joins `__sizes` the same way
+          sizeRows <- narrow("__sizes", ids, "doc_id", "sz")
+          hsA <- narrow("__shingles", ids, "doc_id", "h")
+        } yield {
+          val sizes = sizeRows.groupMap(_.getLong(0))(_.getLong(1))
+          val corpus = LocalShingles.of(hsA.map(r => (r.getLong(0), r.getLong(1))))
+          localPairs(spark, cand.iterator.flatMap { case (a, b) =>
+            for {
+              sa <- corpus.get(a).iterator
+              szA <- sizes.getOrElse(a, Array.empty[Long]).iterator
+              j <- sa.jaccard(batch(b), szA, batch(b).size).iterator
+            } yield (a, b, j)
+          }, threshold)
+        }
+      }
   }
 
   /** The LAZY incremental plan over an existing shingle frame — exposed
@@ -1360,10 +1643,13 @@ object Dedup {
     * fixed handful of jobs (two joins, two aggregates, a checkpoint)
     * regardless of data size, so a small graph pays ~5 rounds of pure
     * scheduling overhead for work a μs-scale union-find finishes
-    * instantly. 100k edges ≈ 1.6 MB on the driver — the config-bounded
-    * collect class (centroids/codebooks/Bloom words), never a
+    * instantly. 100k edges ≈ 1.6 MB on the driver — the bounded
+    * collect class (centroids/codebooks/Bloom words, and the MinHash
+    * verify and index probe under [[LocalMaxShingleRows]]), never a
     * data-scale pull: the bound is CHECKED against the observe-metric
-    * seed count before any collect. Labeling is identical by
+    * seed count before any collect, or against the row count of a
+    * LOCAL pair frame (the driver-side verify's output), which is
+    * labeled without a single Spark job. Labeling is identical by
     * construction (component = min reachable id; spec cross-proves
     * threshold-0 vs default on chain/star/clique graphs). */
   val StarLocalMaxEdges = 100000L
@@ -1377,6 +1663,28 @@ object Dedup {
   private[graft] def dupComponentsStarRounds(
       pairs: DataFrame,
       localMaxEdges: Long = StarLocalMaxEdges): (DataFrame, Int) = {
+    val spark = pairs.sparkSession
+    // fast-path eligibility: a POSITIVE threshold (0 = disabled — the
+    // documented force-distributed switch, which must hold even for an
+    // empty edge set), the bounded size, and LONG ids — the union-find
+    // below is Long-typed while the star loop is type-generic, so a
+    // non-long id column must fall through, never ClassCastException.
+    def longIds(df: DataFrame): Boolean = df.schema.fields
+      .forall(_.dataType == org.apache.spark.sql.types.LongType)
+    // a LOCAL pair frame (the driver-side MinHash verify's output) is
+    // labeled on the driver outright — collecting it runs no job, and
+    // its endpoints are the whole node universe
+    if (localMaxEdges > 0 && pairs.isLocal) {
+      val ends = pairs.select(col("a_id"), col("b_id"))
+      if (longIds(ends)) {
+        val es = ends.collect()
+        if (es.length <= localMaxEdges && !es.exists(_.anyNull)) {
+          val uv = es.map(r => (r.getLong(0), r.getLong(1)))
+          val nodes = uv.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
+          return (labelFrame(spark, unionFind(uv, nodes)), 0)
+        }
+      }
+    }
     def canon(e: DataFrame): DataFrame = e
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
@@ -1398,53 +1706,14 @@ object Dedup {
       .distinct()
       .localCheckpoint(true)
     val seedCount = seedObs.get("n_edges").asInstanceOf[Long]
-    // fast-path eligibility: a POSITIVE threshold (0 = disabled — the
-    // documented force-distributed switch, which must hold even for an
-    // empty edge set), the bounded size, and LONG ids — the union-find
-    // below is Long-typed while the star loop is type-generic, so a
-    // non-long id column must fall through, never ClassCastException.
-    val longIds = edges.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (localMaxEdges > 0 && seedCount <= localMaxEdges && longIds) {
+    if (localMaxEdges > 0 && seedCount <= localMaxEdges && longIds(edges)) {
       // SMALL-GRAPH FAST PATH: union-find over the (bounded, just
-      // counted) edge set; label = min member per component — the
-      // same labeling the star fixpoint converges to. The node
-      // universe stays DISTRIBUTED (self-loop-only docs may outnumber
-      // edges): only the edge endpoints' labels ship back.
+      // counted) edge set. The node universe stays DISTRIBUTED
+      // (self-loop-only docs may outnumber edges): only the edge
+      // endpoints' labels ship back.
       val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent(c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      // union by MIN root: every union keeps "root = min of the merged
-      // roots", so by induction the root IS the component minimum —
-      // find() tolerates absent keys (an unseen id is its own root)
-      es.foreach { case (u, v) =>
-        val (ru, rv) = (find(u), find(v))
-        if (ru != rv) {
-          if (ru < rv) parent(rv) = ru else parent(ru) = rv
-        }
-      }
-      val endpoints = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-      val spark = pairs.sparkSession
-      val labelRows: java.util.List[org.apache.spark.sql.Row] = {
-        import scala.jdk.CollectionConverters._
-        endpoints.toSeq.sorted
-          .map(d => org.apache.spark.sql.Row(d, find(d)): org.apache.spark.sql.Row)
-          .asJava
-      }
-      val labelSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("component",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val labels = spark.createDataFrame(labelRows, labelSchema)
+      val labels = labelFrame(spark,
+        unionFind(es, es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet))
       return (nodes.join(broadcast(labels), Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("component"), col("doc_id")).as("component")), 0)
@@ -1501,6 +1770,39 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("component")),
       rounds)
+  }
+
+  /** (doc_id, component) for every id in `nodes`: union-find over
+    * `es`, label = min member per component — the labeling the star
+    * fixpoint converges to. Union by MIN root keeps "root = min of the
+    * merged roots", so by induction the root IS the component minimum;
+    * an id on no edge is its own root. */
+  private def unionFind(es: Array[(Long, Long)], nodes: Set[Long]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val nxt = parent(c); parent(c) = r; c = nxt
+      }
+      r
+    }
+    es.foreach { case (u, v) =>
+      val (ru, rv) = (find(u), find(v))
+      if (ru != rv) {
+        if (ru < rv) parent(rv) = ru else parent(ru) = rv
+      }
+    }
+    nodes.toSeq.sorted.map(d => d -> find(d))
+  }
+
+  private def labelFrame(spark: SparkSession, labels: Seq[(Long, Long)]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    localFrame(spark, StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("component", LongType, nullable = false))),
+      labels.map { case (d, c) => Row(d, c) })
   }
 
   /** The shared cross-engine token hash ([[OracleHash.md5Hash32]]).
@@ -1676,6 +1978,50 @@ object Dedup {
       .filter(col("rn") === 1)
       .select(col("component"), col("doc_id").as("keeper_id"),
         col("n_members"), col("quality_score").as("keeper_quality"))
+  }
+
+  /** The members the canonical rewrite drops: every member of a
+    * component that has a [[canonicalPick]] keeper, other than that
+    * keeper, as (doc_id). A LOCAL component frame with LONG ids (the
+    * driver-side labeling's output, bounded by [[StarLocalMaxEdges]])
+    * resolves on the driver: one narrow scan scores only the members,
+    * and the same keeper rule — quality desc under Spark's double
+    * ordering (NULL last, NaN highest, −0.0 = 0.0), then doc_id — runs
+    * per component, so no window, sort or join stage remains; the
+    * result is a local frame. Otherwise the distributed
+    * [[canonicalPick]] join. */
+  private[graft] def nonKeepers(docs: DataFrame, components: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.LongType
+    val labels = components.select(col("doc_id"), col("component"))
+    if (!components.isLocal || !(labels.schema.fields :+ docs.schema("doc_id"))
+        .forall(_.dataType == LongType))
+      return components
+        .join(canonicalPick(docs, components).select(col("component"), col("keeper_id")),
+          "component")
+        .filter(col("doc_id") =!= col("keeper_id"))
+        .select("doc_id")
+    val comp = labels.collect().collect {
+      case r if !r.anyNull => r.getLong(0) -> r.getLong(1)
+    }
+    val members = comp.iterator.map(_._1).toSet
+    val scored = TextStats.withQuality(docs.filter(udf((d: Long) => members(d)).apply(col("doc_id"))))
+      .select(col("doc_id"), col("quality_score")).collect()
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+    val best = Ordering.fromLessThan[(Long, Option[Double])] { case ((da, qa), (db, qb)) =>
+      val byQuality = (qa, qb) match {
+        case (Some(x), Some(y)) => if (x == y) 0 else java.lang.Double.compare(y, x)
+        case (Some(_), None) => -1
+        case (None, Some(_)) => 1
+        case _ => 0
+      }
+      byQuality < 0 || (byQuality == 0 && da < db)
+    }
+    val label = comp.toMap
+    val keeper = scored.groupBy(m => label(m._1)).map { case (c, ms) => c -> ms.min(best)._1 }
+    localFrame(components.sparkSession,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id", LongType, nullable = false))),
+      comp.toSeq.collect { case (d, c) if keeper.get(c).exists(_ != d) => Row(d) })
   }
 
   /** KEEPER-POLICY COMPARISON — "does the survivorship rule matter?":

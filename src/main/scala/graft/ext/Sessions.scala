@@ -1373,8 +1373,8 @@ object Sessions {
     * score it on the held-out second half, report per prior type.
     * The split is data-derived (`min_us + (max_us − min_us) div 2` —
     * the subtraction keeps the divided operand non-negative, so
-    * Spark's truncating DIV and DuckDB's flooring `//` agree even on
-    * pre-1970 fixtures) — never wall clock. A transition belongs to
+    * Spark's DIV and DuckDB's `//` agree even on pre-1970 fixtures
+    * under any rounding of a negative quotient) — never wall clock. A transition belongs to
     * the window of its SOURCE event's timestamp, so a pair straddling
     * the boundary trains nothing and evaluates once. Prediction per
     * prior type is argmax by (count desc, lexicographic next type) —

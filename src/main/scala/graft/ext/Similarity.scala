@@ -1678,9 +1678,9 @@ object Similarity {
         sum(when(col("prod") < 0, 1L).otherwise(0L)).as("discordant"))
       .select(col("query_id"), col("n_pairs"), col("concordant"),
         col("discordant"),
-        // sign-decomposed (the x91 convention): Spark's DIV truncates
-        // toward zero, DuckDB's // floors — they differ on negative
-        // numerators, so the division only ever sees |C−D|
+        // sign-decomposed (the x91 convention): Spark's DIV and DuckDB
+        // 1.0.0's // both truncate toward zero, but the division only
+        // ever sees |C−D|, so no engine's negative rounding matters
         when(col("concordant") + col("discordant") === 0, lit(0L))
           .otherwise(
             when(col("concordant") >= col("discordant"), lit(1L))

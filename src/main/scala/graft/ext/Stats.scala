@@ -41,9 +41,11 @@ object Stats {
     * Determinism shape: po/pe in ppm via integral division
     * (cross-products in DECIMAL(38,0) ↔ DuckDB HUGEINT — pe's
     * `a0·b0 + a1·b1` reaches n² ≈ 10²⁴ at corpus scale); κ is
-    * SIGN-DECOMPOSED (the x128 convention — Spark's DIV truncates
-    * toward zero, DuckDB's `//` floors, so a negative numerator never
-    * reaches the division): `sign(po−pe) · 10⁶·|po−pe| div (10⁶−pe)`.
+    * SIGN-DECOMPOSED (the x128 convention — Spark's DIV and DuckDB
+    * 1.0.0's `//` both truncate toward zero, `-7 // 2` = −3, but a
+    * negative numerator never reaches the division, so the result does
+    * not rest on either engine's rounding of a negative quotient):
+    * `sign(po−pe) · 10⁶·|po−pe| div (10⁶−pe)`.
     * Degenerate chance-perfect raters (pe = 10⁶, both constant) emit
     * κ = 0 under an explicit guard. McNemar is `10³·(n01−n10)²
     * div (n01+n10)` — squared, so no sign ever divides; zero
@@ -1839,8 +1841,10 @@ object Stats {
         expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))").as("order_us")),
         Seq("o_orderkey"))
       .select(col("o_orderpriority"),
-        // floor, not truncate: a negative lag (data-entry error, ship
-        // before order) must land in the same day bucket as DuckDB's //
+        // floor, not truncate, like every Stats.day bucket: a negative
+        // lag (data-entry error, ship before order) lands on the day
+        // before; the oracle's // truncates (DuckDB 1.0.0), so the two
+        // agree only while lags stay non-negative
         day("ship_us - order_us")
           .as("lag_days"))
     val hist = lag.groupBy(col("o_orderpriority"), col("lag_days"))
@@ -2405,8 +2409,9 @@ object Stats {
     * float ever aggregates.
     *
     * Input contract: NON-NEGATIVE order totals. The per-member
-    * division is an integral `DIV` whose truncation only coincides
-    * with the oracle's flooring `//` on non-negative operands — a
+    * division is an integral `DIV`; it truncates like the oracle's
+    * `//` (DuckDB 1.0.0), but a floored division would differ on a
+    * negative operand — a
     * refunds ledger (negative totals that could drive a cumulative
     * negative) must be sign-decomposed first (the X142 convention)
     * before reusing this curve.
@@ -3384,9 +3389,10 @@ object Stats {
     * with x = day index and y = count, `slope = (mΣxy − ΣxΣy) /
     * (mΣx² − (Σx)²)` — numerator and denominator are exact integers,
     * emitted as `slope_micro = sign · (10⁶·|num| div den)` (micro-
-    * events per day; the sign-DECOMPOSED division because Spark DIV
-    * truncates toward zero while DuckDB // floors — a negative slope
-    * must never reach the division, the x128 lesson). Absence is
+    * events per day; the sign-DECOMPOSED division — Spark DIV and
+    * DuckDB 1.0.0's // both truncate toward zero, and a negative slope
+    * still never reaches the division, so the result does not rest on
+    * either engine's negative rounding, the x128 lesson). Absence is
     * data: a day with no events counts zero (a sparse fit would see
     * only busy days and bias the slope up). Products ride
     * DECIMAL(38,0) ↔ HUGEINT.
@@ -4022,8 +4028,9 @@ object Stats {
       .select(col("rep").cast("long").as("rep"), col("n_rows"),
         col("sum_cents"),
         // sign-decomposed: a refund-heavy replicate's negative sum
-        // must not reach a cross-engine integer division (Spark DIV
-        // truncates, DuckDB // floors — the x128 lesson)
+        // never reaches a cross-engine integer division (Spark DIV and
+        // DuckDB 1.0.0's // both truncate, but the result must not rest
+        // on either engine's negative rounding — the x128 lesson)
         expr("(CASE WHEN sum_cents < 0 THEN -1 ELSE 1 END)" +
           " * (abs(sum_cents) DIV n_rows)").as("mean_cents"))
   }

@@ -2330,7 +2330,7 @@ object ExtOracles {
 
     // Kendall τ: both brute-force rankings (the x120 CTEs), common
     // neighbors, pair products; sign-decomposed division (Spark DIV
-    // truncates, DuckDB // floors — negatives never reach it).
+    // and DuckDB 1.0.0's // both truncate — negatives never reach it).
     "x128_kendall_tau" ->
       """WITH q AS (SELECT vec_id AS query_id,
         |                  list_transform(embedding, x -> x::DOUBLE) AS qv

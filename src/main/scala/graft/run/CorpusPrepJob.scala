@@ -1,6 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -28,13 +28,18 @@ import graft.sources.JsonlIngest
   * CLEANED text so a near-dup pair can never straddle train/test).
   *
   * Scale shape: the corpus flows through narrow projections and the
-  * operators' own bounded shuffles. The two text-bearing intermediates
-  * that feed multiple consumers are persisted and RELEASED in a
-  * finally (the sourceDrift ownership convention); the near-dup pair
+  * operators' own bounded shuffles. The text-bearing stages that feed
+  * multiple consumers are materialized once each (the normalized batch
+  * persisted and RELEASED in a finally, the sourceDrift ownership
+  * convention; the dedup survivors checkpointed); the near-dup pair
   * set is materialized once ([[Dedup.minhashNeardupMaterialized]]);
   * everything durable lands in the warehouse via the staging writer.
-  * Nothing is ever collected to the driver except funnel counts
-  * (one row per stage).
+  * The driver receives the funnel counts (observe metrics, one per
+  * stage) and, only through the bounded collect class, narrow integer
+  * rows: (doc_id, shingle hash) rows and the stored index rows a probe
+  * touches, each at most [[Dedup.LocalMaxShingleRows]] (≈ 3.2 MB), and
+  * near-dup edges under [[Dedup.StarLocalMaxEdges]]. Above a bound the
+  * step runs distributed; text never reaches the driver.
   */
 object CorpusPrepJob {
 
@@ -122,8 +127,8 @@ object CorpusPrepJob {
       evalDocs: DataFrame,
       writer: StagingWriter,
       cfg: PrepConfig = PrepConfig()): PrepReport =
-    stages(docs, evalDocs, cfg)(
-      standing = identity, history = identity,
+    stages(docs, evalDocs, cfg, Dedup.LocalMaxShingleRows)(
+      standing = identity, history = None,
       // the split rides the cleaned corpus to disk — THE durable
       // deliverable — through the crash-safe swap: a re-run that dies
       // mid-write must leave the PREVIOUS corpus readable. Downstream
@@ -133,86 +138,107 @@ object CorpusPrepJob {
         writer.writeAndSwap(withSplit, CorpusTable)
         writer.read(CorpusTable)
       }) { (corpus, funnel) =>
-      // the index build, the derived exports and the funnel are
+      // the index build, the derived exports and the funnel write are
       // INDEPENDENT actions over disjoint tables, all downstream of the
       // one corpus write — [[writeTailArtifacts]] runs them from a small
       // thread pool (guide §2.6 overlap; r15 — the tail was 4-6
       // sequential actions, each leaving most cores idle at bench
       // scale). Per-table artifacts are byte-identical to the
       // sequential order.
-      val (written, exportArtifacts) = writeTailArtifacts(cfg, writer, corpus, funnel)
-      report(written, Seq(CorpusTable, IndexTable) ++ exportArtifacts :+ FunnelTable)
+      val exportArtifacts = writeTailArtifacts(cfg, writer, corpus, funnel)
+      report(funnel, Seq(CorpusTable, IndexTable) ++ exportArtifacts :+ FunnelTable)
     }
 
   /** The ONE stage chain [[run]] and [[increment]] share — an
     * incremental tick is the initial load's work bounded by the batch:
     * landing (optional HTML→text, fused into the normalize scan) →
     * normalize → Gopher gate → optional blocklist → exact dedup →
-    * near-dup component rewrite → decontaminate → split, plus the lazy
+    * near-dup component rewrite → decontaminate → split, plus the
     * funnel over those stages. The callers supply only what differs:
     *
     *   - `standing`: applied to the exact-dedup survivors before they
-    *     are persisted (the increment's standing-corpus anti-join);
-    *   - `history`: applied to the near-dup rewrite's survivors (the
-    *     increment's stored-index probe);
-    *   - `land`: where the split frame lands; the funnel counts `5_clean`
-    *     and the split rows over what it returns.
+    *     are materialized (the increment's standing-corpus anti-join);
+    *   - `history`: the ids to drop from the near-dup rewrite's
+    *     (materialized) survivors (the increment's stored-index probe);
+    *   - `land`: where the split frame lands.
     *
-    * `finish` receives the landed frame and the LAZY funnel and runs
-    * inside the chain's scope: the two text-bearing intermediates that
-    * feed several consumers (the normalized batch and the exact-dedup
-    * survivors) are persisted here and RELEASED in the finally (the
-    * sourceDrift ownership convention), so every funnel leg must
-    * materialize before `finish` returns. */
-  private def stages[A](docs: DataFrame, evalDocs: DataFrame, cfg: PrepConfig)(
+    * Every funnel count rides, as an observe metric, the action that
+    * materializes its stage anyway: `1_raw` and `2_gate_passed` the
+    * gate checkpoint, `2b_blocklist_passed` and `3_exact_unique` the
+    * exact-dedup materialization, `4_neardup_kept` the near-dup
+    * survivors' and `5_clean` plus the `6_split_*` rows the landing —
+    * no separate funnel query. Those stages are local checkpoints, not
+    * persists: a cached plan keeps its shuffle partitioning, while AQE
+    * coalesces a checkpoint's, and the slice writes' file counts follow
+    * it. `finish` receives the landed frame and the funnel and runs
+    * inside the chain's scope: the normalized batch, which the gate and
+    * exact dedup both read, is persisted here and RELEASED in the
+    * finally (the sourceDrift ownership convention). */
+  private def stages[A](
+      docs: DataFrame, evalDocs: DataFrame, cfg: PrepConfig, localMaxShingleRows: Long)(
       standing: DataFrame => DataFrame,
-      history: DataFrame => DataFrame,
+      history: Option[DataFrame => DataFrame],
       land: DataFrame => DataFrame)(
       finish: (DataFrame, DataFrame) => A): A = {
+    def observed(df: DataFrame): (DataFrame, Observation) = {
+      val obs = Observation()
+      (df.observe(obs, count(lit(1)).as("n")), obs)
+    }
+    def n(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
+    def checkpointed(df: DataFrame): (DataFrame, Long) = {
+      val (o, obs) = observed(df)
+      val cp = o.localCheckpoint(true)
+      (cp, n(obs))
+    }
     val landed =
       if (cfg.htmlInput) docs.withColumn("text", TextStats.htmlToText(col("text")))
       else docs
-    val normalized = TextStats.normalized(landed)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // gopher pass-ids computed ONCE, eagerly checkpointed (r15): the
-    // dedup gate join AND the 2_gate_passed funnel count consume it —
-    // lazily each re-ran the regex-heavy gopherRules text pass (r16 A/B
-    // re-confirmed on the increment: ~0.6 s slower per tick)
-    val gateIds = TextStats.gopherRules(normalized)
-      .filter(col("passes")).select("doc_id").localCheckpoint(true)
-    val gated = {
-      val gated0 = normalized.join(gateIds, "doc_id")
-      // optional C4 blocklist gate — empty list leaves the frame (and
-      // therefore every downstream count) byte-identical
-      if (cfg.blocklist.isEmpty) gated0
-      else gated0.join(
-        TextStats.blocklistFilter(gated0, cfg.blocklist)
-          .filter(col("flagged")).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-    }
-    // exact dedup keeps the lowest doc_id per content hash — ONE
-    // shuffle on the hash; dup groups are tiny. Persisted: feeds the
-    // pair set, the component join, decontamination, the funnel.
-    val exactKept = {
-      val byHash = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-      standing(gated.withColumn("__rn", row_number().over(byHash))
-        .filter(col("__rn") === 1).drop("__rn"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    val (normalizedObs, raw) = observed(TextStats.normalized(landed))
+    val normalized = normalizedObs.persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      // gopher pass-ids computed ONCE, eagerly checkpointed (r15): the
+      // dedup gate join consumes it, and this one action also carries
+      // the raw and gate-passed counts — lazily the regex-heavy
+      // gopherRules text pass re-ran per consumer (r16 A/B re-confirmed
+      // on the increment: ~0.6 s slower per tick)
+      val (gateIdsLazy, gatePassed) = observed(TextStats.gopherRules(normalized)
+        .filter(col("passes")).select("doc_id"))
+      val gateIds = gateIdsLazy.localCheckpoint(true)
+      val (gated, blocklistPassed) = {
+        val gated0 = normalized.join(gateIds, "doc_id")
+        // optional C4 blocklist gate — empty list leaves the frame (and
+        // therefore every downstream count) byte-identical
+        if (cfg.blocklist.isEmpty) (gated0, None)
+        else {
+          val (g, obs) = observed(gated0.join(
+            TextStats.blocklistFilter(gated0, cfg.blocklist)
+              .filter(col("flagged")).select("doc_id"),
+            Seq("doc_id"), "left_anti"))
+          (g, Some(obs))
+        }
+      }
+      // exact dedup keeps the lowest doc_id per content hash — ONE
+      // shuffle on the hash; dup groups are tiny. Materialized here, so
+      // the near-dup step's own jobs start from stored rows: it feeds
+      // the pair set, the component join and the rewrite.
+      val (exactKept, nExact) = {
+        val byHash = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
+        checkpointed(standing(gated.withColumn("__rn", row_number().over(byHash))
+          .filter(col("__rn") === 1).drop("__rn")))
+      }
       // near-dup pairs → components (star contraction — label-identical
       // to min-label propagation, spec-proved, but O(log n) rounds where
       // a boilerplate chain stalls min-label) → canonical keeper;
       // non-keepers are rewritten away. The pair set is materialized
       // once and also feeds the audit rows.
-      val pairs = Dedup.minhashNeardupMaterialized(exactKept, cfg.neardupThreshold)
-      val components = Dedup.dupComponentsStar(pairs)
-      val keepers = Dedup.canonicalPick(exactKept, components)
-      val dropIds = components
-        .join(keepers.select(col("component"), col("keeper_id")), "component")
-        .filter(col("doc_id") =!= col("keeper_id"))
-        .select("doc_id")
-      val neardupKept = history(exactKept.join(dropIds, Seq("doc_id"), "left_anti"))
+      val pairs = Dedup.minhashNeardupBounded(exactKept, cfg.neardupThreshold,
+        Dedup.DefaultMaxBucket, localMaxShingleRows)
+      val dropIds = Dedup.nonKeepers(exactKept, Dedup.dupComponentsStar(pairs))
+      val within = checkpointed(exactKept.join(dropIds, Seq("doc_id"), "left_anti"))
+      val (neardupKept, nKept) = history.fold(within) { drops =>
+        val (kept, _) = within
+        checkpointed(kept.join(drops(kept), Seq("doc_id"), "left_anti"))
+      }
 
       // benchmark decontamination over the deduped survivors
       val contaminatedIds = Dedup
@@ -223,40 +249,46 @@ object CorpusPrepJob {
       // the content-hash split attaches as a COLUMN (splitAssigned):
       // joining hashSplit back would evaluate the clean subtree — the
       // whole decontamination pass — twice inside the one landing action
+      val landObs = Observation()
       val split = land(Assemble.splitAssigned(
-        clean, cfg.trainPermille, cfg.valPermille, cfg.splitSalt))
-      finish(split, funnel(cfg, Seq(
-        "1_raw" -> normalized, "2_gate_passed" -> gateIds) ++
-        (if (cfg.blocklist.isEmpty) Nil else Seq("2b_blocklist_passed" -> gated)) ++
-        Seq("3_exact_unique" -> exactKept, "4_neardup_kept" -> neardupKept),
-        split, pairs))
-    } finally {
-      normalized.unpersist(blocking = false)
-      exactKept.unpersist(blocking = false)
-    }
+        clean, cfg.trainPermille, cfg.valPermille, cfg.splitSalt)
+        .observe(landObs, count(lit(1)).as("5_clean"),
+          Assemble.SplitNames.map(s => count(when(col("split") === s, 1)).as(s)): _*))
+      val landCounts = landObs.get
+      val counts = Seq("1_raw" -> n(raw), "2_gate_passed" -> n(gatePassed)) ++
+        blocklistPassed.map(o => "2b_blocklist_passed" -> n(o)) ++
+        Seq("3_exact_unique" -> nExact, "4_neardup_kept" -> nKept,
+          "5_clean" -> landCounts("5_clean").asInstanceOf[Long]) ++
+        Assemble.SplitNames.sorted.map(s => s"6_split_$s" -> landCounts(s).asInstanceOf[Long])
+          .filter(_._2 > 0)
+      finish(split, funnel(cfg, split.sparkSession, counts, split, pairs))
+    } finally normalized.unpersist(blocking = false)
   }
 
-  /** The funnel: one unioned aggregate query — every count is an
-    * integer aggregate, map-side combinable, one small row per stage —
-    * over the named stage frames, then `5_clean` and one
-    * `6_split_<split>` row per split over the LANDED frame (≡ clean:
-    * the split column is 1:1, so the decontamination subtree is never
-    * evaluated a second time), then the opt-in audit rows. The
-    * blocklist row exists only when configured and the audit rows only
-    * on opt-in, so the default funnel stays byte-identical (x62/x68 pin
-    * it). LAZY: the caller checkpoints it once. */
+  /** The funnel: one `(stage, n_docs)` row per stage from the counts the
+    * chain observed — a `6_split_<split>` row per non-empty split —
+    * then the opt-in audit rows. The blocklist row exists only when
+    * configured and the audit rows only on opt-in, so the default
+    * funnel stays byte-identical (x62/x68 pin it). Returned
+    * materialized: a local frame, checkpointed once when the audit
+    * rows join it. */
   private def funnel(
-      cfg: PrepConfig, counted: Seq[(String, DataFrame)],
+      cfg: PrepConfig, spark: SparkSession, counts: Seq[(String, Long)],
       split: DataFrame, pairs: DataFrame): DataFrame = {
-    def stage(name: String, d: DataFrame): DataFrame =
-      d.agg(count(lit(1)).as("n_docs"))
-        .select(lit(name).as("stage"), col("n_docs"))
-    val base = (counted :+ ("5_clean" -> split))
-      .map { case (name, d) => stage(name, d) }.reduce(_ unionByName _)
-      .unionByName(split.groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
-        .select(concat(lit("6_split_"), col("split")).as("stage"), col("n_docs")))
+    import scala.jdk.CollectionConverters._
+    val base = spark.createDataFrame(
+      counts.map { case (stage, n) => Row(stage, n) }.asJava, FunnelSchema)
     if (!cfg.auditRows) base
-    else base.unionByName(auditFunnelRows(pairs, split))
+    else base.unionByName(auditFunnelRows(pairs, split)).localCheckpoint(true)
+  }
+
+  /** The funnel table's schema (`stage` nullable, as the funnel table
+    * has always been written). */
+  private val FunnelSchema = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    StructType(Seq(
+      StructField("stage", StringType),
+      StructField("n_docs", LongType, nullable = false)))
   }
 
   /** The two opt-in audit rows (cfg.auditRows — see the knob's
@@ -288,33 +320,25 @@ object CorpusPrepJob {
     * `cfg.exports`) and the funnel write — independent jobs over
     * disjoint tables, all downstream of the corpus write — submitted
     * from a 3-thread [[graft.util.FanOut]] so each job's tasks back-fill
-    * the ramp/tail idle of the others (guide §2.6; r15). The funnel
-    * frame passed in is LAZY — it is checkpointed once, inside its task,
-    * before the write, so the table write and the caller's counts
-    * collect read one evaluation. On a failure the surviving siblings'
-    * jobs are cancelled and their threads joined before the rethrow
-    * (ADVICE r15): no background write may race the caller's
-    * finally-unpersist or mutate tables after the run reported failure.
-    * Returns the written funnel and the export tables. */
+    * the ramp/tail idle of the others (guide §2.6; r15). On a failure
+    * the surviving siblings' jobs are cancelled and their threads
+    * joined before the rethrow (ADVICE r15): no background write may
+    * race the caller's finally-unpersist or mutate tables after the run
+    * reported failure. Returns the export tables. */
   private def writeTailArtifacts(
       cfg: PrepConfig, writer: StagingWriter, corpus: DataFrame,
-      funnelLazy: DataFrame): (DataFrame, Seq[String]) = {
-    // each task yields (funnel frame, export tables) — at most one of
-    // the two non-empty
-    val done = graft.util.FanOut.all[(Option[DataFrame], Seq[String])](
+      funnel: DataFrame): Seq[String] =
+    graft.util.FanOut.all[Seq[String]](
       corpus.sparkSession.sparkContext, threads = 3)(Seq(
       () => {
         Dedup.MinhashIndex.build(corpus, writer, IndexTable)
-        (None, Nil)
+        Nil
       },
-      () => (None, if (cfg.exports) writeExports(cfg, writer, corpus) else Nil),
+      () => if (cfg.exports) writeExports(cfg, writer, corpus) else Nil,
       () => {
-        val f = funnelLazy.localCheckpoint(true)
-        writer.write(f, FunnelTable, append = false)
-        (Some(f), Nil)
-      }))
-    (done.flatMap(_._1).head, done.flatMap(_._2))
-  }
+        writer.write(funnel, FunnelTable, append = false)
+        Nil
+      })).flatten
 
   /** The derived exports over a corpus table — the packed train
     * sequences, the curriculum export and the optional mixture — each
@@ -385,7 +409,20 @@ object CorpusPrepJob {
       evalDocs: DataFrame,
       writer: StagingWriter,
       cfg: PrepConfig = PrepConfig(),
-      batchId: Option[Long] = None): PrepReport = {
+      batchId: Option[Long] = None): PrepReport =
+    incrementBounded(newDocs, evalDocs, writer, cfg, batchId, Dedup.LocalMaxShingleRows)
+
+  /** [[increment]] with the driver-side bound of its MinHash verify,
+    * index probe and index append explicit
+    * ([[Dedup.LocalMaxShingleRows]]); 0 forces the distributed plans —
+    * the spec's equality switch. */
+  private[graft] def incrementBounded(
+      newDocs: DataFrame,
+      evalDocs: DataFrame,
+      writer: StagingWriter,
+      cfg: PrepConfig,
+      batchId: Option[Long],
+      localMaxShingleRows: Long): PrepReport = {
     if (batchId.exists(writer.batchCommitted(CorpusTable, _)))
       return PrepReport(
         emptyFunnel(newDocs.sparkSession), Map.empty, quarantined = 0L,
@@ -394,37 +431,35 @@ object CorpusPrepJob {
     batchId.foreach { id =>
       batchSliceTables.foreach(t => writer.deleteBatchSlice(t, id))
     }
-    stages(newDocs, evalDocs, cfg)(
+    stages(newDocs, evalDocs, cfg, localMaxShingleRows)(
       // standing-corpus digests ride the scan projection — narrow
       standing = batchUniq => batchUniq.join(
         writer.read(CorpusTable).select(md5(col("text")).as("__corpus_hash")).distinct(),
         md5(batchUniq("text")) === col("__corpus_hash"), "left_anti"),
-      // eager: the component rewrite + stored-index probe chain is the
-      // tick's most expensive subtree and BOTH the split chain and the
-      // funnel read it — without the checkpoint each consumer re-ran
-      // the probe. Batch-bounded, so the materialization is cheap at
-      // any corpus scale.
-      history = batchKept => batchKept.join(
-        Dedup.neardupAgainstIndex(batchKept, writer, IndexTable, cfg.neardupThreshold)
-          .select(col("b_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti").localCheckpoint(true),
+      // the stored-index probe of the (materialized) within-batch
+      // survivors; below Dedup.LocalMaxShingleRows its pairs are a
+      // local frame, so the chain's anti-join plans as a broadcast
+      history = Some(batchKept =>
+        Dedup.neardupAgainstIndexBounded(batchKept, writer, IndexTable,
+          cfg.neardupThreshold, Dedup.DefaultMaxBucket, localMaxShingleRows)
+          .select(col("b_id").as("doc_id"))),
       // eager before the appends: the writes must see ONE evaluation
       // of the batch chain, and the corpus append must not re-read the
-      // corpus it is appending to via the anti-join lineage
-      land = _.localCheckpoint(true)) { (withSplit, funnelLazy) =>
-      // the funnel is ALSO materialized before the artifacts grow — a
-      // lazy count evaluated after the append would re-run the
-      // standing-corpus anti-join against a corpus that now contains
-      // this batch's own survivors and report them as duplicates
-      val funnel = funnelLazy.localCheckpoint(true)
+      // corpus it is appending to via the anti-join lineage. The
+      // funnel is materialized by then too — a lazy count evaluated
+      // after the append would re-run the standing-corpus anti-join
+      // against a corpus that now contains this batch's own survivors
+      // and report them as duplicates.
+      land = _.localCheckpoint(true)) { (withSplit, funnel) =>
+      val index = new Dedup.MinhashIndexFamily(localMaxShingleRows)
       batchId match {
         case Some(id) =>
           writer.appendBatchSlice(withSplit, CorpusTable, id)
-          Dedup.MinhashIndex.appendBatchSlice(withSplit, writer, IndexTable, id)
+          index.appendBatchSlice(withSplit, writer, IndexTable, id)
           writer.commitBatch(CorpusTable, id) // the tick's commit point
         case None =>
           writer.write(withSplit, CorpusTable, append = true)
-          Dedup.MinhashIndex.append(withSplit, writer, IndexTable)
+          index.append(withSplit, writer, IndexTable)
       }
       report(funnel, Seq(CorpusTable, IndexTable))
     }
@@ -432,14 +467,8 @@ object CorpusPrepJob {
 
   /** The funnel's (stage, n_docs) shape with no rows — what a replayed,
     * already-committed [[increment]] batch reports. */
-  private def emptyFunnel(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField("stage", StringType, nullable = false),
-        StructField("n_docs", LongType, nullable = false))))
-  }
+  private def emptyFunnel(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), FunnelSchema)
 
   /** The compaction-cadence job [[increment]]'s contract defers to:
     * re-derive every derived artifact from the (appended-to) corpus

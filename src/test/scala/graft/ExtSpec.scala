@@ -868,28 +868,34 @@ class ExtSpec extends SparkSpec {
     val batch = all.filter($"doc_id" % 10 === 0)
     val w = new graft.sinks.StagingWriter(spark, tmpDir("mhidx"))
     Dedup.MinhashIndex.build(corpus, w, "docs")
-    val incr = Dedup.neardupAgainstIndex(batch, w, "docs")
-    // the plan must read the stored artifacts, not re-shingle the
-    // corpus — proven on the lazy builder (the public path checkpoints
-    // eagerly to scope its cache, which collapses the executed plan)
+    // the distributed plan must read the stored artifacts, not
+    // re-shingle the corpus — proven on the lazy builder (the public
+    // path materializes eagerly to scope its cache, which collapses the
+    // executed plan)
     graft.functions.GraftFunctions.register(spark)
     val lazyPlan = Dedup.neardupAgainstIndexPlan(
       Dedup.shingleHashes(batch), w, "docs", 0.8, Dedup.DefaultMaxBucket)
       .queryExecution.executedPlan.toString
     assert(lazyPlan.contains("docs__bands"),
       "incremental path does not read the band index")
-    val got = incr.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // ground truth: the one-shot near-dup over everything, restricted to
-    // cross pairs, re-oriented to (corpus side, batch side)
-    val want = Dedup.minhashNeardupMaterialized(all, threshold = 0.8).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .collect {
-        case (a, b, j) if a % 10 != 0 && b % 10 == 0 => (a, b, j)
-        case (a, b, j) if a % 10 == 0 && b % 10 != 0 => (b, a, j)
-      }.toSet
-    assert(want.nonEmpty, "fixture has no cross near-dup pair — test is vacuous")
-    assert(got == want, s"missed ${want -- got}, extra ${got -- want}")
+    // under both bounds: 0 forces the distributed plans, the default
+    // takes the driver-side verify and probe (the fixture is well under
+    // Dedup.LocalMaxShingleRows)
+    for (bound <- Seq(0L, Dedup.LocalMaxShingleRows)) {
+      val got = Dedup.neardupAgainstIndexBounded(batch, w, "docs", 0.8, Dedup.DefaultMaxBucket, bound)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      // ground truth: the one-shot near-dup over everything, restricted
+      // to cross pairs, re-oriented to (corpus side, batch side)
+      val want = Dedup.minhashNeardupBounded(all, 0.8, Dedup.DefaultMaxBucket, bound)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .collect {
+          case (a, b, j) if a % 10 != 0 && b % 10 == 0 => (a, b, j)
+          case (a, b, j) if a % 10 == 0 && b % 10 != 0 => (b, a, j)
+        }.toSet
+      assert(want.nonEmpty, "fixture has no cross near-dup pair — test is vacuous")
+      assert(got == want, s"bound $bound: missed ${want -- got}, extra ${got -- want}")
+    }
   }
 
   test("vocabulary: exact counts, deterministic tie cut, bounded top-N plan") {
