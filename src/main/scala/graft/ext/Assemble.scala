@@ -65,7 +65,10 @@ object Assemble {
       salt: String = "split-v1"): DataFrame =
     docs.withColumn("split", splitColumn(trainPermille, valPermille, salt))
 
-  /** Every value the split column takes. */
+  /** Every value the split column takes, in [[splitColumn]]'s order:
+    * the first `trainPermille` buckets, the next `valPermille`, the
+    * rest. The column is built from this list, so a consumer that
+    * enumerates splits (the prep funnel) can never miss one. */
   val SplitNames: Seq[String] = Seq("train", "val", "test")
 
   /** The [[hashSplit]] assignment as a column — shared with
@@ -76,9 +79,10 @@ object Assemble {
     require(trainPermille >= 0 && valPermille >= 0 &&
       trainPermille + valPermille <= 1000, "permille thresholds must fit in [0, 1000]")
     val b = bucket(col("text"), salt, 1000)
-    when(b < trainPermille, lit("train"))
-      .when(b < trainPermille + valPermille, lit("val"))
-      .otherwise(lit("test"))
+    val Seq(train, valSplit, test) = SplitNames.map(lit)
+    when(b < trainPermille, train)
+      .when(b < trainPermille + valPermille, valSplit)
+      .otherwise(test)
   }
 
   /** Split balance audit: does the content-hash split skew sources?

@@ -568,23 +568,34 @@ object Dedup {
       threshold: Double = 0.8,
       maxBucket: Int = DefaultMaxBucket,
       localMaxShingleRows: Long = LocalMaxShingleRows): DataFrame =
-    collectShingles(hs, localMaxShingleRows) match {
-      case Some(rows) =>
-        val docs = LocalShingles.of(rows)
-        val buckets = scala.collection.mutable.HashMap.empty[(Int, Long), List[Long]]
-        docs.foreach { case (d, s) =>
-          s.bandKeys.zipWithIndex.foreach { case (bh, j) =>
-            buckets((j, bh)) = d :: buckets.getOrElse((j, bh), Nil)
-          }
-        }
-        val cand = buckets.valuesIterator.filter(_.size <= maxBucket)
-          .flatMap(ms => for (a <- ms; b <- ms if a < b) yield (a, b))
-          .toSet
-        localPairs(hs.sparkSession, cand.iterator.flatMap { case (a, b) =>
-          docs(a).jaccard(docs(b), docs(a).size, docs(b).size).map((a, b, _))
-        }, threshold)
-      case None => neardupFrom(hs, threshold, maxBucket).localCheckpoint(true)
+    collectShingles(hs, localMaxShingleRows)
+      .flatMap(rows => verifyLocal(hs.sparkSession, LocalShingles.of(rows), threshold, maxBucket))
+      .getOrElse(neardupFrom(hs, threshold, maxBucket).localCheckpoint(true))
+
+  /** The driver-side verify of [[minhashNeardupFromShingles]]: band
+    * buckets, the [[BucketCap]] guard, candidates and exact Jaccard over
+    * collected shingles. None when the kept buckets would enumerate more
+    * than [[StarLocalMaxEdges]] candidate collisions (Σ C(|bucket|, 2),
+    * a pair counted once per band it shares) — a few thousand templated
+    * near-twins fit in the row bound yet give millions of pairs, which
+    * stay distributed. */
+  private def verifyLocal(
+      spark: SparkSession, docs: Map[Long, LocalShingles],
+      threshold: Double, maxBucket: Int): Option[DataFrame] = {
+    val buckets = docs.toSeq
+      .flatMap { case (d, s) => s.bandKeys.zipWithIndex.map { case (bh, j) => (j, bh) -> d } }
+      .groupMap(_._1)(_._2).values.filter(_.size <= maxBucket)
+    if (buckets.iterator.map(b => b.size.toLong * (b.size - 1) / 2).sum > StarLocalMaxEdges)
+      None
+    else {
+      val cand = buckets.iterator
+        .flatMap(ms => for (a <- ms; b <- ms if a < b) yield (a, b))
+        .toSet
+      Some(localPairs(spark, cand.iterator.flatMap { case (a, b) =>
+        docs(a).jaccard(docs(b), docs(a).size, docs(b).size).map((a, b, _))
+      }, threshold))
     }
+  }
 
   private def neardupFrom(hs: DataFrame, threshold: Double, maxBucket: Int): DataFrame = {
     val sizes = hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
@@ -594,22 +605,22 @@ object Dedup {
   }
 
   /** Below this many (doc_id, h) shingle rows the MinHash verify
-    * ([[minhashNeardupMaterialized]]), the stored-index probe
-    * ([[neardupAgainstIndex]]) and the index's artifact frames
-    * ([[MinhashIndexFamily]]) run DRIVER-SIDE — the bounded collect
+    * ([[minhashNeardupMaterialized]]) and the stored-index probe
+    * ([[neardupAgainstIndex]]) run DRIVER-SIDE — the bounded collect
     * class of [[StarLocalMaxEdges]] (centroids, codebooks, Bloom
-    * words): 200k rows are ≈ 3.2 MB of longs, and every read is bounded
-    * ([[collectAtMost]]: no task ships more than the bound, and the
-    * driver drops results once their total passes it), so an over-bound
-    * input never lands on the driver. A batch-sized input otherwise pays
-    * the distributed plan's fixed cost — under AQE every exchange of
-    * the banding self-join, the bucket-cap window and the verify joins
-    * is its own job, so a 265-doc increment spent 24 jobs on the
+    * words). Every driver read is [[collectAtMost]], bounded by its
+    * TOTAL: 200k rows are ≈ 3.2 MB of longs, ≈ 10 MB as shipped rows,
+    * and an over-bound input never lands on the driver. The candidate
+    * pairs the driver enumerates are bounded separately, by
+    * [[StarLocalMaxEdges]] collisions. A batch-sized input otherwise
+    * pays the distributed plan's fixed cost — under AQE every exchange
+    * of the banding self-join, the bucket-cap window and the verify
+    * joins is its own job, so a 265-doc increment spent 24 jobs on the
     * within-batch verify and 19 on the index probe. The driver path
     * computes the same 64 minhashes, 16 band keys, bucket cap,
     * candidates and multiset intersection with the same hash chain
-    * ([[LocalShingles]]), so its pair set is bit-identical; an
-    * over-bound input, or a bound of 0 (the force-distributed switch
+    * ([[LocalShingles]]), so its pair set is bit-identical; an input
+    * over either bound, or a bound of 0 (the force-distributed switch
     * the equality spec uses), takes the distributed plan. */
   val LocalMaxShingleRows = 200000L
 
@@ -624,23 +635,32 @@ object Dedup {
       .filter(_.forall(!_.isNullAt(0)))
       .map(_.map(r => (r.getLong(0), r.getLong(1))))
 
-  /** `df`'s rows when it has at most `maxRows`, else None — ONE job:
-    * each task returns at most `maxRows + 1` rows and the driver keeps
-    * results only while their running total is within the bound, so an
-    * over-full input costs at most two bounds of driver memory, never
-    * its size. */
-  private def collectAtMost(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
-    val cap = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
+  /** `df`'s rows when it has at most `maxRows`, else None, with what
+    * reaches the driver bounded by the TOTAL, not per task: each of the
+    * n tasks ships its rows only when they fit its share ⌈maxRows / n⌉,
+    * else just its count. One job when the rows spread evenly; when the
+    * counts sum within the bound but some partitions overflowed their
+    * share (a small, skewed input), a second job fetches exactly those.
+    * The driver never holds more than ≈ maxRows + n rows, and an
+    * over-bound input costs one counting pass. */
+  private[graft] def collectAtMost(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
     val rdd = df.rdd
-    val parts = new Array[Array[Row]](rdd.getNumPartitions)
-    var total = 0L
-    df.sparkSession.sparkContext.runJob(rdd,
-      (it: Iterator[Row]) => it.take(cap).toArray,
-      (i: Int, rows: Array[Row]) => {
-        total += rows.length
-        if (total <= maxRows) parts(i) = rows
-      })
-    if (total > maxRows) None else Some(parts.flatten)
+    val sc = df.sparkSession.sparkContext
+    val share = (maxRows + rdd.getNumPartitions - 1) / math.max(rdd.getNumPartitions, 1)
+    val counted = sc.runJob(rdd, (it: Iterator[Row]) => {
+      val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var n = 0L
+      it.foreach { r => if (n < share) kept += r; n += 1 }
+      (n, if (n <= share) kept.toArray else Array.empty[Row])
+    })
+    if (counted.iterator.map(_._1).sum > maxRows) None
+    else {
+      val over = counted.indices.filter(i => counted(i)._1 > share)
+      val fetched =
+        if (over.isEmpty) Map.empty[Int, Array[Row]]
+        else over.zip(sc.runJob(rdd, (it: Iterator[Row]) => it.toArray, over)).toMap
+      Some(counted.indices.flatMap(i => fetched.getOrElse(i, counted(i)._2)).toArray)
+    }
   }
 
   /** One document's shingle multiset on the driver: distinct hashes
@@ -1409,17 +1429,7 @@ object Dedup {
     * 16 bytes for the shingle table); re-shingling the corpus per batch
     * would instead re-pay the full text parse on every ingest tick. One
     * persisted shingle parse feeds all three writes. */
-  object MinhashIndex extends MinhashIndexFamily(LocalMaxShingleRows)
-
-  /** [[MinhashIndex]] with the driver-side bound of its parse, verify and
-    * probe explicit ([[LocalMaxShingleRows]]; 0 forces the distributed
-    * plans — the equality spec's switch). Below the bound the three
-    * artifact frames are computed on the driver from the collected
-    * shingle rows and written as single-file local frames — no
-    * aggregate jobs; the values and schemas are the distributed
-    * frames'. */
-  class MinhashIndexFamily private[graft] (localMaxShingleRows: Long)
-      extends NeardupIndex[Double] with GrowingIndex.NoSidecar {
+  object MinhashIndex extends NeardupIndex[Double] with GrowingIndex.NoSidecar {
     val artifacts = Seq("__shingles", "__sizes", "__bands")
     val idCol = "doc_id"
     val defaultThreshold = 0.8
@@ -1428,33 +1438,18 @@ object Dedup {
       val hs = shingleHashes(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val sizes = hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-        val bandRows = minhashBandsFrom(hs)
-        collectShingles(hs, localMaxShingleRows) match {
-          case Some(rows) =>
-            val byDoc = LocalShingles.of(rows).toSeq.sortBy(_._1)
-            def local(like: DataFrame, rows: Seq[Row]): DataFrame =
-              localFrame(hs.sparkSession, like.schema, rows).coalesce(1)
-            emit(local(hs, rows.toSeq.map { case (d, h) => Row(d, h) }))
-            emit(local(sizes, byDoc.map { case (d, s) => Row(d, s.size) }))
-            emit(local(bandRows, byDoc.flatMap { case (d, s) =>
-              s.bandKeys.zipWithIndex.map { case (bh, j) => Row(d, j, bh) }
-            }))
-          case None =>
-            emit(hs)
-            emit(sizes)
-            emit(bandRows)
-        }
+        emit(hs)
+        emit(hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")))
+        emit(minhashBandsFrom(hs))
       } finally hs.unpersist(blocking = false)
     }
 
     protected def pairsWithin(batch: DataFrame, threshold: Double): DataFrame =
-      minhashNeardupBounded(batch, threshold, DefaultMaxBucket, localMaxShingleRows)
+      minhashNeardupMaterialized(batch, threshold)
 
     protected def pairsAgainst(batch: DataFrame, writer: graft.sinks.StagingWriter,
         table: String, threshold: Double): DataFrame =
-      neardupAgainstIndexBounded(batch, writer, table, threshold, DefaultMaxBucket,
-        localMaxShingleRows)
+      neardupAgainstIndex(batch, writer, table, threshold)
   }
 
   /** Incremental near-dup: pairs (a_id = indexed corpus doc, b_id = new
@@ -1477,8 +1472,9 @@ object Dedup {
     * cap counts whole buckets), then `__sizes` and `__shingles`
     * semi-joined with the candidate `a_id`s — each semi-join a
     * membership filter inside the scan, so nothing of the standing
-    * index is shuffled or broadcast. A larger batch or a stored read
-    * over the bound runs the distributed plan
+    * index is shuffled or broadcast. A larger batch, a stored read
+    * over the bound, or touched buckets that would give more than
+    * [[StarLocalMaxEdges]] candidate collisions run the distributed plan
     * ([[neardupAgainstIndexPlan]], the batch's bands broadcast into the
     * stored band scan). */
   def neardupAgainstIndex(
@@ -1514,7 +1510,8 @@ object Dedup {
   }
 
   /** The driver-side probe of [[neardupAgainstIndex]]; None when the
-    * index's ids are not LONG or a stored read exceeds `maxRows`. Each
+    * index's ids are not LONG, a stored read exceeds `maxRows` or the
+    * candidates exceed [[StarLocalMaxEdges]] collisions. Each
     * stored read is a semi-join by a membership filter over the
     * driver's key set, evaluated inside the scan: no exchange, and no
     * broadcast build job (an `isin` literal list would cost analysis
@@ -1545,10 +1542,15 @@ object Dedup {
       .filter(udf((j: Int, bh: Long) => keys((j, bh))).apply(col("band"), col("band_hash")))
       .select(col("band"), col("band_hash"), col("doc_id")), maxRows)
       .filter(_.forall(!_.isNullAt(2)))
-      .flatMap { stored =>
-        val members = stored.map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2)))
-          .groupMap(_._1)(_._2)
-          .filter(_._2.length <= maxBucket)
+      .map(_.map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2)))
+        .groupMap(_._1)(_._2)
+        .filter(_._2.length <= maxBucket))
+      // the (stored, batch) collisions the candidate list would hold stay
+      // under the verify's candidate bound
+      .filter(members => keyed.iterator
+        .map { case (k, _) => members.get(k).fold(0L)(_.length.toLong) }
+        .sum <= StarLocalMaxEdges)
+      .flatMap { members =>
         val cand = keyed.flatMap { case (k, b) =>
           members.getOrElse(k, Array.empty[Long]).map((_, b))
         }.distinct
@@ -1645,11 +1647,13 @@ object Dedup {
     * scheduling overhead for work a μs-scale union-find finishes
     * instantly. 100k edges ≈ 1.6 MB on the driver — the bounded
     * collect class (centroids/codebooks/Bloom words, and the MinHash
-    * verify and index probe under [[LocalMaxShingleRows]]), never a
-    * data-scale pull: the bound is CHECKED against the observe-metric
-    * seed count before any collect, or against the row count of a
-    * LOCAL pair frame (the driver-side verify's output), which is
-    * labeled without a single Spark job. Labeling is identical by
+    * verify and index probe under [[LocalMaxShingleRows]], whose
+    * candidate collisions this same bound caps), never a data-scale
+    * pull: the bound is CHECKED against the observe-metric seed count
+    * before any collect, or against the row count of a LOCAL pair frame
+    * (the driver-side verify's output — never more rows than the
+    * bound, as its candidates were capped by it), which is labeled
+    * without a single Spark job. Labeling is identical by
     * construction (component = min reachable id; spec cross-proves
     * threshold-0 vs default on chain/star/clique graphs). */
   val StarLocalMaxEdges = 100000L

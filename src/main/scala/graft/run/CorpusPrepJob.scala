@@ -30,16 +30,17 @@ import graft.sources.JsonlIngest
   * Scale shape: the corpus flows through narrow projections and the
   * operators' own bounded shuffles. The text-bearing stages that feed
   * multiple consumers are materialized once each (the normalized batch
-  * persisted and RELEASED in a finally, the sourceDrift ownership
-  * convention; the dedup survivors checkpointed); the near-dup pair
+  * persisted, the dedup survivors checkpointed) and RELEASED in a
+  * finally (the sourceDrift ownership convention); the near-dup pair
   * set is materialized once ([[Dedup.minhashNeardupMaterialized]]);
   * everything durable lands in the warehouse via the staging writer.
   * The driver receives the funnel counts (observe metrics, one per
   * stage) and, only through the bounded collect class, narrow integer
   * rows: (doc_id, shingle hash) rows and the stored index rows a probe
-  * touches, each at most [[Dedup.LocalMaxShingleRows]] (≈ 3.2 MB), and
-  * near-dup edges under [[Dedup.StarLocalMaxEdges]]. Above a bound the
-  * step runs distributed; text never reaches the driver.
+  * touches, at most [[Dedup.LocalMaxShingleRows]] per read in total
+  * (≈ 10 MB as shipped rows), and candidate pairs and near-dup edges
+  * under [[Dedup.StarLocalMaxEdges]]. Above a bound the step runs
+  * distributed; text never reaches the driver.
   */
 object CorpusPrepJob {
 
@@ -158,37 +159,46 @@ object CorpusPrepJob {
     *
     *   - `standing`: applied to the exact-dedup survivors before they
     *     are materialized (the increment's standing-corpus anti-join);
-    *   - `history`: the ids to drop from the near-dup rewrite's
-    *     (materialized) survivors (the increment's stored-index probe);
+    *   - `history`: near-dup pairs (b_id = survivor) of the rewrite's
+    *     survivors against earlier data (the increment's stored-index
+    *     probe); given one, the survivors are materialized before and
+    *     after it, as the probe, its anti-join and the landing read
+    *     them; without one they stay lazy and one narrow job counts them;
     *   - `land`: where the split frame lands.
     *
-    * Every funnel count rides, as an observe metric, the action that
-    * materializes its stage anyway: `1_raw` and `2_gate_passed` the
-    * gate checkpoint, `2b_blocklist_passed` and `3_exact_unique` the
-    * exact-dedup materialization, `4_neardup_kept` the near-dup
-    * survivors' and `5_clean` plus the `6_split_*` rows the landing —
-    * no separate funnel query. Those stages are local checkpoints, not
-    * persists: a cached plan keeps its shuffle partitioning, while AQE
-    * coalesces a checkpoint's, and the slice writes' file counts follow
-    * it. `finish` receives the landed frame and the funnel and runs
-    * inside the chain's scope: the normalized batch, which the gate and
-    * exact dedup both read, is persisted here and RELEASED in the
-    * finally (the sourceDrift ownership convention). */
+    * Every other funnel count rides, as an observe metric, an action
+    * that runs anyway: `1_raw` and `2_gate_passed` the gate checkpoint,
+    * `2b_blocklist_passed` and `3_exact_unique` the exact-dedup
+    * checkpoint, `4_neardup_kept` the probe survivors' checkpoint, and
+    * `5_clean` and the `6_split_*` rows the landing — no separate
+    * funnel query. The stages are local checkpoints, not persists: a
+    * cached plan keeps its shuffle partitioning, while AQE coalesces a
+    * checkpoint's, and the slice writes' file counts follow it.
+    * `finish` receives the landed frame and the funnel and runs inside
+    * the chain's scope: the normalized batch (persisted) and every
+    * checkpoint the chain made, the landed frame's included, are
+    * RELEASED in the finally (the sourceDrift ownership convention) —
+    * nothing lingers in the session's storage until a driver GC lets
+    * the context cleaner find it. */
   private def stages[A](
       docs: DataFrame, evalDocs: DataFrame, cfg: PrepConfig, localMaxShingleRows: Long)(
       standing: DataFrame => DataFrame,
       history: Option[DataFrame => DataFrame],
       land: DataFrame => DataFrame)(
       finish: (DataFrame, DataFrame) => A): A = {
+    val owned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // no observed count may sit where AQE can prune it at runtime (the
+    // side of an anti-join that turns out empty): its Observation would
+    // complete with no row at all
     def observed(df: DataFrame): (DataFrame, Observation) = {
       val obs = Observation()
       (df.observe(obs, count(lit(1)).as("n")), obs)
     }
     def n(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
-    def checkpointed(df: DataFrame): (DataFrame, Long) = {
-      val (o, obs) = observed(df)
-      val cp = o.localCheckpoint(true)
-      (cp, n(obs))
+    def checkpointed(df: DataFrame): DataFrame = {
+      val cp = df.localCheckpoint(true)
+      owned += cp
+      cp
     }
     val landed =
       if (cfg.htmlInput) docs.withColumn("text", TextStats.htmlToText(col("text")))
@@ -203,7 +213,7 @@ object CorpusPrepJob {
       // on the increment: ~0.6 s slower per tick)
       val (gateIdsLazy, gatePassed) = observed(TextStats.gopherRules(normalized)
         .filter(col("passes")).select("doc_id"))
-      val gateIds = gateIdsLazy.localCheckpoint(true)
+      val gateIds = checkpointed(gateIdsLazy)
       val (gated, blocklistPassed) = {
         val gated0 = normalized.join(gateIds, "doc_id")
         // optional C4 blocklist gate — empty list leaves the frame (and
@@ -221,11 +231,12 @@ object CorpusPrepJob {
       // shuffle on the hash; dup groups are tiny. Materialized here, so
       // the near-dup step's own jobs start from stored rows: it feeds
       // the pair set, the component join and the rewrite.
-      val (exactKept, nExact) = {
+      val (exactKeptLazy, nExact) = {
         val byHash = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-        checkpointed(standing(gated.withColumn("__rn", row_number().over(byHash))
+        observed(standing(gated.withColumn("__rn", row_number().over(byHash))
           .filter(col("__rn") === 1).drop("__rn")))
       }
+      val exactKept = checkpointed(exactKeptLazy)
       // near-dup pairs → components (star contraction — label-identical
       // to min-label propagation, spec-proved, but O(log n) rounds where
       // a boilerplate chain stalls min-label) → canonical keeper;
@@ -233,11 +244,20 @@ object CorpusPrepJob {
       // once and also feeds the audit rows.
       val pairs = Dedup.minhashNeardupBounded(exactKept, cfg.neardupThreshold,
         Dedup.DefaultMaxBucket, localMaxShingleRows)
-      val dropIds = Dedup.nonKeepers(exactKept, Dedup.dupComponentsStar(pairs))
-      val within = checkpointed(exactKept.join(dropIds, Seq("doc_id"), "left_anti"))
-      val (neardupKept, nKept) = history.fold(within) { drops =>
-        val (kept, _) = within
-        checkpointed(kept.join(drops(kept), Seq("doc_id"), "left_anti"))
+      owned += pairs
+      val within = exactKept.join(
+        Dedup.nonKeepers(exactKept, Dedup.dupComponentsStar(pairs)), Seq("doc_id"), "left_anti")
+      val (neardupKept, nKept) = history match {
+        // the survivors stay lazy — the landing is their only reader —
+        // and are counted by one narrow job
+        case None => (within, within.count())
+        case Some(against) =>
+          val kept = checkpointed(within)
+          val found = against(kept)
+          owned += found
+          val (survivors, obs) =
+            observed(kept.join(found.select(col("b_id").as("doc_id")), Seq("doc_id"), "left_anti"))
+          (checkpointed(survivors), n(obs))
       }
 
       // benchmark decontamination over the deduped survivors
@@ -254,15 +274,28 @@ object CorpusPrepJob {
         clean, cfg.trainPermille, cfg.valPermille, cfg.splitSalt)
         .observe(landObs, count(lit(1)).as("5_clean"),
           Assemble.SplitNames.map(s => count(when(col("split") === s, 1)).as(s)): _*))
+      owned += split
       val landCounts = landObs.get
       val counts = Seq("1_raw" -> n(raw), "2_gate_passed" -> n(gatePassed)) ++
         blocklistPassed.map(o => "2b_blocklist_passed" -> n(o)) ++
-        Seq("3_exact_unique" -> nExact, "4_neardup_kept" -> nKept,
+        Seq("3_exact_unique" -> n(nExact), "4_neardup_kept" -> nKept,
           "5_clean" -> landCounts("5_clean").asInstanceOf[Long]) ++
         Assemble.SplitNames.sorted.map(s => s"6_split_$s" -> landCounts(s).asInstanceOf[Long])
           .filter(_._2 > 0)
       finish(split, funnel(cfg, split.sparkSession, counts, split, pairs))
-    } finally normalized.unpersist(blocking = false)
+    } finally {
+      normalized.unpersist(blocking = false)
+      owned.foreach(release)
+    }
+  }
+
+  /** Drop a local checkpoint's blocks now. A checkpointed frame's plan
+    * is the `LogicalRDD` over the checkpointed RDD, whose blocks
+    * otherwise stay in executor storage until a driver GC lets the
+    * context cleaner find them; any other frame is left alone. */
+  private def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 
   /** The funnel: one `(stage, n_docs)` row per stage from the counts the
@@ -412,8 +445,8 @@ object CorpusPrepJob {
       batchId: Option[Long] = None): PrepReport =
     incrementBounded(newDocs, evalDocs, writer, cfg, batchId, Dedup.LocalMaxShingleRows)
 
-  /** [[increment]] with the driver-side bound of its MinHash verify,
-    * index probe and index append explicit
+  /** [[increment]] with the driver-side bound of its MinHash verify and
+    * index probe explicit
     * ([[Dedup.LocalMaxShingleRows]]); 0 forces the distributed plans —
     * the spec's equality switch. */
   private[graft] def incrementBounded(
@@ -441,8 +474,7 @@ object CorpusPrepJob {
       // local frame, so the chain's anti-join plans as a broadcast
       history = Some(batchKept =>
         Dedup.neardupAgainstIndexBounded(batchKept, writer, IndexTable,
-          cfg.neardupThreshold, Dedup.DefaultMaxBucket, localMaxShingleRows)
-          .select(col("b_id").as("doc_id"))),
+          cfg.neardupThreshold, Dedup.DefaultMaxBucket, localMaxShingleRows)),
       // eager before the appends: the writes must see ONE evaluation
       // of the batch chain, and the corpus append must not re-read the
       // corpus it is appending to via the anti-join lineage. The
@@ -451,15 +483,14 @@ object CorpusPrepJob {
       // against a corpus that now contains this batch's own survivors
       // and report them as duplicates.
       land = _.localCheckpoint(true)) { (withSplit, funnel) =>
-      val index = new Dedup.MinhashIndexFamily(localMaxShingleRows)
       batchId match {
         case Some(id) =>
           writer.appendBatchSlice(withSplit, CorpusTable, id)
-          index.appendBatchSlice(withSplit, writer, IndexTable, id)
+          Dedup.MinhashIndex.appendBatchSlice(withSplit, writer, IndexTable, id)
           writer.commitBatch(CorpusTable, id) // the tick's commit point
         case None =>
           writer.write(withSplit, CorpusTable, append = true)
-          index.append(withSplit, writer, IndexTable)
+          Dedup.MinhashIndex.append(withSplit, writer, IndexTable)
       }
       report(funnel, Seq(CorpusTable, IndexTable))
     }

@@ -14,8 +14,10 @@ import graft.sinks.StagingWriter
   * plans) and at its default (the driver path) and must give the same
   * rows — pair sets, funnels, corpus slices and index slices (the probe
   * alone is pinned under both bounds in ExtSpec's "equals the one-shot
-  * join's cross pairs"). The job budget pins what the driver path buys
-  * an increment. */
+  * join's cross pairs"). The two bounds that keep the driver path
+  * small — rows per collect, counted in total, and candidate collisions
+  * — are pinned on inputs over them, and the job budget pins what the
+  * driver path buys an increment. */
 class BoundedNeardupSpec extends SparkSpec {
 
   private val Bounds = Seq(0L, Dedup.LocalMaxShingleRows)
@@ -59,6 +61,82 @@ class BoundedNeardupSpec extends SparkSpec {
       (2000004L, 2000005L)).subsetOf(pairs), s"planted pairs missing: $pairs")
     assert(!pairs.exists { case (a, b) => a >= 1000000L && b < 2000000L },
       "the capped bucket produced pairs")
+  }
+
+  /** Bytes the driver received as task results (accumulator updates
+    * included) from the bounded collect's own jobs while `f` ran. */
+  private def collectBytes[T](f: => T): (T, Long) = {
+    val names = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val bytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        names.put(e.stageInfo.stageId, e.stageInfo.name)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (Option(names.get(e.stageId)).exists(_.startsWith("runJob at Dedup.scala")))
+          bytes.addAndGet(Option(e.taskMetrics).fold(0L)(_.resultSize))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val r = try {
+      val r = f
+      // the listener bus is async — wait until the total is stable
+      var last = -1L
+      while (bytes.get() != last) { last = bytes.get(); Thread.sleep(200) }
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (r, bytes.get())
+  }
+
+  test("bounded collect: the driver receives at most the bound in total, however " +
+    "many partitions; a skewed input within the bound is still collected") {
+    val ids = spark.range(0, 200000, 1, 32).toDF("id")
+    val (all, allBytes) = collectBytes(Dedup.collectAtMost(ids, 200000))
+    assert(all.map(_.map(_.getLong(0)).toSeq) == Some(0L until 200000L))
+    // 32 partitions of 6,250 rows, each within a per-task bound of
+    // 50,001: only the counts may come back, never the rows
+    val (over, overBytes) = collectBytes(Dedup.collectAtMost(ids, 50000))
+    assert(over.isEmpty)
+    assert(overBytes * 10 < allBytes, s"over-bound input shipped $overBytes of $allBytes bytes")
+    // every row in one partition of eight: over its share, within the bound
+    import spark.implicits._
+    val skewed = spark.sparkContext.parallelize(0 until 8, 8)
+      .flatMap(p => if (p == 0) 0L until 1000L else Nil).toDF("id")
+    assert(skewed.rdd.getNumPartitions == 8)
+    assert(Dedup.collectAtMost(skewed, 1000).map(_.map(_.getLong(0)).toSeq) ==
+      Some(0L until 1000L))
+    assert(Dedup.collectAtMost(skewed, 999).isEmpty)
+    // end to end: an over-bound verify over many partitions falls back
+    val parts = docs.repartition(32)
+    val rows = Dedup.shingleHashes(parts).count()
+    val Seq(dist, fellBack) = Seq(0L, rows / 4).map(b =>
+      Dedup.minhashNeardupBounded(parts, 0.8, Dedup.DefaultMaxBucket, b))
+    assert(!fellBack.isLocal, "an over-bound verify took the driver path")
+    assert(sorted(fellBack) == sorted(dist))
+  }
+
+  test("candidate bound: buckets under the cap whose pairs exceed StarLocalMaxEdges " +
+    "stay distributed, with the same pairs") {
+    import spark.implicits._
+    def same(ids: Range, text: String): DataFrame =
+      ids.map(i => (i.toLong, text)).toDF("doc_id", "text")
+    val text = "alpha beta gamma delta epsilon"
+    // 200 copies: C(200, 2) = 19,900 pairs in each of 16 band buckets
+    val twins = same(1 to 200, text)
+    val Seq(dist, local) = Bounds.map(b =>
+      Dedup.minhashNeardupBounded(twins, 0.8, Dedup.DefaultMaxBucket, b))
+    assert(!local.isLocal, "the driver enumerated 318,400 candidate collisions")
+    assert(sorted(local) == sorted(dist) && dist.count() == 19900L)
+    assert(Dedup.minhashNeardupMaterialized(same(1 to 20, text)).isLocal,
+      "a small bucket left the driver path")
+    // the probe: 40 batch docs × 16 bands × a stored bucket of 200
+    val w = new StagingWriter(spark, tmpDir("candbound"))
+    Dedup.MinhashIndex.build(twins, w, "docs")
+    for ((batch, local) <- Seq(same(1001 to 1040, text) -> false, same(1001 to 1010, text) -> true)) {
+      val Seq(d, l) = Bounds.map(b =>
+        Dedup.neardupAgainstIndexBounded(batch, w, "docs", 0.8, Dedup.DefaultMaxBucket, b))
+      assert(l.isLocal == local, s"${batch.count()} batch docs: local = ${l.isLocal}")
+      assert(sorted(l) == sorted(d) && d.count() == 200L * batch.count())
+    }
   }
 
   /** Three batches over a standing corpus built from the odd-id half of
@@ -115,13 +193,48 @@ class BoundedNeardupSpec extends SparkSpec {
     tables.foreach(t => assert(localTables(t) == distTables(t), s"$t slices drifted"))
   }
 
+  test("degenerate batches report zero counts, not missing ones") {
+    // each funnel count is an observe metric; a batch whose stages run
+    // empty must still report every stage (AQE prunes empty subtrees)
+    val w = new StagingWriter(spark, tmpDir("degenerate"))
+    val standing = docs.filter(col("doc_id") % 2 === 1)
+    CorpusPrepJob.run(standing, evalDocs, w, PrepConfig(exports = false))
+    val fresh = docs.filter(col("doc_id") % 2 === 0).limit(20)
+      .select("doc_id", "text", "lang", "source")
+    val copies = standing.limit(20).select(col("doc_id") + 9000000L as "doc_id",
+      col("text"), col("lang"), col("source"))
+    val empty = fresh.limit(0)
+    val blocked = fresh.select(col("doc_id"), concat(col("text"), lit(" zzblocked")).as("text"),
+      col("lang"), col("source"))
+    for (b <- Bounds; ((batch, cfg), i) <- Seq(
+        (copies, PrepConfig()), (empty, PrepConfig()),
+        (blocked, PrepConfig(blocklist = Seq("zzblocked")))).zipWithIndex) {
+      val r = CorpusPrepJob.incrementBounded(batch, evalDocs, w, cfg, None, b)
+      val want = Seq("1_raw", "2_gate_passed", "3_exact_unique", "4_neardup_kept", "5_clean") ++
+        cfg.blocklist.map(_ => "2b_blocklist_passed")
+      assert(want.forall(r.stageCounts.contains), s"batch $i, bound $b: ${r.stageCounts}")
+      assert(r.stageCounts("3_exact_unique") == 0L && r.stageCounts("5_clean") == 0L,
+        s"batch $i, bound $b: ${r.stageCounts}")
+    }
+  }
+
   test("increment job budget: a warm batch runs a bounded number of jobs, " +
     "and no Dedup call site shuffles on the driver path") {
     val wh = tmpDir("boundjobs")
     val w = new StagingWriter(spark, wh)
-    CorpusPrepJob.run(docs.filter(col("doc_id") % 2 === 1), evalDocs, w,
-      PrepConfig(exports = false))
-    CorpusPrepJob.increment(batches.head, evalDocs, w, batchId = Some(1L)) // warm
+    // the stage chain releases every block it stored: nothing is left
+    // cached or checkpointed for the context cleaner to find later
+    def stored = spark.sparkContext.getPersistentRDDs.keySet
+    def leavesNothing(what: String)(f: => Unit): Unit = {
+      val before = stored.toSet
+      f
+      val left = stored.toSet -- before
+      assert(left.isEmpty, s"$what left blocks behind: $left")
+    }
+    leavesNothing("run")(CorpusPrepJob.run(docs.filter(col("doc_id") % 2 === 1), evalDocs, w,
+      PrepConfig(exports = false)))
+    leavesNothing("increment")( // warm
+      CorpusPrepJob.increment(batches.head, evalDocs, w, batchId = Some(1L)))
     // ~265 docs, the perfbench batch size: the other half of the sf0.01
     // fixture under fresh ids, plus the planted copies and twins
     val big = batch(1, spark.read.parquet(sf.replace("sf0.001", "sf0.01") + "/documents.parquet")
