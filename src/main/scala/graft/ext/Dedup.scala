@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 
 /** Deduplication operators over the `documents` table — the
   * LLM-training-data half of the engine (SURVEY.md §7.1 step 9; the
@@ -267,16 +268,6 @@ object Dedup {
   def bandingMissProb(s: Double): Double =
     math.pow(1.0 - math.pow(s, rowsPerBand), bands)
 
-  /** doc_id + the 16 LSH band keys, exploded to (doc_id, band, band_hash).
-    * Signature slot i = min over shingles of xxhash64(shingleHash, i) —
-    * seeded re-hashing instead of affine permutations, because wrapping
-    * long multiplication trips ANSI overflow checks and xxhash64 mixes
-    * better anyway. Each band hashes `rowsPerBand` consecutive slots.
-    *
-    * Computed as explode → groupBy(doc_id) with 64 min aggregates:
-    * hash + min run inside whole-stage codegen with map-side partial
-    * aggregation, an order of magnitude faster than per-document
-    * higher-order-function traversals (which are interpreted). */
   /** Exploded (doc_id, shingleHash) rows — the shared intermediate of
     * the MinHash pipeline (n = 3) and the decontamination semi-join
     * (n = 13). */
@@ -477,9 +468,16 @@ object Dedup {
     } finally trainHs.unpersist(blocking = false)
   }
 
-  def minhashBands(docs: DataFrame): DataFrame =
-    minhashBandsFrom(shingleHashes(docs))
-
+  /** doc_id + the 16 LSH band keys, exploded to (doc_id, band, band_hash).
+    * Signature slot i = min over shingles of xxhash64(shingleHash, i) —
+    * seeded re-hashing instead of affine permutations, because wrapping
+    * long multiplication trips ANSI overflow checks and xxhash64 mixes
+    * better anyway. Each band hashes `rowsPerBand` consecutive slots.
+    *
+    * Computed as explode → groupBy(doc_id) with 64 min aggregates:
+    * hash + min run inside whole-stage codegen with map-side partial
+    * aggregation, an order of magnitude faster than per-document
+    * higher-order-function traversals (which are interpreted). */
   private def minhashBandsFrom(hs: DataFrame): DataFrame = {
     val mins = (0 until numHashes).map(i => min(xxhash64(col("h"), lit(i))).as(s"m$i"))
     val bandHashes = array((0 until bands).map { j =>
@@ -504,7 +502,8 @@ object Dedup {
 
   /** Dropped-bucket report for [[minhashCandidates]]'s cap. */
   def minhashCapReport(docs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame =
-    BucketCap.droppedReport(minhashBands(docs), Seq("band", "band_hash"), maxBucket)
+    BucketCap.droppedReport(minhashBandsFrom(shingleHashes(docs)), Seq("band", "band_hash"),
+      maxBucket)
 
   private def minhashCandidatesFrom(hs: DataFrame, maxBucket: Int): DataFrame = {
     val b = BucketCap.keepSmall(minhashBandsFrom(hs), Seq("band", "band_hash"), maxBucket)
@@ -527,52 +526,116 @@ object Dedup {
     * vanishing), and the narrow (id, hash) rows shuffle instead of
     * document-sized arrays. |∪| = |A| + |B| − |∩|.
     *
-    * Computed EAGERLY: the shingle+hash explode feeds four plan
-    * subtrees (bands, sizes, both intersection joins), so the narrow
-    * (doc_id, h) rows are persisted and text is parsed once; the
-    * shingle-hash cache is released before returning — nothing lingers
-    * in the session's cache budget, and the result can be consumed any
-    * number of times without re-running the LSH pipeline (the
-    * ingest-once shape a production corpus uses for its near-dup
-    * artifact).
-    *
-    * Input-adaptive: at most [[LocalMaxShingleRows]] shingle rows are
-    * verified DRIVER-SIDE and returned as a local frame; above the
-    * bound the distributed plan runs and its pair set is materialized
-    * with localCheckpoint. Both paths emit the same rows. */
+    * Computed EAGERLY from one [[Signatures]] of `docs` (text parsed
+    * once; the bands, sizes and both intersection joins read the
+    * persisted shingle rows), released before returning — nothing
+    * lingers in the session's cache budget, and the result can be
+    * consumed any number of times without re-running the LSH pipeline
+    * (the ingest-once shape a production corpus uses for its near-dup
+    * artifact). Input-adaptive: a signature within
+    * [[LocalMaxShingleRows]] is verified DRIVER-SIDE and the pairs
+    * return as a local frame; above the bound the distributed plan runs
+    * and its pair set is materialized with localCheckpoint. Both paths
+    * emit the same rows. */
   def minhashNeardupMaterialized(
       docs: DataFrame,
       threshold: Double = 0.8,
       maxBucket: Int = DefaultMaxBucket): DataFrame =
-    minhashNeardupBounded(docs, threshold, maxBucket, LocalMaxShingleRows)
+    Signatures.using(docs, LocalMaxShingleRows)(_.pairs(threshold, maxBucket))
 
-  /** [[minhashNeardupMaterialized]] with the driver-side bound explicit
-    * (0 forces the distributed plan — the equality spec's switch). */
-  private[graft] def minhashNeardupBounded(
-      docs: DataFrame, threshold: Double, maxBucket: Int,
-      localMaxShingleRows: Long): DataFrame = {
-    val hs = shingleHashes(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try minhashNeardupFromShingles(hs, threshold, maxBucket, localMaxShingleRows)
-    finally hs.unpersist(blocking = false)
+  /** One frame's MinHash signature, computed ONCE for all its readers:
+    * the (doc_id, h) shingle rows, persisted, and — when there are at
+    * most `maxRows` of them under non-null LONG ids — the same rows
+    * gathered by ONE [[collectAtMost]] into per-doc [[LocalShingles]]
+    * (None above the bound, and at a bound of 0, the force-distributed
+    * switch the equality specs use). It serves the within-frame verify
+    * ([[pairs]]), the stored-index probe ([[against]]) and the index
+    * artifact frames ([[index]]); an increment signs its exact-dedup
+    * survivors once and feeds all three. The caller owns [[release]]. */
+  private[graft] final class Signatures private (
+      private[graft] val hs: DataFrame, maxRows: Long) {
+
+    private val local: Option[Map[Long, LocalShingles]] =
+      if (maxRows <= 0 || hs.schema("doc_id").dataType != LongType) None
+      else collectAtMost(hs, maxRows).filter(_.forall(!_.isNullAt(0)))
+        .map(rows => LocalShingles.of(rows.map(r => (r.getLong(0), r.getLong(1)))))
+
+    /** Verified within-frame pairs: [[verifyLocal]] on the driver, else
+      * the distributed plan, checkpointed. */
+    def pairs(threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket): DataFrame =
+      local.flatMap(verifyLocal(hs.sparkSession, _, threshold, maxBucket))
+        .getOrElse(neardupFrom(hs, threshold, maxBucket).localCheckpoint(true))
+
+    /** Pairs (a_id = stored, b_id = signed) against a stored
+      * [[MinhashIndex]] — see [[neardupAgainstIndex]]. */
+    def against(
+        writer: graft.sinks.StagingWriter, table: String,
+        threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket): DataFrame =
+      local.flatMap(probeLocal(hs.sparkSession, _, writer, table, threshold, maxBucket, maxRows))
+        .getOrElse(neardupAgainstIndexPlan(hs, writer, table, threshold, maxBucket)
+          .localCheckpoint(true))
+
+    /** The [[MinhashIndex]] artifact frames of the signed docs `keep`
+      * holds (every signed doc when None). A local signature gives local
+      * frames — shingle rows repeated by multiplicity, sizes and band
+      * keys, one partition each, in doc_id order — and collects only
+      * `keep`'s ids (at most the signed docs); a distributed one gives
+      * the aggregates over its shingle rows. */
+    def index(keep: Option[DataFrame]): GrowingIndex.Frames = emit => local match {
+      case Some(docs) =>
+        val ids = keep.map(_.select(col("doc_id")).collect()
+          .collect { case r if !r.isNullAt(0) => r.getLong(0) }.toSet)
+        val kept = docs.toSeq.filter(d => ids.forall(_(d._1))).sortBy(_._1)
+        def put(artifact: String)(rows: Seq[Row]): Unit =
+          emit(localFrame(hs.sparkSession, indexSchema(artifact, LongType), rows).coalesce(1))
+        put("__shingles")(
+          for ((d, s) <- kept; i <- s.hs.indices; _ <- 1 to s.cnt(i)) yield Row(d, s.hs(i)))
+        put("__sizes")(kept.map { case (d, s) => Row(d, s.size) })
+        put("__bands")(for ((d, s) <- kept; j <- 0 until bands) yield Row(d, j, s.bandKeys(j)))
+      case None =>
+        val rows = keep.fold(hs)(k => hs.join(k.select(col("doc_id")), Seq("doc_id"), "left_semi"))
+        emit(rows)
+        emit(rows.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")))
+        emit(minhashBandsFrom(rows))
+    }
+
+    def release(): Unit = hs.unpersist(blocking = false): Unit
   }
 
-  /** [[minhashNeardupMaterialized]] over a CALLER-persisted shingle
-    * frame — the shared-parse entry (guide §6, r16): the shingle pass
-    * is the corpus parse, and building the MinHash pair set and the
-    * loose exact pair set ([[loosePairsFromShingles]]) from ONE
-    * persisted frame removes a full re-parse from the warm phase.
-    * Caller owns the persist/release of `hs`. */
-  private[graft] def minhashNeardupFromShingles(
-      hs: DataFrame,
-      threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket,
-      localMaxShingleRows: Long = LocalMaxShingleRows): DataFrame =
-    collectShingles(hs, localMaxShingleRows)
-      .flatMap(rows => verifyLocal(hs.sparkSession, LocalShingles.of(rows), threshold, maxBucket))
-      .getOrElse(neardupFrom(hs, threshold, maxBucket).localCheckpoint(true))
+  private[graft] object Signatures {
+    def of(docs: DataFrame, localMaxShingleRows: Long): Signatures = {
+      val hs = shingleHashes(docs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try new Signatures(hs, localMaxShingleRows)
+      catch { case e: Throwable => hs.unpersist(blocking = false); throw e }
+    }
 
-  /** The driver-side verify of [[minhashNeardupFromShingles]]: band
+    /** [[of]] released when `f` returns. */
+    def using[T](docs: DataFrame, localMaxShingleRows: Long)(f: Signatures => T): T = {
+      val s = of(docs, localMaxShingleRows)
+      try f(s) finally s.release()
+    }
+  }
+
+  /** The [[MinhashIndex]] artifacts' columns after `doc_id`, by suffix,
+    * declared once: the local index frames take them, and the probe's
+    * stored reads pass them instead of running parquet's schema
+    * inference, a job per read. */
+  private val IndexColumns = Map(
+    "__shingles" -> Seq(StructField("h", LongType)),
+    "__sizes" -> Seq(StructField("sz", LongType)),
+    "__bands" -> Seq(StructField("band", IntegerType), StructField("band_hash", LongType)))
+
+  private def indexSchema(artifact: String, id: DataType): StructType =
+    StructType(StructField("doc_id", id) +: IndexColumns(artifact))
+
+  /** A stored index artifact under its declared schema; the index's ids
+    * have the probing batch's type. */
+  private def readIndex(
+      writer: graft.sinks.StagingWriter, table: String, artifact: String, id: DataType) =
+    writer.read(table + artifact, indexSchema(artifact, id))
+
+  /** The driver-side verify of [[Signatures.pairs]]: band
     * buckets, the [[BucketCap]] guard, candidates and exact Jaccard over
     * collected shingles. None when the kept buckets would enumerate more
     * than [[StarLocalMaxEdges]] candidate collisions (Σ C(|bucket|, 2),
@@ -604,36 +667,25 @@ object Dedup {
       .select("a_id", "b_id", "jaccard")
   }
 
-  /** Below this many (doc_id, h) shingle rows the MinHash verify
-    * ([[minhashNeardupMaterialized]]) and the stored-index probe
-    * ([[neardupAgainstIndex]]) run DRIVER-SIDE — the bounded collect
+  /** The bound of a [[Signatures]]' driver-side path: at most this many
+    * (doc_id, h) shingle rows per driver read — the bounded collect
     * class of [[StarLocalMaxEdges]] (centroids, codebooks, Bloom
-    * words). Every driver read is [[collectAtMost]], bounded by its
-    * TOTAL: 200k rows are ≈ 3.2 MB of longs, ≈ 10 MB as shipped rows,
-    * and an over-bound input never lands on the driver. The candidate
-    * pairs the driver enumerates are bounded separately, by
-    * [[StarLocalMaxEdges]] collisions. A batch-sized input otherwise
-    * pays the distributed plan's fixed cost — under AQE every exchange
-    * of the banding self-join, the bucket-cap window and the verify
-    * joins is its own job, so a 265-doc increment spent 24 jobs on the
-    * within-batch verify and 19 on the index probe. The driver path
-    * computes the same 64 minhashes, 16 band keys, bucket cap,
-    * candidates and multiset intersection with the same hash chain
-    * ([[LocalShingles]]), so its pair set is bit-identical; an input
-    * over either bound, or a bound of 0 (the force-distributed switch
-    * the equality spec uses), takes the distributed plan. */
+    * words). It enters through [[Signatures.of]] alone and covers the
+    * signature's one collect and the probe's stored reads, each a
+    * [[collectAtMost]], bounded by its TOTAL: 200k rows are ≈ 3.2 MB of
+    * longs, ≈ 10 MB as shipped rows, and an over-bound input never
+    * lands on the driver. The candidate pairs the driver enumerates are
+    * bounded separately, by [[StarLocalMaxEdges]] collisions. A
+    * batch-sized input otherwise pays the distributed plan's fixed cost
+    * — under AQE every exchange of the banding self-join, the bucket-cap
+    * window and the verify joins is its own job, so a 265-doc increment
+    * spent 24 jobs on the within-batch verify and 19 on the index probe.
+    * The driver path computes the same 64 minhashes, 16 band keys,
+    * bucket cap, candidates, multiset intersection and index rows with
+    * the same hash chain ([[LocalShingles]]), so its pair sets and index
+    * slices hold the same rows; an input over either bound, or a bound
+    * of 0, takes the distributed plan. */
   val LocalMaxShingleRows = 200000L
-
-  /** The bounded collect of a CALLER-persisted (doc_id, h) frame: its
-    * rows when there are at most `maxRows` and every doc id is a
-    * non-null LONG (the driver path is Long-typed), else None — the
-    * distributed plan then finds the cache built by the same job.
-    * `maxRows <= 0` returns None without touching the frame. */
-  private def collectShingles(hs: DataFrame, maxRows: Long): Option[Array[(Long, Long)]] =
-    if (maxRows <= 0 || hs.schema("doc_id").dataType != org.apache.spark.sql.types.LongType) None
-    else collectAtMost(hs, maxRows)
-      .filter(_.forall(!_.isNullAt(0)))
-      .map(_.map(r => (r.getLong(0), r.getLong(1))))
 
   /** `df`'s rows when it has at most `maxRows`, else None, with what
     * reaches the driver bounded by the TOTAL, not per task: each of the
@@ -696,7 +748,6 @@ object Dedup {
       * expressions, each a hash chain from Spark's seed 42. */
     lazy val bandKeys: Array[Long] = {
       import org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash
-      import org.apache.spark.sql.types.{IntegerType, LongType}
       val m = Array.fill(numHashes)(Long.MaxValue)
       hs.foreach { h =>
         val base = hash(h, LongType, 42L)
@@ -732,10 +783,10 @@ object Dedup {
       }
   }
 
-  private val pairSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("a_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("b_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("jaccard", org.apache.spark.sql.types.DoubleType)))
+  private val pairSchema = StructType(Seq(
+    StructField("a_id", LongType),
+    StructField("b_id", LongType),
+    StructField("jaccard", org.apache.spark.sql.types.DoubleType)))
 
   /** Verified (a_id, b_id, jaccard) rows at or above `threshold` as a
     * LOCAL frame, ordered by (a_id, b_id, jaccard): its static size
@@ -749,7 +800,7 @@ object Dedup {
 
   /** Driver-held rows as a local frame (a `LocalRelation`). */
   private def localFrame(
-      spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      spark: SparkSession, schema: StructType,
       rows: Seq[Row]): DataFrame = {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.asJava, schema)
@@ -855,7 +906,8 @@ object Dedup {
   }
 
   /** [[loosePairsMaterialized]] over a CALLER-persisted shingle frame
-    * (the shared-parse entry — see [[minhashNeardupFromShingles]]). */
+    * (the shared-parse entry: ExtQueries' pair sets read the persisted
+    * rows of one [[Signatures]]). */
   private[graft] def loosePairsFromShingles(hs: DataFrame): DataFrame = {
     val sizes = hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     pairJaccard(hs, sizes, ngramPrefixCandidates(hs, sizes, 1, 2))
@@ -1428,21 +1480,16 @@ object Dedup {
     * byproduct of the first dedup pass (narrow integer rows, ~tokens ×
     * 16 bytes for the shingle table); re-shingling the corpus per batch
     * would instead re-pay the full text parse on every ingest tick. One
-    * persisted shingle parse feeds all three writes. */
+    * persisted shingle parse feeds all three writes: [[frames]] signs
+    * the input distributed (a build collects nothing), and a batch
+    * signed upstream appends its [[Signatures.index]] frames. */
   object MinhashIndex extends NeardupIndex[Double] with GrowingIndex.NoSidecar {
     val artifacts = Seq("__shingles", "__sizes", "__bands")
     val idCol = "doc_id"
     val defaultThreshold = 0.8
 
-    protected def frames(docs: DataFrame, g: Unit)(emit: DataFrame => Unit): Unit = {
-      val hs = shingleHashes(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        emit(hs)
-        emit(hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")))
-        emit(minhashBandsFrom(hs))
-      } finally hs.unpersist(blocking = false)
-    }
+    protected def frames(docs: DataFrame, g: Unit)(emit: DataFrame => Unit): Unit =
+      Signatures.using(docs, 0L)(_.index(None)(emit))
 
     protected def pairsWithin(batch: DataFrame, threshold: Double): DataFrame =
       minhashNeardupMaterialized(batch, threshold)
@@ -1455,7 +1502,8 @@ object Dedup {
   /** Incremental near-dup: pairs (a_id = indexed corpus doc, b_id = new
     * batch doc) at Jaccard ≥ `threshold`, computed against a
     * [[MinhashIndex]] artifact. Only the NEW batch is shingled and
-    * banded; the corpus side is read back as narrow integer rows.
+    * banded ([[Signatures.against]] over its one signature); the corpus
+    * side is read back as narrow integer rows under declared schemas.
     * Candidates = band-bucket collisions between the batch's bands and
     * the stored bands; the stored buckets get the usual [[BucketCap]]
     * guard. Within-batch pairs are NOT emitted — run
@@ -1464,71 +1512,43 @@ object Dedup {
     * own history, which is exactly what an UPDATE wants anyway).
     *
     * Two plans, one pair set (the incremental contract is |batch| ≪
-    * |corpus|). A batch of at most [[LocalMaxShingleRows]] shingle rows
-    * (the bounded collect class) probes the
-    * index through NARROW scans only, each collected under the same
-    * bound and verified on the driver: `__bands` semi-joined with the
-    * batch's band keys (every stored row of the touched buckets, so the
-    * cap counts whole buckets), then `__sizes` and `__shingles`
-    * semi-joined with the candidate `a_id`s — each semi-join a
-    * membership filter inside the scan, so nothing of the standing
-    * index is shuffled or broadcast. A larger batch, a stored read
-    * over the bound, or touched buckets that would give more than
-    * [[StarLocalMaxEdges]] candidate collisions run the distributed plan
-    * ([[neardupAgainstIndexPlan]], the batch's bands broadcast into the
-    * stored band scan). */
+    * |corpus|). A batch signed on the driver (at most
+    * [[LocalMaxShingleRows]] shingle rows) probes the index through
+    * NARROW scans only, each collected under the same bound and
+    * verified on the driver: `__bands` semi-joined with the batch's band
+    * keys (every stored row of the touched buckets, so the cap counts
+    * whole buckets), then `__sizes` and `__shingles` semi-joined with
+    * the candidate `a_id`s — each semi-join a membership filter inside
+    * the scan, so nothing of the standing index is shuffled or
+    * broadcast. A larger batch, a stored read over the bound, or touched
+    * buckets that would give more than [[StarLocalMaxEdges]] candidate
+    * collisions run the distributed plan ([[neardupAgainstIndexPlan]],
+    * the batch's bands broadcast into the stored band scan). */
   def neardupAgainstIndex(
       newDocs: DataFrame,
       writer: graft.sinks.StagingWriter,
       table: String,
       threshold: Double = 0.8,
       maxBucket: Int = DefaultMaxBucket): DataFrame =
-    neardupAgainstIndexBounded(newDocs, writer, table, threshold, maxBucket,
-      LocalMaxShingleRows)
+    Signatures.using(newDocs, LocalMaxShingleRows)(_.against(writer, table, threshold, maxBucket))
 
-  /** [[neardupAgainstIndex]] with the driver-side bound explicit (0
-    * forces the distributed plan — the equality spec's switch). */
-  private[graft] def neardupAgainstIndexBounded(
-      newDocs: DataFrame,
-      writer: graft.sinks.StagingWriter,
-      table: String,
-      threshold: Double,
-      maxBucket: Int,
-      localMaxShingleRows: Long): DataFrame = {
-    val newHs = shingleHashes(newDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager result + scoped cache: the incremental tick runs repeatedly
-    // in a long-lived session, so leaking one cached shingle table per
-    // batch would squeeze executor storage until LRU evicts real work
-    // (same contract as minhashNeardupMaterialized)
-    try collectShingles(newHs, localMaxShingleRows)
-      .flatMap(rows => probeLocal(LocalShingles.of(rows), writer, table,
-        threshold, maxBucket, localMaxShingleRows))
-      .getOrElse(neardupAgainstIndexPlan(newHs, writer, table, threshold, maxBucket)
-        .localCheckpoint(true))
-    finally newHs.unpersist(blocking = false)
-  }
-
-  /** The driver-side probe of [[neardupAgainstIndex]]; None when the
-    * index's ids are not LONG, a stored read exceeds `maxRows` or the
-    * candidates exceed [[StarLocalMaxEdges]] collisions. Each
-    * stored read is a semi-join by a membership filter over the
-    * driver's key set, evaluated inside the scan: no exchange, and no
-    * broadcast build job (an `isin` literal list would cost analysis
-    * time linear in thousands of keys on every tick). */
+  /** The driver-side probe of [[Signatures.against]]; None when a stored
+    * read exceeds `maxRows` or the candidates exceed
+    * [[StarLocalMaxEdges]] collisions. Each stored read is a semi-join
+    * by a membership filter over the driver's key set, evaluated inside
+    * the scan: no exchange, and no broadcast build job (an `isin`
+    * literal list would cost analysis time linear in thousands of keys
+    * on every tick). */
   private def probeLocal(
+      spark: SparkSession,
       batch: Map[Long, LocalShingles],
       writer: graft.sinks.StagingWriter,
       table: String,
       threshold: Double,
       maxBucket: Int,
       maxRows: Long): Option[DataFrame] = {
-    val storedBands = writer.read(s"${table}__bands")
-    val spark = storedBands.sparkSession
-    if (storedBands.schema("doc_id").dataType != org.apache.spark.sql.types.LongType)
-      return None
     def narrow(artifact: String, ids: Set[Long], cols: String*): Option[Array[Row]] =
-      collectAtMost(writer.read(table + artifact)
+      collectAtMost(readIndex(writer, table, artifact, LongType)
         .filter(udf((d: Long) => ids(d)).apply(col("doc_id")))
         .select(cols.map(col): _*), maxRows)
     val keyed = batch.toSeq.flatMap { case (b, s) =>
@@ -1538,7 +1558,7 @@ object Dedup {
     val keys = keyed.map(_._1).toSet
     // every stored row of each bucket the batch touches, so the cap
     // counts WHOLE buckets
-    collectAtMost(storedBands
+    collectAtMost(readIndex(writer, table, "__bands", LongType)
       .filter(udf((j: Int, bh: Long) => keys((j, bh))).apply(col("band"), col("band_hash")))
       .select(col("band"), col("band_hash"), col("doc_id")), maxRows)
       .filter(_.forall(!_.isNullAt(2)))
@@ -1584,8 +1604,8 @@ object Dedup {
       table: String,
       threshold: Double,
       maxBucket: Int): DataFrame = {
-    val idxBands = BucketCap.keepSmall(
-      writer.read(s"${table}__bands"), Seq("band", "band_hash"), maxBucket)
+    def stored(a: String) = readIndex(writer, table, a, newHs.schema("doc_id").dataType)
+    val idxBands = BucketCap.keepSmall(stored("__bands"), Seq("band", "band_hash"), maxBucket)
     val cand = idxBands
       .select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
       .join(broadcast(minhashBandsFrom(newHs)
@@ -1594,9 +1614,7 @@ object Dedup {
       .select("a_id", "b_id")
       .distinct()
     val newSizes = newHs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    pairJaccardCross(
-      writer.read(s"${table}__shingles"), writer.read(s"${table}__sizes"),
-      newHs, newSizes, cand)
+    pairJaccardCross(stored("__shingles"), stored("__sizes"), newHs, newSizes, cand)
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
   }
@@ -1674,7 +1692,7 @@ object Dedup {
     // below is Long-typed while the star loop is type-generic, so a
     // non-long id column must fall through, never ClassCastException.
     def longIds(df: DataFrame): Boolean = df.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
+      .forall(_.dataType == LongType)
     // a LOCAL pair frame (the driver-side MinHash verify's output) is
     // labeled on the driver outright — collecting it runs no job, and
     // its endpoints are the whole node universe
@@ -1801,13 +1819,11 @@ object Dedup {
     nodes.toSeq.sorted.map(d => d -> find(d))
   }
 
-  private def labelFrame(spark: SparkSession, labels: Seq[(Long, Long)]): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+  private def labelFrame(spark: SparkSession, labels: Seq[(Long, Long)]): DataFrame =
     localFrame(spark, StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("component", LongType, nullable = false))),
       labels.map { case (d, c) => Row(d, c) })
-  }
 
   /** The shared cross-engine token hash ([[OracleHash.md5Hash32]]).
     * Two disjoint halves of one md5 give the 64 independent SimHash
@@ -1995,7 +2011,6 @@ object Dedup {
     * result is a local frame. Otherwise the distributed
     * [[canonicalPick]] join. */
   private[graft] def nonKeepers(docs: DataFrame, components: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     val labels = components.select(col("doc_id"), col("component"))
     if (!components.isLocal || !(labels.schema.fields :+ docs.schema("doc_id"))
         .forall(_.dataType == LongType))
@@ -2023,8 +2038,7 @@ object Dedup {
     val label = comp.toMap
     val keeper = scored.groupBy(m => label(m._1)).map { case (c, ms) => c -> ms.min(best)._1 }
     localFrame(components.sparkSession,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", LongType, nullable = false))),
+      StructType(Seq(StructField("doc_id", LongType, nullable = false))),
       comp.toSeq.collect { case (d, c) if keeper.get(c).exists(_ != d) => Row(d) })
   }
 

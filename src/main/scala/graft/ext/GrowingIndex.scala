@@ -41,6 +41,7 @@ import org.apache.spark.storage.StorageLevel
   * a crash before the first swap changes nothing, and rerunning the
   * rebuild repairs a half-swapped state. */
 abstract class GrowingIndex {
+  import GrowingIndex.Frames
 
   /** Driver-side keying state the sidecar stores (`Unit` without one). */
   type Geometry
@@ -74,22 +75,27 @@ abstract class GrowingIndex {
   def build(input: DataFrame, writer: StagingWriter, table: String): Unit = {
     val g = bootstrap(input, writer, table).getOrElse(throw new IllegalArgumentException(
       s"build($table): empty input — nothing to index"))
-    emit(input, g, table)(put(writer, append = false))
+    emit(frames(input, g), table)(put(writer, append = false))
   }
 
   /** Grow the index with a batch. Append the KEPT (post-dedup) rows only
     * — a dropped duplicate's keys would pair every future copy twice —
     * and keep id spaces disjoint across batches. */
   def append(batch: DataFrame, writer: StagingWriter, table: String): Unit =
-    emit(batch, readGeometry(writer, table), table)(put(writer, append = true))
+    append(frames(batch, readGeometry(writer, table)) _, writer, table)
+
+  /** [[append]] of a batch whose frames the caller computed already
+    * (keyed under the stored geometry). */
+  def append(fs: Frames, writer: StagingWriter, table: String): Unit =
+    emit(fs, table)(put(writer, append = true))
 
   def appendBatchSlice(
-      batch: DataFrame, writer: StagingWriter, table: String, batchId: Long): Unit = {
+      batch: DataFrame, writer: StagingWriter, table: String, batchId: Long): Unit =
+    appendBatchSlice(frames(batch, readGeometry(writer, table)) _, writer, table, batchId)
+
+  def appendBatchSlice(fs: Frames, writer: StagingWriter, table: String, batchId: Long): Unit = {
     flatOnly("appendBatchSlice")
-    emit(batch, readGeometry(writer, table), table) { (df, name) =>
-      writer.appendBatchSlice(df, name, batchId)
-      ()
-    }
+    emit(fs, table)(writer.appendBatchSlice(_, _, batchId))
   }
 
   /** A missing sidecar is bootstrapped from this batch; an empty batch
@@ -100,7 +106,7 @@ abstract class GrowingIndex {
     val g =
       if (sidecar.forall(s => writer.exists(table + s))) Some(readGeometry(writer, table))
       else bootstrap(batch, writer, table)
-    g.foreach(emit(batch, _, table)(writer.writeBatchPartition(_, _, batchId)))
+    g.foreach(geo => emit(frames(batch, geo), table)(writer.writeBatchPartition(_, _, batchId)))
   }
 
   /** Fold every artifact's `ingest_batch` partitions into one partition
@@ -137,10 +143,9 @@ abstract class GrowingIndex {
       g
     }
 
-  private def emit(batch: DataFrame, g: Geometry, table: String)(
-      put: (DataFrame, String) => Unit): Unit = {
+  private def emit(fs: Frames, table: String)(put: (DataFrame, String) => Unit): Unit = {
     val names = artifacts.iterator
-    frames(batch, g)(df => put(df, table + names.next()))
+    fs(df => put(df, table + names.next()))
     require(!names.hasNext, s"$table: frames left ${names.toList} unwritten")
   }
 
@@ -157,6 +162,11 @@ abstract class GrowingIndex {
 }
 
 object GrowingIndex {
+
+  /** One batch's artifact frames, handed to a writer in
+    * [[GrowingIndex.artifacts]] order: a family's `frames` of the batch,
+    * or frames computed upstream ([[Dedup.Signatures.index]]). */
+  type Frames = (DataFrame => Unit) => Unit
 
   /** A family whose keying needs no stored state (MinHash, dHash). */
   trait NoSidecar extends GrowingIndex {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -87,16 +87,13 @@ object ExtQueries {
   // to other artifacts are its dependencies.
 
   /** The MinHash (t = 0.8) and loose exact (Jaccard >= 1/2) pair sets
-    * from ONE persisted shingle frame (guide §6 — the shingle pass IS
-    * the corpus parse). The frame is released as soon as both pair
-    * sets are materialized — never held across unrelated jobs (the
-    * r15 item-14 storage-starvation lesson). */
+    * from ONE signature's persisted shingle frame (the shingle pass IS
+    * the corpus parse). The signature is released as soon as both pair
+    * sets are materialized — never held across unrelated jobs, whose
+    * cached blocks it would otherwise starve. */
   private val pairSetsShared = Artifact("pair_sets_shared") { (s, d) =>
-    val hs = Dedup.shingleHashes(docs(s, d))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try (Dedup.minhashNeardupFromShingles(hs, threshold = 0.8),
-      Dedup.loosePairsFromShingles(hs))
-    finally hs.unpersist(blocking = false)
+    Dedup.Signatures.using(docs(s, d), Dedup.LocalMaxShingleRows)(signed =>
+      (signed.pairs(threshold = 0.8), Dedup.loosePairsFromShingles(signed.hs)))
   }
 
   /** MinHash near-dup pairs shared by x2, x14 and the component
@@ -243,10 +240,14 @@ object ExtQueries {
       .repartition(col("p1")).localCheckpoint(true)
   }
 
-  /** The planted eval set of the decontamination and prep keys (x19's
-    * construction): a 22-token window of every 50th doc. */
-  private def evalWindow(dd: DataFrame): DataFrame = dd.filter(col("doc_id") % 50 === 0)
-    .select(array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
+  /** The planted eval docs of the decontamination, novelty and prep
+    * keys: every 50th doc. */
+  private def evalDoc: Column = col("doc_id") % 50 === 0
+
+  /** The eval set (x19's construction): a 22-token window of each
+    * [[evalDoc]], after the `keep` columns. */
+  private def evalWindow(dd: DataFrame, keep: Column*): DataFrame = dd.filter(evalDoc)
+    .select(keep :+ array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"): _*)
 
   /** The incremental-funnel gate's (x68) base warehouse: the
     * deterministic initial prep run over the docs with
@@ -533,7 +534,7 @@ object ExtQueries {
     // the exact rule misses).
     "x63_fuzzy_decontaminate" -> ((s, d) => {
       val dd = docs(s, d)
-      val ev = dd.filter(col("doc_id") % 50 === 0)
+      val ev = dd.filter(evalDoc)
         .select((col("doc_id") + 3000000L).as("doc_id"),
           concat(col("text"), lit(" zz eval benchmark suffix")).as("text"))
       Dedup.fuzzyDecontaminate(dd, ev)
@@ -675,10 +676,7 @@ object ExtQueries {
     // burned-benchmark-item report (x19 answers per-TRAINING-doc).
     "x280_contamination_sources" -> ((s, d) => {
       val dd = docs(s, d)
-      val ev = dd.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("eval_id"),
-          array_join(slice(split(col("text"), " "), 5, 26), " ").as("text"))
-      Dedup.contaminationSources(dd, ev)
+      Dedup.contaminationSources(dd, evalWindow(dd, col("doc_id").as("eval_id")))
     }),
     // Canonical keeper per duplicate component: best quality (x8 tree)
     // wins, doc_id tiebreak — not blindly the lowest id; shares the
@@ -930,8 +928,7 @@ object ExtQueries {
     // the standing corpus — ppm of batch shingles unseen in the corpus.
     "x275_ngram_novelty" -> ((s, d) => {
       val dd = docs(s, d)
-      Dedup.ngramNovelty(dd.filter(col("doc_id") % 50 =!= 0),
-        dd.filter(col("doc_id") % 50 === 0))
+      Dedup.ngramNovelty(dd.filter(!evalDoc), dd.filter(evalDoc))
     }),
     // Gopher-family within-doc repetition ratio over ALL 3-gram windows
     // (27 docs with repeats at sf0.01, max ~71k ppm — non-vacuous).

@@ -31,15 +31,18 @@ import graft.sources.JsonlIngest
   * operators' own bounded shuffles. The text-bearing stages that feed
   * multiple consumers are materialized once each (the normalized batch
   * persisted, the dedup survivors checkpointed) and RELEASED in a
-  * finally (the sourceDrift ownership convention); the near-dup pair
-  * set is materialized once ([[Dedup.minhashNeardupMaterialized]]);
-  * everything durable lands in the warehouse via the staging writer.
-  * The driver receives the funnel counts (observe metrics, one per
-  * stage) and, only through the bounded collect class, narrow integer
-  * rows: (doc_id, shingle hash) rows and the stored index rows a probe
-  * touches, at most [[Dedup.LocalMaxShingleRows]] per read in total
-  * (≈ 10 MB as shipped rows), and candidate pairs and near-dup edges
-  * under [[Dedup.StarLocalMaxEdges]]. Above a bound the step runs
+  * finally (the sourceDrift ownership convention); the exact-dedup
+  * survivors are signed once ([[Dedup.Signatures]]: one shingle parse)
+  * and that signature feeds the near-dup pair set, an increment's index
+  * probe and its index append; everything durable lands in the
+  * warehouse via the staging writer. The driver receives the funnel
+  * counts (observe metrics, one per stage) and, only through the
+  * bounded collect class, narrow integer rows: the signature's
+  * (doc_id, shingle hash) rows, in one collect, and the stored index
+  * rows a probe touches, at most [[Dedup.LocalMaxShingleRows]] per read
+  * in total (≈ 10 MB as shipped rows), an increment's landed doc ids,
+  * and candidate pairs and near-dup edges under
+  * [[Dedup.StarLocalMaxEdges]]. Above a bound the step runs
   * distributed; text never reaches the driver.
   */
 object CorpusPrepJob {
@@ -138,7 +141,7 @@ object CorpusPrepJob {
       land = { withSplit =>
         writer.writeAndSwap(withSplit, CorpusTable)
         writer.read(CorpusTable)
-      }) { (corpus, funnel) =>
+      }) { (corpus, funnel, _) =>
       // the index build, the derived exports and the funnel write are
       // INDEPENDENT actions over disjoint tables, all downstream of the
       // one corpus write — [[writeTailArtifacts]] runs them from a small
@@ -159,12 +162,21 @@ object CorpusPrepJob {
     *
     *   - `standing`: applied to the exact-dedup survivors before they
     *     are materialized (the increment's standing-corpus anti-join);
-    *   - `history`: near-dup pairs (b_id = survivor) of the rewrite's
-    *     survivors against earlier data (the increment's stored-index
-    *     probe); given one, the survivors are materialized before and
-    *     after it, as the probe, its anti-join and the landing read
-    *     them; without one they stay lazy and one narrow job counts them;
+    *   - `history`: near-dup pairs (b_id = signed doc) of the
+    *     exact-dedup survivors' signature against earlier data (the
+    *     increment's stored-index probe). It probes every exact survivor:
+    *     a pair whose b_id the rewrite already dropped leaves the
+    *     anti-join unchanged. Given one, the rewrite's survivors minus
+    *     its b_ids are materialized for the landing; without one they
+    *     stay lazy and one narrow job counts them;
     *   - `land`: where the split frame lands.
+    *
+    * The exact-dedup survivors are signed ONCE ([[Dedup.Signatures]]:
+    * one shingle parse, at most one bounded collect). The signature
+    * feeds the within-batch verify and `history`, and `finish` receives
+    * it for the index append; without `history` the verify is its last
+    * reader ([[run]] indexes the written corpus) and it is released
+    * right after.
     *
     * Every other funnel count rides, as an observe metric, an action
     * that runs anyway: `1_raw` and `2_gate_passed` the gate checkpoint,
@@ -183,10 +195,11 @@ object CorpusPrepJob {
   private def stages[A](
       docs: DataFrame, evalDocs: DataFrame, cfg: PrepConfig, localMaxShingleRows: Long)(
       standing: DataFrame => DataFrame,
-      history: Option[DataFrame => DataFrame],
+      history: Option[Dedup.Signatures => DataFrame],
       land: DataFrame => DataFrame)(
-      finish: (DataFrame, DataFrame) => A): A = {
+      finish: (DataFrame, DataFrame, Dedup.Signatures) => A): A = {
     val owned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var signature = Option.empty[Dedup.Signatures]
     // no observed count may sit where AQE can prune it at runtime (the
     // side of an anti-join that turns out empty): its Observation would
     // complete with no row at all
@@ -242,9 +255,12 @@ object CorpusPrepJob {
       // a boilerplate chain stalls min-label) → canonical keeper;
       // non-keepers are rewritten away. The pair set is materialized
       // once and also feeds the audit rows.
-      val pairs = Dedup.minhashNeardupBounded(exactKept, cfg.neardupThreshold,
-        Dedup.DefaultMaxBucket, localMaxShingleRows)
+      val signed = Dedup.Signatures.of(exactKept, localMaxShingleRows)
+      signature = Some(signed)
+      val pairs = signed.pairs(cfg.neardupThreshold)
       owned += pairs
+      // run's index is built from the written corpus
+      if (history.isEmpty) signed.release()
       val within = exactKept.join(
         Dedup.nonKeepers(exactKept, Dedup.dupComponentsStar(pairs)), Seq("doc_id"), "left_anti")
       val (neardupKept, nKept) = history match {
@@ -252,11 +268,10 @@ object CorpusPrepJob {
         // and are counted by one narrow job
         case None => (within, within.count())
         case Some(against) =>
-          val kept = checkpointed(within)
-          val found = against(kept)
+          val found = against(signed)
           owned += found
-          val (survivors, obs) =
-            observed(kept.join(found.select(col("b_id").as("doc_id")), Seq("doc_id"), "left_anti"))
+          val (survivors, obs) = observed(
+            within.join(found.select(col("b_id").as("doc_id")), Seq("doc_id"), "left_anti"))
           (checkpointed(survivors), n(obs))
       }
 
@@ -282,9 +297,10 @@ object CorpusPrepJob {
           "5_clean" -> landCounts("5_clean").asInstanceOf[Long]) ++
         Assemble.SplitNames.sorted.map(s => s"6_split_$s" -> landCounts(s).asInstanceOf[Long])
           .filter(_._2 > 0)
-      finish(split, funnel(cfg, split.sparkSession, counts, split, pairs))
+      finish(split, funnel(cfg, split.sparkSession, counts, split, pairs), signed)
     } finally {
       normalized.unpersist(blocking = false)
+      signature.foreach(_.release())
       owned.foreach(release)
     }
   }
@@ -401,13 +417,13 @@ object CorpusPrepJob {
     *     (content digests computed at the corpus scan — text never
     *     shuffles for the anti-join's build side);
     *   - near-dup is within-batch (components + canonical keeper)
-    *     THEN a probe of the survivors against the stored MinHash
-    *     index ([[Dedup.neardupAgainstIndex]]) — history always wins,
-    *     the streaming loop's semantic, and no standing signature is
-    *     ever recomputed.
+    *     THEN a probe against the stored MinHash index
+    *     ([[Dedup.Signatures.against]], the batch's one signature) —
+    *     history always wins, the streaming loop's semantic, and no
+    *     standing signature is ever recomputed.
     *
-    * Survivors append to the corpus table and the index
-    * ([[Dedup.MinhashIndex]]), so the NEXT tick — batch or
+    * Survivors append to the corpus table and, from the same signature,
+    * to the index ([[Dedup.MinhashIndex]]), so the NEXT tick — batch or
     * streaming — sees this one as history. The curriculum/pack exports
     * are compaction-cadence jobs, deliberately NOT re-run per tick
     * (re-sorting the full corpus per batch would be quadratic over a
@@ -445,10 +461,9 @@ object CorpusPrepJob {
       batchId: Option[Long] = None): PrepReport =
     incrementBounded(newDocs, evalDocs, writer, cfg, batchId, Dedup.LocalMaxShingleRows)
 
-  /** [[increment]] with the driver-side bound of its MinHash verify and
-    * index probe explicit
-    * ([[Dedup.LocalMaxShingleRows]]); 0 forces the distributed plans —
-    * the spec's equality switch. */
+  /** [[increment]] with the bound of its batch signature explicit
+    * ([[Dedup.LocalMaxShingleRows]]); 0 forces the distributed verify,
+    * probe and index frames — the spec's equality switch. */
   private[graft] def incrementBounded(
       newDocs: DataFrame,
       evalDocs: DataFrame,
@@ -469,12 +484,10 @@ object CorpusPrepJob {
       standing = batchUniq => batchUniq.join(
         writer.read(CorpusTable).select(md5(col("text")).as("__corpus_hash")).distinct(),
         md5(batchUniq("text")) === col("__corpus_hash"), "left_anti"),
-      // the stored-index probe of the (materialized) within-batch
-      // survivors; below Dedup.LocalMaxShingleRows its pairs are a
+      // the stored-index probe of the batch's signature; a signature
+      // on the driver probes with narrow scans and its pairs are a
       // local frame, so the chain's anti-join plans as a broadcast
-      history = Some(batchKept =>
-        Dedup.neardupAgainstIndexBounded(batchKept, writer, IndexTable,
-          cfg.neardupThreshold, Dedup.DefaultMaxBucket, localMaxShingleRows)),
+      history = Some(_.against(writer, IndexTable, cfg.neardupThreshold)),
       // eager before the appends: the writes must see ONE evaluation
       // of the batch chain, and the corpus append must not re-read the
       // corpus it is appending to via the anti-join lineage. The
@@ -482,15 +495,18 @@ object CorpusPrepJob {
       // after the append would re-run the standing-corpus anti-join
       // against a corpus that now contains this batch's own survivors
       // and report them as duplicates.
-      land = _.localCheckpoint(true)) { (withSplit, funnel) =>
+      land = _.localCheckpoint(true)) { (withSplit, funnel, signed) =>
+      // the landed docs' index rows come from the batch's signature:
+      // their text is not parsed again
+      val index = signed.index(Some(withSplit))
       batchId match {
         case Some(id) =>
           writer.appendBatchSlice(withSplit, CorpusTable, id)
-          Dedup.MinhashIndex.appendBatchSlice(withSplit, writer, IndexTable, id)
+          Dedup.MinhashIndex.appendBatchSlice(index, writer, IndexTable, id)
           writer.commitBatch(CorpusTable, id) // the tick's commit point
         case None =>
           writer.write(withSplit, CorpusTable, append = true)
-          Dedup.MinhashIndex.append(withSplit, writer, IndexTable)
+          Dedup.MinhashIndex.append(index, writer, IndexTable)
       }
       report(funnel, Seq(CorpusTable, IndexTable))
     }

@@ -44,6 +44,10 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
 
   def read(table: String): DataFrame = spark.read.parquet(path(table))
 
+  /** [[read]] under a declared schema: no schema-inference job. */
+  def read(table: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema).parquet(path(table))
+
   def exists(table: String): Boolean = fs.exists(new Path(path(table)))
 
   def tables: Seq[String] =

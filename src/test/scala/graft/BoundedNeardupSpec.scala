@@ -8,16 +8,17 @@ import graft.run.CorpusPrepJob
 import graft.run.CorpusPrepJob.PrepConfig
 import graft.sinks.StagingWriter
 
-/** The driver-side MinHash verify and index probe
-  * ([[Dedup.LocalMaxShingleRows]]) are an optimization, never a semantic
-  * fork: every input here runs with the bound at 0 (the distributed
-  * plans) and at its default (the driver path) and must give the same
-  * rows — pair sets, funnels, corpus slices and index slices (the probe
-  * alone is pinned under both bounds in ExtSpec's "equals the one-shot
-  * join's cross pairs"). The two bounds that keep the driver path
-  * small — rows per collect, counted in total, and candidate collisions
-  * — are pinned on inputs over them, and the job budget pins what the
-  * driver path buys an increment. */
+/** A MinHash signature's driver-side verify, index probe and index
+  * frames ([[Dedup.Signatures]] within [[Dedup.LocalMaxShingleRows]])
+  * are an optimization, never a semantic fork: every input here is
+  * signed with the bound at 0 (the distributed plans) and at its
+  * default (the driver path) and must give the same rows — pair sets,
+  * funnels, corpus slices and index slices (the probe alone is pinned
+  * under both bounds in ExtSpec's "equals the one-shot join's cross
+  * pairs"). The two bounds that keep the driver path small — rows per
+  * collect, counted in total, and candidate collisions — are pinned on
+  * inputs over them, and the job budget pins what the driver path buys
+  * an increment. */
 class BoundedNeardupSpec extends SparkSpec {
 
   private val Bounds = Seq(0L, Dedup.LocalMaxShingleRows)
@@ -50,8 +51,7 @@ class BoundedNeardupSpec extends SparkSpec {
     val extra = (capped ++ planted).toDF("doc_id", "text", "lang", "source")
     val all = docs.select("doc_id", "text", "lang", "source").unionByName(extra)
     for (input <- Seq(docs, all)) {
-      val Seq(dist, local) = Bounds.map(b => sorted(
-        Dedup.minhashNeardupBounded(input, 0.8, Dedup.DefaultMaxBucket, b)))
+      val Seq(dist, local) = Bounds.map(b => sorted(Dedup.Signatures.using(input, b)(_.pairs(0.8))))
       assert(dist.nonEmpty, "no pairs — the comparison is vacuous")
       assert(local == dist, s"driver path drifted: ${local.diff(dist)} vs ${dist.diff(local)}")
     }
@@ -108,8 +108,7 @@ class BoundedNeardupSpec extends SparkSpec {
     // end to end: an over-bound verify over many partitions falls back
     val parts = docs.repartition(32)
     val rows = Dedup.shingleHashes(parts).count()
-    val Seq(dist, fellBack) = Seq(0L, rows / 4).map(b =>
-      Dedup.minhashNeardupBounded(parts, 0.8, Dedup.DefaultMaxBucket, b))
+    val Seq(dist, fellBack) = Seq(0L, rows / 4).map(Dedup.Signatures.using(parts, _)(_.pairs(0.8)))
     assert(!fellBack.isLocal, "an over-bound verify took the driver path")
     assert(sorted(fellBack) == sorted(dist))
   }
@@ -122,8 +121,7 @@ class BoundedNeardupSpec extends SparkSpec {
     val text = "alpha beta gamma delta epsilon"
     // 200 copies: C(200, 2) = 19,900 pairs in each of 16 band buckets
     val twins = same(1 to 200, text)
-    val Seq(dist, local) = Bounds.map(b =>
-      Dedup.minhashNeardupBounded(twins, 0.8, Dedup.DefaultMaxBucket, b))
+    val Seq(dist, local) = Bounds.map(Dedup.Signatures.using(twins, _)(_.pairs(0.8)))
     assert(!local.isLocal, "the driver enumerated 318,400 candidate collisions")
     assert(sorted(local) == sorted(dist) && dist.count() == 19900L)
     assert(Dedup.minhashNeardupMaterialized(same(1 to 20, text)).isLocal,
@@ -132,8 +130,7 @@ class BoundedNeardupSpec extends SparkSpec {
     val w = new StagingWriter(spark, tmpDir("candbound"))
     Dedup.MinhashIndex.build(twins, w, "docs")
     for ((batch, local) <- Seq(same(1001 to 1040, text) -> false, same(1001 to 1010, text) -> true)) {
-      val Seq(d, l) = Bounds.map(b =>
-        Dedup.neardupAgainstIndexBounded(batch, w, "docs", 0.8, Dedup.DefaultMaxBucket, b))
+      val Seq(d, l) = Bounds.map(Dedup.Signatures.using(batch, _)(_.against(w, "docs")))
       assert(l.isLocal == local, s"${batch.count()} batch docs: local = ${l.isLocal}")
       assert(sorted(l) == sorted(d) && d.count() == 200L * batch.count())
     }
@@ -177,16 +174,28 @@ class BoundedNeardupSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(base), new java.io.File(wh))
       val w = new StagingWriter(spark, wh)
       val funnels = bs.zipWithIndex.map { case (batch, i) =>
-        val r = CorpusPrepJob.incrementBounded(batch, evalDocs, w, PrepConfig(),
-          Some(i + 1L), b)
-        (sorted(r.funnel), r.stageCounts)
+        val id = i + 1L
+        val r = CorpusPrepJob.incrementBounded(batch, evalDocs, w, PrepConfig(), Some(id), b)
+        // the index slices come from the batch's signature: they must
+        // equal an append of the landed rows through a fresh text parse
+        def slice(t: String) = spark.read.parquet(new java.io.File(w.path(t)).listFiles
+          .filter(_.getName.startsWith(s"b${id}_")).map(_.getPath).toIndexedSeq: _*)
+        val ref = s"ref_b${b}_$id"
+        Dedup.MinhashIndex.append(slice(CorpusPrepJob.CorpusTable), w, ref)
+        Dedup.MinhashIndex.artifacts.foreach { a =>
+          assert(sorted(slice(CorpusPrepJob.IndexTable + a)) == sorted(w.read(ref + a)),
+            s"bound $b, batch $id: the $a slice differs from a fresh parse of the landed rows")
+        }
+        (sorted(r.funnel), r.stageCounts,
+          tables.map(t => t -> slice(t).schema.map(f => f.name -> f.dataType)))
       }
       (funnels, tables.map(t => t -> sorted(w.read(t))).toMap)
     }
     val (distFunnels, distTables) = dist
     val (localFunnels, localTables) = local
-    assert(localFunnels == distFunnels, s"funnels drifted: $localFunnels vs $distFunnels")
-    distFunnels.foreach { case (_, c) =>
+    assert(localFunnels == distFunnels,
+      s"funnels or slice schemas drifted: $localFunnels vs $distFunnels")
+    distFunnels.foreach { case (_, c, _) =>
       assert(c("3_exact_unique") > c("4_neardup_kept") && c("4_neardup_kept") > c("5_clean"),
         s"a batch left a stage without work: $c")
     }
@@ -241,12 +250,18 @@ class BoundedNeardupSpec extends SparkSpec {
       .filter(col("doc_id") % 2 === 0)
       .withColumn("doc_id", col("doc_id") + 10000000L))
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val collects = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sqlSite = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val stageExec = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val shuffleStages = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        val site = e.stageInfos.maxBy(_.stageId).name
+        sites.add(site)
+        if (site.startsWith("runJob at Dedup.scala")) collects.incrementAndGet()
+      }
       override def onStageSubmitted(
           e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
         stageExec.put(e.stageInfo.stageId, Option(e.properties)
@@ -280,9 +295,12 @@ class BoundedNeardupSpec extends SparkSpec {
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(report.stageCounts("1_raw") >= 250, s"batch too small: ${report.stageCounts}")
     // job totals swing by one or two between runs of the same code (AQE
-    // re-plans a stage depending on timing); the distributed plans ran
-    // about 80 per batch
-    assert(jobs.get() <= 45, s"${jobs.get()} jobs for one warm increment")
+    // re-plans a stage depending on timing): the bound is the measured
+    // 28 plus 2. The distributed plans ran about 80 per batch
+    assert(jobs.get() <= 30, s"${jobs.get()} jobs for one warm increment: $sites")
+    // the bounded collects: the batch's one signature and the probe's
+    // three stored reads
+    assert(collects.get() <= 4, s"${collects.get()} bounded collects for one warm increment")
     import scala.jdk.CollectionConverters._
     val dedupShuffles = shuffleStages.asScala.filter { case (name, exec) =>
       val site = if (name.contains(".scala:")) name

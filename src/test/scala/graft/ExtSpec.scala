@@ -882,11 +882,11 @@ class ExtSpec extends SparkSpec {
     // takes the driver-side verify and probe (the fixture is well under
     // Dedup.LocalMaxShingleRows)
     for (bound <- Seq(0L, Dedup.LocalMaxShingleRows)) {
-      val got = Dedup.neardupAgainstIndexBounded(batch, w, "docs", 0.8, Dedup.DefaultMaxBucket, bound)
+      val got = Dedup.Signatures.using(batch, bound)(_.against(w, "docs", 0.8))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       // ground truth: the one-shot near-dup over everything, restricted
       // to cross pairs, re-oriented to (corpus side, batch side)
-      val want = Dedup.minhashNeardupBounded(all, 0.8, Dedup.DefaultMaxBucket, bound)
+      val want = Dedup.Signatures.using(all, bound)(_.pairs(0.8))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .collect {
