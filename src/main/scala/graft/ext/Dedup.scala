@@ -541,19 +541,23 @@ object Dedup {
       docs: DataFrame,
       threshold: Double = 0.8,
       maxBucket: Int = DefaultMaxBucket): DataFrame =
-    Signatures.using(docs, LocalMaxShingleRows)(_.pairs(threshold, maxBucket))
+    Signatures.using(docs, LocalMaxShingleRows, maxBucket)(_.pairs(threshold))
 
-  /** One frame's MinHash signature, computed ONCE for all its readers:
-    * the (doc_id, h) shingle rows, persisted, and — when there are at
-    * most `maxRows` of them under non-null LONG ids — the same rows
-    * gathered by ONE [[collectAtMost]] into per-doc [[LocalShingles]]
-    * (None above the bound, and at a bound of 0, the force-distributed
-    * switch the equality specs use). It serves the within-frame verify
+  /** One frame's MinHash signature, computed ONCE for all its readers —
+    * the [[MinhashIndex]] family's signed batch: the (doc_id, h)
+    * shingle rows, persisted, and — when there are at most `maxRows` of
+    * them under non-null LONG ids — the same rows gathered by ONE
+    * [[collectAtMost]] into per-doc [[LocalShingles]] (None above the
+    * bound, and at a bound of 0, the force-distributed switch the
+    * equality specs use). It serves the within-frame verify
     * ([[pairs]]), the stored-index probe ([[against]]) and the index
-    * artifact frames ([[index]]); an increment signs its exact-dedup
-    * survivors once and feeds all three. The caller owns [[release]]. */
+    * artifact frames ([[frames]]); an increment signs its exact-dedup
+    * survivors once and feeds all three, as a streaming tick does its
+    * batch. `maxBucket` is the [[BucketCap]] of both candidate joins.
+    * The caller owns [[release]]. */
   private[graft] final class Signatures private (
-      private[graft] val hs: DataFrame, maxRows: Long) {
+      private[graft] val hs: DataFrame, maxRows: Long, maxBucket: Int)
+      extends NeardupIndex.Signed[Double] {
 
     private val local: Option[Map[Long, LocalShingles]] =
       if (maxRows <= 0 || hs.schema("doc_id").dataType != LongType) None
@@ -562,15 +566,14 @@ object Dedup {
 
     /** Verified within-frame pairs: [[verifyLocal]] on the driver, else
       * the distributed plan, checkpointed. */
-    def pairs(threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket): DataFrame =
+    def pairs(threshold: Double = 0.8): DataFrame =
       local.flatMap(verifyLocal(hs.sparkSession, _, threshold, maxBucket))
         .getOrElse(neardupFrom(hs, threshold, maxBucket).localCheckpoint(true))
 
     /** Pairs (a_id = stored, b_id = signed) against a stored
       * [[MinhashIndex]] — see [[neardupAgainstIndex]]. */
     def against(
-        writer: graft.sinks.StagingWriter, table: String,
-        threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket): DataFrame =
+        writer: graft.sinks.StagingWriter, table: String, threshold: Double = 0.8): DataFrame =
       local.flatMap(probeLocal(hs.sparkSession, _, writer, table, threshold, maxBucket, maxRows))
         .getOrElse(neardupAgainstIndexPlan(hs, writer, table, threshold, maxBucket)
           .localCheckpoint(true))
@@ -581,7 +584,7 @@ object Dedup {
       * keys, one partition each, in doc_id order — and collects only
       * `keep`'s ids (at most the signed docs); a distributed one gives
       * the aggregates over its shingle rows. */
-    def index(keep: Option[DataFrame]): GrowingIndex.Frames = emit => local match {
+    def frames(keep: Option[DataFrame]): GrowingIndex.Frames = emit => local match {
       case Some(docs) =>
         val ids = keep.map(_.select(col("doc_id")).collect()
           .collect { case r if !r.isNullAt(0) => r.getLong(0) }.toSet)
@@ -603,18 +606,18 @@ object Dedup {
   }
 
   private[graft] object Signatures {
-    def of(docs: DataFrame, localMaxShingleRows: Long): Signatures = {
+    def of(docs: DataFrame, localMaxShingleRows: Long,
+        maxBucket: Int = DefaultMaxBucket): Signatures = {
       val hs = shingleHashes(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try new Signatures(hs, localMaxShingleRows)
+      try new Signatures(hs, localMaxShingleRows, maxBucket)
       catch { case e: Throwable => hs.unpersist(blocking = false); throw e }
     }
 
     /** [[of]] released when `f` returns. */
-    def using[T](docs: DataFrame, localMaxShingleRows: Long)(f: Signatures => T): T = {
-      val s = of(docs, localMaxShingleRows)
-      try f(s) finally s.release()
-    }
+    def using[T](docs: DataFrame, localMaxShingleRows: Long,
+        maxBucket: Int = DefaultMaxBucket)(f: Signatures => T): T =
+      NeardupIndex.using(of(docs, localMaxShingleRows, maxBucket))(f)
   }
 
   /** The [[MinhashIndex]] artifacts' columns after `doc_id`, by suffix,
@@ -1479,24 +1482,19 @@ object Dedup {
     * ([[neardupAgainstIndex]]). At 100 TB the index is the linear
     * byproduct of the first dedup pass (narrow integer rows, ~tokens ×
     * 16 bytes for the shingle table); re-shingling the corpus per batch
-    * would instead re-pay the full text parse on every ingest tick. One
-    * persisted shingle parse feeds all three writes: [[frames]] signs
-    * the input distributed (a build collects nothing), and a batch
-    * signed upstream appends its [[Signatures.index]] frames. */
+    * would instead re-pay the full text parse on every ingest tick. A
+    * batch is signed once ([[Signatures]], under
+    * [[LocalMaxShingleRows]]): within the bound a build, append or tick
+    * partition writes one-file local frames, above it the aggregates
+    * over the persisted shingle rows; a batch signed upstream appends
+    * its [[Signatures.frames]]. */
   object MinhashIndex extends NeardupIndex[Double] with GrowingIndex.NoSidecar {
     val artifacts = Seq("__shingles", "__sizes", "__bands")
     val idCol = "doc_id"
     val defaultThreshold = 0.8
 
-    protected def frames(docs: DataFrame, g: Unit)(emit: DataFrame => Unit): Unit =
-      Signatures.using(docs, 0L)(_.index(None)(emit))
-
-    protected def pairsWithin(batch: DataFrame, threshold: Double): DataFrame =
-      minhashNeardupMaterialized(batch, threshold)
-
-    protected def pairsAgainst(batch: DataFrame, writer: graft.sinks.StagingWriter,
-        table: String, threshold: Double): DataFrame =
-      neardupAgainstIndex(batch, writer, table, threshold)
+    protected def sign(docs: DataFrame, g: Unit): Signatures =
+      Signatures.of(docs, LocalMaxShingleRows)
   }
 
   /** Incremental near-dup: pairs (a_id = indexed corpus doc, b_id = new
@@ -1530,7 +1528,7 @@ object Dedup {
       table: String,
       threshold: Double = 0.8,
       maxBucket: Int = DefaultMaxBucket): DataFrame =
-    Signatures.using(newDocs, LocalMaxShingleRows)(_.against(writer, table, threshold, maxBucket))
+    Signatures.using(newDocs, LocalMaxShingleRows, maxBucket)(_.against(writer, table, threshold))
 
   /** The driver-side probe of [[Signatures.against]]; None when a stored
     * read exceeds `maxRows` or the candidates exceed

@@ -11,9 +11,10 @@ import org.apache.spark.storage.StorageLevel
   * ([[Similarity.SignLshIndex]]), IVF cells ([[Similarity.IvfIndex]])
   * and dHash bands ([[Multimodal.DhashIndex]]). A family supplies only
   * what is its own: its artifact suffixes (existence gate LAST), an
-  * optional geometry sidecar, and [[frames]] — one shared parse of a
-  * batch into its artifact frames, keyed under the geometry. Probes
-  * stay in the family files. This class owns every write.
+  * optional geometry sidecar, and [[frames]] — a batch's artifact
+  * frames, keyed under the geometry from one signing of the batch
+  * (a [[NeardupIndex]] family's `sign`). Probes stay in the family
+  * files. This class owns every write.
   *
   * Layouts, one per growth cadence:
   *   - [[build]]: overwrite, the index of a whole corpus;
@@ -21,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   *   - [[appendBatchSlice]]: appends under the flat-table batch
   *     discriminator ([[StagingWriter.appendBatchSlice]]), so a
   *     replayed batch-cadence tick first rolls its own slice back;
-  *   - [[writeBatchPartition]]: idempotent `ingest_batch=<id>`
+  *   - [[NeardupIndex.ingestBatch]]: idempotent `ingest_batch=<id>`
   *     partitions, the streaming layout — an at-least-once replay
   *     replaces its own partition. Never mix it with the flat layouts
   *     on one table.
@@ -65,7 +66,7 @@ abstract class GrowingIndex {
   protected def geometryFrame(input: DataFrame, g: Geometry): DataFrame
 
   /** Hand the batch's artifact frames to `emit`, one per suffix in
-    * [[artifacts]] order, from one shared parse of the batch. */
+    * [[artifacts]] order, from one signing of the batch. */
   protected def frames(batch: DataFrame, g: Geometry)(emit: DataFrame => Unit): Unit
 
   /** The existence gate: the last artifact is on storage. */
@@ -73,8 +74,9 @@ abstract class GrowingIndex {
     writer.exists(table + artifacts.last)
 
   def build(input: DataFrame, writer: StagingWriter, table: String): Unit = {
-    val g = bootstrap(input, writer, table).getOrElse(throw new IllegalArgumentException(
+    val g = fit(input).getOrElse(throw new IllegalArgumentException(
       s"build($table): empty input — nothing to index"))
+    writeSidecar(input, writer, table, g)
     emit(frames(input, g), table)(put(writer, append = false))
   }
 
@@ -96,17 +98,6 @@ abstract class GrowingIndex {
   def appendBatchSlice(fs: Frames, writer: StagingWriter, table: String, batchId: Long): Unit = {
     flatOnly("appendBatchSlice")
     emit(fs, table)(writer.appendBatchSlice(_, _, batchId))
-  }
-
-  /** A missing sidecar is bootstrapped from this batch; an empty batch
-    * defers the bootstrap (and writes nothing) to the next tick. */
-  def writeBatchPartition(
-      batch: DataFrame, writer: StagingWriter, table: String, batchId: Long): Unit = {
-    flatOnly("writeBatchPartition")
-    val g =
-      if (sidecar.forall(s => writer.exists(table + s))) Some(readGeometry(writer, table))
-      else bootstrap(batch, writer, table)
-    g.foreach(geo => emit(frames(batch, geo), table)(writer.writeBatchPartition(_, _, batchId)))
   }
 
   /** Fold every artifact's `ingest_batch` partitions into one partition
@@ -137,13 +128,11 @@ abstract class GrowingIndex {
     staged
   }
 
-  private def bootstrap(input: DataFrame, writer: StagingWriter, table: String): Option[Geometry] =
-    fit(input).map { g =>
-      sidecar.foreach(s => writer.write(geometryFrame(input, g), table + s, append = false))
-      g
-    }
+  protected def writeSidecar(
+      input: DataFrame, writer: StagingWriter, table: String, g: Geometry): Unit =
+    sidecar.foreach(s => writer.write(geometryFrame(input, g), table + s, append = false))
 
-  private def emit(fs: Frames, table: String)(put: (DataFrame, String) => Unit): Unit = {
+  protected def emit(fs: Frames, table: String)(put: (DataFrame, String) => Unit): Unit = {
     val names = artifacts.iterator
     fs(df => put(df, table + names.next()))
     require(!names.hasNext, s"$table: frames left ${names.toList} unwritten")
@@ -165,7 +154,7 @@ object GrowingIndex {
 
   /** One batch's artifact frames, handed to a writer in
     * [[GrowingIndex.artifacts]] order: a family's `frames` of the batch,
-    * or frames computed upstream ([[Dedup.Signatures.index]]). */
+    * or a signed batch's ([[NeardupIndex.Signed.frames]]). */
   type Frames = (DataFrame => Unit) => Unit
 
   /** A family whose keying needs no stored state (MinHash, dHash). */
@@ -180,23 +169,25 @@ object GrowingIndex {
 
 /** A [[GrowingIndex]] that near-dups each ingest batch against itself
   * and its own history, then grows with the survivors — the continuous
-  * ingest loop a production corpus runs. A family adds its id column,
-  * its within-batch pair function and its probe; both return
-  * (`a_id` = standing/earlier, `b_id` = batch/later, evidence) pairs, so
-  * the later id is the drop candidate on both legs. `threshold` is the
-  * family's match bound (Jaccard or cosine floor, hamming ceiling). */
+  * ingest loop a production corpus runs. A family adds its id column
+  * and ONE signing step, [[sign]]: the batch's signature under a
+  * geometry, which serves the within-batch pairs, the probe of the
+  * standing index and the artifact frames ([[NeardupIndex.Signed]]),
+  * so a family's banding and verify code exists once and a tick signs
+  * its batch once. `threshold` is the family's match bound (Jaccard or
+  * cosine floor, hamming ceiling). */
 abstract class NeardupIndex[T] extends GrowingIndex {
+  import NeardupIndex.Signed
 
   def idCol: String
 
   def defaultThreshold: T
 
-  /** Within-batch pairs, materialized. */
-  protected def pairsWithin(batch: DataFrame, threshold: T): DataFrame
+  /** Sign `batch` under `g`; the caller owns [[Signed.release]]. */
+  protected def sign(batch: DataFrame, g: Geometry): Signed[T]
 
-  /** Batch-against-index pairs. */
-  protected def pairsAgainst(
-      batch: DataFrame, writer: StagingWriter, table: String, threshold: T): DataFrame
+  protected final def frames(batch: DataFrame, g: Geometry)(emit: DataFrame => Unit): Unit =
+    NeardupIndex.using(sign(batch, g))(_.frames(None)(emit))
 
   /** [[ingestBatch]] as the `foreachBatch` of a streaming query. */
   def ingestQuery(
@@ -218,10 +209,13 @@ abstract class NeardupIndex[T] extends GrowingIndex {
     * the survivors (every row that is not the b-side of a pair) in
     * `<table>_docs`, and the survivors' keys grow the index as this
     * tick's batch partition — so the next tick sees this one as
-    * history. The first tick of a fresh index has no probe and its
-    * partitions create the index (bootstrapping a sidecar from the
-    * survivors). State lives in the index parquet, not the state
-    * store.
+    * history. The batch is signed ONCE, under the stored geometry or,
+    * on a fresh index, under the one fitted from the batch (whose
+    * sidecar the partition write bootstraps), and that signature feeds
+    * the pairs, the probe and the partition. The first tick of a fresh
+    * index has no probe, and an empty one writes no artifact (a batch
+    * with nothing to fit, e.g. no non-zero vector, has no pairs). State
+    * lives in the index parquet, not the state store.
     *
     * `foreachBatch` is at-least-once: a crash between these writes and
     * the checkpoint commit replays the tick. Every write is therefore a
@@ -240,18 +234,56 @@ abstract class NeardupIndex[T] extends GrowingIndex {
     val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val hasIndex = exists(writer, table)
-      val inner = pairsWithin(b, threshold)
-      val pairs =
-        (if (hasIndex) inner.union(pairsAgainst(b, writer, table, threshold)) else inner)
-          .filter(col("a_id") =!= col("b_id"))
-          .distinct()
+      val stored = sidecar.forall(s => writer.exists(table + s))
+      val g = if (stored) Some(readGeometry(writer, table)) else fit(b)
+      val signed = g.map(sign(b, _))
+      try {
+        // nothing to fit (no non-zero vector) is nothing to pair
+        val found = signed.fold(b.select(col(idCol).as("a_id"), col(idCol).as("b_id")).limit(0)) {
+          s =>
+            if (hasIndex) s.pairs(threshold).union(s.against(writer, table, threshold))
+            else s.pairs(threshold)
+        }
+        val pairs = found.filter(col("a_id") =!= col("b_id")).distinct().localCheckpoint(true)
+        writer.writeBatchPartition(pairs, s"${table}_pairs", batchId)
+        val kept = b.join(pairs.select(col("b_id").as(idCol)).distinct(),
+          Seq(idCol), "left_anti")
           .localCheckpoint(true)
-      writer.writeBatchPartition(pairs, s"${table}_pairs", batchId)
-      val kept = b.join(pairs.select(col("b_id").as(idCol)).distinct(),
-        Seq(idCol), "left_anti")
-        .localCheckpoint(true)
-      writer.writeBatchPartition(kept, s"${table}_docs", batchId)
-      writeBatchPartition(kept, writer, table, batchId)
+        writer.writeBatchPartition(kept, s"${table}_docs", batchId)
+        // an empty first tick writes no artifact: a gate must never pass
+        // over an empty index
+        for (geo <- g; s <- signed if hasIndex || !kept.isEmpty) {
+          if (!stored) writeSidecar(b, writer, table, geo)
+          emit(s.frames(Some(kept)), table)(writer.writeBatchPartition(_, _, batchId))
+        }
+      } finally signed.foreach(_.release())
     } finally b.unpersist(blocking = false)
   }
+}
+
+object NeardupIndex {
+
+  /** One batch signed under an index geometry — the only place a family
+    * signs, bands and verifies. Its results are materialized before
+    * they return (a caller may release the signature right after), and
+    * pairs are (`a_id`, `b_id`, evidence) with `a_id` the standing or
+    * earlier id, so the later id is the drop candidate on both legs. */
+  trait Signed[T] {
+
+    /** Within-batch pairs, `a_id < b_id`. */
+    def pairs(threshold: T): DataFrame
+
+    /** Pairs against the standing index `table` (`a_id` stored). */
+    def against(writer: StagingWriter, table: String, threshold: T): DataFrame
+
+    /** The artifact frames of the signed rows whose ids `keep` holds
+      * (every signed row when None). */
+    def frames(keep: Option[DataFrame]): GrowingIndex.Frames
+
+    def release(): Unit
+  }
+
+  /** `f` over `s`, released when `f` returns. */
+  def using[S <: Signed[_], A](s: S)(f: S => A): A =
+    try f(s) finally s.release()
 }

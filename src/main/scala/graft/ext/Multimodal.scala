@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -214,29 +214,16 @@ object Multimodal {
     * the same [[graft.ext.BucketCap]] skew guard and the same
     * distinct-before-verify candidate join as
     * [[graft.ext.Dedup.simhashNeardup]]. Output: (doc_id_a <
-    * doc_id_b, hamming). Scale: candidates ≈ 4·n²/2¹⁷ per shard on
+    * doc_id_b, hamming), materialized from one checkpointed signature
+    * ([[DhashSignatures]]). Scale: candidates ≈ 4·n²/2¹⁷ per shard on
     * unrelated payloads — the verify is 4 xor/bit_count adds, no
     * payload ever re-read. */
   def mediaNeardup(
       media: DataFrame,
       maxDist: Int = 3,
-      maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(maxDist < DhashBands,
-      s"$DhashBands-band blocking guarantees recall only for distance <= ${DhashBands - 1}")
-    val banded = graft.ext.BucketCap.keepSmall(
-      bandedSigs(dhashSignature(media)), Seq("band", "band_val"), maxBucket)
-    def side(tag: String) = banded.select(
-      col("band") +: col("band_val") +: col("doc_id").as(s"doc_id_$tag") +:
-        (0 until DhashBands).map(k => col(s"b$k").as(s"$tag$k")): _*)
-    val hamming = (0 until DhashBands)
-      .map(k => bit_count(col(s"a$k").bitwiseXOR(col(s"b$k"))))
-      .reduce(_ + _).cast("int")
-    side("a").join(side("b"), Seq("band", "band_val"))
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      .select(col("doc_id_a"), col("doc_id_b"), hamming.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
-  }
+      maxBucket: Int = Int.MaxValue): DataFrame =
+    NeardupIndex.using(new DhashSignatures(media, maxBucket))(_.pairs(maxDist)
+      .select(col("a_id").as("doc_id_a"), col("b_id").as("doc_id_b"), col("hamming")))
 
   private val DhashSamples = 65
   private val DhashBands = 4
@@ -247,35 +234,76 @@ object Multimodal {
       posexplode(array((0 until DhashBands).map(k => col(s"b$k")): _*))
         .as(Seq("band", "band_val")): _*)
 
+  /** One media frame's dHash signature — the [[DhashIndex]] family's
+    * signed batch: [[dhashSignature]], pinned by ONE `localCheckpoint`,
+    * whose banded rows ([[bandedSigs]]) the within-batch pairs, the
+    * probe and the index frames all read. The pin matters beyond
+    * reuse: without the barrier, join-key non-null constraint inference
+    * pushes isnotnull(<band expr>) down to the batch scan, where
+    * projection collapse inlines the interpreted HOF signature tree into
+    * every reference — each element_at then re-evaluates the 65-sample
+    * transform, and a 500-doc probe measured 18 s at sf0.1 (0.6 s
+    * pinned). Stored bands never have the problem: they are parquet
+    * columns. `maxBucket` caps the within-batch buckets. */
+  private final class DhashSignatures(media: DataFrame, maxBucket: Int)
+      extends NeardupIndex.Signed[Int] {
+    private val sig = dhashSignature(media).localCheckpoint(true)
+
+    def pairs(maxDist: Int): DataFrame = {
+      val banded = graft.ext.BucketCap.keepSmall(
+        bandedSigs(sig), Seq("band", "band_val"), maxBucket)
+      verify(banded, banded, maxDist, Some(col("a_id") < col("b_id")))
+    }
+
+    def against(w: graft.sinks.StagingWriter, name: String, maxDist: Int): DataFrame =
+      verify(w.read(s"${name}_dhash_bands"), bandedSigs(sig), maxDist, None)
+
+    /** (a_id, b_id, hamming) over the (band, band_val) matches of two
+      * banded signature frames at hamming ≤ `maxDist`, materialized —
+      * candidates distinct before the filter, the verify 4 xor/bit_count
+      * adds on the joined band ints. */
+    private def verify(
+        a: DataFrame, b: DataFrame, maxDist: Int, order: Option[Column]): DataFrame = {
+      require(maxDist < DhashBands,
+        s"$DhashBands-band blocking guarantees recall only for distance <= ${DhashBands - 1}")
+      def side(df: DataFrame, tag: String) = df.select(
+        col("band") +: col("band_val") +: col("doc_id").as(s"${tag}_id") +:
+          (0 until DhashBands).map(k => col(s"b$k").as(s"$tag$k")): _*)
+      val hamming = (0 until DhashBands)
+        .map(k => bit_count(col(s"a$k").bitwiseXOR(col(s"b$k"))))
+        .reduce(_ + _).cast("int")
+      val cand = side(a, "a").join(side(b, "b"), Seq("band", "band_val"))
+      order.fold(cand)(cand.filter)
+        .select(col("a_id"), col("b_id"), hamming.as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= maxDist)
+        .localCheckpoint(true)
+    }
+
+    def frames(keep: Option[DataFrame]): GrowingIndex.Frames = emit => {
+      val rows = keep.fold(sig)(k => sig.join(k.select(col("doc_id")), Seq("doc_id"), "left_semi"))
+      emit(rows)
+      emit(bandedSigs(rows))
+    }
+
+    def release(): Unit = graft.util.Checkpoints.release(sig)
+  }
+
   /** Ingest-time dHash index ([[GrowingIndex]]) — the incremental leg
     * of [[mediaNeardup]]: signatures AND their banded blocking keys land
     * as parquet artifacts (`_dhash_sigs`, then `_dhash_bands` — the
     * existence gate), so a later batch near-dups against the standing
     * media corpus without ever re-reading or re-signing a corpus
-    * payload. The signature is pinned by one `localCheckpoint` before
-    * both writes, so the stored bands always derive from exactly the
-    * stored signatures. */
+    * payload. Both writes read the one checkpointed signature
+    * ([[DhashSignatures]]), so the stored bands always derive from
+    * exactly the stored signatures. */
   object DhashIndex extends NeardupIndex[Int] with GrowingIndex.NoSidecar {
     val artifacts = Seq("_dhash_sigs", "_dhash_bands")
     val idCol = "doc_id"
     val defaultThreshold = 3
 
-    protected def frames(media: DataFrame, g: Unit)(emit: DataFrame => Unit): Unit = {
-      val sig = dhashSignature(media).localCheckpoint(true)
-      emit(sig)
-      emit(bandedSigs(sig))
-    }
-
-    protected def pairsWithin(batch: DataFrame, maxDist: Int): DataFrame =
-      mediaNeardup(batch, maxDist)
-        .select(col("doc_id_a").as("a_id"), col("doc_id_b").as("b_id"), col("hamming"))
-        .localCheckpoint(true)
-
-    protected def pairsAgainst(batch: DataFrame, writer: graft.sinks.StagingWriter,
-        table: String, maxDist: Int): DataFrame =
-      dhashNeardupAgainstIndex(batch, writer, table, maxDist)
-        .select(col("doc_id_corpus").as("a_id"), col("doc_id_batch").as("b_id"),
-          col("hamming"))
+    protected def sign(media: DataFrame, g: Unit): NeardupIndex.Signed[Int] =
+      new DhashSignatures(media, Int.MaxValue)
   }
 
   /** Probe: the batch's perceptual near-dups AGAINST the stored index
@@ -284,36 +312,14 @@ object Multimodal {
     * never sees the corpus frame). Same exact pigeonhole recall as
     * [[mediaNeardup]]; candidates are (band, band_val) matches, the
     * verify is 4 xor/bit_count adds on the joined band ints.
-    * Output: (doc_id_corpus, doc_id_batch, hamming). */
+    * Output: (doc_id_corpus, doc_id_batch, hamming), materialized. */
   def dhashNeardupAgainstIndex(
       media: DataFrame,
       w: graft.sinks.StagingWriter,
       name: String,
-      maxDist: Int = 3): DataFrame = {
-    require(maxDist < DhashBands,
-      s"$DhashBands-band blocking guarantees recall only for distance <= ${DhashBands - 1}")
-    val stored = w.read(s"${name}_dhash_bands").select(
-      col("band") :: col("band_val") :: col("doc_id").as("doc_id_corpus") ::
-        (0 until DhashBands).map(k => col(s"b$k").as(s"c$k")).toList: _*)
-    // PIN the probe's banded signatures (batch-bounded by contract)
-    // before the join: without the barrier, join-key non-null
-    // constraint inference pushes isnotnull(<band expr>) down to the
-    // batch scan, where projection collapse inlines the interpreted
-    // HOF signature tree into every reference — each element_at then
-    // re-evaluates the 65-sample transform, and a 500-doc probe
-    // measured 18 s at sf0.1 (0.6 s pinned). The corpus side never
-    // has the problem: its bands come from parquet columns.
-    val probe = bandedSigs(dhashSignature(media)).localCheckpoint(true).select(
-      col("band") :: col("band_val") :: col("doc_id").as("doc_id_batch") ::
-        (0 until DhashBands).map(k => col(s"b$k").as(s"p$k")).toList: _*)
-    val hamming = (0 until DhashBands)
-      .map(k => bit_count(col(s"c$k").bitwiseXOR(col(s"p$k"))))
-      .reduce(_ + _).cast("int")
-    stored.join(probe, Seq("band", "band_val"))
-      .select(col("doc_id_corpus"), col("doc_id_batch"), hamming.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
-  }
+      maxDist: Int = 3): DataFrame =
+    NeardupIndex.using(new DhashSignatures(media, Int.MaxValue))(_.against(w, name, maxDist)
+      .select(col("a_id").as("doc_id_corpus"), col("b_id").as("doc_id_batch"), col("hamming")))
 
   /** SHOT-BOUNDARY DETECTION over the sampled frame stream — the
     * video-curation row next to [[frameSample]]: a per-frame dHash-

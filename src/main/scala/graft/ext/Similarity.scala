@@ -559,6 +559,12 @@ object Similarity {
       }
     })
 
+  /** Default LSH geometry: recall ≈ 0.997 at cos 0.9, random-pair
+    * candidate rate ≈ 2.3% (see [[embedNeardup]]). One definition so the
+    * cap report can never audit a different join than the one run. */
+  val DefaultPlanes = 10
+  val DefaultTables = 24
+
   /** Embedding near-duplicate pairs: cosine ≥ `threshold`, found via
     * OR-amplified random-hyperplane LSH — `tables` independent hash
     * tables of `planes` sign bits each; a pair is a candidate when it
@@ -578,13 +584,11 @@ object Similarity {
     * pairs are deduped before the verify re-join fetches both vectors.
     * Buckets above `maxBucket` are dropped ([[BucketCap]]) so one dense
     * cell can never turn the candidate join quadratic;
-    * [[embedNeardupCapReport]] lists what was dropped. */
-  /** Default LSH geometry: recall ≈ 0.997 at cos 0.9, random-pair
-    * candidate rate ≈ 2.3% (see [[embedNeardup]]). One definition so the
-    * cap report can never audit a different join than the one run. */
-  val DefaultPlanes = 10
-  val DefaultTables = 24
-
+    * [[embedNeardupCapReport]] lists what was dropped.
+    *
+    * The frame is signed once, the [[SignLshIndex]] family's signing
+    * (per-row dim guard under the first vector's dim included), and the
+    * pair set returns materialized. */
   def embedNeardup(
       emb: DataFrame,
       threshold: Double = 0.9,
@@ -592,23 +596,11 @@ object Similarity {
       tables: Int = DefaultTables,
       maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
-    val v = nonZero(emb)
     // an empty corpus short-circuits to an empty pair set through the
     // plan itself — the placeholder dim is never applied to a row
-    val banded = signBands(v, planes, tables, firstDim(v).getOrElse(1))
-    val kept = BucketCap.keepSmall(banded, Seq("tbl", "bucket"), maxBucket)
-    val cand = kept.select(col("tbl"), col("bucket"), col("vec_id").as("a_id"))
-      .join(kept.select(col("tbl"), col("bucket"), col("vec_id").as("b_id")),
-        Seq("tbl", "bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
-      .distinct()
-    cand
-      .join(v.select(col("vec_id").as("a_id"), col("v").as("va"), col("nv").as("na")), "a_id")
-      .join(v.select(col("vec_id").as("b_id"), col("v").as("vb"), col("nv").as("nb")), "b_id")
-      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(col("cos") >= threshold)
-      .select(col("a_id"), col("b_id"))
+    val dim = firstDim(nonZero(emb)).getOrElse(1)
+    NeardupIndex.using(new LshSignatures(emb, (planes, tables, dim), "embedNeardup", maxBucket))(
+      _.pairs(threshold))
   }
 
   /** Dropped-bucket report for [[embedNeardup]]'s cap (tbl, bucket,
@@ -619,20 +611,85 @@ object Similarity {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     BucketCap.droppedReport(
-      signBands(v, planes, tables, firstDim(v).getOrElse(1)),
+      signBands(v.withColumn("buckets", signBuckets(planes, tables, firstDim(v).getOrElse(1)))),
       Seq("tbl", "bucket"), maxBucket)
   }
 
-  /** Narrow (vec_id, tbl, bucket) rows: bucket = the `planes` sign bits
-    * of table `tbl`'s hyperplane projections, packed into an int — all
-    * tables computed by one sign_lsh evaluation per row. `dim` is the
+  /** A `v` column's bucket ids: bucket t = the `planes` sign bits of
+    * table t's hyperplane projections, packed into an int — all tables
+    * computed by one sign_lsh evaluation per row. `dim` is the
     * hyperplane family's dimensionality — the CALLER owns it, because
     * an index probe must band under the INDEX's dim, never the
     * batch's. */
-  private def signBands(v: DataFrame, planes: Int, tables: Int, dim: Int): DataFrame = {
-    val buckets = graft.functions.GraftFunctions.signLsh(
+  private def signBuckets(planes: Int, tables: Int, dim: Int): Column =
+    graft.functions.GraftFunctions.signLsh(
       col("v"), hyperplaneFamily(tables, planes, dim), lit(planes), lit(dim))
-    v.select(col("vec_id"), posexplode(buckets).as(Seq("tbl", "bucket")))
+
+  /** Narrow (vec_id, tbl, bucket) rows of a frame's `buckets` column. */
+  private def signBands(v: DataFrame): DataFrame =
+    v.select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
+
+  /** One embedding frame signed under a sign-LSH geometry (planes,
+    * tables, dim) — the [[SignLshIndex]] family's signed batch: the
+    * non-zero vectors (vec_id, v, nv) under the per-row dim guard named
+    * `op`, with their bucket ids, in ONE persisted frame that the
+    * within-batch verify, the probe and the index frames all read.
+    * `maxBucket` is the [[BucketCap]] of both candidate joins; every
+    * candidate is verified by exact cosine, so precision is exact
+    * regardless of LSH luck. */
+  private final class LshSignatures(
+      emb: DataFrame, g: (Int, Int, Int), op: String, maxBucket: Int)
+      extends NeardupIndex.Signed[Double] {
+    graft.functions.GraftFunctions.register(emb.sparkSession)
+    private val signed = {
+      val (planes, tables, dim) = g
+      nonZero(emb).withColumn("v", dimGuard(dim, op))
+        .withColumn("buckets", signBuckets(planes, tables, dim))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+
+    def pairs(threshold: Double): DataFrame = {
+      val kept = BucketCap.keepSmall(signBands(signed), Seq("tbl", "bucket"), maxBucket)
+      verify(kept.select(col("tbl"), col("bucket"), col("vec_id").as("a_id"))
+        .join(kept.select(col("tbl"), col("bucket"), col("vec_id").as("b_id")),
+          Seq("tbl", "bucket"))
+        .filter(col("a_id") < col("b_id")), signed, threshold)
+    }
+
+    /** Candidates are band-bucket collisions between the batch's bands
+      * (broadcast — the incremental contract is |batch| ≪ |corpus|) and
+      * the stored bands under the cap, verified against the stored
+      * vectors. */
+    def against(writer: graft.sinks.StagingWriter, table: String, threshold: Double): DataFrame = {
+      val stored = BucketCap.keepSmall(
+        writer.read(s"${table}__embbands"), Seq("tbl", "bucket"), maxBucket)
+      verify(stored.select(col("tbl"), col("bucket"), col("vec_id").as("a_id"))
+        .join(broadcast(signBands(signed)
+          .select(col("tbl"), col("bucket"), col("vec_id").as("b_id"))),
+          Seq("tbl", "bucket")), writer.read(s"${table}__vecs"), threshold)
+    }
+
+    /** (a_id, b_id) candidates, deduped before the verify re-join
+      * fetches both vectors — the a side's from `a`, the b side's from
+      * this batch — kept at cosine ≥ `threshold`, materialized. */
+    private def verify(cand: DataFrame, a: DataFrame, threshold: Double): DataFrame =
+      cand.select("a_id", "b_id").distinct()
+        .join(a.select(col("vec_id").as("a_id"), col("v").as("va"), col("nv").as("na")), "a_id")
+        .join(signed.select(col("vec_id").as("b_id"), col("v").as("vb"), col("nv").as("nb")),
+          "b_id")
+        .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
+        .filter(col("cos") >= threshold)
+        .select(col("a_id"), col("b_id"))
+        .localCheckpoint(true)
+
+    def frames(keep: Option[DataFrame]): GrowingIndex.Frames = emit => {
+      val rows = keep.fold(signed)(k =>
+        signed.join(k.select(col("vec_id")), Seq("vec_id"), "left_semi"))
+      emit(rows.select(col("vec_id"), col("v"), col("nv")))
+      emit(signBands(rows))
+    }
+
+    def release(): Unit = signed.unpersist(blocking = false): Unit
   }
 
   /** Dimensionality of the first vector in a `v`-column frame; None on
@@ -952,11 +1009,13 @@ object Similarity {
     * geometry is stored with the index rather than trusted to the
     * caller: `planes`/`tables` shape only a build or the streaming
     * bootstrap, and growth bands under the sidecar with the per-row dim
-    * guard (mixed hyperplane families silently miss everything).
-    * Zero-norm vectors are excluded by the similarity contract. At
-    * 100 TB the index is the linear byproduct of the first dedup pass;
-    * re-banding the corpus per ingest tick would re-pay the full corpus
-    * scan. */
+    * guard (mixed hyperplane families silently miss everything). A
+    * streaming tick signs its batch once under that geometry, so its
+    * within-batch pairs band under the stored (planes, tables, dim)
+    * too. Zero-norm vectors are excluded by the similarity contract.
+    * At 100 TB the index is the linear byproduct of the first dedup
+    * pass; re-banding the corpus per ingest tick would re-pay the full
+    * corpus scan. */
   final case class SignLshIndex(planes: Int = DefaultPlanes, tables: Int = DefaultTables)
       extends NeardupIndex[Double] {
     type Geometry = (Int, Int, Int)
@@ -979,24 +1038,8 @@ object Similarity {
       Seq(g).toDF("planes", "tables", "dim")
     }
 
-    protected def frames(emb: DataFrame, g: Geometry)(emit: DataFrame => Unit): Unit = {
-      val (p, t, dim) = g
-      graft.functions.GraftFunctions.register(emb.sparkSession)
-      val v = nonZero(emb).withColumn("v", dimGuard(dim, "SignLshIndex"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        emit(v)
-        emit(signBands(v, p, t, dim))
-      } finally v.unpersist(blocking = false)
-    }
-
-    protected def pairsWithin(batch: DataFrame, threshold: Double): DataFrame =
-      // embedNeardup returns lazily: pin it before the tick's writes
-      embedNeardup(batch, threshold).localCheckpoint(true)
-
-    protected def pairsAgainst(batch: DataFrame, writer: graft.sinks.StagingWriter,
-        table: String, threshold: Double): DataFrame =
-      embedNeardupAgainstIndex(batch, writer, table, threshold)
+    protected def sign(emb: DataFrame, g: Geometry): NeardupIndex.Signed[Double] =
+      new LshSignatures(emb, g, "SignLshIndex", Dedup.DefaultMaxBucket)
   }
 
   /** (vec_id, v, nv) over the non-zero vectors: zero vectors have no
@@ -1032,48 +1075,22 @@ object Similarity {
 
   /** Incremental embedding near-dup: pairs (a_id = indexed corpus
     * vector, b_id = new batch vector) at cosine ≥ `threshold`, computed
-    * against a [[SignLshIndex]] artifact. Only the NEW batch is
-    * banded (with the geometry read from the index sidecar — a probe
-    * banded under different hyperplanes would silently miss
-    * everything); candidates are band-bucket collisions between the
-    * batch's bands (broadcast — the incremental contract is |batch| ≪
-    * |corpus|) and the stored bands under the usual [[BucketCap]]
-    * guard, then exact cosine verifies against the stored vectors, so
-    * precision is exact regardless of LSH luck. Within-batch pairs are
-    * NOT emitted — run [[embedNeardup]] on the batch for those. */
+    * against a [[SignLshIndex]] artifact. Only the NEW batch is signed
+    * ([[LshSignatures.against]]), under the geometry read from the
+    * index sidecar — a probe banded under different hyperplanes would
+    * silently miss everything — and a batch vector off the index dim
+    * fails the guard named `embedNeardupAgainstIndex(<table>)`.
+    * Within-batch pairs are NOT emitted — run [[embedNeardup]] on the
+    * batch for those. An empty batch (the routine no-new-data tick)
+    * flows through to an empty result. */
   def embedNeardupAgainstIndex(
       newEmb: DataFrame,
       writer: graft.sinks.StagingWriter,
       table: String,
       threshold: Double = 0.9,
-      maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    graft.functions.GraftFunctions.register(newEmb.sparkSession)
-    val (planes, tables, dim) = lshGeometry(writer, table)
-    // an empty batch (routine no-new-data tick) flows through to an
-    // empty result
-    val b = nonZero(newEmb)
-      .withColumn("v", dimGuard(dim, s"embedNeardupAgainstIndex($table)"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val idxBands = BucketCap.keepSmall(
-        writer.read(s"${table}__embbands"), Seq("tbl", "bucket"), maxBucket)
-      val cand = idxBands
-        .select(col("tbl"), col("bucket"), col("vec_id").as("a_id"))
-        .join(broadcast(signBands(b, planes, tables, dim)
-          .select(col("tbl"), col("bucket"), col("vec_id").as("b_id"))),
-          Seq("tbl", "bucket"))
-        .select("a_id", "b_id")
-        .distinct()
-      cand
-        .join(writer.read(s"${table}__vecs")
-          .select(col("vec_id").as("a_id"), col("v").as("va"), col("nv").as("na")), "a_id")
-        .join(b.select(col("vec_id").as("b_id"), col("v").as("vb"), col("nv").as("nb")), "b_id")
-        .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-        .filter(col("cos") >= threshold)
-        .select(col("a_id"), col("b_id"))
-        .localCheckpoint(true)
-    } finally b.unpersist(blocking = false)
-  }
+      maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame =
+    NeardupIndex.using(new LshSignatures(newEmb, lshGeometry(writer, table),
+      s"embedNeardupAgainstIndex($table)", maxBucket))(_.against(writer, table, threshold))
 
   /** SemDeDup (Abbas et al. 2023): semantic near-duplicate pruning via
     * cluster-then-compare — embeddings are assigned to a coarse k-means

@@ -3,6 +3,7 @@ package graft.run
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.ext.{Assemble, Dedup, TextStats}
@@ -301,17 +302,8 @@ object CorpusPrepJob {
     } finally {
       normalized.unpersist(blocking = false)
       signature.foreach(_.release())
-      owned.foreach(release)
+      owned.foreach(graft.util.Checkpoints.release)
     }
-  }
-
-  /** Drop a local checkpoint's blocks now. A checkpointed frame's plan
-    * is the `LogicalRDD` over the checkpointed RDD, whose blocks
-    * otherwise stay in executor storage until a driver GC lets the
-    * context cleaner find them; any other frame is left alone. */
-  private def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
   }
 
   /** The funnel: one `(stage, n_docs)` row per stage from the counts the
@@ -333,12 +325,9 @@ object CorpusPrepJob {
 
   /** The funnel table's schema (`stage` nullable, as the funnel table
     * has always been written). */
-  private val FunnelSchema = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    StructType(Seq(
-      StructField("stage", StringType),
-      StructField("n_docs", LongType, nullable = false)))
-  }
+  private val FunnelSchema = StructType(Seq(
+    StructField("stage", StringType),
+    StructField("n_docs", LongType, nullable = false)))
 
   /** The two opt-in audit rows (cfg.auditRows — see the knob's
     * scaladoc): both read the LANDED split frame — the written corpus
@@ -480,9 +469,11 @@ object CorpusPrepJob {
       batchSliceTables.foreach(t => writer.deleteBatchSlice(t, id))
     }
     stages(newDocs, evalDocs, cfg, localMaxShingleRows)(
-      // standing-corpus digests ride the scan projection — narrow
+      // standing-corpus digests ride the scan projection — narrow, and
+      // read under a declared schema: no schema-inference job per tick
       standing = batchUniq => batchUniq.join(
-        writer.read(CorpusTable).select(md5(col("text")).as("__corpus_hash")).distinct(),
+        writer.read(CorpusTable, CorpusText)
+          .select(md5(col("text")).as("__corpus_hash")).distinct(),
         md5(batchUniq("text")) === col("__corpus_hash"), "left_anti"),
       // the stored-index probe of the batch's signature; a signature
       // on the driver probes with narrow scans and its pairs are a
@@ -498,7 +489,7 @@ object CorpusPrepJob {
       land = _.localCheckpoint(true)) { (withSplit, funnel, signed) =>
       // the landed docs' index rows come from the batch's signature:
       // their text is not parsed again
-      val index = signed.index(Some(withSplit))
+      val index = signed.frames(Some(withSplit))
       batchId match {
         case Some(id) =>
           writer.appendBatchSlice(withSplit, CorpusTable, id)
@@ -511,6 +502,9 @@ object CorpusPrepJob {
       report(funnel, Seq(CorpusTable, IndexTable))
     }
   }
+
+  /** The one corpus column the standing-corpus anti-join reads. */
+  private val CorpusText = StructType(Seq(StructField("text", StringType)))
 
   /** The funnel's (stage, n_docs) shape with no rows — what a replayed,
     * already-committed [[increment]] batch reports. */

@@ -296,8 +296,8 @@ class BoundedNeardupSpec extends SparkSpec {
     assert(report.stageCounts("1_raw") >= 250, s"batch too small: ${report.stageCounts}")
     // job totals swing by one or two between runs of the same code (AQE
     // re-plans a stage depending on timing): the bound is the measured
-    // 28 plus 2. The distributed plans ran about 80 per batch
-    assert(jobs.get() <= 30, s"${jobs.get()} jobs for one warm increment: $sites")
+    // 27 plus 2. The distributed plans ran about 80 per batch
+    assert(jobs.get() <= 29, s"${jobs.get()} jobs for one warm increment: $sites")
     // the bounded collects: the batch's one signature and the probe's
     // three stored reads
     assert(collects.get() <= 4, s"${collects.get()} bounded collects for one warm increment")
