@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
 /** Deduplication operators over the `documents` table — the
   * LLM-training-data half of the engine (SURVEY.md §7.1 step 9; the
@@ -119,26 +119,13 @@ object Dedup {
     * Documents with fewer than n tokens produce an empty shingle set.
     *
     * Backed by the native [[graft.functions.WordNgrams]] expression: one
-    * compiled pass per row. The HOF formulation it replaces
-    * ([[shinglesHof]], kept for the equality test) executes interpreted
+    * compiled pass per row. The HOF formulation it replaces (kept in
+    * test sources as the equality reference) executes interpreted
     * (higher-order functions are CodegenFallback) with per-element
     * lambda dispatch — this is the hottest text path in the engine
     * (MinHash shingling under x2/x10/x14). */
   def shingles(text: Column, n: Int = 3): Column =
     graft.functions.GraftFunctions.wordNgrams(text, lit(n))
-
-  /** The built-ins-only formulation of [[shingles]] — zip_with over
-    * shifted slices (NOT element_at inside a transform lambda, which
-    * would re-split the document per ELEMENT). Kept as the behavioral
-    * reference the native expression is tested against. */
-  def shinglesHof(text: Column, n: Int = 3): Column = {
-    val t = split(text, " ")
-    val len = greatest(size(t) - (n - 1), lit(0)) // number of n-grams
-    val first = slice(t, lit(1), len)
-    val grams = (2 to n).foldLeft(first)((acc, k) =>
-      zip_with(acc, slice(t, lit(k), len), (a, b) => concat(a, lit(" "), b)))
-    array_distinct(grams)
-  }
 
   /** Evidence rows for flagged near-dup pairs — the explainability
     * report a human reviews BEFORE a corpus rewrite deletes anything:
@@ -260,9 +247,9 @@ object Dedup {
     * 100% recall vs a Spark-side brute force (256/256 pairs at sf0.1,
     * see .claude/skills/verify) — re-run that sweep whenever a fixture
     * or this geometry changes. */
-  val numHashes = 64
-  val bands = 16
-  val rowsPerBand: Int = numHashes / bands // 4
+  val numHashes: Int = graft.functions.MinhashKernel.NumHashes // 64
+  val bands: Int = graft.functions.MinhashKernel.Bands // 16
+  val rowsPerBand: Int = graft.functions.MinhashKernel.RowsPerBand // 4
 
   /** Worst-case per-pair banding miss probability at Jaccard `s`. */
   def bandingMissProb(s: Double): Double =
@@ -291,12 +278,17 @@ object Dedup {
     * shuffled. (Intersection is counted on 64-bit shingle hashes, the
     * same vanishing-collision trade the MinHash verify documents.) */
   def decontaminate(train: DataFrame, evalDocs: DataFrame, n: Int = 13): DataFrame = {
-    graft.functions.GraftFunctions.register(train.sparkSession)
-    val evalHashes = broadcast(
-      evalDocs
-        .select(explode(transform(shingles(col("text"), n), s => xxhash64(s))).as("h"))
-        .distinct())
-    evalHitReport(train, shingleHashes(train, n).join(evalHashes, "h"))
+    evalHitReport(train, shingleHashes(train, n).join(evalHashes(evalDocs, n), "h"))
+  }
+
+  /** The eval side of every decontamination flavor: its distinct word
+    * `n`-gram hashes, BROADCAST (a benchmark is orders of magnitude
+    * smaller than the corpus). */
+  private def evalHashes(evalDocs: DataFrame, n: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(evalDocs.sparkSession)
+    broadcast(evalDocs
+      .select(explode(transform(shingles(col("text"), n), s => xxhash64(s))).as("h"))
+      .distinct())
   }
 
   /** The confirm-and-report tail of every decontamination flavor: count
@@ -329,14 +321,8 @@ object Dedup {
     * exploded hash stream (membership left-join + one aggregate), so
     * the expensive n-gram parse never runs twice. */
   def contaminationRate(train: DataFrame, evalDocs: DataFrame, n: Int = 13): DataFrame = {
-    graft.functions.GraftFunctions.register(train.sparkSession)
-    val evalHashes = broadcast(
-      evalDocs
-        .select(explode(transform(shingles(col("text"), n), s => xxhash64(s))).as("h"))
-        .distinct()
-        .withColumn("m", lit(1L)))
     val perDoc = shingleHashes(train, n)
-      .join(evalHashes, Seq("h"), "left")
+      .join(evalHashes(evalDocs, n).withColumn("m", lit(1L)), Seq("h"), "left")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_ngrams"),
@@ -374,18 +360,14 @@ object Dedup {
     * hashes the empty string on both engines. NULL texts excluded by
     * contract (the x39 convention). */
   def decontaminateTrim(train: DataFrame, evalDocs: DataFrame, n: Int = 13): DataFrame = {
-    graft.functions.GraftFunctions.register(train.sparkSession)
-    val evalHashes = broadcast(
-      evalDocs
-        .select(explode(transform(shingles(col("text"), n), s => xxhash64(s))).as("h"))
-        .distinct())
+    val evalH = evalHashes(evalDocs, n)
     val base = train.filter(col("text").isNotNull)
     val matched = base
       .select(col("doc_id"),
         posexplode(graft.functions.GraftFunctions.wordNgramsAll(col("text"), lit(n)))
           .as(Seq("pos", "g")))
       .select(col("doc_id"), col("pos"), xxhash64(col("g")).as("h"))
-      .join(evalHashes, "h")
+      .join(evalH, "h")
     val covered = matched
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + lit(n - 1))).as("tpos"))
@@ -417,18 +399,19 @@ object Dedup {
     * (doc_id, n_eval_neardups, contaminated) — integer/boolean, hash-
     * compare safe; the per-pair Jaccard stays internal.
     *
-    * Scale shape: the x19 story made fuzzy — the eval side (bands AND
-    * the verify join's shingles) is benchmark-sized and BROADCAST; the
-    * corpus streams through its shingle projection once and never
-    * shuffles in full. Candidates come from the same 16×4 banding as
-    * [[minhashNeardupMaterialized]] (recall regime verified by
+    * Scale shape: the x19 story made fuzzy — both sides are signed per
+    * row by the MinHash kernel ([[signedDocs]]), each persisted so its
+    * text is parsed once; the eval side (band keys AND the verify's
+    * signature rows) is benchmark-sized and BROADCAST, so the corpus
+    * never shuffles in full. Candidates come from the same 16×4 banding
+    * as [[minhashNeardupMaterialized]] (recall regime verified by
     * RecallCheck), with the train-side band buckets capped — an
     * over-full bucket is boilerplate, and here it would fan out across
     * every eval doc in the bucket. */
   /** Cost profile (r8, sf0.1, local[16], steady-state after one JIT
     * rep): full query ≈ 2.1 s of which corpus shingling is 0.2–0.3 s —
     * the banded-candidates + verify join dominates, so making the
-    * corpus `shingleHashes` a shared [[graft.util.Artifact]] would
+    * corpus signature a shared [[graft.util.Artifact]] would
     * shave ~10% at the cost of coupling this operator to the query
     * inventory; not taken. The ~9 s single readings in earlier round benches were
     * first-rep JIT (4.9 s cold vs 2.1 s warm measured on the same
@@ -438,24 +421,21 @@ object Dedup {
       evalDocs: DataFrame,
       threshold: Double = 0.8,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val trainHs = shingleHashes(train)
+    val trainSigs = signedDocs(train)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val evalHs = shingleHashes(evalDocs)
+      val evalSigs = signedDocs(evalDocs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val cand = BucketCap
-          .keepSmall(minhashBandsFrom(trainHs), Seq("band", "band_hash"), maxBucket)
+          .keepSmall(bandRows(trainSigs), Seq("band", "band_hash"), maxBucket)
           .select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
-          .join(broadcast(minhashBandsFrom(evalHs)
+          .join(broadcast(bandRows(evalSigs)
             .select(col("band"), col("band_hash"), col("doc_id").as("b_id"))),
             Seq("band", "band_hash"))
           .select("a_id", "b_id")
           .distinct()
-        val trainSizes = trainHs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-        val evalSizes = evalHs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-        val hits = pairJaccardCross(
-          trainHs, trainSizes, broadcast(evalHs), evalSizes, cand)
+        val hits = verified(cand, trainSigs, broadcast(evalSigs))
           .filter(col("jaccard") >= threshold)
           .groupBy(col("a_id")).agg(count(lit(1)).as("n_eval_neardups"))
         train.select(col("doc_id"))
@@ -464,29 +444,28 @@ object Dedup {
             coalesce(col("n_eval_neardups"), lit(0L)).as("n_eval_neardups"),
             (coalesce(col("n_eval_neardups"), lit(0L)) > 0).as("contaminated"))
           .localCheckpoint(true)
-      } finally evalHs.unpersist(blocking = false)
-    } finally trainHs.unpersist(blocking = false)
+      } finally evalSigs.unpersist(blocking = false)
+    } finally trainSigs.unpersist(blocking = false)
   }
 
-  /** doc_id + the 16 LSH band keys, exploded to (doc_id, band, band_hash).
-    * Signature slot i = min over shingles of xxhash64(shingleHash, i) —
-    * seeded re-hashing instead of affine permutations, because wrapping
-    * long multiplication trips ANSI overflow checks and xxhash64 mixes
-    * better anyway. Each band hashes `rowsPerBand` consecutive slots.
-    *
-    * Computed as explode → groupBy(doc_id) with 64 min aggregates:
-    * hash + min run inside whole-stage codegen with map-side partial
-    * aggregation, an order of magnitude faster than per-document
-    * higher-order-function traversals (which are interpreted). */
-  private def minhashBandsFrom(hs: DataFrame): DataFrame = {
-    val mins = (0 until numHashes).map(i => min(xxhash64(col("h"), lit(i))).as(s"m$i"))
-    val bandHashes = array((0 until bands).map { j =>
-      xxhash64((0 until rowsPerBand).map(r => col(s"m${j * rowsPerBand + r}")): _*)
-    }: _*)
-    hs.groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), posexplode(bandHashes).as(Seq("band", "band_hash")))
+  /** One row per document of `docs`: (doc_id, hs, cnt, sz, bands), the
+    * [[graft.functions.MinhashSign]] kernel's signature of its text —
+    * sorted distinct shingle hashes, their multiplicities, the shingle
+    * count and the 16 band keys — as a projection with no shuffle. Each
+    * row is signed on its own: a repeated doc_id is several signed
+    * documents that share an id, never one merged multiset. A row with
+    * no shingle (NULL or fewer than 3 tokens) has no band key, so no
+    * candidate pair; `sz > 0` selects the signed rows. */
+  private[graft] def signedDocs(docs: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    docs.select(col("doc_id"), graft.functions.GraftFunctions.minhashSign(col("text")).as("s"))
+      .select(col("doc_id"), col("s.hs"), col("s.cnt"), col("s.sz"), col("s.bands"))
   }
+
+  /** Signed rows exploded to their band keys (doc_id, band, band_hash) —
+    * the only exploded form the candidate joins shuffle. */
+  private def bandRows(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "band_hash")))
 
   /** Default bucket-size cap for the LSH candidate joins: a bucket this
     * over-full is boilerplate, not duplication signal (see [[BucketCap]]
@@ -498,15 +477,14 @@ object Dedup {
     * integers, never on document text. Buckets above `maxBucket` are
     * dropped ([[BucketCap]]); [[minhashCapReport]] lists them. */
   def minhashCandidates(docs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame =
-    minhashCandidatesFrom(shingleHashes(docs), maxBucket)
+    candidatesFrom(signedDocs(docs), maxBucket)
 
   /** Dropped-bucket report for [[minhashCandidates]]'s cap. */
   def minhashCapReport(docs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame =
-    BucketCap.droppedReport(minhashBandsFrom(shingleHashes(docs)), Seq("band", "band_hash"),
-      maxBucket)
+    BucketCap.droppedReport(bandRows(signedDocs(docs)), Seq("band", "band_hash"), maxBucket)
 
-  private def minhashCandidatesFrom(hs: DataFrame, maxBucket: Int): DataFrame = {
-    val b = BucketCap.keepSmall(minhashBandsFrom(hs), Seq("band", "band_hash"), maxBucket)
+  private def candidatesFrom(sigs: DataFrame, maxBucket: Int): DataFrame = {
+    val b = BucketCap.keepSmall(bandRows(sigs), Seq("band", "band_hash"), maxBucket)
     val l = b.select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
     val r = b.select(col("band"), col("band_hash"), col("doc_id").as("b_id"))
     l.join(r, Seq("band", "band_hash"))
@@ -519,24 +497,21 @@ object Dedup {
     * Jaccard ≥ `threshold`. The Jaccard is an integer ratio (|∩| / |∪|),
     * so the value is bit-exact and safe for hash-compared oracles.
     *
-    * |∩| is computed by a hash-join count over EXPLODED 64-bit shingle
-    * hashes (codegen'd joins + counts) instead of interpreted
-    * array_intersect over string arrays — same result unless two
-    * distinct shingles of one pair collide in 64 bits (P ≈ |sh|²/2⁶⁴,
-    * vanishing), and the narrow (id, hash) rows shuffle instead of
-    * document-sized arrays. |∪| = |A| + |B| − |∩|.
+    * |∩| is the multiset intersection of the two documents' signed
+    * 64-bit shingle hashes ([[graft.functions.MinhashKernel.meet]])
+    * instead of interpreted array_intersect over string arrays — same
+    * result unless two distinct shingles of one pair collide in 64 bits
+    * (P ≈ |sh|²/2⁶⁴, vanishing). |∪| = |A| + |B| − |∩|.
     *
     * Computed EAGERLY from one [[Signatures]] of `docs` (text parsed
-    * once; the bands, sizes and both intersection joins read the
-    * persisted shingle rows), released before returning — nothing
-    * lingers in the session's cache budget, and the result can be
-    * consumed any number of times without re-running the LSH pipeline
-    * (the ingest-once shape a production corpus uses for its near-dup
-    * artifact). Input-adaptive: a signature within
-    * [[LocalMaxShingleRows]] is verified DRIVER-SIDE and the pairs
-    * return as a local frame; above the bound the distributed plan runs
-    * and its pair set is materialized with localCheckpoint. Both paths
-    * emit the same rows. */
+    * once), released before returning — nothing lingers in the
+    * session's cache budget, and the result can be consumed any number
+    * of times without re-running the LSH pipeline (the ingest-once
+    * shape a production corpus uses for its near-dup artifact).
+    * Input-adaptive: a signature within [[LocalMaxShingleRows]] is
+    * verified DRIVER-SIDE and the pairs return as a local frame; above
+    * the bound the distributed plan runs and its pair set is
+    * materialized with localCheckpoint. Both paths emit the same rows. */
   def minhashNeardupMaterialized(
       docs: DataFrame,
       threshold: Double = 0.8,
@@ -544,75 +519,74 @@ object Dedup {
     Signatures.using(docs, LocalMaxShingleRows, maxBucket)(_.pairs(threshold))
 
   /** One frame's MinHash signature, computed ONCE for all its readers —
-    * the [[MinhashIndex]] family's signed batch: the (doc_id, h)
-    * shingle rows, persisted, and — when there are at most `maxRows` of
-    * them under non-null LONG ids — the same rows gathered by ONE
-    * [[collectAtMost]] into per-doc [[LocalShingles]] (None above the
+    * the [[MinhashIndex]] family's signed batch: the per-document
+    * [[signedDocs]] rows, persisted, and — when their shingles number at
+    * most `maxRows` in TOTAL (Σ sz) under non-null LONG ids — the same
+    * rows gathered on first use by ONE [[collectAtMost]] (None above the
     * bound, and at a bound of 0, the force-distributed switch the
     * equality specs use). It serves the within-frame verify
     * ([[pairs]]), the stored-index probe ([[against]]) and the index
-    * artifact frames ([[frames]]); an increment signs its exact-dedup
-    * survivors once and feeds all three, as a streaming tick does its
-    * batch. `maxBucket` is the [[BucketCap]] of both candidate joins.
-    * The caller owns [[release]]. */
+    * artifact frames ([[frames]], projections of the signed rows, which
+    * need no collect); an increment signs its exact-dedup survivors
+    * once and feeds all three, as a streaming tick does its batch.
+    * `maxBucket` is the [[BucketCap]] of both candidate joins. The
+    * caller owns [[release]]. */
   private[graft] final class Signatures private (
-      private[graft] val hs: DataFrame, maxRows: Long, maxBucket: Int)
+      signed: DataFrame, maxRows: Long, maxBucket: Int)
       extends NeardupIndex.Signed[Double] {
 
-    private val local: Option[Map[Long, LocalShingles]] =
-      if (maxRows <= 0 || hs.schema("doc_id").dataType != LongType) None
-      else collectAtMost(hs, maxRows).filter(_.forall(!_.isNullAt(0)))
-        .map(rows => LocalShingles.of(rows.map(r => (r.getLong(0), r.getLong(1)))))
+    /** The rows that have a signature (at least one shingle). */
+    private val rows = signed.filter(col("sz") > 0)
+
+    private lazy val local: Option[Seq[Sig]] =
+      if (maxRows <= 0 || signed.schema("doc_id").dataType != LongType) None
+      else collectAtMost(rows, maxRows, _.getLong(3)).filter(_.forall(!_.isNullAt(0)))
+        .map(_.toSeq.map(Sig(_)))
 
     /** Verified within-frame pairs: [[verifyLocal]] on the driver, else
       * the distributed plan, checkpointed. */
     def pairs(threshold: Double = 0.8): DataFrame =
-      local.flatMap(verifyLocal(hs.sparkSession, _, threshold, maxBucket))
-        .getOrElse(neardupFrom(hs, threshold, maxBucket).localCheckpoint(true))
+      local.flatMap(verifyLocal(rows.sparkSession, _, threshold, maxBucket))
+        .getOrElse(verified(candidatesFrom(rows, maxBucket), rows, rows)
+          .filter(col("jaccard") >= threshold).localCheckpoint(true))
 
     /** Pairs (a_id = stored, b_id = signed) against a stored
       * [[MinhashIndex]] — see [[neardupAgainstIndex]]. */
     def against(
-        writer: graft.sinks.StagingWriter, table: String, threshold: Double = 0.8): DataFrame =
-      local.flatMap(probeLocal(hs.sparkSession, _, writer, table, threshold, maxBucket, maxRows))
-        .getOrElse(neardupAgainstIndexPlan(hs, writer, table, threshold, maxBucket)
+        writer: graft.sinks.StagingWriter, table: String, threshold: Double = 0.8): DataFrame = {
+      MinhashIndex.requireLayout(writer, table)
+      local.flatMap(probeLocal(rows.sparkSession, _, writer, table, threshold, maxBucket, maxRows))
+        .getOrElse(neardupAgainstIndexPlan(rows, writer, table, threshold, maxBucket)
           .localCheckpoint(true))
-
-    /** The [[MinhashIndex]] artifact frames of the signed docs `keep`
-      * holds (every signed doc when None). A local signature gives local
-      * frames — shingle rows repeated by multiplicity, sizes and band
-      * keys, one partition each, in doc_id order — and collects only
-      * `keep`'s ids (at most the signed docs); a distributed one gives
-      * the aggregates over its shingle rows. */
-    def frames(keep: Option[DataFrame]): GrowingIndex.Frames = emit => local match {
-      case Some(docs) =>
-        val ids = keep.map(_.select(col("doc_id")).collect()
-          .collect { case r if !r.isNullAt(0) => r.getLong(0) }.toSet)
-        val kept = docs.toSeq.filter(d => ids.forall(_(d._1))).sortBy(_._1)
-        def put(artifact: String)(rows: Seq[Row]): Unit =
-          emit(localFrame(hs.sparkSession, indexSchema(artifact, LongType), rows).coalesce(1))
-        put("__shingles")(
-          for ((d, s) <- kept; i <- s.hs.indices; _ <- 1 to s.cnt(i)) yield Row(d, s.hs(i)))
-        put("__sizes")(kept.map { case (d, s) => Row(d, s.size) })
-        put("__bands")(for ((d, s) <- kept; j <- 0 until bands) yield Row(d, j, s.bandKeys(j)))
-      case None =>
-        val rows = keep.fold(hs)(k => hs.join(k.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-        emit(rows)
-        emit(rows.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")))
-        emit(minhashBandsFrom(rows))
     }
 
-    def release(): Unit = hs.unpersist(blocking = false): Unit
+    /** The [[MinhashIndex]] artifact frames of the signed docs `keep`
+      * holds (every signed doc when None): projections of the signed
+      * rows, so no text is parsed again. `keep` is at most the signed
+      * batch (its landed or kept rows), so its ids are broadcast into
+      * the semi-join and the signed rows never shuffle. */
+    def frames(keep: Option[DataFrame]): GrowingIndex.Frames = emit => {
+      val kept = keep.fold(rows)(k =>
+        rows.join(broadcast(k.select(col("doc_id"))), Seq("doc_id"), "left_semi"))
+      emit(kept.select(col("doc_id"), col("hs"), col("cnt"), col("sz")))
+      emit(bandRows(kept))
+    }
+
+    /** The signed docs' (doc_id, h) rows, each hash repeated by its
+      * multiplicity — the [[shingleHashes]] rows of the same docs, for
+      * the exact prefix-filter join that shares this parse. */
+    private[graft] def shingleRows: DataFrame =
+      rows.select(col("doc_id"), explode(arrays_zip(col("hs"), col("cnt"))).as("z"))
+        .select(col("doc_id"), explode(array_repeat(col("z.hs"), col("z.cnt"))).as("h"))
+
+    def release(): Unit = signed.unpersist(blocking = false): Unit
   }
 
   private[graft] object Signatures {
     def of(docs: DataFrame, localMaxShingleRows: Long,
-        maxBucket: Int = DefaultMaxBucket): Signatures = {
-      val hs = shingleHashes(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try new Signatures(hs, localMaxShingleRows, maxBucket)
-      catch { case e: Throwable => hs.unpersist(blocking = false); throw e }
-    }
+        maxBucket: Int = DefaultMaxBucket): Signatures =
+      new Signatures(signedDocs(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        localMaxShingleRows, maxBucket)
 
     /** [[of]] released when `f` returns. */
     def using[T](docs: DataFrame, localMaxShingleRows: Long,
@@ -621,35 +595,31 @@ object Dedup {
   }
 
   /** The [[MinhashIndex]] artifacts' columns after `doc_id`, by suffix,
-    * declared once: the local index frames take them, and the probe's
-    * stored reads pass them instead of running parquet's schema
-    * inference, a job per read. */
+    * declared once: the probe's stored reads pass them instead of
+    * running parquet's schema inference, a job per read. */
   private val IndexColumns = Map(
-    "__shingles" -> Seq(StructField("h", LongType)),
-    "__sizes" -> Seq(StructField("sz", LongType)),
+    "__sets" -> Seq(StructField("hs", ArrayType(LongType)),
+      StructField("cnt", ArrayType(IntegerType)), StructField("sz", LongType)),
     "__bands" -> Seq(StructField("band", IntegerType), StructField("band_hash", LongType)))
-
-  private def indexSchema(artifact: String, id: DataType): StructType =
-    StructType(StructField("doc_id", id) +: IndexColumns(artifact))
 
   /** A stored index artifact under its declared schema; the index's ids
     * have the probing batch's type. */
   private def readIndex(
       writer: graft.sinks.StagingWriter, table: String, artifact: String, id: DataType) =
-    writer.read(table + artifact, indexSchema(artifact, id))
+    writer.read(table + artifact, StructType(StructField("doc_id", id) +: IndexColumns(artifact)))
 
   /** The driver-side verify of [[Signatures.pairs]]: band
     * buckets, the [[BucketCap]] guard, candidates and exact Jaccard over
-    * collected shingles. None when the kept buckets would enumerate more
-    * than [[StarLocalMaxEdges]] candidate collisions (Σ C(|bucket|, 2),
-    * a pair counted once per band it shares) — a few thousand templated
-    * near-twins fit in the row bound yet give millions of pairs, which
-    * stay distributed. */
+    * the collected signed rows. None when the kept buckets would
+    * enumerate more than [[StarLocalMaxEdges]] candidate collisions
+    * (Σ C(|bucket|, 2), a pair counted once per band it shares) — a few
+    * thousand templated near-twins fit in the row bound yet give
+    * millions of pairs, which stay distributed. */
   private def verifyLocal(
-      spark: SparkSession, docs: Map[Long, LocalShingles],
+      spark: SparkSession, docs: Seq[Sig],
       threshold: Double, maxBucket: Int): Option[DataFrame] = {
-    val buckets = docs.toSeq
-      .flatMap { case (d, s) => s.bandKeys.zipWithIndex.map { case (bh, j) => (j, bh) -> d } }
+    val buckets = docs
+      .flatMap(s => s.bands.zipWithIndex.map { case (bh, j) => (j, bh) -> s.id })
       .groupMap(_._1)(_._2).values.filter(_.size <= maxBucket)
     if (buckets.iterator.map(b => b.size.toLong * (b.size - 1) / 2).sum > StarLocalMaxEdges)
       None
@@ -657,55 +627,49 @@ object Dedup {
       val cand = buckets.iterator
         .flatMap(ms => for (a <- ms; b <- ms if a < b) yield (a, b))
         .toSet
-      Some(localPairs(spark, cand.iterator.flatMap { case (a, b) =>
-        docs(a).jaccard(docs(b), docs(a).size, docs(b).size).map((a, b, _))
-      }, threshold))
+      val byId = docs.groupBy(_.id)
+      Some(localPairs(spark, meets(cand.iterator, byId, byId), threshold))
     }
   }
 
-  private def neardupFrom(hs: DataFrame, threshold: Double, maxBucket: Int): DataFrame = {
-    val sizes = hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    pairJaccard(hs, sizes, minhashCandidatesFrom(hs, maxBucket))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
-  }
-
   /** The bound of a [[Signatures]]' driver-side path: at most this many
-    * (doc_id, h) shingle rows per driver read — the bounded collect
-    * class of [[StarLocalMaxEdges]] (centroids, codebooks, Bloom
-    * words). It enters through [[Signatures.of]] alone and covers the
-    * signature's one collect and the probe's stored reads, each a
-    * [[collectAtMost]], bounded by its TOTAL: 200k rows are ≈ 3.2 MB of
-    * longs, ≈ 10 MB as shipped rows, and an over-bound input never
-    * lands on the driver. The candidate pairs the driver enumerates are
-    * bounded separately, by [[StarLocalMaxEdges]] collisions. A
-    * batch-sized input otherwise pays the distributed plan's fixed cost
-    * — under AQE every exchange of the banding self-join, the bucket-cap
-    * window and the verify joins is its own job, so a 265-doc increment
-    * spent 24 jobs on the within-batch verify and 19 on the index probe.
-    * The driver path computes the same 64 minhashes, 16 band keys,
-    * bucket cap, candidates, multiset intersection and index rows with
-    * the same hash chain ([[LocalShingles]]), so its pair sets and index
-    * slices hold the same rows; an input over either bound, or a bound
-    * of 0, takes the distributed plan. */
+    * shingles (Σ sz of the signed rows, the (doc_id, h) rows of
+    * [[shingleHashes]]) per driver read — the bounded collect class of
+    * [[StarLocalMaxEdges]] (centroids, codebooks, Bloom words). It
+    * enters through [[Signatures.of]] alone and covers the signature's
+    * one collect and the probe's two stored reads, each a
+    * [[collectAtMost]], bounded by its TOTAL: 200k shingle hashes are
+    * ≈ 2.4 MB of hashes and multiplicities, and an over-bound input
+    * never lands on the driver. The candidate pairs the driver
+    * enumerates are bounded separately, by [[StarLocalMaxEdges]]
+    * collisions. A batch-sized input otherwise pays the distributed
+    * plan's fixed cost — under AQE every exchange of the banding
+    * self-join, the bucket-cap window and the verify joins is its own
+    * job. The driver path reads the band keys and shingle multisets the
+    * [[graft.functions.MinhashKernel]] computed and intersects with the
+    * same [[graft.functions.MinhashKernel.meet]], so its pair sets hold
+    * the same rows; an input over either bound, or a bound of 0, takes
+    * the distributed plan. */
   val LocalMaxShingleRows = 200000L
 
-  /** `df`'s rows when it has at most `maxRows`, else None, with what
-    * reaches the driver bounded by the TOTAL, not per task: each of the
-    * n tasks ships its rows only when they fit its share ⌈maxRows / n⌉,
-    * else just its count. One job when the rows spread evenly; when the
-    * counts sum within the bound but some partitions overflowed their
-    * share (a small, skewed input), a second job fetches exactly those.
-    * The driver never holds more than ≈ maxRows + n rows, and an
-    * over-bound input costs one counting pass. */
-  private[graft] def collectAtMost(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
+  /** `df`'s rows when their `weight`s sum to at most `maxRows`, else
+    * None, with what reaches the driver bounded by the TOTAL, not per
+    * task: each of the n tasks ships its rows only when their weight
+    * fits its share ⌈maxRows / n⌉, else just its total. One job when the
+    * rows spread evenly; when the totals sum within the bound but some
+    * partitions overflowed their share (a small, skewed input), a second
+    * job fetches exactly those. With weights of at least 1 the driver
+    * never holds more than ≈ maxRows + n rows, and an over-bound input
+    * costs one counting pass. */
+  private[graft] def collectAtMost(
+      df: DataFrame, maxRows: Long, weight: Row => Long = _ => 1L): Option[Array[Row]] = {
     val rdd = df.rdd
     val sc = df.sparkSession.sparkContext
     val share = (maxRows + rdd.getNumPartitions - 1) / math.max(rdd.getNumPartitions, 1)
     val counted = sc.runJob(rdd, (it: Iterator[Row]) => {
       val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
       var n = 0L
-      it.foreach { r => if (n < share) kept += r; n += 1 }
+      it.foreach { r => n += weight(r); if (n <= share) kept += r }
       (n, if (n <= share) kept.toArray else Array.empty[Row])
     })
     if (counted.iterator.map(_._1).sum > maxRows) None
@@ -718,73 +682,29 @@ object Dedup {
     }
   }
 
-  /** One document's shingle multiset on the driver: distinct hashes
-    * ascending with their row multiplicities. Mirrors the distributed
-    * verify exactly — `size` is the row count the `sizes` aggregate
-    * counts, [[meet]] the row count of the (a_id, h) ⋈ (b_id, h) join
-    * (Σ cntA·cntB), and [[bandKeys]] the [[minhashBandsFrom]] keys. */
-  private final class LocalShingles(val hs: Array[Long], val cnt: Array[Int]) {
-    val size: Long = cnt.foldLeft(0L)(_ + _)
+  /** One signed row on the driver — a [[signedDocs]] row, or a stored
+    * `__sets` row (no band keys). */
+  private final case class Sig(id: Long, hs: Array[Long], cnt: Array[Int], sz: Long,
+      bands: Seq[Long])
 
-    def meet(o: LocalShingles): Long = {
-      var i = 0
-      var j = 0
-      var m = 0L
-      while (i < hs.length && j < o.hs.length) {
-        if (hs(i) < o.hs(j)) i += 1
-        else if (hs(i) > o.hs(j)) j += 1
-        else { m += cnt(i).toLong * o.cnt(j); i += 1; j += 1 }
-      }
-      m
-    }
-
-    /** The verify's `i / (sz_a + sz_b − i)` — the same single double
-      * division of the same integers — for a pair that shares a row
-      * (the distributed join emits no pair with i = 0). */
-    def jaccard(o: LocalShingles, szA: Long, szB: Long): Option[Double] = {
-      val i = meet(o)
-      if (i == 0L) None else Some(i.toDouble / (szA + szB - i).toDouble)
-    }
-
-    /** Slot k = min over rows of xxhash64(h, k) and band j = xxhash64 of
-      * slots 4j..4j+3 — the `xxhash64(col("h"), lit(k))` and band
-      * expressions, each a hash chain from Spark's seed 42. */
-    lazy val bandKeys: Array[Long] = {
-      import org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash
-      val m = Array.fill(numHashes)(Long.MaxValue)
-      hs.foreach { h =>
-        val base = hash(h, LongType, 42L)
-        var k = 0
-        while (k < numHashes) {
-          val v = hash(k, IntegerType, base)
-          if (v < m(k)) m(k) = v
-          k += 1
-        }
-      }
-      Array.tabulate(bands) { j =>
-        (0 until rowsPerBand).foldLeft(42L)((seed, r) =>
-          hash(m(j * rowsPerBand + r), LongType, seed))
-      }
-    }
+  private object Sig {
+    def apply(r: Row): Sig = Sig(r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Int](2).toArray,
+      r.getLong(3), if (r.length > 4) r.getSeq[Long](4) else Nil)
   }
 
-  private object LocalShingles {
-    /** Group collected (doc_id, h) rows per document. */
-    def of(rows: Array[(Long, Long)]): Map[Long, LocalShingles] =
-      rows.groupMap(_._1)(_._2).map { case (d, hs) =>
-        val sorted = hs.sorted
-        val distinct = scala.collection.mutable.ArrayBuilder.make[Long]
-        val cnt = scala.collection.mutable.ArrayBuilder.make[Int]
-        var k = 0
-        while (k < sorted.length) {
-          var e = k
-          while (e < sorted.length && sorted(e) == sorted(k)) e += 1
-          distinct += sorted(k); cnt += (e - k)
-          k = e
-        }
-        d -> new LocalShingles(distinct.result(), cnt.result())
-      }
-  }
+  /** Every candidate (a, b) verified over each pair of their signed
+    * rows that shares a hash (the distributed join of [[verified]] emits
+    * no i = 0 row): the same `i / (sz_a + sz_b − i)`, one double
+    * division of the same integers. */
+  private def meets(cand: Iterator[(Long, Long)], a: Map[Long, Seq[Sig]],
+      b: Map[Long, Seq[Sig]]): Iterator[(Long, Long, Double)] =
+    for {
+      (x, y) <- cand
+      sa <- a.getOrElse(x, Nil).iterator
+      sb <- b.getOrElse(y, Nil).iterator
+      i = graft.functions.MinhashKernel.meet(sa.hs, sa.cnt, sb.hs, sb.cnt)
+      if i > 0
+    } yield (x, y, i.toDouble / (sa.sz + sb.sz - i).toDouble)
 
   private val pairSchema = StructType(Seq(
     StructField("a_id", LongType),
@@ -809,29 +729,40 @@ object Dedup {
     spark.createDataFrame(rows.asJava, schema)
   }
 
+  /** The distributed MinHash verify: each candidate (a_id, b_id) joined
+    * to its two documents' signed rows (side `a`'s, side `b`'s — the
+    * same frame for a self-join, the stored `__sets` artifact and the
+    * batch for the index probe), |∩| by one
+    * [[graft.functions.MinhashMeet]] per joined row and
+    * `jaccard = i / (sz_a + sz_b − i)`, a single division of exact
+    * integers (bit-stable for hash-compared oracles). Only the
+    * candidates and one row per candidate document meet in the joins:
+    * no shingle row is exploded. */
+  private def verified(cand: DataFrame, a: DataFrame, b: DataFrame): DataFrame = {
+    def side(s: DataFrame, k: String) = s.select(col("doc_id").as(s"${k}_id"),
+      col("hs").as(s"hs_$k"), col("cnt").as(s"cnt_$k"), col("sz").as(s"sz_$k"))
+    cand.join(side(a, "a"), "a_id").join(side(b, "b"), "b_id")
+      .withColumn("i", graft.functions.GraftFunctions.minhashMeet(
+        col("hs_a"), col("cnt_a"), col("hs_b"), col("cnt_b")))
+      .filter(col("i") > 0)
+      .select(col("a_id"), col("b_id"),
+        (col("i").cast("double") / (col("sz_a") + col("sz_b") - col("i"))).as("jaccard"))
+  }
+
   /** Exact Jaccard for each candidate (a_id, b_id) pair: |∩| by a
     * hash-join count over the exploded shingle hashes, |∪| from the
     * per-doc set `sizes` (computed once by the caller — the candidate
     * generators need it too). Emits (a_id, b_id, i, sz_a, sz_b,
     * jaccard); `jaccard` is a single division of exact integers
-    * (bit-stable for hash-compared oracles). Shared by every candidate
-    * generator (MinHash banding, prefix filtering). */
+    * (bit-stable for hash-compared oracles). Shared by the
+    * prefix-filter candidate generators. */
   private def pairJaccard(hs: DataFrame, sizes: DataFrame, cand: DataFrame): DataFrame =
-    pairJaccardCross(hs, sizes, hs, sizes, cand)
-
-  /** Two-corpus form of the verify step: candidate `a_id`s resolve
-    * against side A's shingles/sizes, `b_id`s against side B's — the
-    * incremental index path, where side A is read back from parquet and
-    * only side B was just shingled. */
-  private def pairJaccardCross(
-      hsA: DataFrame, sizesA: DataFrame,
-      hsB: DataFrame, sizesB: DataFrame, cand: DataFrame): DataFrame =
     cand
-      .join(hsA.select(col("doc_id").as("a_id"), col("h")), "a_id")
-      .join(hsB.select(col("doc_id").as("b_id"), col("h")), Seq("b_id", "h"))
+      .join(hs.select(col("doc_id").as("a_id"), col("h")), "a_id")
+      .join(hs.select(col("doc_id").as("b_id"), col("h")), Seq("b_id", "h"))
       .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("i"))
-      .join(sizesA.select(col("doc_id").as("a_id"), col("sz").as("sz_a")), "a_id")
-      .join(sizesB.select(col("doc_id").as("b_id"), col("sz").as("sz_b")), "b_id")
+      .join(sizes.select(col("doc_id").as("a_id"), col("sz").as("sz_a")), "a_id")
+      .join(sizes.select(col("doc_id").as("b_id"), col("sz").as("sz_b")), "b_id")
       .withColumn("jaccard",
         col("i").cast("double") / (col("sz_a") + col("sz_b") - col("i")))
 
@@ -908,9 +839,10 @@ object Dedup {
     finally hs.unpersist(blocking = false)
   }
 
-  /** [[loosePairsMaterialized]] over a CALLER-persisted shingle frame
-    * (the shared-parse entry: ExtQueries' pair sets read the persisted
-    * rows of one [[Signatures]]). */
+  /** [[loosePairsMaterialized]] over a shingle frame whose parse the
+    * caller owns (the shared-parse entry: ExtQueries' pair sets read
+    * [[Signatures.shingleRows]], the exploded form of one signature's
+    * persisted rows). */
   private[graft] def loosePairsFromShingles(hs: DataFrame): DataFrame = {
     val sizes = hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     pairJaccard(hs, sizes, ngramPrefixCandidates(hs, sizes, 1, 2))
@@ -963,32 +895,17 @@ object Dedup {
     * prefixes; that is the honest price of an exact calibration
     * corpus, paid once per tuning decision, not per ingest); the
     * bucket rollup is 5 rows. */
-  def lshTuningCurve(docs: DataFrame): DataFrame = {
-    val hs = shingleHashes(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sizes = hs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val pairs = pairJaccard(hs, sizes, ngramPrefixCandidates(hs, sizes, 1, 2))
-        .filter(col("i") * 2 >= col("sz_a") + col("sz_b") - col("i"))
-        .select(col("i"), (col("sz_a") + col("sz_b") - col("i")).as("un"))
-      lshCurveTail(docs.sparkSession, pairs)
-    } finally hs.unpersist(blocking = false)
-  }
+  def lshTuningCurve(docs: DataFrame): DataFrame =
+    lshTuningCurveFrom(docs.sparkSession, loosePairsMaterialized(docs))
 
   /** [[lshTuningCurve]] over the shared loose pair frame
     * ([[loosePairsMaterialized]]) — the histogram derives from the
-    * already-verified (i, un) integers, so the tuning key pays a 5-row
-    * rollup instead of a full detector run (r16; one pair build per
-    * (app, dir) now serves x217, x232 and the ngram pair set). */
-  def lshTuningCurveFrom(spark: SparkSession, loose: DataFrame): DataFrame =
-    lshCurveTail(spark, loose.select(col("i"), col("un")))
-
-  /** The bucket rollup + exact-integer S-curve tail shared by
-    * [[lshTuningCurve]] and [[lshTuningCurveFrom]] — one definition so
-    * the direct and shared-frame paths can never drift. `pairs` carries
-    * the verified (i, un) integers of every pair with Jaccard ≥ 1/2. */
-  private def lshCurveTail(spark: SparkSession, pairs: DataFrame): DataFrame = {
-    val counts = pairs
+    * already-verified (i, un) integers of every pair with Jaccard ≥ 1/2,
+    * so the tuning key pays a 5-row rollup instead of a full detector
+    * run (r16; one pair build per (app, dir) now serves x217, x232 and
+    * the ngram pair set). */
+  def lshTuningCurveFrom(spark: SparkSession, loose: DataFrame): DataFrame = {
+    val counts = loose
       .select(when(col("i") * 10 >= col("un") * 9, 9L)
         .when(col("i") * 10 >= col("un") * 8, 8L)
         .when(col("i") * 10 >= col("un") * 7, 7L)
@@ -1474,22 +1391,25 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("dist").cast("long").as("dist"))
   }
 
-  /** Ingest-time MinHash index ([[GrowingIndex]]): persists the
-    * per-document signature artifacts — shingle hashes, set sizes, and
-    * LSH band keys, `__bands` last (the probe's existence gate) — so
-    * incremental batches can near-dup against the FULL corpus history
-    * without recomputing a single corpus signature
-    * ([[neardupAgainstIndex]]). At 100 TB the index is the linear
-    * byproduct of the first dedup pass (narrow integer rows, ~tokens ×
-    * 16 bytes for the shingle table); re-shingling the corpus per batch
-    * would instead re-pay the full text parse on every ingest tick. A
-    * batch is signed once ([[Signatures]], under
-    * [[LocalMaxShingleRows]]): within the bound a build, append or tick
-    * partition writes one-file local frames, above it the aggregates
-    * over the persisted shingle rows; a batch signed upstream appends
-    * its [[Signatures.frames]]. */
+  /** Ingest-time MinHash index ([[GrowingIndex]]): persists two
+    * per-document artifacts — `__sets`, each signed document's shingle
+    * multiset (doc_id, hs, cnt, sz), and `__bands`, its 16 LSH band keys,
+    * last (the probe's existence gate) — so incremental batches can
+    * near-dup against the FULL corpus history without recomputing a
+    * single corpus signature ([[neardupAgainstIndex]]). At 100 TB the
+    * index is the linear byproduct of the first dedup pass (one row of
+    * integer arrays per document, ~8 bytes per shingle); re-shingling
+    * the corpus per batch would instead re-pay the full text parse on
+    * every ingest tick. A batch is signed once ([[Signatures]]) and both
+    * artifacts are projections of its signed rows; a batch signed
+    * upstream appends its [[Signatures.frames]]. An index of the older
+    * three-artifact layout (`__shingles`, `__sizes`, `__bands`) fails
+    * every probe and growth with [[GrowingIndex.StaleLayout]];
+    * [[rebuild]] (`CorpusPrepJob.refreshArtifacts`) converts it and
+    * drops the retired tables. */
   object MinhashIndex extends NeardupIndex[Double] with GrowingIndex.NoSidecar {
-    val artifacts = Seq("__shingles", "__sizes", "__bands")
+    val artifacts = Seq("__sets", "__bands")
+    override val retired = Seq("__shingles", "__sizes")
     val idCol = "doc_id"
     val defaultThreshold = 0.8
 
@@ -1501,27 +1421,28 @@ object Dedup {
     * batch doc) at Jaccard ≥ `threshold`, computed against a
     * [[MinhashIndex]] artifact. Only the NEW batch is shingled and
     * banded ([[Signatures.against]] over its one signature); the corpus
-    * side is read back as narrow integer rows under declared schemas.
-    * Candidates = band-bucket collisions between the batch's bands and
-    * the stored bands; the stored buckets get the usual [[BucketCap]]
-    * guard. Within-batch pairs are NOT emitted — run
-    * [[minhashNeardupMaterialized]] on the batch for those. Id spaces
-    * are assumed disjoint (a shared id would pair a document with its
-    * own history, which is exactly what an UPDATE wants anyway).
+    * side is read back under declared schemas. Candidates = band-bucket
+    * collisions between the batch's bands and the stored bands; the
+    * stored buckets get the usual [[BucketCap]] guard. Within-batch
+    * pairs are NOT emitted — run [[minhashNeardupMaterialized]] on the
+    * batch for those. Id spaces are assumed disjoint (a shared id would
+    * pair a document with its own history, which is exactly what an
+    * UPDATE wants anyway).
     *
     * Two plans, one pair set (the incremental contract is |batch| ≪
     * |corpus|). A batch signed on the driver (at most
-    * [[LocalMaxShingleRows]] shingle rows) probes the index through
-    * NARROW scans only, each collected under the same bound and
+    * [[LocalMaxShingleRows]] shingles) probes the index through TWO
+    * narrow stored reads, each collected under the same bound and
     * verified on the driver: `__bands` semi-joined with the batch's band
     * keys (every stored row of the touched buckets, so the cap counts
-    * whole buckets), then `__sizes` and `__shingles` semi-joined with
-    * the candidate `a_id`s — each semi-join a membership filter inside
-    * the scan, so nothing of the standing index is shuffled or
-    * broadcast. A larger batch, a stored read over the bound, or touched
-    * buckets that would give more than [[StarLocalMaxEdges]] candidate
-    * collisions run the distributed plan ([[neardupAgainstIndexPlan]],
-    * the batch's bands broadcast into the stored band scan). */
+    * whole buckets), then `__sets` semi-joined with the candidate
+    * `a_id`s — each semi-join a membership filter inside the scan, so
+    * nothing of the standing index is shuffled or broadcast. A larger
+    * batch, a stored read over the bound, or touched buckets that would
+    * give more than [[StarLocalMaxEdges]] candidate collisions run the
+    * distributed plan ([[neardupAgainstIndexPlan]], the batch's bands
+    * broadcast into the stored band scan). An index in the older layout
+    * fails with [[GrowingIndex.StaleLayout]]. */
   def neardupAgainstIndex(
       newDocs: DataFrame,
       writer: graft.sinks.StagingWriter,
@@ -1539,19 +1460,13 @@ object Dedup {
     * on every tick). */
   private def probeLocal(
       spark: SparkSession,
-      batch: Map[Long, LocalShingles],
+      batch: Seq[Sig],
       writer: graft.sinks.StagingWriter,
       table: String,
       threshold: Double,
       maxBucket: Int,
       maxRows: Long): Option[DataFrame] = {
-    def narrow(artifact: String, ids: Set[Long], cols: String*): Option[Array[Row]] =
-      collectAtMost(readIndex(writer, table, artifact, LongType)
-        .filter(udf((d: Long) => ids(d)).apply(col("doc_id")))
-        .select(cols.map(col): _*), maxRows)
-    val keyed = batch.toSeq.flatMap { case (b, s) =>
-      s.bandKeys.zipWithIndex.map { case (bh, j) => ((j, bh), b) }
-    }
+    val keyed = batch.flatMap(s => s.bands.zipWithIndex.map { case (bh, j) => ((j, bh), s.id) })
     if (keyed.isEmpty) return Some(localPairs(spark, Iterator.empty, threshold))
     val keys = keyed.map(_._1).toSet
     // every stored row of each bucket the batch touches, so the cap
@@ -1574,47 +1489,33 @@ object Dedup {
         }.distinct
         val ids = cand.map(_._1).toSet
         if (ids.isEmpty) Some(localPairs(spark, Iterator.empty, threshold))
-        else for {
-          // one size per stored row of a doc: the distributed verify
-          // joins `__sizes` the same way
-          sizeRows <- narrow("__sizes", ids, "doc_id", "sz")
-          hsA <- narrow("__shingles", ids, "doc_id", "h")
-        } yield {
-          val sizes = sizeRows.groupMap(_.getLong(0))(_.getLong(1))
-          val corpus = LocalShingles.of(hsA.map(r => (r.getLong(0), r.getLong(1))))
-          localPairs(spark, cand.iterator.flatMap { case (a, b) =>
-            for {
-              sa <- corpus.get(a).iterator
-              szA <- sizes.getOrElse(a, Array.empty[Long]).iterator
-              j <- sa.jaccard(batch(b), szA, batch(b).size).iterator
-            } yield (a, b, j)
-          }, threshold)
-        }
+        else collectAtMost(readIndex(writer, table, "__sets", LongType)
+          .filter(udf((d: Long) => ids(d)).apply(col("doc_id")))
+          .select(col("doc_id"), col("hs"), col("cnt"), col("sz")), maxRows, _.getLong(3))
+          .map(stored => localPairs(spark, meets(cand.iterator,
+            stored.toSeq.map(Sig(_)).groupBy(_.id), batch.groupBy(_.id)), threshold))
       }
   }
 
-  /** The LAZY incremental plan over an existing shingle frame — exposed
-    * for the index-read plan proof (the public path checkpoints, which
-    * collapses the executed plan to a Scan of the materialized RDD). */
+  /** The LAZY incremental plan over a frame of [[signedDocs]] rows —
+    * exposed for the index-read plan proof (the public path
+    * checkpoints, which collapses the executed plan to a Scan of the
+    * materialized RDD). */
   private[graft] def neardupAgainstIndexPlan(
-      newHs: DataFrame,
+      sigs: DataFrame,
       writer: graft.sinks.StagingWriter,
       table: String,
       threshold: Double,
       maxBucket: Int): DataFrame = {
-    def stored(a: String) = readIndex(writer, table, a, newHs.schema("doc_id").dataType)
-    val idxBands = BucketCap.keepSmall(stored("__bands"), Seq("band", "band_hash"), maxBucket)
-    val cand = idxBands
+    def stored(a: String) = readIndex(writer, table, a, sigs.schema("doc_id").dataType)
+    val cand = BucketCap.keepSmall(stored("__bands"), Seq("band", "band_hash"), maxBucket)
       .select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
-      .join(broadcast(minhashBandsFrom(newHs)
+      .join(broadcast(bandRows(sigs)
         .select(col("band"), col("band_hash"), col("doc_id").as("b_id"))),
         Seq("band", "band_hash"))
       .select("a_id", "b_id")
       .distinct()
-    val newSizes = newHs.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    pairJaccardCross(stored("__shingles"), stored("__sizes"), newHs, newSizes, cand)
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+    verified(cand, stored("__sets"), sigs).filter(col("jaccard") >= threshold)
   }
 
   /** Near-dup CLUSTERING: connected components over a pair graph,

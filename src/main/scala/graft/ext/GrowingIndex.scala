@@ -50,6 +50,10 @@ abstract class GrowingIndex {
   /** Artifact suffixes in write order; the LAST is the existence gate. */
   def artifacts: Seq[String]
 
+  /** Suffixes of an older layout of this family's artifacts, which
+    * [[rebuild]] drops once the current layout is swapped in. */
+  def retired: Seq[String] = Nil
+
   /** Suffix of the geometry sidecar, for families that keep one. */
   def sidecar: Option[String] = None
 
@@ -73,6 +77,17 @@ abstract class GrowingIndex {
   def exists(writer: StagingWriter, table: String): Boolean =
     writer.exists(table + artifacts.last)
 
+  /** Fails with [[GrowingIndex.StaleLayout]] when the gate passes over a
+    * missing artifact. The gate is written last, so no crash leaves
+    * that state: the index was written in an older layout, and reading
+    * it as this one would probe the wrong tables. Every probe and every
+    * growth of an existing index checks first. */
+  def requireLayout(writer: StagingWriter, table: String): Unit =
+    if (exists(writer, table)) {
+      val missing = artifacts.init.filterNot(a => writer.exists(table + a))
+      if (missing.nonEmpty) throw new GrowingIndex.StaleLayout(table, missing)
+    }
+
   def build(input: DataFrame, writer: StagingWriter, table: String): Unit = {
     val g = fit(input).getOrElse(throw new IllegalArgumentException(
       s"build($table): empty input — nothing to index"))
@@ -88,8 +103,10 @@ abstract class GrowingIndex {
 
   /** [[append]] of a batch whose frames the caller computed already
     * (keyed under the stored geometry). */
-  def append(fs: Frames, writer: StagingWriter, table: String): Unit =
+  def append(fs: Frames, writer: StagingWriter, table: String): Unit = {
+    requireLayout(writer, table)
     emit(fs, table)(put(writer, append = true))
+  }
 
   def appendBatchSlice(
       batch: DataFrame, writer: StagingWriter, table: String, batchId: Long): Unit =
@@ -97,6 +114,7 @@ abstract class GrowingIndex {
 
   def appendBatchSlice(fs: Frames, writer: StagingWriter, table: String, batchId: Long): Unit = {
     flatOnly("appendBatchSlice")
+    requireLayout(writer, table)
     emit(fs, table)(writer.appendBatchSlice(_, _, batchId))
   }
 
@@ -113,10 +131,13 @@ abstract class GrowingIndex {
 
   /** Crash-safe full rebuild from `input` (see the class doc). Between
     * two swaps the index mixes generations; that stays probe-consistent
-    * when the rebuild derives from the same rows the old index covers. */
+    * when the rebuild derives from the same rows the old index covers.
+    * It converts an index of an older layout: the [[retired]] tables are
+    * dropped after the gate is swapped in. */
   def rebuild(input: DataFrame, writer: StagingWriter, table: String): Unit = {
     val staged = stage(input, writer, table)
     (sidecar.toSeq ++ artifacts).foreach(s => writer.swapIn(staged + s, table + s))
+    retired.foreach(s => writer.drop(table + s))
   }
 
   /** The staging half of [[rebuild]]: a build under `<table>__rebuild`,
@@ -151,6 +172,14 @@ abstract class GrowingIndex {
 }
 
 object GrowingIndex {
+
+  /** An index whose gate passes over a missing artifact: written in an
+    * older layout of its family, which `rebuild` (for the corpus index,
+    * `CorpusPrepJob.refreshArtifacts`) converts. */
+  final class StaleLayout(table: String, missing: Seq[String])
+      extends IllegalStateException(s"index $table was written in an older layout: " +
+        s"it has no ${missing.map(table + _).mkString(", ")}; run " +
+        "CorpusPrepJob.refreshArtifacts (or the index's rebuild) to convert it")
 
   /** One batch's artifact frames, handed to a writer in
     * [[GrowingIndex.artifacts]] order: a family's `frames` of the batch,
@@ -231,6 +260,7 @@ abstract class NeardupIndex[T] extends GrowingIndex {
       table: String,
       threshold: T,
       batchId: Long): Unit = {
+    requireLayout(writer, table)
     val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val hasIndex = exists(writer, table)

@@ -31,15 +31,6 @@ object Similarity {
     * arithmetic is double-precision. */
   private def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  /** Sequential-fold dot product via higher-order functions — the
-    * built-in baseline. Kept for reference/testing; the hot paths use
-    * the codegen'd [[graft.functions.VectorDot]] (bit-identical result,
-    * same left-to-right summation, no interpreted lambda dispatch). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def normHof(a: Column): Column = sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
-
   /** Native codegen'd vector ops (graft.functions.GraftFunctions). */
   def dot(a: Column, b: Column): Column = graft.functions.GraftFunctions.vecDot(a, b)
   def norm(a: Column): Column = graft.functions.GraftFunctions.vecNorm(a)
@@ -373,7 +364,7 @@ object Similarity {
     // profile). Pin the join-side width to the session's shuffle
     // sizing (scale-adaptive conf; at cluster scale the exchange is
     // already this wide and the pin is a no-op). The join stays SMJ;
-    // no broadcast path is displaced (the pairJaccardCross lesson).
+    // no broadcast path is displaced.
     val uiJ = ui.repartition(
       interactions.sparkSession.sessionState.conf.numShufflePartitions,
       col("item_id"))

@@ -392,6 +392,136 @@ object WordNgrams {
   }
 }
 
+/** A text's MinHash signature in ONE compiled pass — the engine's one
+  * MinHash kernel ([[MinhashKernel.sign]]), evaluated per row, so a
+  * signature is a projection with no shuffle. The result struct holds
+  * the text's distinct word 3-gram hashes (`xxhash64` of each distinct
+  * [[WordNgrams]] shingle) ascending with their multiplicities (> 1
+  * only for a 64-bit collision of two distinct shingles), their total
+  * `sz`, and the 16 LSH band keys. A text with no shingle (fewer than
+  * 3 tokens) has `sz` 0 and no band key; a NULL text has a NULL
+  * signature. */
+case class MinhashSign(child: Expression)
+  extends UnaryExpression with ImplicitCastInputTypes with ExpectsInputTypes {
+
+  override def inputTypes = Seq(org.apache.spark.sql.types.StringType)
+  override def dataType: DataType = MinhashKernel.SignatureType
+  override def prettyName: String = "minhash_sign"
+
+  override def nullSafeEval(text: Any): Any =
+    MinhashKernel.sign(text.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = graft.functions.MinhashKernel.sign($t);")
+
+  override protected def withNewChildInternal(newChild: Expression): MinhashSign =
+    copy(child = newChild)
+}
+
+/** |A ∩ B| of two signed shingle multisets (hashes, multiplicities):
+  * Σ cntA·cntB over the shared hashes ([[MinhashKernel.meet]]), the
+  * exact intersection a MinHash candidate pair is verified by. */
+case class MinhashMeet(
+    first: Expression, second: Expression, third: Expression, fourth: Expression)
+  extends QuaternaryExpression with ImplicitCastInputTypes with ExpectsInputTypes {
+  import org.apache.spark.sql.types.{IntegerType, LongType}
+
+  override def inputTypes =
+    Seq(ArrayType(LongType), ArrayType(IntegerType), ArrayType(LongType), ArrayType(IntegerType))
+  override def dataType: DataType = LongType
+  override def prettyName: String = "minhash_meet"
+
+  override def nullSafeEval(ha: Any, ca: Any, hb: Any, cb: Any): Any =
+    MinhashKernel.meet(ha.asInstanceOf[ArrayData].toLongArray(),
+      ca.asInstanceOf[ArrayData].toIntArray(), hb.asInstanceOf[ArrayData].toLongArray(),
+      cb.asInstanceOf[ArrayData].toIntArray())
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (ha, ca, hb, cb) =>
+      s"${ev.value} = graft.functions.MinhashKernel.meet($ha.toLongArray(), " +
+        s"$ca.toIntArray(), $hb.toLongArray(), $cb.toIntArray());")
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression,
+      newThird: Expression, newFourth: Expression): MinhashMeet =
+    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
+}
+
+/** The MinHash kernel: every MinHash quantity of a document comes from
+  * its own text, here, once — for the [[MinhashSign]] projection and the
+  * driver-side verify and probe, which read its output rows and
+  * intersect with [[meet]]. The hash chain is Spark's `xxhash64` from
+  * seed 42: shingle h = xxhash64(shingle), slot k = min over the
+  * distinct h of xxhash64(h, k), band j = xxhash64(slots 4j..4j+3). */
+object MinhashKernel {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
+  import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray
+  import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+  import org.apache.spark.unsafe.types.UTF8String
+
+  val Shingle = 3
+  val NumHashes = 64
+  val Bands = 16
+  val RowsPerBand: Int = NumHashes / Bands
+  private val Seed = 42L
+
+  val SignatureType: StructType = StructType(Seq(
+    StructField("hs", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("cnt", ArrayType(IntegerType, containsNull = false), nullable = false),
+    StructField("sz", LongType, nullable = false),
+    StructField("bands", ArrayType(LongType, containsNull = false), nullable = false)))
+
+  def sign(text: UTF8String): InternalRow = {
+    val seen = new java.util.HashSet[String]()
+    val raw = NgramWindows.build(text, Shingle).iterator.filter(seen.add).map { g =>
+      val b = g.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      XXH64.hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
+        b.length, Seed)
+    }.toArray
+    java.util.Arrays.sort(raw)
+    val hs = raw.distinct
+    val cnt = new Array[Int](hs.length)
+    var k = 0
+    raw.foreach { h => if (h != hs(k)) k += 1; cnt(k) += 1 }
+    new GenericInternalRow(Array[Any](fromPrimitiveArray(hs), fromPrimitiveArray(cnt),
+      raw.length.toLong, fromPrimitiveArray(bandKeys(hs))))
+  }
+
+  /** The 16 band keys of a non-empty hash set; none of an empty one. */
+  private def bandKeys(hs: Array[Long]): Array[Long] =
+    if (hs.isEmpty) Array.empty
+    else {
+      val m = Array.fill(NumHashes)(Long.MaxValue)
+      hs.foreach { h =>
+        val base = XXH64.hashLong(h, Seed)
+        var k = 0
+        while (k < NumHashes) {
+          val v = XXH64.hashInt(k, base)
+          if (v < m(k)) m(k) = v
+          k += 1
+        }
+      }
+      Array.tabulate(Bands) { j =>
+        (0 until RowsPerBand).foldLeft(Seed)((s, r) =>
+          XXH64.hashLong(m(j * RowsPerBand + r), s))
+      }
+    }
+
+  /** Σ cntA·cntB over the hashes two ascending multisets share. */
+  def meet(ha: Array[Long], ca: Array[Int], hb: Array[Long], cb: Array[Int]): Long = {
+    var i = 0
+    var j = 0
+    var m = 0L
+    while (i < ha.length && j < hb.length) {
+      if (ha(i) < hb(j)) i += 1
+      else if (ha(i) > hb(j)) j += 1
+      else { m += ca(i).toLong * cb(j); i += 1; j += 1 }
+    }
+    m
+  }
+}
+
 /** Total BPE piece count of a text under a trained merge table — the
   * APPLY side of [[graft.ext.BpeTrain]]: split on single spaces, drop
   * empty words (the trainer's `length > 0` filter), start each word
@@ -656,7 +786,7 @@ object LangBest {
 /** Runtime registration + Column API for the vector expressions. */
 object GraftFunctions {
 
-  private val fns: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  private[functions] val fns: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("vec_dot",
       new ExpressionInfo(classOf[VectorDot].getName, "vec_dot"),
       (es: Seq[Expression]) => VectorDot(es(0), es(1))),
@@ -675,6 +805,12 @@ object GraftFunctions {
     ("word_chunks",
       new ExpressionInfo(classOf[WordChunks].getName, "word_chunks"),
       (es: Seq[Expression]) => WordChunks(es(0), es(1))),
+    ("minhash_sign",
+      new ExpressionInfo(classOf[MinhashSign].getName, "minhash_sign"),
+      (es: Seq[Expression]) => MinhashSign(es.head)),
+    ("minhash_meet",
+      new ExpressionInfo(classOf[MinhashMeet].getName, "minhash_meet"),
+      (es: Seq[Expression]) => MinhashMeet(es(0), es(1), es(2), es(3))),
     ("bpe_pieces",
       new ExpressionInfo(classOf[BpePieces].getName, "bpe_pieces"),
       (es: Seq[Expression]) => BpePieces(es(0), es(1), es(2))),
@@ -715,6 +851,9 @@ object GraftFunctions {
     call_function("word_ngrams_all", text, n)
   def wordChunks(text: Column, n: Column): Column =
     call_function("word_chunks", text, n)
+  def minhashSign(text: Column): Column = call_function("minhash_sign", text)
+  def minhashMeet(hsA: Column, cntA: Column, hsB: Column, cntB: Column): Column =
+    call_function("minhash_meet", hsA, cntA, hsB, cntB)
   def bpePieces(text: Column, lefts: Column, rights: Column): Column =
     call_function("bpe_pieces", text, lefts, rights)
   def langBest(text: Column, langs: Column, markers: Column, markerLang: Column): Column =
@@ -724,34 +863,7 @@ object GraftFunctions {
 /** Config-time injection: `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    Seq(
-      (FunctionIdentifier("vec_dot"),
-        new ExpressionInfo(classOf[VectorDot].getName, "vec_dot"),
-        (es: Seq[Expression]) => VectorDot(es(0), es(1)): Expression),
-      (FunctionIdentifier("vec_norm"),
-        new ExpressionInfo(classOf[VectorNorm].getName, "vec_norm"),
-        (es: Seq[Expression]) => VectorNorm(es.head): Expression),
-      (FunctionIdentifier("sign_lsh"),
-        new ExpressionInfo(classOf[SignLshBuckets].getName, "sign_lsh"),
-        (es: Seq[Expression]) => SignLshBuckets(es(0), es(1), es(2), es(3)): Expression),
-      (FunctionIdentifier("word_ngrams"),
-        new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-        (es: Seq[Expression]) => WordNgrams(es(0), es(1)): Expression),
-      (FunctionIdentifier("word_ngrams_all"),
-        new ExpressionInfo(classOf[WordNgramsAll].getName, "word_ngrams_all"),
-        (es: Seq[Expression]) => WordNgramsAll(es(0), es(1)): Expression),
-      (FunctionIdentifier("word_chunks"),
-        new ExpressionInfo(classOf[WordChunks].getName, "word_chunks"),
-        (es: Seq[Expression]) => WordChunks(es(0), es(1)): Expression),
-      (FunctionIdentifier("bpe_pieces"),
-        new ExpressionInfo(classOf[BpePieces].getName, "bpe_pieces"),
-        (es: Seq[Expression]) => BpePieces(es(0), es(1), es(2)): Expression),
-      (FunctionIdentifier("lang_best"),
-        new ExpressionInfo(classOf[LangBest].getName, "lang_best"),
-        (es: Seq[Expression]) => LangBest(es(0), es(1), es(2), es(3)): Expression),
-      (FunctionIdentifier("mg_candidates"),
-        new ExpressionInfo(classOf[MisraGriesCandidates].getName, "mg_candidates"),
-        (es: Seq[Expression]) => MisraGriesCandidates(es(0),
-          es(1).eval().asInstanceOf[Number].intValue()): Expression))
-      .foreach(ext.injectFunction)
+    GraftFunctions.fns.foreach { case (name, info, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    }
 }

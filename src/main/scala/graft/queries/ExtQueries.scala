@@ -87,13 +87,13 @@ object ExtQueries {
   // to other artifacts are its dependencies.
 
   /** The MinHash (t = 0.8) and loose exact (Jaccard >= 1/2) pair sets
-    * from ONE signature's persisted shingle frame (the shingle pass IS
-    * the corpus parse). The signature is released as soon as both pair
+    * from ONE signature's persisted signed rows (the signing pass IS
+    * the corpus parse; the loose join reads their exploded form). The signature is released as soon as both pair
     * sets are materialized — never held across unrelated jobs, whose
     * cached blocks it would otherwise starve. */
   private val pairSetsShared = Artifact("pair_sets_shared") { (s, d) =>
     Dedup.Signatures.using(docs(s, d), Dedup.LocalMaxShingleRows)(signed =>
-      (signed.pairs(threshold = 0.8), Dedup.loosePairsFromShingles(signed.hs)))
+      (signed.pairs(threshold = 0.8), Dedup.loosePairsFromShingles(signed.shingleRows)))
   }
 
   /** MinHash near-dup pairs shared by x2, x14 and the component
@@ -626,7 +626,7 @@ object ExtQueries {
     // mixture (en 100%, zh 50%, es 25%, de 75%, fr dropped — a mixture
     // spec is a whitelist), and shard-local token-budget packing.
     // Incremental ingest dedup: the corpus (doc_id % 10 != 0) is
-    // indexed ONCE (bands + shingle hashes + sizes as parquet
+    // indexed ONCE (per-doc shingle sets + band keys as parquet
     // artifacts), then the "new batch" (doc_id % 10 == 0) near-dups
     // against the index — no corpus signature is recomputed. The index
     // lands in a per-run temp warehouse; content is deterministic.

@@ -33,16 +33,16 @@ import graft.sources.JsonlIngest
   * multiple consumers are materialized once each (the normalized batch
   * persisted, the dedup survivors checkpointed) and RELEASED in a
   * finally (the sourceDrift ownership convention); the exact-dedup
-  * survivors are signed once ([[Dedup.Signatures]]: one shingle parse)
-  * and that signature feeds the near-dup pair set, an increment's index
-  * probe and its index append; everything durable lands in the
-  * warehouse via the staging writer. The driver receives the funnel
-  * counts (observe metrics, one per stage) and, only through the
-  * bounded collect class, narrow integer rows: the signature's
-  * (doc_id, shingle hash) rows, in one collect, and the stored index
-  * rows a probe touches, at most [[Dedup.LocalMaxShingleRows]] per read
-  * in total (≈ 10 MB as shipped rows), an increment's landed doc ids,
-  * and candidate pairs and near-dup edges under
+  * survivors are signed once ([[Dedup.Signatures]]: one shingle parse,
+  * one signed row per document) and that signature feeds the near-dup
+  * pair set, an increment's index probe and its index append;
+  * everything durable lands in the warehouse via the staging writer.
+  * The driver receives the funnel counts (observe metrics, one per
+  * stage) and, only through the bounded collect class, integer rows:
+  * the signature's per-document hash arrays, in one collect, and the
+  * stored index rows a probe touches, at most
+  * [[Dedup.LocalMaxShingleRows]] shingles per read in total, and
+  * candidate pairs and near-dup edges under
   * [[Dedup.StarLocalMaxEdges]]. Above a bound the step runs
   * distributed; text never reaches the driver.
   */
@@ -427,7 +427,7 @@ object CorpusPrepJob {
     *   1. a batch whose commit marker exists is SKIPPED wholesale (the
     *      crashed run finished its appends; replay is a no-op);
     *   2. otherwise every partial slice the crashed attempt may have
-    *      left — corpus and all three index artifacts — is ROLLED BACK
+    *      left — corpus and every index artifact — is ROLLED BACK
     *      by its `b<batchId>_` file-name discriminator
     *      ([[graft.sinks.StagingWriter.deleteBatchSlice]]) BEFORE any
     *      frame reads the standing tables, so the recomputation sees
@@ -464,6 +464,8 @@ object CorpusPrepJob {
       return PrepReport(
         emptyFunnel(newDocs.sparkSession), Map.empty, quarantined = 0L,
         artifacts = Seq(CorpusTable, IndexTable))
+    // an index of an older layout fails before any stage runs
+    Dedup.MinhashIndex.requireLayout(writer, IndexTable)
     // rollback BEFORE any read below lists the standing tables
     batchId.foreach { id =>
       batchSliceTables.foreach(t => writer.deleteBatchSlice(t, id))
@@ -519,13 +521,16 @@ object CorpusPrepJob {
     * expensive or the exports stale; the corpus table itself is never
     * rewritten (it is the source of truth the derivations read).
     *
-    * CRASH-SAFE throughout: the index rebuild stages all three
+    * CRASH-SAFE throughout: the index rebuild stages both
     * artifacts under `__rebuild*` names and swaps them in through the
     * sink's backup protocol (`Dedup.MinhashIndex.rebuild` — a refresh
     * that dies mid-rebuild leaves the PREVIOUS index probe-consistent,
     * which matters because the INCREMENTAL ingest loops keep probing
     * it between refreshes), and every export is swapped in the same
-    * way. */
+    * way. It also converts an index of the older three-artifact layout,
+    * which every increment refuses with
+    * [[graft.ext.GrowingIndex.StaleLayout]], and drops its retired
+    * tables. */
   def refreshArtifacts(
       writer: StagingWriter,
       cfg: PrepConfig = PrepConfig()): Unit = {

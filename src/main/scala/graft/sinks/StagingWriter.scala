@@ -50,6 +50,9 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
 
   def exists(table: String): Boolean = fs.exists(new Path(path(table)))
 
+  /** Drop one table; a no-op when it does not exist. */
+  def drop(table: String): Unit = fs.delete(new Path(path(table)), true): Unit
+
   def tables: Seq[String] =
     if (!fs.exists(whPath)) Nil
     else fs.listStatus(whPath).filter(_.isDirectory)
@@ -59,7 +62,7 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
     * (sqlDwh.py:85-123, SURVEY.md §2.7 D3). Returns dropped names. */
   def dropAll(): Seq[String] = {
     val names = tables
-    names.foreach(t => fs.delete(new Path(path(t)), true))
+    names.foreach(drop)
     names
   }
 
@@ -176,14 +179,21 @@ class StagingWriter(spark: SparkSession, warehouseDir: String) extends EntityWri
     * partition instead of appending a duplicate — the write other
     * partitions never notice. Readers see `ingest_batch` as an extra
     * column; a first write creates the table in partitioned layout
-    * (never mix with flat writes to the same path). */
+    * (never mix with flat writes to the same path). An empty frame
+    * writes its partition as one schema-only file, so the table reads
+    * as zero rows under the frame's schema, never as a directory
+    * without a file whose schema cannot be inferred. */
   def writeBatchPartition(df: DataFrame, table: String, batchId: Long): Unit = {
     recoverSwap(table)
+    val obs = Observation()
     df.withColumn("ingest_batch", org.apache.spark.sql.functions.lit(batchId))
+      .observe(obs, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("ingest_batch")
       .parquet(path(table))
+    if (obs.get("rows") == 0L)
+      df.limit(0).write.mode(SaveMode.Overwrite).parquet(s"${path(table)}/ingest_batch=$batchId")
   }
 
   /** Replace `table` with the already-written `tmpTable` under the

@@ -190,7 +190,7 @@ class CorpusPrepJobSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source")
 
     val tables = CorpusPrepJob.CorpusTable +:
-      Seq("__shingles", "__sizes", "__bands").map(CorpusPrepJob.IndexTable + _)
+      graft.ext.Dedup.MinhashIndex.artifacts.map(CorpusPrepJob.IndexTable + _)
     def snapshot(): Map[String, Seq[org.apache.spark.sql.Row]] =
       tables.map { t =>
         val df = writer.read(t)

@@ -133,7 +133,7 @@ class ExtSpec extends SparkSpec {
     for (n <- Seq(2, 3, 4)) {
       val rows = d.select($"doc_id",
         Dedup.shingles($"text", n).as("nat"),
-        Dedup.shinglesHof($"text", n).as("hof"))
+        HofReferences.shingles($"text", n).as("hof"))
         .collect()
       rows.foreach { r =>
         // set AND multiset-free cardinality must agree (both are distinct)
@@ -872,12 +872,14 @@ class ExtSpec extends SparkSpec {
     // re-shingle the corpus — proven on the lazy builder (the public
     // path materializes eagerly to scope its cache, which collapses the
     // executed plan)
-    graft.functions.GraftFunctions.register(spark)
     val lazyPlan = Dedup.neardupAgainstIndexPlan(
-      Dedup.shingleHashes(batch), w, "docs", 0.8, Dedup.DefaultMaxBucket)
+      Dedup.signedDocs(batch), w, "docs", 0.8, Dedup.DefaultMaxBucket)
       .queryExecution.executedPlan.toString
-    assert(lazyPlan.contains("docs__bands"),
-      "incremental path does not read the band index")
+    assert(lazyPlan.contains("docs__bands") && lazyPlan.contains("docs__sets"),
+      "incremental path does not read the band index and the stored shingle sets")
+    // one stored read per artifact: nothing of the old exploded layout
+    assert(!lazyPlan.contains("docs__shingles") && !lazyPlan.contains("docs__sizes"),
+      s"the probe reads the retired artifacts:\n$lazyPlan")
     // under both bounds: 0 forces the distributed plans, the default
     // takes the driver-side verify and probe (the fixture is well under
     // Dedup.LocalMaxShingleRows)

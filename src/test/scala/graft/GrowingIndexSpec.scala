@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, GrowingIndex, Multimodal, NeardupIndex, Similarity}
 import graft.sinks.StagingWriter
 
 /** The write-order contract of [[graft.ext.GrowingIndex]], checked on
   * every index family by fault injection: a writer that dies right
-  * after one artifact lands. */
+  * after one artifact lands; and the layout check, on a MinHash index
+  * written in the older three-artifact layout. */
 class GrowingIndexSpec extends SparkSpec {
 
   import spark.implicits._
@@ -78,5 +80,44 @@ class GrowingIndexSpec extends SparkSpec {
         assert(state(w) == cleanState, s"$family/$layout: replay after a crash past $s drifted")
       }
     }
+  }
+
+  test("a MinHash index in the old three-artifact layout fails every probe and growth " +
+    "with StaleLayout; rebuild converts it and drops the retired tables") {
+    val all = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    val corpus = all.filter($"doc_id" % 10 =!= 0)
+    val batch = all.filter($"doc_id" % 10 === 0)
+    val ix = Dedup.MinhashIndex
+    // the old layout by hand: exploded shingle rows, their per-doc
+    // counts and the exploded band keys, gate last
+    val w = new StagingWriter(spark, tmpDir("gi_old"))
+    val hs = Dedup.shingleHashes(corpus)
+    w.write(hs, "old__shingles", append = false)
+    w.write(hs.groupBy("doc_id").agg(count(lit(1)).as("sz")), "old__sizes", append = false)
+    w.write(MinhashReference(corpus).select($"doc_id", posexplode($"bands").as(Seq("band", "band_hash"))),
+      "old__bands", append = false)
+    assert(ix.exists(w, "old") && ix.retired.forall(r => w.exists("old" + r)))
+    val before = w.tables
+    def stale(what: String)(f: => Any): Unit = {
+      val e = intercept[GrowingIndex.StaleLayout](f)
+      assert(e.getMessage.contains("refreshArtifacts") && e.getMessage.contains("old__sets"),
+        s"$what: ${e.getMessage}")
+    }
+    for (b <- Seq(0L, Dedup.LocalMaxShingleRows))
+      stale(s"probe at bound $b")(Dedup.Signatures.using(batch, b)(_.against(w, "old")))
+    stale("append")(ix.append(batch, w, "old"))
+    stale("appendBatchSlice")(ix.appendBatchSlice(batch, w, "old", 1L))
+    stale("tick")(ix.ingestBatch(batch, w, "old", ix.defaultThreshold, 1L))
+    assert(w.tables == before, s"a failed call wrote tables: ${w.tables.diff(before)}")
+
+    ix.rebuild(corpus, w, "old")
+    assert(ix.retired.forall(r => !w.exists("old" + r)), s"retired tables left: ${w.tables}")
+    val fresh = new StagingWriter(spark, tmpDir("gi_fresh"))
+    ix.build(corpus, fresh, "new")
+    def probe(w: StagingWriter, t: String): Seq[Row] =
+      Dedup.neardupAgainstIndex(batch, w, t).orderBy("a_id", "b_id").collect().toSeq
+    val want = probe(fresh, "new")
+    assert(want.nonEmpty, "the fixture has no cross pair — the comparison is vacuous")
+    assert(probe(w, "old") == want)
   }
 }

@@ -393,11 +393,10 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val b1 = Seq((11L, base.replace("w20", "CHANGED")), (13L, "fresh " * 40))
       .toDF("doc_id", "text")
-    def state(): (Set[Long], Set[(Long, Long)], Long, Long) = (
+    def state(): (Set[Long], Set[(Long, Long)], Seq[Long]) = (
       writer.read("nd_docs").collect().map(_.getLong(0)).toSet,
       writer.read("nd_pairs").collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
-      writer.read("nd__bands").count(),
-      writer.read("nd__shingles").count())
+      graft.ext.Dedup.MinhashIndex.artifacts.map(a => writer.read("nd" + a).count()))
     graft.ext.Dedup.MinhashIndex.ingestBatch(b0, writer, "nd", 0.8, batchId = 0L)
     graft.ext.Dedup.MinhashIndex.ingestBatch(b1, writer, "nd", 0.8, batchId = 1L)
     val before = state()

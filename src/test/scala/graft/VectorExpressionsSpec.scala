@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ext.Similarity
 import graft.functions.GraftFunctions
 
 /** Native vec_dot/vec_norm expressions: bit-equality with the HOF
@@ -17,9 +16,9 @@ class VectorExpressionsSpec extends SparkSpec {
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
     val both = emb.select(
       GraftFunctions.vecDot($"v", $"v").as("native_dot"),
-      Similarity.dotHof($"v", $"v").as("hof_dot"),
+      HofReferences.dot($"v", $"v").as("hof_dot"),
       GraftFunctions.vecNorm($"v").as("native_norm"),
-      Similarity.normHof($"v").as("hof_norm"))
+      HofReferences.norm($"v").as("hof_norm"))
     assert(both.filter(
       $"native_dot" =!= $"hof_dot" || $"native_norm" =!= $"hof_norm").count() == 0)
   }
@@ -152,6 +151,52 @@ class VectorExpressionsSpec extends SparkSpec {
         typedLit(many), typedLit(many.indices.toList))).collect()
     }
     assert(err.getMessage.contains("64"), s"got: ${err.getMessage}")
+  }
+
+  test("minhash_sign equals the 64-min aggregate reference: hashes, counts, size and " +
+    "band keys, under codegen and interpreted") {
+    // the fixture, plus 5,001 copies of one text (the bucket
+    // Dedup.DefaultMaxBucket caps away), a text whose shingles repeat
+    // (set semantics: each distinct shingle counts once), texts under
+    // 3 tokens and a NULL text
+    val extra = ((0 to graft.ext.Dedup.DefaultMaxBucket).map(i => (1000000L + i, "boiler plate text")) ++
+      Seq((2000001L, "a b c a b c a b c d"), (2000002L, "two words"), (2000003L, "alone"),
+        (2000004L, ""), (2000005L, null))).toDF("doc_id", "text")
+    val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+      .unionByName(extra)
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select($"doc_id", $"hs", $"cnt", $"sz", $"bands").orderBy("doc_id").collect().toSeq
+    val signed = graft.ext.Dedup.signedDocs(docs)
+    val want = rows(MinhashReference(docs))
+    assert(want.exists(_.getLong(0) == 2000001L) && want.size > 5000)
+    assert(rows(signed.filter($"sz" > 0)) == want)
+    val repeated = want.find(_.getLong(0) == 2000001L).get
+    assert(repeated.getSeq[Int](2) == Seq(1, 1, 1, 1) && repeated.getLong(3) == 4L)
+    // no shingle: size 0 and no band key; NULL text: no signature
+    val edge = signed.filter($"doc_id" >= 2000002L).orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), Option(r.get(3)), Option(r.getSeq[Long](4)).map(_.size)))
+    assert(edge.toSeq == Seq((2000002L, Some(0L), Some(0)), (2000003L, Some(0L), Some(0)),
+      (2000004L, Some(0L), Some(0)), (2000005L, None, None)))
+    // one kernel call per row, inside whole-stage codegen: the struct's
+    // four fields must not collapse into four calls
+    val plan = signed.queryExecution.executedPlan.toString
+    assert("minhash_sign\\(".r.findAllIn(plan).size == 1, s"minhash_sign not evaluated once:\n$plan")
+    assert(plan.linesIterator.exists(l => l.contains("minhash_sign") && l.contains("*(")),
+      s"minhash_sign left codegen:\n$plan")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try assert(rows(graft.ext.Dedup.signedDocs(docs).filter($"sz" > 0)) == want)
+    finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+  }
+
+  test("minhash_meet is the multiset intersection, Σ cntA·cntB over shared hashes") {
+    GraftFunctions.register(spark)
+    val df = Seq((Seq(1L, 3L, 5L, 9L), Seq(1, 2, 1, 3), Seq(2L, 3L, 9L, 10L), Seq(4, 5, 2, 1)),
+      (Seq(1L), Seq(1), Seq.empty[Long], Seq.empty[Int])).toDF("ha", "ca", "hb", "cb")
+    val got = df.select(GraftFunctions.minhashMeet($"ha", $"ca", $"hb", $"cb")).collect()
+      .map(_.getLong(0)).toSeq
+    assert(got == Seq(2L * 5 + 3 * 2, 0L))
+    assert(graft.functions.MinhashKernel.meet(Array(1L, 3L, 5L, 9L), Array(1, 2, 1, 3),
+      Array(2L, 3L, 9L, 10L), Array(4, 5, 2, 1)) == 16L)
   }
 
   test("config-time extension injection registers the functions") {

@@ -13,7 +13,9 @@ plan, and prints a unified diff for every query whose plans still differ:
     and the random suffix of a temp-dir name (`odata_pages1532...`) goes;
   - RDD ids (`MapPartitionsRDD[651]`) and the source line of a checkpoint's
     call site (`at Stats.scala:1184`) are dropped: they follow execution
-    order and line positions, not the plan.
+    order and line positions, not the plan;
+  - the counter in a lambda variable's name (`lambda x_183`) is dropped:
+    Spark numbers lambda variables JVM-wide in creation order.
 
 A query present in only one directory counts as a difference.
 
@@ -32,6 +34,7 @@ PATH_DIR = re.compile(r"(?:file:)?(?:/[^/\s\],\[]+)+/(?=[^/\s\],\[]+)")
 TEMP_SUFFIX = re.compile(r"(?<=<dir>/)([A-Za-z_]+)\d{8,}")
 RDD_ID = re.compile(r"RDD\[\d+\]")
 SOURCE_LINE = re.compile(r"(\.scala):\d+")
+LAMBDA_VAR = re.compile(r"lambda (\w+)_\d+#")
 
 
 def normalize(text):
@@ -43,6 +46,8 @@ def normalize(text):
         line = TEMP_SUFFIX.sub(r"\1", line)
         line = RDD_ID.sub("RDD[]", line)
         line = SOURCE_LINE.sub(r"\1:", line)
+        for v in set(LAMBDA_VAR.findall(line)):
+            line = re.sub(r"\b" + v + r"_\d+#", v + "_#", line)
         out.append(line.rstrip())
     return out
 
