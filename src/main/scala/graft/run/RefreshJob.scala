@@ -23,8 +23,15 @@ import graft.xform.Normalizer
   *   2. fetch with expand pushdown;
   *   3. normalize into parent + child frames (explode, lowercase, audit);
   *   4. write each frame to `stg_<name>` (append when incremental,
-  *      overwrite on full refresh) — priorityDataSource.py:861-866;
-  *   5. advance the per-entity `lastRun` watermark.
+  *      overwrite on full refresh) — priorityDataSource.py:861-866.
+  *      An entity's frames land concurrently (`graft.util.FanOut`, one
+  *      thread per frame; a one-frame entity writes inline): the
+  *      child write no longer waits for the parent's, and a failed
+  *      write cancels its siblings' jobs. Reports stay in order,
+  *      parent first, then children by name;
+  *   5. advance the per-entity `lastRun` watermark — unchanged: taken
+  *      from the parent write's observation, and only once EVERY
+  *      frame of the entity has landed.
   *
   * Fixes over the reference, documented per SURVEY.md §7.4:
   *   - watermark advances to max(filterField) OBSERVED ON THE WRITE JOB
@@ -124,11 +131,15 @@ final class RefreshJob(
       // unfiltered entities are replaced every run (append would
       // duplicate the full table each incremental cycle)
       val append = incremental && e.filterFlag
-      val parentCount = writer.writeEntity(parent, n.entityName, append)
-      val reports = TableReport(n.entityName, writer.stagingName(n.entityName), parentCount) +:
-        n.children.toSeq.sortBy(_._1).map { case (name, df) =>
-          TableReport(name, writer.stagingName(name), writer.writeEntity(df, name, append))
-        }
+      val frames = (n.entityName -> parent) +: n.children.toSeq.sortBy(_._1)
+      val writes = frames.map { case (name, df) =>
+        () => TableReport(name, writer.stagingName(name), writer.writeEntity(df, name, append))
+      }
+      // the frames land concurrently; a failed write cancels its
+      // siblings' jobs and fails the entity before its watermark moves
+      val reports =
+        if (writes.size == 1) writes.map(_())
+        else graft.util.FanOut.all(spark.sparkContext, writes.size)(writes)
 
       val maxSeen = obs.flatMap(_.get.get("wm")).filter(_ != null)
         .map(formatAny(_, zone))

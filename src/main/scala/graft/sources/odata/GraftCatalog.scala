@@ -68,16 +68,11 @@ final class GraftCatalog extends TableCatalog {
     if (!namespaceExists(ident.namespace()))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         ident)
-    val dir = new Path(new Path(root), ident.name).toString
-    val pages = ODataTableProvider.pageFiles(dir)
-    if (pages.isEmpty)
+    val listing = new ODataListing(new Path(new Path(root), ident.name).toString)
+    if (listing.files.isEmpty)
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         ident)
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("path", dir)
-    val schema = new ODataTableProvider().inferSchema(
-      new CaseInsensitiveStringMap(opts))
-    new ODataTable(schema, dir)
+    new ODataTable(ODataTableProvider.inferSchema(listing), listing)
   }
 
   override def tableExists(ident: Identifier): Boolean =

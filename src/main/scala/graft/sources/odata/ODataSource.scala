@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -49,28 +50,43 @@ final class ODataTableProvider extends TableProvider with DataSourceRegister {
 
   override def supportsExternalMetadata(): Boolean = true
 
-  /** Schema inference: peek at the first row of the first page — JSON
-    * longs/doubles/booleans map directly, ISO-ish timestamp strings to
-    * TimestampType, arrays of objects (the `$expand` subform shape) to
-    * ArrayType(StructType(...)), everything else to StringType. */
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val pages = ODataTableProvider.pageFiles(options.get("path"))
-    require(pages.nonEmpty, s"graft-odata: no page files under ${options.get("path")}")
-    val first = ODataTableProvider.readPage(pages.head)
-    val row = first.get("value").elements().asScala.toSeq.headOption
-      .getOrElse(throw new IllegalArgumentException("graft-odata: empty first page"))
-    ODataTableProvider.inferStruct(row)
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    ODataTableProvider.inferSchema(listingOf(options.get("path")))
 
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    new ODataTable(schema, properties.get("path"))
+    new ODataTable(schema, listingOf(properties.get("path")))
+
+  // one provider instance serves one load(): the listing inferSchema
+  // made is the one the table plans from
+  private var listed: Option[ODataListing] = None
+
+  private def listingOf(path: String): ODataListing =
+    listed.filter(_.path == path).getOrElse {
+      val l = new ODataListing(path)
+      listed = Some(l)
+      l
+    }
 }
 
 object ODataTableProvider {
   private[odata] val mapper = new ObjectMapper()
+
+  /** Schema inference: peek at the first row of the first listed page
+    * — JSON longs/doubles/booleans map directly, ISO-ish timestamp
+    * strings to TimestampType, arrays of objects (the `$expand` subform
+    * shape) to ArrayType(StructType(...)), everything else to
+    * StringType. */
+  private[odata] def inferSchema(listing: ODataListing): StructType = {
+    require(listing.files.nonEmpty, s"graft-odata: no page files under ${listing.path}")
+    val first = readPage(listing.files.head, listing.conf)
+    val row = first.get("value").elements().asScala.toSeq.headOption
+      .getOrElse(throw new IllegalArgumentException("graft-odata: empty first page"))
+    inferStruct(row)
+  }
+
   private[odata] val TsPattern =
     "\\d{4}-\\d{2}-\\d{2}[T ]\\d{2}:\\d{2}:\\d{2}.*".r
 
@@ -102,10 +118,10 @@ object ODataTableProvider {
     * credentials, custom schemes — resolve) when a session exists,
     * else a fresh default (executor-side readers, where no session
     * is active and the scheme is already resolved). */
-  private[odata] def hadoopConf(): org.apache.hadoop.conf.Configuration =
+  private[odata] def hadoopConf(): Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+      .getOrElse(new Configuration())
 
   /** Name of the head-page sidecar that switches a page directory
     * into CONTINUATION-TOKEN mode (`{"head": "<page file>"}`). */
@@ -139,20 +155,20 @@ object ODataTableProvider {
     *
     * Hadoop FileSystem API (same as the reader), so page directories
     * on HDFS/S3 plan correctly too. */
-  private[graft] def pageFiles(dir: String): Seq[String] = {
+  private[graft] def pageFiles(dir: String, conf: Configuration = hadoopConf()): Seq[String] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(hadoopConf())
+    val fs = p.getFileSystem(conf)
     if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) Nil
-    else if (fs.exists(new Path(p, HeadMeta))) walkChain(dir)
+    else if (fs.exists(new Path(p, HeadMeta))) walkChain(dir, conf)
     else fs.listStatus(p).map(_.getPath.toString)
       .filter(_.endsWith(".json")).toSeq.sorted
   }
 
   /** Follow the `@odata.nextLink` chain from the `_head.meta` head
     * page; returns full paths in chain order. */
-  private[graft] def walkChain(dir: String): Seq[String] = {
+  private[graft] def walkChain(dir: String, conf: Configuration = hadoopConf()): Seq[String] = {
     val head = {
-      val node = readPage(new Path(dir, HeadMeta).toString)
+      val node = readPage(new Path(dir, HeadMeta).toString, conf)
       val h = node.get("head")
       require(h != null && h.isTextual,
         s"graft-odata: $dir/$HeadMeta carries no textual 'head'")
@@ -165,11 +181,11 @@ object ODataTableProvider {
       if (!seen.add(token)) throw new IllegalStateException(
         s"graft-odata: $NextLink cycle at token '$token' under $dir")
       val path = new Path(dir, token)
-      val fs = path.getFileSystem(hadoopConf())
+      val fs = path.getFileSystem(conf)
       if (!fs.exists(path)) throw new IllegalStateException(
         s"graft-odata: $NextLink token '$token' resolves to no page under $dir")
       out += path.toString
-      val next = readPage(path.toString).get(NextLink)
+      val next = readPage(path.toString, conf).get(NextLink)
       token = if (next == null || next.isNull) null else next.asText
     }
     out.toSeq
@@ -177,9 +193,9 @@ object ODataTableProvider {
 
   /** Read + parse one page through the Hadoop FileSystem (paths may
     * carry any scheme: file:, hdfs:, s3a:). */
-  private[odata] def readPage(pathStr: String): JsonNode = {
+  private[odata] def readPage(pathStr: String, conf: Configuration = hadoopConf()): JsonNode = {
     val p = new Path(pathStr)
-    val in = p.getFileSystem(hadoopConf()).open(p)
+    val in = p.getFileSystem(conf).open(p)
     try mapper.readTree(in) finally in.close()
   }
 
@@ -187,9 +203,10 @@ object ODataTableProvider {
     * (page-file name → rows). None when the directory carries no
     * sidecar — offset pushdown is then declined and Spark keeps the
     * OFFSET operator. */
-  private[odata] def pageCounts(dir: String): Option[Map[String, Long]] = {
+  private[odata] def pageCounts(
+      dir: String, conf: Configuration = hadoopConf()): Option[Map[String, Long]] = {
     val p = new Path(dir, "_counts.meta")
-    val fs = p.getFileSystem(hadoopConf())
+    val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -265,13 +282,33 @@ object ODataTableProvider {
   * (conservative keeps, never a silent epoch/number conflation). */
 final case class ODataPageRange(isTs: Boolean, lo: Long, hi: Long)
 
-final class ODataTable(tableSchema: StructType, path: String) extends Table with SupportsRead {
-  override def name(): String = s"odata:$path"
+/** One load's view of a page directory: its page files, listed ONCE
+  * when the table is loaded (as Spark's file sources keep one file
+  * index per relation), and the Hadoop conf that listed them. Every
+  * scan planned from the load reuses both, so the parent and child
+  * frames of one fetch read the same page set, and a page the server
+  * adds later is served by the next load, not by a re-plan. */
+final class ODataListing(val path: String) {
+  val conf: Configuration = ODataTableProvider.hadoopConf()
+  val files: Seq[String] = ODataTableProvider.pageFiles(path, conf)
+
+  /** Byte total of the listed pages, stat-ed once (planner statistics). */
+  lazy val bytes: Long = files.map { f =>
+    val p = new Path(f)
+    p.getFileSystem(conf).getFileStatus(p).getLen
+  }.sum
+
+  def counts: Option[Map[String, Long]] = ODataTableProvider.pageCounts(path, conf)
+}
+
+final class ODataTable(tableSchema: StructType, listing: ODataListing)
+  extends Table with SupportsRead {
+  override def name(): String = s"odata:${listing.path}"
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ODataScanBuilder(tableSchema, path)
+    new ODataScanBuilder(tableSchema, listing)
 }
 
 /** One pushed aggregate: `func` ∈ count_star | count | min | max |
@@ -284,7 +321,7 @@ final case class ODataAggregation(
     groupCols: Seq[String], funcs: Seq[ODataAggFunc])
 
 /** Accumulates the five pushdowns, then emits the scan. */
-final class ODataScanBuilder(fullSchema: StructType, path: String)
+final class ODataScanBuilder(fullSchema: StructType, listing: ODataListing)
   extends ScanBuilder
   with SupportsPushDownFilters
   with SupportsPushDownLimit
@@ -321,8 +358,7 @@ final class ODataScanBuilder(fullSchema: StructType, path: String)
     // mis-skipping rows would be wrong, not slow)
     if (n <= 0 || pushed.nonEmpty || limit.isDefined || topN.isDefined ||
       agg.isDefined ||
-      ODataScan.statsProbe(ODataTableProvider.pageCounts(path))
-        .flatten.isEmpty) false
+      ODataScan.statsProbe(listing.counts).flatten.isEmpty) false
     else { offset = Some(n); true }
 
   /** Accept the filter shapes OData `$filter` can express on scalar
@@ -474,7 +510,7 @@ final class ODataScanBuilder(fullSchema: StructType, path: String)
   override def build(): Scan =
     new ODataScan(
       agg.map(a => ODataScan.aggSchema(fullSchema, a)).getOrElse(required),
-      path, pushed, limit, topN, agg, offset)
+      listing, pushed, limit, topN, agg, offset)
 }
 
 object ODataScan {
@@ -535,7 +571,7 @@ object ODataScan {
 
 final class ODataScan(
     schema: StructType,
-    path: String,
+    listing: ODataListing,
     filters: Array[Filter],
     limit: Option[Int],
     topN: Option[(Seq[(String, Boolean, Boolean)], Int)] = None,
@@ -543,6 +579,8 @@ final class ODataScan(
     offset: Option[Int] = None)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeFiltering {
+
+  private val path = listing.path
 
   override def readSchema(): StructType = schema
 
@@ -676,19 +714,13 @@ final class ODataScan(
     * failures degrade to empty estimates (planning must never crash
     * on a stats probe); the scan itself still fails loudly. */
   override def estimateStatistics(): Statistics = {
-    val bytes: Option[Long] = ODataScan.statsProbe {
-      val conf = ODataTableProvider.hadoopConf()
-      ODataTableProvider.pageFiles(path).map { f =>
-        val p = new Path(f)
-        p.getFileSystem(conf).getFileStatus(p).getLen
-      }.sum
-    }
+    val bytes: Option[Long] = ODataScan.statsProbe(listing.bytes)
     // ONE guarded sidecar read serves both the row estimate and the
     // byte scaling: a corrupt _counts.meta degrades to empty estimates
     // (the documented contract — the scan itself still fails loudly),
     // never a plan-time crash
     val counts: Option[Map[String, Long]] =
-      ODataScan.statsProbe(ODataTableProvider.pageCounts(path)).flatten
+      ODataScan.statsProbe(listing.counts).flatten
     val total = counts.map(_.values.sum)
     val exactRows: Option[Long] =
       if (filters.nonEmpty || agg.isDefined) None
@@ -751,8 +783,7 @@ final class ODataScan(
     // filter anyway); runtime filters only ever arrive on a bare scan
     // (filter attributes are withheld otherwise), so pruning can never
     // interact with the offset page-skip arithmetic below
-    val files = prunePages(
-      ODataTableProvider.pageFiles(path), filters ++ runtimeFilters)
+    val files = prunePages(listing.files, filters ++ runtimeFilters)
     lastPlannedPages = files.size
     offset match {
       case None =>
@@ -761,7 +792,7 @@ final class ODataScan(
         // counts sidecar guaranteed by pushOffset's acceptance check;
         // fully-skipped pages are PRUNED at plan time, the first
         // surviving page carries the in-page remainder
-        val counts = ODataTableProvider.pageCounts(path).getOrElse(
+        val counts = listing.counts.getOrElse(
           throw new IllegalStateException(
             s"offset pushed but _counts.meta vanished under $path"))
         var remaining = n.toLong

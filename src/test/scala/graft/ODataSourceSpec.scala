@@ -167,6 +167,30 @@ class ODataSourceSpec extends SparkSpec {
     assert(scan.contains("$select=ORDNAME,QPRICE"), s"subform not pruned:\n$scan")
   }
 
+  test("one page listing per fetch: a page added after fetch is read by " +
+    "the next fetch, not by that fetch's frames") {
+    val root = tmpDir("odata_listing")
+    Files.createDirectories(Paths.get(s"$root/ORDERS"))
+    def order(o: Int): String =
+      s"""{"ORDNAME": "SO$o", "ORDERITEMS_SUBFORM": [{"LINE": 1}, {"LINE": 2}]}"""
+    writePages(s"$root/ORDERS", Seq(
+      s"""{"value": [${order(1)}, ${order(2)}]}""",
+      s"""{"value": [${order(3)}]}"""))
+    val src = new graft.sources.odata.ODataEntitySource(spark, root)
+    val req = graft.sources.FetchRequest("ORDERS", expand = Seq("ORDERITEMS"))
+    def frames(df: org.apache.spark.sql.DataFrame) = {
+      val n = graft.xform.Normalizer.normalize("ORDERS", df, Seq("ORDNAME"),
+        "r", java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
+      (n.parent.count(), n.children("orderitems").count())
+    }
+    val fetched = src.fetch(req)
+    Files.write(Paths.get(s"$root/ORDERS/page-2.json"),
+      s"""{"value": [${order(4)}]}""".getBytes("UTF-8"))
+    // parent and child of the earlier fetch both plan from its listing
+    assert(frames(fetched) == (3L, 6L))
+    assert(frames(src.fetch(req)) == (4L, 8L))
+  }
+
   test("string literals escape embedded quotes OData-style (doubled)") {
     import org.apache.spark.sql.sources.EqualTo
     // the documented HTTP swap point sends this string verbatim — an

@@ -303,6 +303,146 @@ class ConfigStoreSpec extends SparkSpec {
 
 class PlatformSpec extends SparkSpec {
 
+  /** An OData page directory: ORDERS (three pages, a nested
+    * ORDERITEMS_SUBFORM, filtered on CURDATE) and CTYPE (one page,
+    * unfiltered). */
+  private def odataRoot(): String = {
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("odata_jdbc")
+    def pages(entity: String, bodies: Seq[String]): Unit = {
+      Files.createDirectories(Paths.get(s"$root/$entity"))
+      bodies.zipWithIndex.foreach { case (b, i) =>
+        Files.write(Paths.get(s"$root/$entity/page-$i.json"), b.getBytes("UTF-8"))
+      }
+    }
+    pages("ORDERS", (0 until 3).map { p =>
+      (1 to 2).map { k =>
+        val o = p * 2 + k
+        s"""{"ORDNAME": "SO$o", "QTY": $o, "CURDATE": "2024-0${p + 1}-0${k}T00:00:00",
+           | "ORDERITEMS_SUBFORM": [{"KLINE": 1, "PARTNAME": "P$o"},
+           |   {"KLINE": 2, "PARTNAME": "Q$o"}]}""".stripMargin
+      }.mkString("""{"value": [""", ",", "]}")
+    })
+    pages("CTYPE", Seq("""{"value": [{"TYPECODE": "A"}, {"TYPECODE": "B"}]}"""))
+    root
+  }
+
+  private val refreshConfig = ExtractionConfig("ds1", "n", "a1", systemTimezone = "UTC",
+    entities = Seq(
+      EntityConfig("ORDERS", filterFlag = true, filterField = "CURDATE",
+        expand = Seq("ORDERITEMS"), dataStartDate = "2023-01-01 00:00:00"),
+      EntityConfig("CTYPE")))
+
+  test("RefreshJob over JDBC: one job per staged frame, an entity's frames " +
+    "written concurrently") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val url = s"jdbc:derby:memory:frames${System.nanoTime()};create=true"
+    // two connections for three pages: the cap narrows, and still
+    // costs no shuffle
+    val jdbc = new JdbcStagingWriter(spark, url, maxConnections = 2)
+    val childStarted = new CountDownLatch(1)
+    @volatile var overlapped = false
+    val writer = new EntityWriter {
+      override def writeEntity(df: DataFrame, entity: String, append: Boolean): Long = {
+        // the parent's write waits for the child's to start: a serial
+        // runEntity times out here and fails the assert below
+        if (entity == "orders") overlapped = childStarted.await(20, TimeUnit.SECONDS)
+        else childStarted.countDown()
+        jdbc.writeEntity(df, entity, append)
+      }
+      override def promote(entity: String, pk: Seq[String]): Long = jdbc.promote(entity, pk)
+    }
+    val job = new graft.run.RefreshJob(spark,
+      new graft.sources.odata.ODataEntitySource(spark, odataRoot()), writer)
+    val cfg = refreshConfig.copy(entities = refreshConfig.entities.take(1))
+
+    val tag = s"frames-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger(0)
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) {
+          jobs.incrementAndGet()
+          sites.add(e.stageInfos.maxBy(_.stageId).name)
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    val (report, updated) =
+      try {
+        val r = job.run(cfg, incremental = false)
+        // the listener bus is async — poll until the count is stable
+        var last = -1
+        var spins = 0
+        while (jobs.get() != last && spins < 50) {
+          last = jobs.get(); Thread.sleep(100); spins += 1
+        }
+        r
+      } finally {
+        sc.removeJobTag(tag)
+        sc.removeSparkListener(listener)
+      }
+    assert(report.errors.isEmpty, report.errors)
+    // parent first, then children by name
+    assert(report.tables.map(t => (t.tableName, t.recordsWritten)) ==
+      Seq("stg_orders" -> 6L, "stg_orderitems" -> 12L))
+    assert(overlapped, "the child write did not start while the parent's was waiting")
+    import scala.jdk.CollectionConverters._
+    assert(jobs.get() == report.tables.size,
+      s"${jobs.get()} jobs for ${report.tables.size} staged frames: ${sites.asScala}")
+    // the watermark still comes from the parent's observation
+    assert(updated.entities.head.lastRun.contains("2024-03-02 00:00:00"))
+    assert(jdbc.read("ORDERITEMS").count() == 12)
+  }
+
+  test("RefreshJob over JDBC: a failed child frame cancels the parent's " +
+    "write, keeps the watermark, and spares the other entities") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val url = s"jdbc:derby:memory:framefail${System.nanoTime()};create=true"
+    val jdbc = new JdbcStagingWriter(spark, url)
+    val sc = spark.sparkContext
+    val parentTag = s"slow-parent-${java.util.UUID.randomUUID()}"
+    def parentRunning: Boolean = sc.statusTracker.getJobIdsForTag(parentTag).exists(id =>
+      sc.statusTracker.getJobInfo(id).exists(
+        _.status == org.apache.spark.JobExecutionStatus.RUNNING))
+    val nap = udf { (q: Long) => Thread.sleep(60000L); q }
+    val writer = new EntityWriter {
+      override def writeEntity(df: DataFrame, entity: String, append: Boolean): Long =
+        entity match {
+          case "orders" =>
+            // a parent write that holds its job until it is cancelled
+            sc.addJobTag(parentTag)
+            jdbc.writeEntity(df.withColumn("qty", nap(col("qty"))), entity, append)
+          case "orderitems" =>
+            val deadline = System.nanoTime() + 30000000000L
+            while (!parentRunning && System.nanoTime() < deadline) Thread.sleep(20)
+            throw new IllegalStateException("planted child write failure")
+          case _ => jdbc.writeEntity(df, entity, append)
+        }
+      override def promote(entity: String, pk: Seq[String]): Long = jdbc.promote(entity, pk)
+    }
+    val job = new graft.run.RefreshJob(spark,
+      new graft.sources.odata.ODataEntitySource(spark, odataRoot()), writer)
+    val cfg = refreshConfig.copy(entities = refreshConfig.entities.map(e =>
+      if (e.entityId == "ORDERS") e.copy(lastRun = Some("2023-06-01 00:00:00")) else e))
+
+    val t0 = System.nanoTime()
+    val (report, updated) = job.run(cfg, incremental = true)
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(sc.statusTracker.getActiveJobIds().isEmpty,
+      s"jobs still running: ${sc.statusTracker.getActiveJobIds().toSeq}")
+    assert(sec < 30, s"run waited $sec s for the sleeping parent write")
+    assert(report.errors.map(_.entityId) == Seq("ORDERS"), report.errors)
+    assert(report.errors.head.message.contains("planted child write failure"))
+    assert(updated.entities.find(_.entityId == "ORDERS").get.lastRun
+      .contains("2023-06-01 00:00:00"), "a failed entity advanced its watermark")
+    assert(report.tables.map(_.tableName) == Seq("stg_ctype"))
+    assert(jdbc.read("CTYPE").count() == 2)
+  }
+
   private def config = ExtractionConfig(
     "ds1", "priority_companyA", "acct9", systemTimezone = "UTC",
     uri = "sim://priority/",
